@@ -706,5 +706,5 @@ def link_ann_join(
     top = topk_per_group(
         scored, group_cols=keys, order_col="score", k=k,
         tiebreak_cols=["entity_id"],
-    )
+    ).select(*keys, *carry, "entity_id", "score", "rank")
     return top.filter(F.col("score") >= tau)

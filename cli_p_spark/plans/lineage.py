@@ -10,22 +10,33 @@ resumes at partition granularity".
 Layout under ``out_dir``:
 
     mentions/part_id=N/...   embedding-stage output, one dir per partition
-    skips/                   quarantined spans (append)
+    skips/part_id=N/...      quarantined spans, same partitioning
     triples/                 final links
     lineage/                 one row per (stage, part_id, run_id): counts,
                              wall seconds, timestamp, status
 
 Resume protocol (the expensive stage is encode — that is what must not
 recompute): a partition of the embedding stage is DONE iff a lineage row
-(stage='embed', part_id, status='done') exists.  A resumed run anti-joins
-the input against done partitions (exactly the reference's fn_db check,
-build-index.py:42-44, lifted from per-file to per-partition) and
-dynamic-partition-OVERWRITES the missing partition directories: data
-commits before lineage, so a kill between the two leaves partitions
-unmarked — the resume re-runs them and the overwrite replaces (never
-duplicates) their rows.  Idempotent per-partition commit, no
-write-ordering race (gated by test_resume's after_data kill).  Downstream stages are cheap
-relative to encode and rebuild from the union of all mention partitions.
+(stage='embed', part_id, status='done') exists.  A resumed run encodes
+only the spans of not-done partition ids (exactly the reference's fn_db
+check, build-index.py:42-44, lifted from per-file to per-partition) and
+dynamic-partition-OVERWRITES their directories: data commits before
+lineage, so a kill between the two leaves partitions unmarked — the
+resume re-runs them and the overwrite replaces (never duplicates) their
+rows.  Idempotent per-partition commit, no write-ordering race (gated by
+test_resume's after_data kill).  Downstream stages are cheap relative to
+encode and rebuild from the union of all mention partitions.
+
+Bookkeeping stays off the data path.  The embed stage scans the corpus
+once: there is no pre-pass for the partition ids present (an id no
+document hashes to yields no rows and no lineage), and the skips write
+takes its part_id from the encoded frame instead of re-joining a second
+explode.  The encoded frame is cached, and the mentions write, the skips
+write and one groupBy(part_id) for the per-partition row and skip counts
+all consume it; the written tables are never read back for counting.
+Lineage rows commit from a driver-local Arrow table, not as pickled rows
+through a Python RDD.  A row's ``wall_s`` is still the stage wall divided
+by the partitions it wrote: an average, not a per-partition measurement.
 
 part_id = pmod(xxhash64(doc_id), n_parts): deterministic, independent of
 input order and cluster size — a resume on a different cluster still
@@ -65,10 +76,21 @@ def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
 
 
 def _append_lineage(spark: SparkSession, out_dir: str, rows: list[tuple]):
+    """Commit ``rows`` as one file.  The rows travel as a driver-local
+    Arrow table (a JVM-side scan of Arrow batches), not as pickled tuples
+    through a Python RDD, and whatever the session's Arrow setting."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
     from .tables import TableStore
 
+    schema = StructType.fromDDL(LINEAGE_SCHEMA)
+    table = pa.Table.from_pandas(
+        pd.DataFrame(rows, columns=schema.fieldNames()), preserve_index=False
+    )
     TableStore(spark, out_dir).append(
-        spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1), "lineage"
+        spark.createDataFrame(table, schema).coalesce(1), "lineage"
     )
 
 
@@ -110,10 +132,6 @@ def run_pipeline(
     store = TableStore(spark, out_dir)
 
     # ---- stage: embed (partition-granular, resumable) ----
-    spans = explode_spans(documents).withColumn(
-        "part_id",
-        F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int"),
-    )
     lineage = read_lineage(spark, out_dir)
     if lineage is not None:
         done = {
@@ -124,73 +142,53 @@ def run_pipeline(
         }
     else:
         done = set()
-
-    all_parts = sorted(
-        r["part_id"]
-        for r in spans.select("part_id").distinct().collect()
-    )
-    todo = [p for p in all_parts if p not in done]
+    # todo is taken from range(n_parts), not from the corpus: an id no
+    # document hashes to yields no rows and no lineage row, so it stays
+    # in todo and costs a later run nothing but the filtered scan
+    todo = [p for p in range(n_parts) if p not in done]
     if fail_after_parts is not None:
         todo = todo[:fail_after_parts]
-
     if todo:
+        spans = explode_spans(documents).withColumn(
+            "part_id",
+            F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int"),
+        )
+        if len(todo) < n_parts:
+            spans = spans.filter(F.col("part_id").isin(todo))
         t0 = time.time()
-        batch = spans.filter(F.col("part_id").isin(todo))
-        # cache: the expensive encode UDF feeds BOTH the mentions and the
-        # skips writes — without it each write (and any count) re-runs
-        # the encoder over the whole batch
-        encoded = encode_mentions(batch, cfg).persist()
-        ok, skips = split_skips(encoded)
+        # cache: the expensive encode UDF feeds the mentions write, the
+        # skips write and the per-partition counts — without it each of
+        # them would re-run the encoder (and re-scan the corpus)
+        encoded = encode_mentions(spans, cfg).persist()
+        ok, skips = split_skips(encoded, keep=("part_id",))
         store.overwrite_partitions(
             ok.select("doc_id", "span_idx", "kind", "embedding", "part_id"),
             "mentions", partition_by=("part_id",),
         )
-        skips_with_part = skips.join(
-            spans.select("doc_id", "span_idx", "part_id"),
-            ["doc_id", "span_idx"],
-        )
-        store.overwrite_partitions(
-            skips_with_part, "skips", partition_by=("part_id",)
-        )
+        store.overwrite_partitions(skips, "skips", partition_by=("part_id",))
+        # exact per-partition counts from the cached frame both writes
+        # consumed, so the written tables are never read back
+        counts = encoded.groupBy("part_id").agg(
+            F.count("embedding").alias("n_rows"),
+            F.count_if(F.col("embedding").isNull()).alias("n_skips"),
+        ).collect()
         encoded.unpersist()
         if fail_after_parts is not None and fail_mode == "after_data":
             # simulated kill inside the crash window: data committed,
             # lineage not — these partitions must re-run idempotently
             return {"out_dir": out_dir, "status": "killed"}
         wall = time.time() - t0
-        # per-partition metrics from the WRITTEN data (exact counts, no
-        # recompute of the encode stage)
-        counts = {
-            r["part_id"]: (r["n"],)
-            for r in store.read("mentions")
-            .filter(F.col("part_id").isin(todo))
-            .groupBy("part_id").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        skips_written = store.read("skips")
-        skip_counts = (
-            {}
-            if skips_written is None
-            else {
-                r["part_id"]: r["n"]
-                for r in skips_written.filter(F.col("part_id").isin(todo))
-                .groupBy("part_id").agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-        )
         now = _utcnow()
-        _append_lineage(
-            spark,
-            out_dir,
-            [
-                (
-                    "embed", int(p), run_id, "done",
-                    int(counts.get(p, (0,))[0]),
-                    int(skip_counts.get(p, 0)),
-                    wall / max(len(todo), 1), now,
-                )
-                for p in todo
-            ],
-        )
+        if counts:
+            _append_lineage(
+                spark,
+                out_dir,
+                [
+                    ("embed", r["part_id"], run_id, "done", r["n_rows"],
+                     r["n_skips"], wall / len(counts), now)
+                    for r in counts
+                ],
+            )
 
     if fail_after_parts is not None:
         return {"out_dir": out_dir, "status": "killed"}

@@ -95,13 +95,17 @@ def encode_mentions(
     )
 
 
-def split_skips(encoded: DataFrame) -> tuple[DataFrame, DataFrame]:
+def split_skips(
+    encoded: DataFrame, keep: tuple[str, ...] = ()
+) -> tuple[DataFrame, DataFrame]:
     """(ok_mentions, skips).  Null embedding = simulated decode failure ->
-    quarantined, run continues (build-index.py:53-61 / skip_db)."""
+    quarantined, run continues (build-index.py:53-61 / skip_db).  ``keep``
+    names extra columns of ``encoded`` the skips rows carry (e.g. the
+    partition id they are written under)."""
     ok = encoded.filter(F.col("embedding").isNotNull())
     skips = encoded.filter(F.col("embedding").isNull()).select(
         "doc_id", "span_idx", "kind", "media_ref",
-        F.lit("decode_error").alias("reason"),
+        F.lit("decode_error").alias("reason"), *keep,
     )
     return ok, skips
 

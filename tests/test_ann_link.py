@@ -54,6 +54,40 @@ def test_broadcast_and_join_strategies_agree(spark, corpus_small):
     assert ra == rb
 
 
+def test_link_strategies_share_column_order(spark, corpus_small):
+    """Every link strategy returns keys + carry + (entity_id, score, rank)
+    in that order, whatever k: the k=1 fast path of the bucket join, its
+    k>1 window path and the broadcast IVF search."""
+    from cli_p_spark.fixtures.generate import entities_to_spark
+    from cli_p_spark.operators.ann import (
+        link_ann_join,
+        link_ivf_broadcast,
+        train_centroids,
+    )
+    from cli_p_spark.plans.pipeline import (
+        encode_mentions,
+        explode_spans,
+        split_skips,
+    )
+
+    docs_pdf, ents_pdf = corpus_small
+    cfg = PipelineConfig()
+    ok, _ = split_skips(
+        encode_mentions(explode_spans(documents_to_spark(spark, docs_pdf)),
+                        cfg)
+    )
+    mentions = ok.select("doc_id", "span_idx", "kind", "embedding")
+    entities = entities_to_spark(spark, ents_pdf)
+    centroids = train_centroids(
+        np.stack(ents_pdf["embedding"].to_numpy()), nlist=16)
+    k1 = link_ann_join(mentions, entities, centroids, k=1, nprobe=4)
+    k3 = link_ann_join(mentions, entities, centroids, k=3, nprobe=4)
+    bc = link_ivf_broadcast(mentions, ents_pdf, centroids, k=3, nprobe=4)
+    expected = ["doc_id", "span_idx", "kind", "entity_id", "score", "rank"]
+    assert k1.columns == k3.columns == bc.columns == expected
+    assert k1.dtypes == k3.dtypes == bc.dtypes
+
+
 def test_broadcast_ivf_pr_geq_095(spark, corpus_small):
     docs_pdf, ents_pdf = corpus_small
     cfg = PipelineConfig()

@@ -4,6 +4,7 @@ Kill after p embed partitions; resume; assert (a) the resumed run only
 computed the missing partitions (lineage run_id proves it), (b) final
 triples equal a fresh uninterrupted run."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from cli_p_spark.config import PipelineConfig
@@ -147,3 +148,122 @@ def test_tablestore_read_raises_on_corrupt_not_absent(spark, tmp_path):
     with pytest.raises(Exception):
         df = store.read("broken")
         df.collect()  # some engines defer footer reads to the scan
+
+
+def _part_ids(spark, doc_ids):
+    """pmod(xxhash64(doc_id), 16) per doc id, evaluated by Spark: the
+    partition run_pipeline's default n_parts puts each document in."""
+    df = spark.createDataFrame([(d,) for d in doc_ids], "doc_id string")
+    return {
+        r["doc_id"]: r["p"]
+        for r in df.select(
+            "doc_id", F.pmod(F.xxhash64("doc_id"), F.lit(16)).alias("p")
+        ).collect()
+    }
+
+
+# fresh-run Spark jobs on corpus_small, measured with the single-scan embed
+# stage (explode once, counts from the cached encode, Arrow lineage rows);
+# the scan pre-pass, the skips re-join and the read-backs it replaced put
+# the same run at 20 jobs
+FRESH_RUN_MAX_JOBS = 13
+
+
+@pytest.fixture(scope="module")
+def fresh_run(spark, corpus_small, tmp_path_factory):
+    """One fresh run_pipeline on corpus_small under its own job group,
+    recording the RDD lineage of every lineage-table append."""
+    from cli_p_spark.plans.tables import TableStore
+
+    docs_pdf, ents_pdf = corpus_small
+    docs = documents_to_spark(spark, docs_pdf)
+    out = str(tmp_path_factory.mktemp("fresh") / "out")
+    append = TableStore.append
+    lineage_rdds = []
+
+    def recording_append(self, df, table, partition_by=()):
+        if table == "lineage":
+            lineage_rdds.append(
+                df._jdf.queryExecution().toRdd().toDebugString())
+        return append(self, df, table, partition_by)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("fresh_run", "fresh run_pipeline on corpus_small")
+    try:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(TableStore, "append", recording_append)
+            run_pipeline(spark, docs, ents_pdf, out, run_id="fresh")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store fills from an asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("fresh_run")
+    return out, jobs, lineage_rdds
+
+
+def test_skips_land_in_their_hash_partition(spark, fresh_run):
+    """The skips write takes part_id from the encoded frame; the corrupt
+    span must land in pmod(xxhash64(doc_id), n_parts), and the embed
+    lineage row counting it must be that same partition."""
+    out, _, _ = fresh_run
+    skips = spark.read.parquet(f"{out}/skips").collect()
+    assert len(skips) == 1
+    (skip,) = skips
+    assert skip["part_id"] == _part_ids(spark, [skip["doc_id"]])[
+        skip["doc_id"]]
+    counted = read_lineage(spark, out).filter(
+        "stage = 'embed' and n_skips = 1").collect()
+    assert [r["part_id"] for r in counted] == [skip["part_id"]]
+
+
+def test_fresh_run_job_count_guard(fresh_run):
+    """A scan pre-pass, a read-back of the written tables or a lineage
+    commit of pickled rows through a Python RDD would each add Spark
+    work to the fresh run; this pins the job count and the commit path."""
+    _, jobs, lineage_rdds = fresh_run
+    assert 0 < len(jobs) <= FRESH_RUN_MAX_JOBS, len(jobs)
+    assert len(lineage_rdds) == 2  # embed rows, then the link row
+    for rdd in lineage_rdds:
+        assert "PythonRDD" not in rdd, rdd
+
+
+def test_resume_with_empty_partition_ids(spark, corpus_small, tmp_path):
+    """Fewer documents than partitions: ids no document hashes to get no
+    lineage, a rerun re-embeds nothing, and a kill whose partitions
+    include empty ids resumes to the fresh run's triples."""
+    docs_pdf, ents_pdf = corpus_small
+    few = docs_pdf.head(6)
+    docs = documents_to_spark(spark, few)
+    present = sorted(set(_part_ids(spark, list(few["doc_id"])).values()))
+    assert len(present) < 16
+
+    def embed_ids(out, run_id):
+        return {
+            r["part_id"]
+            for r in read_lineage(spark, out).filter(
+                (F.col("stage") == "embed") & (F.col("run_id") == run_id)
+            ).collect()
+        }
+
+    full = str(tmp_path / "full")
+    run_pipeline(spark, docs, ents_pdf, full, run_id="a")
+    assert sorted(embed_ids(full, "a")) == present
+    n_mentions = spark.read.parquet(f"{full}/mentions").count()
+    run_pipeline(spark, docs, ents_pdf, full, run_id="b")
+    assert embed_ids(full, "b") == set()
+    assert spark.read.parquet(f"{full}/mentions").count() == n_mentions
+
+    # the kill covers ids 0..present[1]: two present ids and the empty
+    # ids before them
+    n_kill = present[1] + 1
+    assert n_kill > 2
+    crash = str(tmp_path / "crash")
+    r1 = run_pipeline(spark, docs, ents_pdf, crash, run_id="run1",
+                      fail_after_parts=n_kill)
+    assert r1["status"] == "killed"
+    assert embed_ids(crash, "run1") == set(present[:2])
+    r2 = run_pipeline(spark, docs, ents_pdf, crash, run_id="run2")
+    assert r2["status"] == "done"
+    assert sorted(embed_ids(crash, "run2")) == present[2:]
+    assert _triples_set(spark, crash) == _triples_set(spark, full)

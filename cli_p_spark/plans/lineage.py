@@ -24,19 +24,31 @@ dynamic-partition-OVERWRITES their directories: data commits before
 lineage, so a kill between the two leaves partitions unmarked — the
 resume re-runs them and the overwrite replaces (never duplicates) their
 rows.  Idempotent per-partition commit, no write-ordering race (gated by
-test_resume's after_data kill).  Downstream stages are cheap relative to
-encode and rebuild from the union of all mention partitions.
+test_resume's after_data kill).
 
-Bookkeeping stays off the data path.  The embed stage scans the corpus
-once: there is no pre-pass for the partition ids present (an id no
-document hashes to yields no rows and no lineage), and the skips write
-takes its part_id from the encoded frame instead of re-joining a second
-explode.  The encoded frame is cached, and the mentions write, the skips
-write and one groupBy(part_id) for the per-partition row and skip counts
-all consume it; the written tables are never read back for counting.
-Lineage rows commit from a driver-local Arrow table, not as pickled rows
-through a Python RDD.  A row's ``wall_s`` is still the stage wall divided
-by the partitions it wrote: an average, not a per-partition measurement.
+One Python pass per span.  The embed stage is a single cached
+mapInPandas (operators/fused.py) that encodes each span and searches
+the broadcast IVF index in the same Arrow batch, as the reference
+encodes a query and searches in one process (query-index.py:107-111).
+It emits mention rows (with the embedding), skip rows and link rows;
+the mentions write, the skips write, one groupBy(part_id) for the
+lineage counts and the triples write all consume that cache, so the
+embeddings cross the Python<->JVM boundary once, outbound, and no
+written table is read back (and a skips write with no skipped span is
+not run).  The pass's input is placed by part_id (repartitionById):
+each task holds whole partitions, so a run writes one file per
+partition directory (round-robin input made every task write into every
+directory).  Triples = the fused links of this run's partitions union a
+disk relink (link_ivf_broadcast over mentions/) of the partitions
+earlier runs finished — empty on a fresh run.  The link lineage row's
+n_rows is counted by an Observation on the triples write.
+
+Bookkeeping stays off the data path.  The corpus is scanned once: there
+is no pre-pass for the partition ids present (an id no document hashes
+to yields no rows and no lineage).  Lineage rows commit from a
+driver-local Arrow table, not as pickled rows through a Python RDD.  An
+embed row's ``wall_s`` is still the stage wall divided by the
+partitions it wrote: an average, not a per-partition measurement.
 
 part_id = pmod(xxhash64(doc_id), n_parts): deterministic, independent of
 input order and cluster size — a resume on a different cluster still
@@ -46,17 +58,20 @@ skips the right work.
 from __future__ import annotations
 
 import datetime
+import functools
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from .pipeline import (
+# encode_mentions is not called here since the fused embed pass replaced
+# it, but perfbench's traced kg pass still looks it up on this module
+from .pipeline import (  # noqa: F401
     encode_mentions,
     explode_spans,
-    split_skips,
     triples_from_links,
+    with_content,
 )
 
 LINEAGE_SCHEMA = (
@@ -106,9 +121,11 @@ def run_pipeline(
     nprobe: int = 32,
     fail_after_parts: int | None = None,
     fail_mode: str = "after_lineage",
-    link_strategy: str = "broadcast",
-) -> dict[str, str]:
+) -> dict:
     """Execute (or resume) the KG pipeline into ``out_dir``.
+
+    Returns ``status`` ('done' or 'killed') and ``out_dir``; a finished
+    run also returns ``n_triples``, the row count of its triples write.
 
     ``fail_after_parts`` simulates a mid-run kill for the resume tests:
     only that many embed partitions are processed before returning.
@@ -120,13 +137,10 @@ def run_pipeline(
     duplicates (idempotent per-partition commit).
     """
     import numpy as np
+    from pyspark.sql import Observation
 
-    from ..fixtures.generate import entities_to_spark
-    from ..operators.ann import (
-        link_ann_join,
-        link_ivf_broadcast,
-        train_centroids,
-    )
+    from ..operators.ann import link_ivf_broadcast, train_centroids
+    from ..operators.fused import encode_and_link
     from .tables import TableStore
 
     store = TableStore(spark, out_dir)
@@ -148,6 +162,14 @@ def run_pipeline(
     todo = [p for p in range(n_parts) if p not in done]
     if fail_after_parts is not None:
         todo = todo[:fail_after_parts]
+    t0 = time.time()
+    # the index both link sources search: the fused pass over this run's
+    # partitions and the disk relink of earlier runs' partitions
+    centroids = train_centroids(
+        np.stack(entities_pdf["embedding"].to_numpy()), nlist=nlist,
+        seed=cfg.seed,
+    )
+    embedded = None
     if todo:
         spans = explode_spans(documents).withColumn(
             "part_id",
@@ -155,28 +177,50 @@ def run_pipeline(
         )
         if len(todo) < n_parts:
             spans = spans.filter(F.col("part_id").isin(todo))
-        t0 = time.time()
-        # cache: the expensive encode UDF feeds the mentions write, the
-        # skips write and the per-partition counts — without it each of
-        # them would re-run the encoder (and re-scan the corpus)
-        encoded = encode_mentions(spans, cfg).persist()
-        ok, skips = split_skips(encoded, keep=("part_id",))
+        # each task holds whole part_ids, so every partition directory gets
+        # one file (round-robin input had every task write into every
+        # directory).  Direct placement by the id's slot in todo: hash
+        # partitioning a few small ints collides and leaves tasks empty,
+        # and range partitioning samples its input in an extra scan
+        if len(todo) == n_parts:
+            slot = F.col("part_id")
+        else:
+            slot = F.array_position(
+                F.array(*map(F.lit, todo)), F.col("part_id")) - 1
+        spans = with_content(spans).select(
+            "doc_id", "span_idx", "kind", "content", "media_ref", "part_id"
+        ).repartitionById(
+            min(cfg.embed_partitions, len(todo)), slot.cast("int"))
+        # one Python pass encodes and links each span; cached because it
+        # feeds the mentions write, the skips write, the per-partition
+        # counts and the triples write, none of which reads a table back
+        embedded = encode_and_link(
+            spans, entities_pdf, centroids, cfg, nprobe,
+            keep=("media_ref", "part_id"), embeddings=True,
+        ).persist()
         store.overwrite_partitions(
-            ok.select("doc_id", "span_idx", "kind", "embedding", "part_id"),
+            embedded.filter(F.col("embedding").isNotNull()).select(
+                "doc_id", "span_idx", "kind", "embedding", "part_id"),
             "mentions", partition_by=("part_id",),
         )
-        store.overwrite_partitions(skips, "skips", partition_by=("part_id",))
-        # exact per-partition counts from the cached frame both writes
-        # consumed, so the written tables are never read back
-        counts = encoded.groupBy("part_id").agg(
+        counts = embedded.groupBy("part_id").agg(
             F.count("embedding").alias("n_rows"),
-            F.count_if(F.col("embedding").isNull()).alias("n_skips"),
+            F.count("skip_reason").alias("n_skips"),
         ).collect()
-        encoded.unpersist()
-        if fail_after_parts is not None and fail_mode == "after_data":
-            # simulated kill inside the crash window: data committed,
-            # lineage not — these partitions must re-run idempotently
-            return {"out_dir": out_dir, "status": "killed"}
+        # a write of no rows would still run a job over the whole cache
+        if any(r["n_skips"] for r in counts):
+            store.overwrite_partitions(
+                embedded.filter(F.col("skip_reason").isNotNull()).select(
+                    "doc_id", "span_idx", "kind", "media_ref",
+                    F.col("skip_reason").alias("reason"), "part_id"),
+                "skips", partition_by=("part_id",),
+            )
+        if fail_after_parts is not None:
+            embedded.unpersist()  # a killed run writes no triples
+            if fail_mode == "after_data":
+                # simulated kill inside the crash window: data committed,
+                # lineage not — these partitions must re-run idempotently
+                return {"out_dir": out_dir, "status": "killed"}
         wall = time.time() - t0
         now = _utcnow()
         if counts:
@@ -193,34 +237,37 @@ def run_pipeline(
     if fail_after_parts is not None:
         return {"out_dir": out_dir, "status": "killed"}
 
-    # ---- stage: link + triples (rebuilt from all mention partitions) ----
+    # ---- stage: link + triples ----
+    # this run's partitions link in the fused pass; partitions finished
+    # by earlier runs relink from their mentions on disk
     t0 = time.time()
-    mentions = store.read("mentions").select(
-        "doc_id", "span_idx", "kind", "embedding"
+    sources = []
+    if embedded is not None:
+        sources.append(embedded.filter(F.col("entity_id").isNotNull()))
+    mentions = store.read("mentions") if done else None
+    if mentions is not None:
+        sources.append(link_ivf_broadcast(
+            mentions.filter(F.col("part_id").isin(sorted(done))).select(
+                "doc_id", "span_idx", "kind", "embedding"),
+            entities_pdf, centroids, k=cfg.k, tau=cfg.tau, nprobe=nprobe,
+        ))
+    links = functools.reduce(DataFrame.unionByName, [
+        df.select("doc_id", "span_idx", "kind", "entity_id", "score", "rank")
+        for df in sources
+    ])
+    observed = Observation()
+    store.overwrite(
+        triples_from_links(links).observe(
+            observed, F.count(F.lit(1)).alias("n")),
+        "triples",
     )
-    emat = np.stack(entities_pdf["embedding"].to_numpy())
-    centroids = train_centroids(emat, nlist=nlist, seed=cfg.seed)
-    if link_strategy == "broadcast":
-        # entity index fits executors (the reference's own regime) -> the
-        # zero-shuffle GEMM search; 'join' = bucket equi-join for entity
-        # sides too big to broadcast (identical results, tested)
-        links = link_ivf_broadcast(
-            mentions, entities_pdf, centroids,
-            k=cfg.k, tau=cfg.tau, nprobe=nprobe,
-        )
-    else:
-        entities = entities_to_spark(spark, entities_pdf)
-        links = link_ann_join(
-            mentions, entities, centroids, k=cfg.k, tau=cfg.tau,
-            nprobe=nprobe,
-        )
-    triples = triples_from_links(links)
-    store.overwrite(triples, "triples")
-    n_triples = store.read("triples").count()
+    n_triples = observed.get["n"]
+    if embedded is not None:
+        embedded.unpersist()
     _append_lineage(
         spark,
         out_dir,
         [("link", -1, run_id, "done", n_triples, 0, time.time() - t0,
           _utcnow())],
     )
-    return {"out_dir": out_dir, "status": "done"}
+    return {"out_dir": out_dir, "status": "done", "n_triples": n_triples}

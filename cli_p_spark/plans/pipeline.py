@@ -72,11 +72,21 @@ def reassemble_spans(exploded: DataFrame) -> DataFrame:
     )
 
 
+def with_content(spans: DataFrame) -> DataFrame:
+    """content = text|media_ref by kind: the two modalities of
+    query-index.py:86-108 go through ONE encoder."""
+    return spans.withColumn(
+        "content",
+        F.when(F.col("kind") == "text", F.col("text")).otherwise(
+            F.col("media_ref")
+        ),
+    )
+
+
 def encode_mentions(
     spans: DataFrame, cfg: PipelineConfig = PipelineConfig()
 ) -> DataFrame:
-    """Attach embeddings.  content = text|media_ref by kind (the two
-    modalities of query-index.py:86-108 through ONE encoder UDF).
+    """Attach embeddings of each span's content (``with_content``).
 
     Explicit repartition before the embedding stage (north_rule): the
     encode UDF is the expensive stage, so balance it across the cluster
@@ -84,28 +94,19 @@ def encode_mentions(
     """
     encode = make_encode_udf(dim=cfg.dim, seed=cfg.seed)
     return (
-        spans.withColumn(
-            "content",
-            F.when(F.col("kind") == "text", F.col("text")).otherwise(
-                F.col("media_ref")
-            ),
-        )
+        with_content(spans)
         .repartition(cfg.embed_partitions)
         .withColumn("embedding", encode("content"))
     )
 
 
-def split_skips(
-    encoded: DataFrame, keep: tuple[str, ...] = ()
-) -> tuple[DataFrame, DataFrame]:
+def split_skips(encoded: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(ok_mentions, skips).  Null embedding = simulated decode failure ->
-    quarantined, run continues (build-index.py:53-61 / skip_db).  ``keep``
-    names extra columns of ``encoded`` the skips rows carry (e.g. the
-    partition id they are written under)."""
+    quarantined, run continues (build-index.py:53-61 / skip_db)."""
     ok = encoded.filter(F.col("embedding").isNotNull())
     skips = encoded.filter(F.col("embedding").isNull()).select(
         "doc_id", "span_idx", "kind", "media_ref",
-        F.lit("decode_error").alias("reason"), *keep,
+        F.lit("decode_error").alias("reason"),
     )
     return ok, skips
 

@@ -93,12 +93,11 @@ def main(argv=None):
         nlist=args.nlist, nprobe=args.nprobe,
     )
     wall = time.time() - t0
-    n_triples = spark.read.parquet(f"{args.output}/triples").count()
     print(json.dumps({
         "status": result["status"],
         "run_id": args.run_id,
         "out_dir": args.output,
-        "n_triples": n_triples,
+        "n_triples": result["n_triples"],
         "wall_s": round(wall, 2),
     }))
     spark.stop()

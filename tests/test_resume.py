@@ -4,6 +4,9 @@ Kill after p embed partitions; resume; assert (a) the resumed run only
 computed the missing partitions (lineage run_id proves it), (b) final
 triples equal a fresh uninterrupted run."""
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -162,11 +165,13 @@ def _part_ids(spark, doc_ids):
     }
 
 
-# fresh-run Spark jobs on corpus_small, measured with the single-scan embed
-# stage (explode once, counts from the cached encode, Arrow lineage rows);
-# the scan pre-pass, the skips re-join and the read-backs it replaced put
-# the same run at 20 jobs
-FRESH_RUN_MAX_JOBS = 13
+# fresh-run Spark jobs on corpus_small, measured with the fused embed
+# stage (explode once, encode and link in one cached pass, counts from that
+# cache, Arrow lineage rows, triples counted by an Observation); the
+# separate link pass over mentions/ and the triples read-back it replaced
+# put the same run at 13 jobs, the earlier scan pre-pass and read-backs
+# at 20
+FRESH_RUN_MAX_JOBS = 9
 
 
 @pytest.fixture(scope="module")
@@ -226,6 +231,66 @@ def test_fresh_run_job_count_guard(fresh_run):
     assert len(lineage_rdds) == 2  # embed rows, then the link row
     for rdd in lineage_rdds:
         assert "PythonRDD" not in rdd, rdd
+
+
+def test_one_file_per_partition_and_exact_link_count(spark, fresh_run):
+    """The embed pass is range-partitioned by part_id, so each partition
+    directory is written by one task: one file, not one per encode task.
+    The link lineage row counts exactly the triples written."""
+    out, _, _ = fresh_run
+    for table in ("mentions", "skips"):
+        dirs = glob.glob(os.path.join(out, table, "part_id=*"))
+        assert dirs, table
+        for d in dirs:
+            assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+    (link,) = read_lineage(spark, out).filter("stage = 'link'").collect()
+    assert link["n_rows"] == spark.read.parquet(f"{out}/triples").count()
+
+
+def _all_triples(df):
+    return sorted(
+        map(tuple, df.select("subj", "pred", "obj", "score", "span_idx",
+                             "rank").collect())
+    )
+
+
+def test_fused_and_disk_links_agree_at_k3(spark, corpus_small, tmp_path):
+    """Both link sources of run_pipeline give the same triples, scores and
+    ranks: the fused pass (this run's partitions) and link_ivf_broadcast
+    over mentions/ (partitions finished by an earlier run)."""
+    import numpy as np
+
+    from cli_p_spark.operators.ann import link_ivf_broadcast, train_centroids
+    from cli_p_spark.plans.pipeline import triples_from_links
+
+    docs_pdf, ents_pdf = corpus_small
+    docs = documents_to_spark(spark, docs_pdf)
+    cfg = PipelineConfig(k=3)
+
+    full = str(tmp_path / "full")
+    r = run_pipeline(spark, docs, ents_pdf, full, cfg, run_id="full")
+    fresh = _all_triples(spark.read.parquet(f"{full}/triples"))
+    assert r["n_triples"] == len(fresh)
+    assert {t[5] for t in fresh} == {1, 2, 3}
+
+    centroids = train_centroids(
+        np.stack(ents_pdf["embedding"].to_numpy()), nlist=100, seed=cfg.seed)
+    mentions = spark.read.parquet(f"{full}/mentions").select(
+        "doc_id", "span_idx", "kind", "embedding")
+    relinked = triples_from_links(link_ivf_broadcast(
+        mentions, ents_pdf, centroids, k=cfg.k, tau=cfg.tau, nprobe=32))
+    assert _all_triples(relinked) == fresh
+
+    crash = str(tmp_path / "crash")
+    r1 = run_pipeline(spark, docs, ents_pdf, crash, cfg, run_id="run1",
+                      fail_after_parts=5)
+    assert r1["status"] == "killed"
+    r2 = run_pipeline(spark, docs, ents_pdf, crash, cfg, run_id="run2")
+    assert r2["n_triples"] == len(fresh)
+    assert _all_triples(spark.read.parquet(f"{crash}/triples")) == fresh
+    # the resumed run also wrote one file per partition it ran
+    for d in glob.glob(os.path.join(crash, "mentions", "part_id=*")):
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
 
 
 def test_resume_with_empty_partition_ids(spark, corpus_small, tmp_path):

@@ -11,12 +11,19 @@ a cos=0.95 pair collides with p ~ 0.96 and an exact duplicate always
 collides.  (Charikar'02 SimHash family; the banding trick is the classic
 MinHash-LSH layout, cf. operators/dedup.py for the token version.)
 
-Pipeline shape (all DataFrame ops):
+Pipeline shape:
 
-    embeddings -> sign bits (seeded hyperplanes, pandas UDF)
-               -> band keys (bit-packed ints) -> explode
-               -> self-join on (band, key)  [the only shuffle]
-               -> exact cosine verify (zip_with, JVM) -> pairs >= tau
+    embeddings -> band: sign bits (seeded hyperplanes) packed into one
+                  (id, [group], key) row per band  (mapInPandas)
+               -> place: repartition(group, key) + sort by (group, key, id)
+                  [the only candidate exchange]
+               -> pair: walk the sorted runs, one run = one bucket; pairs
+                  i<j up to max_bucket, the star above  (mapInPandas)
+               -> dedup pairs -> exact cosine verify (zip_with, JVM)
+               -> pairs >= tau
+
+Nothing is cached: each stage is evaluated once, and a bucket's size is
+its run length, so no size aggregate or join exists to feed.
 
 Determinism: hyperplanes from the config seed; candidate set is a pure
 function of the embeddings.  Recall at tau: 1-(1-p_band)^bands with
@@ -33,15 +40,14 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..config import SEED
 from .link import cosine_expr
 
 
 class _CacheHandle:
-    """unpersist() handle bundling the plan's persisted intermediates
-    (the size-tagged banded signatures)."""
+    """unpersist() handle bundling a plan's persisted intermediates."""
 
     def __init__(self, *dfs):
         self._dfs = dfs
@@ -124,91 +130,68 @@ def hyperplane_lsh_pairs(
     ``group_col``: restrict pairing to rows sharing this column (the
     SCALE.md stage-3 sharding — e.g. canonicalize per linked entity
     neighborhood at 10^12 mentions, where even sub-quadratic global
-    banding is infeasible).  The group simply joins the band key.
+    banding is infeasible).  The group is part of the bucket key.
+
+    Rows whose id, embedding or group is NULL (or a NaN float) are
+    dropped before banding: they make no pairs.
     """
     n_planes = bits_per_band * bands
     rng = np.random.default_rng(seed ^ 0x15A9)
-    H = rng.standard_normal((dim, n_planes))
+    H32 = rng.standard_normal((dim, n_planes)).astype(np.float32)
     bpb = bits_per_band
-
-    H32 = H.astype(np.float32)  # sign() is robust to f32 rounding
-
-    @pandas_udf("array<long>")
-    def band_keys(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        weights = (1 << np.arange(bpb, dtype=np.int64))
-        # pack the band index into the key's high bits: one long join key
-        # instead of (band int, key long) — halves the shuffle key width
-        # through the explode, the bucket-size groupBy and the self-join
-        offsets = np.arange(bands, dtype=np.int64) << bpb
-        for s in batches:
-            M = np.stack(s.to_numpy()).astype(np.float32)
-            bits = (M @ H32) > 0  # [n, n_planes]
-            keys = bits.reshape(len(M), bands, bpb).astype(np.int64) @ weights
-            yield pd.Series(list(keys + offsets), dtype=object)
-
-    # guide §4.4: the optimizer pushes the explode's null/emptiness
-    # checks below the projection and re-evaluates the UDF once under
-    # the filter and once in the projection (two stacked ArrowEvalPython
-    # nodes in the executed plan).  The hyperplane GEMM is the dominant
-    # per-row cost of this operator — marking it non-deterministic pins
-    # a SINGLE evaluation (the value is in fact deterministic; the flag
-    # only disables reordering/duplication).
-    band_keys = band_keys.asNondeterministic()
+    star = oversize == "star"
 
     # banding over ids only — embeddings attach AFTER pair dedup, so the
-    # candidate shuffle carries 2 ids instead of 2 vectors per row
+    # candidate shuffle carries ids and band keys, never vectors
     gcols = [group_col] if group_col else []
     nodes = df.select(
         F.col(id_col).alias("_id"), F.col(embedding_col).alias("_emb"),
         *gcols,
-    )
+    ).dropna(subset=["_id", "_emb", *gcols])
     join_keys = gcols + ["_key"]
-    # ONE exchange for the whole candidate side (round 7): hash-
-    # repartition the banded rows by the bucket join key up front and
-    # persist THAT.  The bucket-size aggregation, the size-attach join
-    # and BOTH self-join sides then all consume the cached
-    # HashPartitioning(join_keys) — zero further exchanges (the size
-    # groupBy and the joins are satisfied by the cached distribution),
-    # and the hyperplane GEMM UDF runs exactly once, into the cache.
-    # Previously: sig was persisted unpartitioned, so the sizes groupBy
-    # paid its own 23M-row exchange and the size-attach join a second
-    # one.  Same cache count as before (sig + tagged), one exchange
-    # instead of three on the candidate side.
-    sig = nodes.withColumn("_keys", band_keys(F.col("_emb"))).select(
-        "_id", *gcols, F.explode("_keys").alias("_key")
-    ).repartition(*join_keys).persist()
-    # bucket sizes via groupBy+join, NOT a window: a window partition
-    # would SORT each partition by the bucket key; the hash agg avoids
-    # the sort while the degenerate-bucket rows are already confined to
-    # one partition by the repartition (exactly like the self-join
-    # below requires).  tagged is persisted too: its four consumers
-    # (both self-join sides, star 'big', star mins) would each
-    # recompute the size aggregation + attach join otherwise (Catalyst
-    # has no cross-branch CSE) — the plan showed the aggregation FOUR
-    # times before this cache.
-    sizes = sig.groupBy(*join_keys).agg(F.count(F.lit(1)).alias("_bn"))
-    tagged = sig.join(sizes, join_keys).persist()
-    sized = tagged.filter(F.col("_bn") <= max_bucket)
 
-    a = sized.select(F.col("_id").alias("src"), *join_keys)
-    b = sized.select(F.col("_id").alias("dst"), *join_keys)
-    cand = (
-        a.join(b, join_keys)
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
+    def band(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        weights = (1 << np.arange(bpb, dtype=np.int64))
+        # pack the band index into the key's high bits: one long bucket
+        # key instead of (band int, key long)
+        offsets = np.arange(bands, dtype=np.int64) << bpb
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            M = np.stack(pdf["_emb"].to_numpy()).astype(np.float32)
+            bits = (M @ H32) > 0  # [n, n_planes]; sign() is f32-robust
+            keys = bits.reshape(len(M), bands, bpb).astype(np.int64) @ weights
+            out = {
+                c: np.repeat(pdf[c].to_numpy(), bands)
+                for c in ["_id", *gcols]
+            }
+            out["_key"] = (keys + offsets).ravel()
+            yield pd.DataFrame(out)
+
+    schema = nodes.schema
+    banded = StructType(
+        [schema["_id"], *(schema[g] for g in gcols),
+         StructField("_key", LongType(), False)]
     )
-    if oversize == "star":
-        big = tagged.filter(F.col("_bn") > max_bucket)
-        mins = big.groupBy(*join_keys).agg(F.min("_id").alias("_min"))
-        star = (
-            big.join(mins, join_keys)
-            .filter(F.col("_id") != F.col("_min"))
-            .select(
-                F.col("_min").alias("src"), F.col("_id").alias("dst")
-            )
+    pair_schema = StructType([
+        StructField("src", schema["_id"].dataType),
+        StructField("dst", schema["_id"].dataType),
+    ])
+    # ONE candidate exchange: hash-place the banded rows by bucket key
+    # and sort each partition by (bucket, id).  A REPARTITION_BY_COL
+    # partition is never split by AQE, so every bucket is one contiguous
+    # run in one task; the pair kernel then sizes buckets from run
+    # lengths and pairs them without a size aggregate, join or cache.
+    cand = (
+        nodes.mapInPandas(band, banded)
+        .repartition(*join_keys)
+        .sortWithinPartitions(*join_keys, "_id")
+        .mapInPandas(
+            lambda it: _sorted_run_pairs(it, join_keys, max_bucket, star),
+            pair_schema,
         )
-        cand = cand.unionByName(star)
-    cand = cand.dropDuplicates(["src", "dst"])
+        .dropDuplicates(["src", "dst"])
+    )
     ea = nodes.select(F.col("_id").alias("src"), F.col("_emb").alias("_ea"))
     eb = nodes.select(F.col("_id").alias("dst"), F.col("_emb").alias("_eb"))
     out = (
@@ -217,5 +200,87 @@ def hyperplane_lsh_pairs(
         .filter(F.col("cosine") >= tau)
         .select("src", "dst", "cosine")
     )
-    out.signature_cache = _CacheHandle(sig, tagged)
+    # nothing is cached; the empty handle keeps callers' unpersist() valid
+    out.signature_cache = _CacheHandle()
     return out
+
+
+def _run_starts(pdf: pd.DataFrame, keys: list[str]) -> np.ndarray:
+    """Row offsets where a new (keys) run begins in a sorted frame."""
+    new = np.zeros(len(pdf), dtype=bool)
+    new[:1] = True
+    for k in keys:
+        v = pdf[k].to_numpy()
+        new[1:] |= v[1:] != v[:-1]
+    return np.flatnonzero(new)
+
+
+def _run_pairs(ids, starts, lens, sizes, max_bucket, star):
+    """Candidate (src, dst) id pairs of the runs at ``starts``.
+
+    ``lens`` counts a run's rows in ``ids``; ``sizes`` its whole bucket
+    size (larger than ``lens`` only for an oversize run whose earlier
+    rows were starred already).  A bucket of 2..max_bucket rows pairs
+    all i<j; a larger one emits the star (first id, each other row)."""
+    src, dst = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    small = (sizes >= 2) & (sizes <= max_bucket)
+    for n in np.unique(lens[small]):
+        i, j = np.triu_indices(n, 1)
+        s = starts[small & (lens == n)][:, None]
+        src.append((s + i).ravel())
+        dst.append((s + j).ravel())
+    if star:
+        big = sizes > max_bucket
+        rest = lens[big] - 1
+        first = np.repeat(starts[big], rest)
+        # row offsets 1..rest past each run's first row
+        step = np.arange(rest.sum()) - np.repeat(np.cumsum(rest) - rest, rest)
+        src.append(first)
+        dst.append(first + step + 1)
+    a = ids[np.concatenate(src)]
+    b = ids[np.concatenate(dst)]
+    keep = a != b  # a repeated id is not a pair
+    return pd.DataFrame({"src": a[keep], "dst": b[keep]})
+
+
+def _sorted_run_pairs(batches, keys, max_bucket, star):
+    """Pair kernel over one partition sorted by (keys, _id).
+
+    Each run of equal ``keys`` is one bucket; ids are sorted inside it,
+    so every emitted pair has src < dst.  The last run of a batch may
+    continue in the next one and is carried over.  Once a carried run
+    passes ``max_bucket`` it is starred as it streams and only its first
+    row is kept, so memory stays O(batch + max_bucket), not O(bucket)."""
+    carry, done = None, 0  # open run's kept rows; its rows starred already
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        ids = pdf["_id"].to_numpy()
+        starts = _run_starts(pdf, keys)
+        lens = np.diff(np.append(starts, len(pdf)))
+        sizes = lens.copy()
+        sizes[0] += done
+        # the last run may continue in the next batch: pair it only once
+        # it is complete, but star an oversize one as it streams and keep
+        # just its first row
+        emit = np.ones(len(starts), dtype=bool)
+        emit[-1] = sizes[-1] > max_bucket
+        out = _run_pairs(
+            ids, starts[emit], lens[emit], sizes[emit], max_bucket, star
+        )
+        if len(out):
+            yield out
+        last = starts[-1]
+        if emit[-1]:
+            carry, done = pdf.iloc[last:last + 1], sizes[-1] - 1
+        else:
+            carry, done = pdf.iloc[last:], 0
+    if carry is not None and not done:
+        n = np.array([len(carry)])
+        out = _run_pairs(
+            carry["_id"].to_numpy(), np.array([0]), n, n, max_bucket, star
+        )
+        if len(out):
+            yield out

@@ -1,6 +1,7 @@
 """Banded sign-LSH pair generation vs the exact all-pairs oracle."""
 
 import numpy as np
+import pytest
 
 from cli_p_spark.operators.lsh import hyperplane_lsh_pairs
 
@@ -189,3 +190,143 @@ def test_sharded_canonicalization_end_to_end(spark):
                        for x in members), c
     m.unpersist(); pairs.unpersist()
     pairs.signature_cache.unpersist()
+
+
+def _pairs(df, **kw):
+    return {
+        (r["src"], r["dst"]): r["cosine"]
+        for r in hyperplane_lsh_pairs(
+            df, "embedding", "id", dim=64, **kw
+        ).collect()
+    }
+
+
+def test_lsh_null_rows_make_no_pairs(spark):
+    """A NULL id, embedding or group drops its row before banding: the
+    pairs of the non-NULL rows are unchanged, grouped and ungrouped."""
+    rows = _mk_vectors(n_base=30)
+    clean = [(rid, emb, "g1" if i % 3 else "g2")
+             for i, (rid, emb) in enumerate(rows)]
+    nullgrp = ("nullgrp", rows[2][1], None)  # copy of v0001a's vector
+    dirty = clean + [
+        (None, rows[0][1], "g1"),  # copy of v0000a's vector, no id
+        ("nullemb", None, "g1"),
+        nullgrp,
+    ]
+    schema = "id string, embedding array<float>, grp string"
+    # ungrouped, the NULL-group row is an ordinary row and pairs
+    for kw, base in (({}, clean + [nullgrp]), ({"group_col": "grp"}, clean)):
+        want = _pairs(spark.createDataFrame(base, schema), tau=0.9, **kw)
+        got = _pairs(spark.createDataFrame(dirty, schema), tau=0.9, **kw)
+        assert want and got == want, kw
+        assert (("nullgrp", "v0001a") in got) == (not kw), kw
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+@pytest.mark.parametrize("grp_type", ["int", "string"])
+@pytest.mark.parametrize("oversize", ["star", "drop"])
+def test_bucket_cap_across_arrow_batches(spark, id_type, grp_type, oversize):
+    """Buckets of max_bucket and max_bucket + 1 exact copies, read in
+    3-row Arrow batches so every bucket spans batches: the first pairs
+    completely, the second emits exactly the star (or nothing).  A hot
+    bucket of 4 * max_bucket copies keeps streaming after it passed the
+    cap and must stay a star too."""
+    cap = 5
+    rng = np.random.default_rng(4)
+    v, w, u = (x / np.linalg.norm(x) for x in rng.standard_normal((3, 64)))
+
+    def mk_id(i):
+        return i if id_type == "long" else f"m{i:03d}"
+
+    def mk_grp(g):
+        return g if grp_type == "int" else f"g{g}"
+
+    full = [mk_id(100 + i) for i in range(cap)]
+    over = [mk_id(200 + i) for i in range(cap + 1)]
+    other = [mk_id(300 + i) for i in range(3)]  # v again, another group
+    hot = [mk_id(400 + i) for i in range(4 * cap)]
+    rows = (
+        [(i, mk_grp(1), v.astype(np.float32).tolist()) for i in full]
+        + [(i, mk_grp(1), w.astype(np.float32).tolist()) for i in over]
+        + [(i, mk_grp(2), v.astype(np.float32).tolist()) for i in other]
+        + [(i, mk_grp(2), u.astype(np.float32).tolist()) for i in hot]
+    )
+    df = spark.createDataFrame(
+        rows, f"id {id_type}, grp {grp_type}, embedding array<float>"
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = set(_pairs(
+            df, tau=0.99, group_col="grp", max_bucket=cap, oversize=oversize,
+        ))
+    finally:
+        spark.conf.set(key, old)
+    want = {(a, b) for ids in (full, other) for a in ids for b in ids
+            if a < b}
+    if oversize == "star":
+        want |= {(ids[0], b) for ids in (over, hot) for b in ids[1:]}
+    assert got == want
+
+
+# measured on the sorted-run kernel: the banded rows cross one
+# hash-by-bucket exchange, and nothing is cached
+LSH_CANDIDATE_EXCHANGES = 1
+
+
+def test_lsh_plan_one_candidate_exchange_no_cache(spark):
+    rows = _mk_vectors(n_base=40)
+    df = spark.createDataFrame(
+        [(rid, emb, i // 2 % 3) for i, (rid, emb) in enumerate(rows)],
+        "id string, embedding array<float>, grp int",
+    )
+    for kw in ({}, {"group_col": "grp"}):
+        pairs = hyperplane_lsh_pairs(
+            df, "embedding", "id", tau=0.9, dim=64, **kw
+        )
+        assert pairs.collect()  # an empty result prunes the plan
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert "InMemoryRelation" not in final, final
+        by_col = [
+            line for line in final.splitlines()
+            if "REPARTITION_BY_COL" in line
+        ]
+        assert len(by_col) == LSH_CANDIDATE_EXCHANGES, final
+        assert "_key#" in by_col[0], by_col
+
+
+@pytest.mark.parametrize("star", [True, False])
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_sorted_run_kernel_matches_loop(star, seed):
+    """The vectorised pair kernel against a plain loop over buckets, on
+    sorted rows with repeated ids, cut into random batch sizes."""
+    import pandas as pd
+
+    from cli_p_spark.operators.lsh import _sorted_run_pairs
+
+    cap = 4
+    rng = np.random.default_rng(seed)
+    n = 400
+    pdf = pd.DataFrame({
+        "_id": rng.integers(0, 150, n),
+        "_key": rng.integers(0, 120, n),  # buckets of 1 to ~3 * cap rows
+    }).sort_values(["_key", "_id"], ignore_index=True)
+    cuts = np.unique(rng.integers(0, n, 60))
+    batches = [pdf.iloc[a:b] for a, b in zip([0, *cuts], [*cuts, n])]
+    got = set()
+    for out in _sorted_run_pairs(iter(batches), ["_key"], cap, star):
+        got |= set(zip(out["src"], out["dst"]))
+
+    want = set()
+    for _, ids in pdf.groupby("_key")["_id"]:
+        ids = list(ids)
+        if len(ids) <= cap:
+            want |= {(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]
+                     if a < b}
+        elif star:
+            want |= {(ids[0], b) for b in ids[1:] if b != ids[0]}
+    sizes = pdf.groupby("_key").size()
+    assert (sizes > cap).any() and (sizes.between(2, cap)).any()
+    assert got == want

@@ -72,12 +72,16 @@ def entry(spark: SparkSession) -> DataFrame:
     Loads the driver's flat documents table, lifts each row into the
     interleaved-span shape (one text span per doc — the degenerate case of
     the input_hint schema), links every span against a deterministic
-    entity index via the exact broadcast-GEMM search, and returns the
-    (subj, pred, obj, score, span_idx, rank) triples.
+    entity index through the fused encode+search pass at nprobe = nlist
+    (exact f64 search), and returns the (subj, pred, obj, score,
+    span_idx, rank) triples.
     """
+    import numpy as np
+
     from cli_p_spark.config import PipelineConfig
     from cli_p_spark.fixtures.generate import make_entities
-    from cli_p_spark.plans.pipeline import build_triples_exact
+    from cli_p_spark.operators.ann import train_centroids
+    from cli_p_spark.plans.pipeline import build_triples
 
     _ensure_workers(spark)
     flat = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -94,7 +98,12 @@ def entry(spark: SparkSession) -> DataFrame:
     )
     ents = make_entities(200)
     cfg = PipelineConfig(tau=0.0, k=1)  # rank-1 link for every doc
-    triples, _skips = build_triples_exact(docs, ents, cfg)
+    centroids = train_centroids(
+        np.stack(ents["embedding"].to_numpy()), seed=cfg.seed
+    )
+    triples, _skips = build_triples(
+        docs, ents, centroids, cfg, nprobe=len(centroids)
+    )
     return triples
 
 

@@ -232,15 +232,16 @@ class _IvfIndex:
     ``cell_ptr`` offsets) — the same cell-contiguous layout faiss
     IndexIVFFlat keeps its inverted lists in (build-index.py:80-81).
 
-    search(): when nprobe < nlist, ONE sgemm per probed cell against that
-    cell's slice only, merged into a per-row running top-kc — peak
-    intermediate is [block, max_cell + kc], NOT [block, E]; nprobe
-    actually prunes compute (the reference's knob, query-index.py:30).
-    When nprobe >= nlist (exhaustive) a single dense sgemm is cheaper and
-    bit-equivalent.  Either way the kc = k+MARGIN f32 preselect candidates
-    are rescored in f64 for an exact, partition-independent final ranking
-    (the margin absorbs f32 rounding; entity embeddings are float32 so the
-    upcast rescore is exact)."""
+    search(): when nprobe >= nlist (exhaustive) it is f64-EXACT — one
+    dense f64 GEMM, top-kc selected on those f64 scores with the
+    boundary-tie repair; this is the exact linker.  When nprobe < nlist,
+    ONE sgemm per probed cell against that cell's slice only, merged into
+    a per-row running top-kc — peak intermediate is [block, max_cell +
+    kc], NOT [block, E]; nprobe actually prunes compute (the reference's
+    knob, query-index.py:30).  That kc = k+MARGIN f32 preselect is
+    rescored in f64 but is NOT f64-exact on near ties: more than MARGIN
+    entities within f32 rounding of the k-th score can push an f64 top-k
+    member out of the preselect."""
 
     MARGIN = 3
 
@@ -260,6 +261,7 @@ class _IvfIndex:
         self.inv_perm = inv_perm  # original entity idx -> grouped position
         self.cell_ptr = cell_ptr  # [nlist+1] offsets into gmat
         self.CT = CT              # [dim, nlist] float64
+        self.gmat64 = None        # built by the first exhaustive search
         self.stats = {"max_gemm_cols": 0}
 
     _cached: "_IvfIndex | None" = None
@@ -310,34 +312,34 @@ class _IvfIndex:
         bounds = np.append(starts, len(fc))
         return fr, fc, cells, bounds
 
-    def _topk_grouped(self, scores32, kc):
-        """top-kc per row of a grouped-order [n, E] f32 score matrix
-        under the total order (-score, ORIGINAL entity idx asc); masked
-        entries carry -inf and can only fill trailing slots.  Returns
-        (sel original indices, best_sc f32)."""
-        n, E = scores32.shape
+    def _topk_grouped(self, scores, kc):
+        """top-kc per row of a grouped-order [n, E] score matrix (f32 or
+        f64) under the total order (-score, ORIGINAL entity idx asc);
+        masked entries carry -inf and can only fill trailing slots.
+        Returns (sel original indices, best_sc in the input dtype)."""
+        n, E = scores.shape
         if kc < E:
-            part = np.argpartition(-scores32, kc - 1, axis=1)[:, :kc]
+            part = np.argpartition(-scores, kc - 1, axis=1)[:, :kc]
             # boundary ties: argpartition keeps an ARBITRARY subset of
-            # candidates tied at the kc-th f32 score, which can drop
+            # candidates tied at the kc-th score, which can drop
             # the min-entity-id member (mass-duplicate corpora) and
             # break the (-score, entity_id asc) determinism contract.
             # Repair affected rows only: keep everything above the
             # boundary, fill remaining slots with the tied candidates
             # of smallest ORIGINAL entity index.
-            sel_sc = np.take_along_axis(scores32, part, axis=1)
+            sel_sc = np.take_along_axis(scores, part, axis=1)
             b = sel_sc.min(axis=1)
-            n_tied_all = (scores32 == b[:, None]).sum(axis=1)
+            n_tied_all = (scores == b[:, None]).sum(axis=1)
             n_tied_sel = (sel_sc == b[:, None]).sum(axis=1)
             for i in np.where(n_tied_all > n_tied_sel)[0]:
-                above = np.where(scores32[i] > b[i])[0]
-                tied = np.where(scores32[i] == b[i])[0]
+                above = np.where(scores[i] > b[i])[0]
+                tied = np.where(scores[i] == b[i])[0]
                 tied = tied[np.argsort(self.perm[tied])]
                 part[i] = np.concatenate([above, tied[: kc - len(above)]])
         else:
             part = np.tile(np.arange(E), (n, 1))
         sel = self.perm[part]
-        best_sc = np.take_along_axis(scores32, part, axis=1)
+        best_sc = np.take_along_axis(scores, part, axis=1)
         return sel, best_sc
 
     def _search_block(self, Q: np.ndarray, k: int, nprobe: int):
@@ -355,11 +357,13 @@ class _IvfIndex:
         Q32 = Q.astype(np.float32, copy=False)
 
         if pp >= n_cells:
-            # exhaustive probing: a single dense sgemm beats nlist slice
-            # GEMMs and is result-identical (no cell is excluded)
-            scores32 = Q32 @ self.gmat32.T  # [n, E] (grouped order)
+            # exhaustive probing: one dense f64 GEMM (no cell is
+            # excluded), top-kc selected on the f64 scores themselves, so
+            # no f32 rounding can drop an exact top-k member
+            if self.gmat64 is None:
+                self.gmat64 = self.gmat32.astype(np.float64)
             self._track(E)
-            sel, best_sc = self._topk_grouped(scores32, kc)
+            return self._topk_grouped(Q64 @ self.gmat64.T, kc)
         else:
             # cell-pruned search: rows grouped by probed cell, one GEMM
             # per (cell x probing rows), running top-kc merge under the

@@ -7,13 +7,16 @@ between the encoder and the index.  A modular Spark chain
 embedding column in between; at 130k mentions that Arrow round trip of
 array<float> costs more than all the math combined (measured ~8s vs ~1s).
 
-This operator runs encode_batch and the IVF search inside ONE mapInPandas
-stage: span text goes in, (entity_id, score, rank | skip) comes out, and
-the vectors live only as a NumPy matrix inside the Arrow batch.  ZERO
-shuffle; the vectors cross the boundary at most once, outbound, and only
-when the caller asks for them (``embeddings=True``: resume and
-canonicalization need the mentions table, so run_pipeline persists them
-from the same pass that links them).
+This operator runs encode_batch and the IVF search (``_IvfIndex``,
+f64-exact at nprobe >= nlist) inside ONE mapInPandas stage: span text
+goes in, (entity_id, score, rank | skip) comes out, and the vectors live
+only as a NumPy matrix inside the Arrow batch.  ZERO shuffle; the vectors
+cross the boundary at most once, outbound, and only when the caller asks
+for them (``embeddings=True``: resume and canonicalization need the
+mentions table, so run_pipeline and build_kg persist them from the same
+pass that links them).  It is the one documents -> triples kernel:
+run_pipeline (plans/lineage.py), build_triples and build_kg
+(plans/pipeline.py) and the streaming sink all split its output.
 
 Output rows: one per QUARANTINED span (entity_id NULL, skip_reason set,
 -> skips) plus one per link with score >= tau (rank-1..k), plus — with
@@ -32,7 +35,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..functions.encoder import encode_batch
@@ -110,29 +112,3 @@ def encode_and_link(
 
     return spans.mapInPandas(run, schema=schema)
 
-
-def fused_triples(
-    documents: DataFrame,
-    entities_pdf: pd.DataFrame,
-    centroids: np.ndarray,
-    cfg: PipelineConfig = PipelineConfig(),
-    nprobe: int = 32,
-) -> tuple[DataFrame, DataFrame]:
-    """documents -> (triples, skips) through the fused path."""
-    from ..plans.pipeline import (
-        explode_spans,
-        triples_from_links,
-        with_content,
-    )
-
-    spans = (
-        with_content(explode_spans(documents))
-        .repartition(cfg.embed_partitions)
-        .select("doc_id", "span_idx", "kind", "content")
-    )
-    out = encode_and_link(spans, entities_pdf, centroids, cfg, nprobe)
-    links = out.filter(F.col("entity_id").isNotNull())
-    skips = out.filter(F.col("skip_reason").isNotNull()).select(
-        "doc_id", "span_idx", "kind", "skip_reason"
-    )
-    return triples_from_links(links), skips

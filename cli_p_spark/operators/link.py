@@ -1,46 +1,28 @@
-"""Entity linking: top-k cosine search of mentions against an entity index.
+"""Shared pieces of entity linking: the entity matrix and the cosine column.
 
-Replaces the reference's faiss calls (index.search at query-index.py:111,
-IVF build at build-index.py:80-107) with three Spark strategies:
+The reference has one search call, faiss ``index.search``
+(query-index.py:111), exact when nprobe = nlist.  So does this engine:
+every documents -> triples path searches with ``_IvfIndex``
+(operators/ann.py), which is f64-exact when nprobe >= nlist.  The bucket
+equi-join ``link_ann_join`` (operators/ann.py) is the operator for entity
+tables too big to broadcast.  This module keeps what they share:
 
-1. ``link_exact_broadcast`` — the scale workhorse when the entity index
-   fits in executor memory (the reference's own regime: faiss loads the
-   whole index per process, query-index.py:29).  The entity matrix is a
-   Spark broadcast; a ``mapInPandas`` computes per-Arrow-batch GEMM
-   ``mentions_batch @ E.T`` + partial top-k.  Zero shuffle, linear scan,
-   embarrassingly parallel: survives 100 TB of mentions because mentions
-   never shuffle — only the small index moves.  Equivalent to faiss
-   IndexFlatIP == IVF at nprobe=nlist (exact cosine).
+- ``_entity_arrays`` — entities sorted by entity_id as (ids, f64 matrix),
+  so an entity's index IS its entity_id tie-break;
+- ``cosine_expr`` — the dot of two array<float> columns as a Catalyst
+  expression, for the join-side and DataFrame-side scorers.
 
-2. ``link_crossjoin`` — pure declarative DataFrame variant
-   (crossJoin(broadcast) + zip_with dot + rank window).  Same semantics,
-   Catalyst-visible, used for oracle cross-checks; slower (per-pair row
-   explosion) so not the default at scale.
-
-3. ``link_ann_join`` / ``link_ivf_broadcast`` (operators/ann.py) — the
-   ANN paths: IVF-cell bucketing (the analogue of faiss nprobe<nlist),
-   as a bucket equi-join when the entity side is too big to broadcast,
-   or as a broadcast GEMM search when it fits (the reference's regime).
-
-Scores are computed in float64; ties broken by entity_id ascending —
-deterministic across partitionings (the reference inherits whatever order
-faiss emits; we pin it).
+Scores are float64; ties break by entity_id ascending — deterministic
+across partitionings (the reference inherits whatever order faiss emits;
+we pin it).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .topk import topk_per_group
-
-# columns added by linking
-LINK_COLS = "entity_id string, score double, rank int"
 
 
 def _entity_arrays(entities_pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
@@ -49,83 +31,6 @@ def _entity_arrays(entities_pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     eids = ents["entity_id"].to_numpy()
     emat = np.stack(ents["embedding"].to_numpy()).astype(np.float64)
     return eids, emat
-
-
-def link_exact_broadcast(
-    mentions: DataFrame,
-    entities_pdf: pd.DataFrame,
-    k: int = 1,
-    tau: float = 0.0,
-    embedding_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k via broadcast GEMM.
-
-    ``mentions`` must carry ``embedding_col: array<float>`` (nulls =
-    quarantined rows are dropped here; route them to `skips` upstream).
-    Output: input columns minus embedding, plus (entity_id, score, rank),
-    filtered to score >= tau.
-    """
-    spark = mentions.sparkSession
-    eids, emat = _entity_arrays(entities_pdf)
-    bc = spark.sparkContext.broadcast((eids, emat.T.copy()))  # [dim, E]
-
-    keep_fields = [f for f in mentions.schema.fields if f.name != embedding_col]
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in keep_fields)
-        + ", " + LINK_COLS
-    )
-    keep_names = [f.name for f in keep_fields]
-    kk = k
-
-    def search(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        eids_b, ematT = bc.value
-        for pdf in batches:
-            pdf = pdf[pdf[embedding_col].notna()]
-            if pdf.empty:
-                continue
-            q = np.stack(pdf[embedding_col].to_numpy()).astype(np.float64)
-            scores = q @ ematT  # [batch, E]
-            n_e = scores.shape[1]
-            if kk < n_e:
-                # argpartition for the candidate set, then exact sort of it
-                part = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
-                # boundary ties: argpartition keeps an ARBITRARY member of
-                # candidates tied at the k-th score (mass-duplicate entity
-                # catalogs) — repair affected rows so the kept tied
-                # candidates are the smallest entity indices, preserving
-                # the (-score, entity_id asc) determinism contract
-                psc = np.take_along_axis(scores, part, axis=1)
-                b = psc.min(axis=1)
-                n_tied_all = (scores == b[:, None]).sum(axis=1)
-                n_tied_sel = (psc == b[:, None]).sum(axis=1)
-                for i in np.where(n_tied_all > n_tied_sel)[0]:
-                    above = np.where(scores[i] > b[i])[0]
-                    tied = np.sort(np.where(scores[i] == b[i])[0])
-                    part[i] = np.concatenate(
-                        [above, tied[: kk - len(above)]]
-                    )
-            else:
-                part = np.tile(np.arange(n_e), (len(pdf), 1))
-            n = len(pdf)
-            cand_sc = np.take_along_axis(scores, part, axis=1)  # [n, k]
-            # per-row sort by (-score, entity index asc); entity ids are
-            # pre-sorted so the index IS the entity_id tiebreak
-            order = np.lexsort((part, -cand_sc), axis=1)  # [n, k]
-            cand = np.take_along_axis(part, order, axis=1)
-            sc = np.take_along_axis(cand_sc, order, axis=1)
-            ranks = np.tile(np.arange(1, cand.shape[1] + 1), (n, 1))
-            mask = sc >= tau  # [n, k]
-            row_idx = np.repeat(np.arange(n), cand.shape[1])[mask.ravel()]
-            if len(row_idx) == 0:
-                continue
-            out = pdf[keep_names].reset_index(drop=True).iloc[row_idx]
-            out = out.reset_index(drop=True)
-            out["entity_id"] = eids_b[cand.ravel()[mask.ravel()]]
-            out["score"] = sc.ravel()[mask.ravel()]
-            out["rank"] = ranks.ravel()[mask.ravel()].astype("int32")
-            yield out
-
-    return mentions.mapInPandas(search, schema=out_schema)
 
 
 def cosine_expr(a: str, b: str):
@@ -138,37 +43,3 @@ def cosine_expr(a: str, b: str):
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def link_crossjoin(
-    mentions: DataFrame,
-    entities: DataFrame,
-    k: int = 1,
-    tau: float = 0.0,
-    embedding_col: str = "embedding",
-) -> DataFrame:
-    """Declarative exact top-k: crossJoin(broadcast(entities)) + dot + window.
-
-    O(M*E) rows materialized — fine for small E / oracle checks; use
-    link_exact_broadcast (GEMM) or link_lsh at scale.
-    """
-    ent = entities.select(
-        F.col("entity_id"), F.col("embedding").alias("__ent_emb")
-    )
-    group_cols = [
-        f.name for f in mentions.schema.fields if f.name != embedding_col
-    ]
-    scored = (
-        mentions.filter(F.col(embedding_col).isNotNull())
-        .crossJoin(F.broadcast(ent))
-        .withColumn("score", cosine_expr(embedding_col, "__ent_emb"))
-        .drop("__ent_emb", embedding_col)
-    )
-    top = topk_per_group(
-        scored,
-        group_cols=["doc_id", "span_idx"] if "doc_id" in group_cols else group_cols,
-        order_col="score",
-        k=k,
-        tiebreak_cols=["entity_id"],
-    )
-    return top.filter(F.col("score") >= tau)

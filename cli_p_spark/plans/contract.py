@@ -79,10 +79,6 @@ def _one():
     return F.lit(1).cast("decimal(3,2)")
 
 
-def _dsql(c: str) -> str:
-    return f"CAST({c} AS DECIMAL(18,2))"
-
-
 # ---------------------------------------------------------------------------
 # aggregation / scan / filter
 # ---------------------------------------------------------------------------
@@ -1867,9 +1863,12 @@ UNION ALL SELECT 'neardup_unique',
 
 def kg_triples_exact(spark, sf_dir):
     """Exact rank-1 linking from STAGED mention embeddings + entities —
-    the DuckDB twin re-derives the same triples with window SQL."""
+    the IVF broadcast search at nprobe = nlist, which is exact f64; the
+    DuckDB twin re-derives the same triples with window SQL."""
+    import numpy as np
+
     from ..fixtures.generate import entities_to_spark
-    from ..operators.link import link_exact_broadcast
+    from ..operators.ann import link_ivf_broadcast, train_centroids
     from .pipeline import triples_from_links
 
     cfg = PipelineConfig()
@@ -1879,7 +1878,13 @@ def kg_triples_exact(spark, sf_dir):
         entities_to_spark(spark, ents_pdf).select("entity_id", "embedding"),
         "kg_entities",
     )
-    links = link_exact_broadcast(staged_m, ents_pdf, k=cfg.k, tau=-1.0)
+    centroids = train_centroids(
+        np.stack(ents_pdf["embedding"].to_numpy()), seed=cfg.seed
+    )
+    links = link_ivf_broadcast(
+        staged_m, ents_pdf, centroids, k=cfg.k, tau=-1.0,
+        nprobe=len(centroids),
+    )
     rescored = _seqdot_rescore(links, staged_m, staged_e, cfg.tau)
     return triples_from_links(rescored).select(
         "subj", "pred", "obj", F.round("score", 4).alias("score"), "span_idx"

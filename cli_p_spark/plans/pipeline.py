@@ -2,16 +2,19 @@
 
     documents -> posexplode(spans)            # order kept via span_idx
               -> explicit repartition          # north_rule, pre-embedding
-              -> encode pandas UDF             # build-index.py:46-51 semantics
-              -> split: ok rows | skips        # build-index.py:53-61
-              -> link vs entity index          # query-index.py:111
+              -> fused encode + IVF search     # build-index.py:46-51 +
+                                               # query-index.py:111
+              -> split: links | skips          # build-index.py:53-61
               -> (subj, pred, obj) triples
 
-Every step is declarative DataFrame API; the only Python is inside
-Arrow-batched UDFs (encode, GEMM search).  At 100 TB the plan has exactly
-ONE shuffle (the explicit repartition before encode — and even that is
-optional when input partitioning is already balanced); linking against a
-broadcast index adds none.
+Every step is declarative DataFrame API; the only Python is the one
+Arrow-batched fused pass (operators/fused.py) that encodes each span and
+searches the broadcast ``_IvfIndex``, exact when nprobe >= nlist.  ONE
+shuffle (the explicit repartition before encode); the broadcast index
+adds none.  ``build_triples``, ``build_kg`` and the resumable
+``run_pipeline`` (plans/lineage.py) all run this pass, and their skips
+share run_pipeline's skips/ columns (doc_id, span_idx, kind, media_ref,
+reason).
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..functions.encoder import make_encode_udf
-from ..operators.link import link_exact_broadcast
+from ..operators.fused import encode_and_link
 
 MENTION_COLS = ["doc_id", "span_idx", "kind", "offset", "content"]
 
@@ -126,54 +129,6 @@ def triples_from_links(links: DataFrame) -> DataFrame:
     )
 
 
-def build_triples_ann(
-    documents: DataFrame,
-    entities_pdf,
-    cfg: PipelineConfig = PipelineConfig(),
-    nlist: int = 100,
-    nprobe: int = 32,
-    strategy: str = "broadcast",
-) -> tuple[DataFrame, DataFrame]:
-    """M3: ANN linking (operators/ann.py).
-
-    strategy='broadcast': IVF search vs broadcast bucketed index inside
-    mapInPandas — zero shuffle, the default (entity index fits executors,
-    the reference's own regime).  strategy='join': bucket equi-join — for
-    entity sides too big to broadcast.  Identical results (both tested).
-    nlist/nprobe defaults are the reference's own (build-index.py:81,
-    query-index.py:30); nprobe=nlist degenerates to exact search.
-    P/R vs the exact oracle gated >=0.95 in tests/test_ann_link.py.
-    """
-    import numpy as np
-
-    from ..fixtures.generate import entities_to_spark
-    from ..operators.ann import (
-        link_ann_join,
-        link_ivf_broadcast,
-        train_centroids,
-    )
-
-    spans = explode_spans(documents)
-    encoded = encode_mentions(spans, cfg)
-    ok, skips = split_skips(encoded)
-    mentions = ok.select("doc_id", "span_idx", "kind", "embedding")
-
-    emat = np.stack(entities_pdf["embedding"].to_numpy())
-    centroids = train_centroids(emat, nlist=nlist, seed=cfg.seed)
-
-    if strategy == "broadcast":
-        links = link_ivf_broadcast(
-            mentions, entities_pdf, centroids,
-            k=cfg.k, tau=cfg.tau, nprobe=nprobe,
-        )
-    else:
-        entities = entities_to_spark(documents.sparkSession, entities_pdf)
-        links = link_ann_join(
-            mentions, entities, centroids, k=cfg.k, tau=cfg.tau, nprobe=nprobe
-        )
-    return triples_from_links(links), skips
-
-
 def mention_edges(
     mentions: DataFrame,
     cfg: PipelineConfig = PipelineConfig(),
@@ -196,6 +151,48 @@ def mention_edges(
     ).select("src", "dst")
 
 
+def _fused_pass(documents: DataFrame, entities_pdf, centroids,
+                cfg: PipelineConfig, nprobe: int,
+                embeddings: bool = False) -> DataFrame:
+    """documents -> encode_and_link rows, after the one explicit
+    pre-embed repartition; media_ref rides along for the skips."""
+    spans = (
+        with_content(explode_spans(documents))
+        .repartition(cfg.embed_partitions)
+        .select("doc_id", "span_idx", "kind", "content", "media_ref")
+    )
+    return encode_and_link(
+        spans, entities_pdf, centroids, cfg, nprobe,
+        keep=("media_ref",), embeddings=embeddings,
+    )
+
+
+def _split_fused(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(triples, skips) of a fused pass; skips in the skips/ schema."""
+    links = fused.filter(F.col("entity_id").isNotNull())
+    skips = fused.filter(F.col("skip_reason").isNotNull()).select(
+        "doc_id", "span_idx", "kind", "media_ref",
+        F.col("skip_reason").alias("reason"),
+    )
+    return triples_from_links(links), skips
+
+
+def build_triples(
+    documents: DataFrame,
+    entities_pdf,
+    centroids,
+    cfg: PipelineConfig = PipelineConfig(),
+    nprobe: int = 32,
+) -> tuple[DataFrame, DataFrame]:
+    """documents -> (triples, skips) through the fused pass.
+
+    Exact (f64, ties by entity_id) when nprobe >= len(centroids); IVF
+    with the reference's nprobe knob (query-index.py:30) below that."""
+    return _split_fused(
+        _fused_pass(documents, entities_pdf, centroids, cfg, nprobe)
+    )
+
+
 def build_kg(
     documents: DataFrame,
     entities_pdf,
@@ -207,29 +204,25 @@ def build_kg(
     DataFrames: triples (subj=doc_id), canonical (mention_id ->
     canonical_id), canonical_triples (subj=canonical mention id), skips.
 
-    The mention DataFrame is cached: it feeds three consumers (entity
-    linking, the CC self-join, and the canonical mapping) — recomputing
-    the encode UDF three times would triple the dominant cost.
+    One fused pass keeps the embeddings and is persisted, then split
+    into mentions, links and skips as run_pipeline splits it: the
+    mentions feed the CC edges and the canonical mapping, and
+    recomputing the encode per consumer would multiply the dominant cost.
     """
     import numpy as np
 
-    from ..fixtures.generate import entities_to_spark
-    from ..operators.ann import link_ann_join, train_centroids
+    from ..operators.ann import train_centroids
     from ..operators.ccomp import canonical_mapping, connected_components
-
-    spans = explode_spans(documents)
-    encoded = encode_mentions(spans, cfg)
-    ok, skips = split_skips(encoded)
-    mentions = ok.select("doc_id", "span_idx", "kind", "embedding").cache()
 
     emat = np.stack(entities_pdf["embedding"].to_numpy())
     centroids = train_centroids(emat, nlist=nlist, seed=cfg.seed)
-    entities = entities_to_spark(documents.sparkSession, entities_pdf)
-
-    links = link_ann_join(
-        mentions, entities, centroids, k=cfg.k, tau=cfg.tau, nprobe=nprobe
+    fused = _fused_pass(
+        documents, entities_pdf, centroids, cfg, nprobe, embeddings=True
+    ).persist()
+    mentions = fused.filter(F.col("embedding").isNotNull()).select(
+        "doc_id", "span_idx", "kind", "embedding"
     )
-    triples = triples_from_links(links)
+    triples, skips = _split_fused(fused)
 
     # canonicalization: LSH-banded near-dup edges -> CC -> canonical ids
     edges = mention_edges(mentions, cfg)
@@ -264,18 +257,3 @@ def build_kg(
         "mentions": mentions,
     }
 
-
-def build_triples_exact(
-    documents: DataFrame,
-    entities_pdf,
-    cfg: PipelineConfig = PipelineConfig(),
-) -> tuple[DataFrame, DataFrame]:
-    """M1 flagship: exact (broadcast-GEMM) linking. Returns (triples, skips)."""
-    spans = explode_spans(documents)
-    encoded = encode_mentions(spans, cfg)
-    ok, skips = split_skips(encoded)
-    mentions = ok.select("doc_id", "span_idx", "kind", "embedding")
-    links = link_exact_broadcast(
-        mentions, entities_pdf, k=cfg.k, tau=cfg.tau
-    )
-    return triples_from_links(links), skips

@@ -9,10 +9,10 @@ offsets for exactly-once source progress, and append-only triple output.
 Three building blocks:
 
 - ``incremental_triples``: file-source document stream -> foreachBatch ->
-  the SAME fused encode+IVF-link operator the batch pipeline uses
-  (operators/fused.py) -> append partitioned triples.  One code path for
-  batch and streaming (the Kappa shape): a micro-batch is just a small
-  corpus.
+  the SAME builder the batch path uses (``plans.pipeline.build_triples``,
+  one fused encode+IVF-link pass) -> append triples and skips.  One code
+  path for batch and streaming (the Kappa shape): a micro-batch is just a
+  small corpus.
 - ``windowed_event_counts``: event-time tumbling window + watermark —
   late rows beyond the watermark are dropped by the engine (the
   watermark/late-data checklist item).
@@ -51,19 +51,21 @@ def incremental_triples(
 ):
     """Start the incremental KG ingest; returns the StreamingQuery.
 
-    foreachBatch reuses the batch fused operator verbatim — streaming
-    correctness therefore inherits the batch P/R gate.  Source progress
+    foreachBatch reuses the batch builder verbatim — streaming
+    correctness therefore inherits the batch P/R gate, and the skips sink
+    has the skips/ columns (doc_id, span_idx, kind, media_ref, reason)
+    plus batch_id.  Source progress
     is checkpointed; the sink appends per micro-batch (idempotent replay
     of a failed batch can duplicate appended rows — at-least-once; the
     downstream exact-dedup key (subj, span_idx, pred, obj) makes the
     graph idempotent, mirroring the reference's re-ingest semantics,
     build-index.py:42-44)."""
-    from ..operators.fused import fused_triples
+    from ..plans.pipeline import build_triples
 
     def process_batch(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
             return
-        triples, skips = fused_triples(
+        triples, skips = build_triples(
             batch_df, entities_pdf, centroids, cfg, nprobe=nprobe
         )
         (

@@ -18,3 +18,22 @@ def corpus_small():
     from cli_p_spark.fixtures.generate import corpus
 
     return corpus(n_docs=200, n_entities=100)
+
+
+@pytest.fixture(scope="session")
+def exact_triples():
+    """build_triples at nprobe = nlist: the exact (f64) linker."""
+    import numpy as np
+
+    from cli_p_spark.config import PipelineConfig
+    from cli_p_spark.operators.ann import train_centroids
+    from cli_p_spark.plans.pipeline import build_triples
+
+    def run(docs, ents_pdf, cfg=PipelineConfig()):
+        centroids = train_centroids(
+            np.stack(ents_pdf["embedding"].to_numpy()), nlist=16,
+            seed=cfg.seed)
+        return build_triples(docs, ents_pdf, centroids, cfg,
+                             nprobe=len(centroids))
+
+    return run

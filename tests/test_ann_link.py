@@ -1,63 +1,36 @@
-"""M3 gate: ANN (IVF-bucket-join) linking P/R >= 0.95 vs the exact oracle;
-nprobe=nlist degenerates to exact (reference parity: query-index.py:30)."""
+"""M3 gate: ANN (IVF) linking P/R >= 0.95 vs the exact oracle; every
+link strategy is exact at nprobe=nlist (reference parity:
+query-index.py:30) and the strategies agree with each other below it."""
 
 import numpy as np
 
 from cli_p_spark.config import PipelineConfig
 from cli_p_spark.fixtures.generate import documents_to_spark
 from cli_p_spark.oracle.exact import golden_triples, precision_recall
-from cli_p_spark.plans.pipeline import build_triples_ann
+from cli_p_spark.plans.pipeline import build_kg, build_triples
 
 
 def test_ann_pipeline_pr_geq_095(spark, corpus_small):
     docs_pdf, ents_pdf = corpus_small
     cfg = PipelineConfig()
     docs = documents_to_spark(spark, docs_pdf)
-    triples, _ = build_triples_ann(docs, ents_pdf, cfg, nlist=100, nprobe=32)
+    triples = build_kg(docs, ents_pdf, cfg, nlist=100, nprobe=32)["triples"]
     got = triples.toPandas()
     golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
     p, r = precision_recall(got, golden)
     assert p >= 0.95 and r >= 0.95, (p, r)
 
 
-def test_nprobe_equals_nlist_is_exact(spark, corpus_small):
-    """Exhaustive probing == exact cosine top-k, the reference's own
-    exactness knob (nprobe=nlist => IVF == flat scan)."""
-    docs_pdf, ents_pdf = corpus_small
-    cfg = PipelineConfig()
-    docs = documents_to_spark(spark, docs_pdf)
-    nlist = 32
-    triples, _ = build_triples_ann(
-        docs, ents_pdf, cfg, nlist=nlist, nprobe=nlist
-    )
-    got = triples.toPandas()
-    golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
-    p, r = precision_recall(got, golden)
-    assert p == 1.0 and r == 1.0, (p, r)
-    merged = got.merge(
-        golden, on=["subj", "span_idx", "pred", "obj"], suffixes=("_s", "_o")
-    )
-    assert (merged["score_s"] - merged["score_o"]).abs().max() < 1e-9
+_NLIST = 16
+_KEY = ["subj", "span_idx", "pred", "obj", "rank"]
 
 
-def test_broadcast_and_join_strategies_agree(spark, corpus_small):
-    """Two physical strategies, one logical operator: the IVF broadcast
-    search and the bucket equi-join must produce identical links."""
-    docs_pdf, ents_pdf = corpus_small
-    cfg = PipelineConfig()
-    docs = documents_to_spark(spark, docs_pdf)
-    key = ["subj", "span_idx", "pred", "obj"]
-    a, _ = build_triples_ann(docs, ents_pdf, cfg, strategy="broadcast")
-    b, _ = build_triples_ann(docs, ents_pdf, cfg, strategy="join")
-    ra = sorted(map(tuple, a.select(*key).collect()))
-    rb = sorted(map(tuple, b.select(*key).collect()))
-    assert ra == rb
-
-
-def test_link_strategies_share_column_order(spark, corpus_small):
-    """Every link strategy returns keys + carry + (entity_id, score, rank)
-    in that order, whatever k: the k=1 fast path of the bucket join, its
-    k>1 window path and the broadcast IVF search."""
+def _strategies(spark, corpus_small, nprobe):
+    """One logical linker, four physical strategies: the broadcast IVF
+    search, the bucket equi-join (k=1 fast path and k>1 window path) and
+    the fused build_triples pass.  Returns each strategy's links (None
+    for the fused pass), triples keyed by (name, k), and the fused and
+    modular skips."""
     from cli_p_spark.fixtures.generate import entities_to_spark
     from cli_p_spark.operators.ann import (
         link_ann_join,
@@ -68,62 +41,101 @@ def test_link_strategies_share_column_order(spark, corpus_small):
         encode_mentions,
         explode_spans,
         split_skips,
+        triples_from_links,
     )
 
-    docs_pdf, ents_pdf = corpus_small
-    cfg = PipelineConfig()
-    ok, _ = split_skips(
-        encode_mentions(explode_spans(documents_to_spark(spark, docs_pdf)),
-                        cfg)
-    )
-    mentions = ok.select("doc_id", "span_idx", "kind", "embedding")
-    entities = entities_to_spark(spark, ents_pdf)
-    centroids = train_centroids(
-        np.stack(ents_pdf["embedding"].to_numpy()), nlist=16)
-    k1 = link_ann_join(mentions, entities, centroids, k=1, nprobe=4)
-    k3 = link_ann_join(mentions, entities, centroids, k=3, nprobe=4)
-    bc = link_ivf_broadcast(mentions, ents_pdf, centroids, k=3, nprobe=4)
-    expected = ["doc_id", "span_idx", "kind", "entity_id", "score", "rank"]
-    assert k1.columns == k3.columns == bc.columns == expected
-    assert k1.dtypes == k3.dtypes == bc.dtypes
-
-
-def test_broadcast_ivf_pr_geq_095(spark, corpus_small):
     docs_pdf, ents_pdf = corpus_small
     cfg = PipelineConfig()
     docs = documents_to_spark(spark, docs_pdf)
-    triples, _ = build_triples_ann(
-        docs, ents_pdf, cfg, nlist=100, nprobe=32, strategy="broadcast"
-    )
-    golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
-    p, r = precision_recall(triples.toPandas(), golden)
-    assert p >= 0.95 and r >= 0.95, (p, r)
+    centroids = train_centroids(
+        np.stack(ents_pdf["embedding"].to_numpy()), nlist=_NLIST,
+        seed=cfg.seed)
+    ok, modular_skips = split_skips(encode_mentions(explode_spans(docs), cfg))
+    mentions = ok.select("doc_id", "span_idx", "kind", "embedding")
+    entities = entities_to_spark(spark, ents_pdf)
+    links = {
+        ("link_ivf_broadcast", 3): link_ivf_broadcast(
+            mentions, ents_pdf, centroids, k=3, tau=cfg.tau, nprobe=nprobe),
+        ("link_ann_join", 1): link_ann_join(
+            mentions, entities, centroids, k=1, tau=cfg.tau, nprobe=nprobe),
+        ("link_ann_join", 3): link_ann_join(
+            mentions, entities, centroids, k=3, tau=cfg.tau, nprobe=nprobe),
+    }
+    triples = {name: triples_from_links(df) for name, df in links.items()}
+    fused, fused_skips = build_triples(docs, ents_pdf, centroids, cfg, nprobe)
+    triples[("build_triples", cfg.k)] = fused
+    return links, triples, fused_skips, modular_skips
+
+
+def _assert_same_rows(got, ref, name):
+    assert sorted(map(tuple, got[_KEY].itertuples(index=False))) == sorted(
+        map(tuple, ref[_KEY].itertuples(index=False))), name
+    merged = got.merge(ref, on=_KEY, suffixes=("_s", "_o"))
+    assert len(merged) == len(got) > 0, name
+    assert (merged["score_s"] - merged["score_o"]).abs().max() < 1e-9, name
+
+
+def test_nprobe_equals_nlist_is_exact(spark, corpus_small):
+    """Exhaustive probing == exact cosine top-k, the reference's own
+    exactness knob (nprobe=nlist => IVF == flat scan): every strategy
+    returns the oracle's keys and ranks, scores within 1e-9."""
+    docs_pdf, ents_pdf = corpus_small
+    cfg = PipelineConfig()
+    _, triples, _, _ = _strategies(spark, corpus_small, nprobe=_NLIST)
+    for (name, k), t in triples.items():
+        golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=k)
+        _assert_same_rows(t.toPandas(), golden, (name, k))
+
+
+def test_broadcast_and_join_strategies_agree(spark, corpus_small):
+    """Below nlist the IVF broadcast search and the bucket equi-join (both
+    its k=1 and k>1 paths) produce identical links."""
+    _, triples, _, _ = _strategies(spark, corpus_small, nprobe=4)
+    ref = triples[("link_ivf_broadcast", 3)].toPandas()
+    for name, k in [("link_ann_join", 1), ("link_ann_join", 3)]:
+        got = triples[(name, k)].toPandas()
+        _assert_same_rows(got, ref[ref["rank"] <= k], (name, k))
 
 
 def test_fused_path_agrees_with_modular(spark, corpus_small):
-    """Fused encode+search emits the same triples AND the same skips as
-    the modular encode->link chain."""
-    import numpy as np
+    """The fused encode+search pass emits the same triples as the modular
+    encode->link chain, and quarantines the same spans in the same skips
+    schema."""
+    _, triples, fused_skips, modular_skips = _strategies(
+        spark, corpus_small, nprobe=4)
+    k = PipelineConfig().k
+    ref = triples[("link_ivf_broadcast", 3)].toPandas()
+    _assert_same_rows(triples[("build_triples", k)].toPandas(),
+                      ref[ref["rank"] <= k], ("build_triples", k))
+    assert fused_skips.dtypes == modular_skips.dtypes
+    assert sorted(map(tuple, fused_skips.collect())) == sorted(
+        map(tuple, modular_skips.collect()))
 
-    from cli_p_spark.fixtures.generate import documents_to_spark as to_spark
+
+def test_link_strategies_share_column_order(spark, corpus_small):
+    """Every link operator returns keys + carry + (entity_id, score, rank)
+    in that order, whatever k, and every strategy's triples (the fused
+    pass's included) share column order and dtypes."""
+    links, triples, _, _ = _strategies(spark, corpus_small, nprobe=4)
+    expected = ["doc_id", "span_idx", "kind", "entity_id", "score", "rank"]
+    for df in links.values():
+        assert df.columns == expected
+    assert len({tuple(df.dtypes) for df in links.values()}) == 1
+    assert len({tuple(t.dtypes) for t in triples.values()}) == 1
+
+
+def test_broadcast_ivf_pr_geq_095(spark, corpus_small):
     from cli_p_spark.operators.ann import train_centroids
-    from cli_p_spark.operators.fused import fused_triples
 
     docs_pdf, ents_pdf = corpus_small
     cfg = PipelineConfig()
-    docs = to_spark(spark, docs_pdf)
-    emat = np.stack(ents_pdf["embedding"].to_numpy())
-    centroids = train_centroids(emat, nlist=100, seed=cfg.seed)
-    ft, fs = fused_triples(docs, ents_pdf, centroids, cfg, nprobe=32)
-    mt, ms = build_triples_ann(docs, ents_pdf, cfg, strategy="broadcast")
-    key = ["subj", "span_idx", "pred", "obj"]
-    assert sorted(map(tuple, ft.select(*key).collect())) == sorted(
-        map(tuple, mt.select(*key).collect())
-    )
-    skey = ["doc_id", "span_idx"]
-    assert sorted(map(tuple, fs.select(*skey).collect())) == sorted(
-        map(tuple, ms.select(*skey).collect())
-    )
+    docs = documents_to_spark(spark, docs_pdf)
+    centroids = train_centroids(
+        np.stack(ents_pdf["embedding"].to_numpy()), nlist=100, seed=cfg.seed)
+    triples, _ = build_triples(docs, ents_pdf, centroids, cfg, nprobe=32)
+    golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
+    p, r = precision_recall(triples.toPandas(), golden)
+    assert p >= 0.95 and r >= 0.95, (p, r)
 
 
 def test_triples_identical_across_partitionings(spark, corpus_small):
@@ -135,7 +147,6 @@ def test_triples_identical_across_partitionings(spark, corpus_small):
 
     from cli_p_spark.fixtures.generate import documents_to_spark as to_spark
     from cli_p_spark.operators.ann import train_centroids
-    from cli_p_spark.operators.fused import fused_triples
 
     docs_pdf, ents_pdf = corpus_small
     docs = to_spark(spark, docs_pdf)
@@ -144,7 +155,7 @@ def test_triples_identical_across_partitionings(spark, corpus_small):
     key = ["subj", "span_idx", "pred", "obj", "score"]
     results = []
     for parts in (3, 16):
-        t, _ = fused_triples(
+        t, _ = build_triples(
             docs, ents_pdf, centroids, PipelineConfig(embed_partitions=parts)
         )
         results.append(sorted(map(tuple, t.select(*key).collect())))
@@ -190,14 +201,13 @@ def test_distributed_centroid_training(spark, corpus_small):
         entities_to_spark,
     )
     from cli_p_spark.operators.ann import train_centroids_distributed
-    from cli_p_spark.operators.fused import fused_triples
 
     docs_pdf, ents_pdf = corpus_small
     cfg = PipelineConfig()
     docs = to_spark(spark, docs_pdf)
     entities_df = entities_to_spark(spark, ents_pdf)
     centroids = train_centroids_distributed(entities_df, nlist=100)
-    triples, _ = fused_triples(docs, ents_pdf, centroids, cfg, nprobe=32)
+    triples, _ = build_triples(docs, ents_pdf, centroids, cfg, nprobe=32)
     golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
     p, r = precision_recall(triples.toPandas(), golden)
     assert p >= 0.95 and r >= 0.95, (p, r)
@@ -215,7 +225,6 @@ def test_index_save_load_roundtrip(spark, corpus_small, tmp_path):
         save_index,
         train_centroids,
     )
-    from cli_p_spark.operators.fused import fused_triples
 
     docs_pdf, ents_pdf = corpus_small
     docs = to_spark(spark, docs_pdf)
@@ -227,8 +236,8 @@ def test_index_save_load_roundtrip(spark, corpus_small, tmp_path):
     assert np.allclose(centroids, centroids2)
     cfg = PipelineConfig()
     key = ["subj", "span_idx", "pred", "obj"]
-    a, _ = fused_triples(docs, ents_pdf, centroids, cfg)
-    b, _ = fused_triples(docs, ents2, centroids2, cfg)
+    a, _ = build_triples(docs, ents_pdf, centroids, cfg)
+    b, _ = build_triples(docs, ents2, centroids2, cfg)
     assert sorted(map(tuple, a.select(*key).collect())) == sorted(
         map(tuple, b.select(*key).collect())
     )

@@ -127,6 +127,47 @@ def test_exhaustive_boundary_ties_keep_min_entity_ids():
     assert got == [0, 1, 2], got  # the three smallest-id duplicates
 
 
+def test_exhaustive_near_ties_match_f64_oracle():
+    """nprobe = nlist is EXACT f64 search, also when many entities sit
+    within f32 rounding of each other: 40 unit entities within 2e-4 (L2)
+    of the query score within 2e-8 of it, far below the f32 resolution
+    at 1.0, so an f32 preselect of k+MARGIN candidates loses the f64
+    top-k on most draws.  The exhaustive path selects on f64 scores."""
+    import pandas as pd
+
+    dim, n_ents, nlist = 64, 40, 4
+    rng = np.random.default_rng(2026)
+    mismatches = []
+    for draw in range(200):
+        q = rng.standard_normal(dim)
+        q = (q / np.linalg.norm(q)).astype(np.float32).astype(np.float64)
+        off = rng.standard_normal((n_ents, dim))
+        off -= np.outer(off @ q, q)
+        off /= np.linalg.norm(off, axis=1, keepdims=True)
+        E = q + 2e-4 * rng.random(n_ents)[:, None] * off
+        E = (E / np.linalg.norm(E, axis=1, keepdims=True)).astype(np.float32)
+        pdf = pd.DataFrame(
+            {"entity_id": [f"e{i:03d}" for i in range(n_ents)],
+             "embedding": list(E)}
+        )
+        C = rng.standard_normal((nlist, dim))
+        C /= np.linalg.norm(C, axis=1, keepdims=True)
+        idx = _IvfIndex.from_broadcast(build_ivf_broadcast_value(pdf, C))
+        Q = q[None, :]
+        for k in (1, 3):
+            cand, sc64 = idx.search(Q, k, nlist)
+            order = np.lexsort((cand[0], -sc64[0]))[:k]
+            golden = _exact_masked_topk(Q, E.astype(np.float64), C, k,
+                                        nlist)[0]
+            same_ids = [int(cand[0][j]) for j in order] == [
+                g[0] for g in golden]
+            same_sc = np.allclose(sc64[0][order], [g[1] for g in golden],
+                                  rtol=0, atol=1e-12)
+            if not (same_ids and same_sc):
+                mismatches.append((draw, k))
+    assert not mismatches, f"{len(mismatches)}/400 near-tie draws differ"
+
+
 def test_pq_preselect_unfilled_slots_marked_invalid():
     """IVF-PQ probing cells holding fewer than kc codes must NOT leak
     entity index 0 as a fabricated candidate."""

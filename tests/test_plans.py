@@ -40,13 +40,13 @@ def test_fused_pipeline_single_exchange(spark, corpus_small):
     from cli_p_spark.config import PipelineConfig
     from cli_p_spark.fixtures.generate import documents_to_spark
     from cli_p_spark.operators.ann import train_centroids
-    from cli_p_spark.operators.fused import fused_triples
+    from cli_p_spark.plans.pipeline import build_triples
 
     docs_pdf, ents_pdf = corpus_small
     docs = documents_to_spark(spark, docs_pdf)
     emat = np.stack(ents_pdf["embedding"].to_numpy())
     centroids = train_centroids(emat, nlist=100)
-    triples, _ = fused_triples(docs, ents_pdf, centroids, PipelineConfig())
+    triples, _ = build_triples(docs, ents_pdf, centroids, PipelineConfig())
     plan = _plan(triples)
     # exactly one Exchange: the explicit repartition before encode;
     # linking against the broadcast index adds none

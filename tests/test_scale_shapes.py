@@ -6,16 +6,17 @@ import numpy as np
 from cli_p_spark.config import PipelineConfig
 from cli_p_spark.fixtures.generate import corpus, documents_to_spark
 from cli_p_spark.oracle.exact import golden_triples, precision_recall
-from cli_p_spark.plans.pipeline import build_triples_ann, build_triples_exact
+from cli_p_spark.operators.ann import train_centroids
+from cli_p_spark.plans.pipeline import build_triples
 
 
-def test_dim512_reference_dimensionality(spark):
+def test_dim512_reference_dimensionality(spark, exact_triples):
     """DIM=512 (CLIP ViT-B/32, build-index.py:77,81): exact pipeline
     P/R = 1.0 at the reference's real vector width."""
     cfg = PipelineConfig(dim=512)
     docs_pdf, ents_pdf = corpus(n_docs=60, n_entities=80, dim=512)
     docs = documents_to_spark(spark, docs_pdf)
-    triples, _ = build_triples_exact(docs, ents_pdf, cfg)
+    triples, _ = exact_triples(docs, ents_pdf, cfg)
     golden = golden_triples(docs_pdf, ents_pdf, dim=512, tau=cfg.tau, k=cfg.k)
     p, r = precision_recall(triples.toPandas(), golden)
     assert p == 1.0 and r == 1.0, (p, r)
@@ -28,15 +29,16 @@ def test_large_entity_index_ann(spark):
     cfg = PipelineConfig()
     docs_pdf, ents_pdf = corpus(n_docs=80, n_entities=20000)
     docs = documents_to_spark(spark, docs_pdf)
-    triples, _ = build_triples_ann(
-        docs, ents_pdf, cfg, nlist=100, nprobe=32, strategy="broadcast"
+    centroids = train_centroids(
+        np.stack(ents_pdf["embedding"].to_numpy()), nlist=100, seed=cfg.seed
     )
+    triples, _ = build_triples(docs, ents_pdf, centroids, cfg, nprobe=32)
     golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
     p, r = precision_recall(triples.toPandas(), golden)
     assert p >= 0.95 and r >= 0.95, (p, r)
 
 
-def test_topk_k10_matches_oracle(spark):
+def test_topk_k10_matches_oracle(spark, exact_triples):
     """k=10 ranked lists (the reference's default is k=50 pages of this,
     query-index.py:35): ordering and membership vs the exact oracle.
 
@@ -47,7 +49,7 @@ def test_topk_k10_matches_oracle(spark):
     cfg = PipelineConfig(k=10, tau=0.01)
     docs_pdf, ents_pdf = corpus(n_docs=40, n_entities=300)
     docs = documents_to_spark(spark, docs_pdf)
-    triples, _ = build_triples_exact(docs, ents_pdf, cfg)
+    triples, _ = exact_triples(docs, ents_pdf, cfg)
     got = triples.toPandas()
     golden = golden_triples(docs_pdf, ents_pdf, tau=0.01, k=10)
     key = ["subj", "span_idx", "pred", "obj", "rank"]

@@ -21,8 +21,8 @@ def main():
     from cli_p_spark.config import PipelineConfig
     from cli_p_spark.fixtures.generate import corpus, documents_to_spark
     from cli_p_spark.operators.ann import train_centroids
-    from cli_p_spark.operators.fused import fused_triples
     from cli_p_spark.plans.contract import QUERIES
+    from cli_p_spark.plans.pipeline import build_triples
     from cli_p_spark.session import get_spark
 
     spark = get_spark(app="explain", master="local[4]", shuffle_partitions=8)
@@ -143,7 +143,7 @@ def main():
     docs = documents_to_spark(spark, docs_pdf)
     emat = np.stack(ents_pdf["embedding"].to_numpy())
     centroids = train_centroids(emat, nlist=20)
-    triples, _ = fused_triples(docs, ents_pdf, centroids, PipelineConfig())
+    triples, _ = build_triples(docs, ents_pdf, centroids, PipelineConfig())
     plan = triples._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"

@@ -81,7 +81,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from cli_p_spark.config import PipelineConfig
     from cli_p_spark.fixtures.generate import make_entities
     from cli_p_spark.operators.ann import train_centroids
-    from cli_p_spark.plans.pipeline import build_triples
+    from cli_p_spark.plans.pipeline import plan_kg
 
     _ensure_workers(spark)
     flat = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -101,10 +101,9 @@ def entry(spark: SparkSession) -> DataFrame:
     centroids = train_centroids(
         np.stack(ents["embedding"].to_numpy()), seed=cfg.seed
     )
-    triples, _skips = build_triples(
+    return plan_kg(
         docs, ents, centroids, cfg, nprobe=len(centroids)
-    )
-    return triples
+    ).triples.drop("part_id")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -13,10 +13,11 @@ goes in, (entity_id, score, rank | skip) comes out, and the vectors live
 only as a NumPy matrix inside the Arrow batch.  ZERO shuffle; the vectors
 cross the boundary at most once, outbound, and only when the caller asks
 for them (``embeddings=True``: resume and canonicalization need the
-mentions table, so run_pipeline and build_kg persist them from the same
-pass that links them).  It is the one documents -> triples kernel:
-run_pipeline (plans/lineage.py), build_triples and build_kg
-(plans/pipeline.py) and the streaming sink all split its output.
+mentions table, so run_pipeline and canonicalize persist them from the
+same pass that links them).  It is the one documents -> triples kernel:
+``plans.pipeline.plan_kg`` runs it, and every KG caller (run_pipeline,
+``__spark_entry__.entry``, the streaming sink, canonicalize) splits
+that plan's output.
 
 Output rows: one per QUARANTINED span (entity_id NULL, skip_reason set,
 -> skips) plus one per link with score >= tau (rank-1..k), plus — with

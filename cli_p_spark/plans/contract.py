@@ -2295,19 +2295,27 @@ def kg_canonical_triples(spark, sf_dir):
     connected components over the same staged edges — Spark with the
     salted large-star/small-star operator, DuckDB with a recursive-CTE
     min-label reachability — and must agree on every canonical id."""
+    import numpy as np
+
+    from ..operators.ann import train_centroids
     from ..operators.ccomp import canonical_mapping, connected_components
-    from .pipeline import build_kg
+    from .pipeline import canonicalize, plan_kg
 
     docs, _, ents_pdf = _kg_corpus(spark)
-    out = build_kg(docs, ents_pdf, PipelineConfig())
+    cfg = PipelineConfig()
+    centroids = train_centroids(
+        np.stack(ents_pdf["embedding"].to_numpy()), seed=cfg.seed)
+    plan = plan_kg(docs, ents_pdf, centroids, cfg, embeddings=True)
+    canon = canonicalize(plan, cfg)
     trip = _stage(
-        out["triples"].select(
+        plan.triples.select(
             "subj", "pred", "obj",
             F.round("score", 4).alias("score"), "span_idx",
         ),
         "kg_cc_triples",
     )
-    edges = _stage(out["edges"], "kg_cc_edges")
+    edges = _stage(canon.edges, "kg_cc_edges")
+    canon.cache.unpersist()
     comps = connected_components(edges)
     mention_ids = trip.select(
         F.concat_ws("#", "subj", "span_idx").alias("node")

@@ -1,23 +1,27 @@
 """End-to-end KG construction plan (SURVEY.md §2.3 stages 1-3,5).
 
     documents -> posexplode(spans)            # order kept via span_idx
-              -> explicit repartition          # north_rule, pre-embedding
+              -> part_id = pmod(xxhash64(doc_id), n_parts)
+              -> placement by part_id          # north_rule, pre-embedding
               -> fused encode + IVF search     # build-index.py:46-51 +
                                                # query-index.py:111
-              -> split: links | skips          # build-index.py:53-61
-              -> (subj, pred, obj) triples
+              -> split: mentions | triples | skips   # build-index.py:53-61
 
-Every step is declarative DataFrame API; the only Python is the one
-Arrow-batched fused pass (operators/fused.py) that encodes each span and
-searches the broadcast ``_IvfIndex``, exact when nprobe >= nlist.  ONE
-shuffle (the explicit repartition before encode); the broadcast index
-adds none.  ``build_triples``, ``build_kg`` and the resumable
-``run_pipeline`` (plans/lineage.py) all run this pass, and their skips
-share run_pipeline's skips/ columns (doc_id, span_idx, kind, media_ref,
-reason).
+``plan_kg`` is the only code that makes that plan; every documents ->
+triples caller runs it: the resumable ``run_pipeline``
+(plans/lineage.py), ``__spark_entry__.entry``, the streaming sink and
+``canonicalize``, which maps its mentions to canonical ids (LSH edges ->
+connected components) and rewrites its triples' subjects.  Every step is
+declarative DataFrame API; the only Python is the one Arrow-batched
+fused pass (operators/fused.py) that encodes each span and searches the
+broadcast ``_IvfIndex``, exact when nprobe >= nlist.  ONE shuffle (the
+placement before encode); the broadcast index adds none.  Its three
+splits all carry part_id, the key run_pipeline writes them under.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -25,8 +29,7 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 from ..functions.encoder import make_encode_udf
 from ..operators.fused import encode_and_link
-
-MENTION_COLS = ["doc_id", "span_idx", "kind", "offset", "content"]
+from ..operators.lsh import _CacheHandle
 
 
 def explode_spans(documents: DataFrame) -> DataFrame:
@@ -114,9 +117,10 @@ def split_skips(encoded: DataFrame) -> tuple[DataFrame, DataFrame]:
     return ok, skips
 
 
-def triples_from_links(links: DataFrame) -> DataFrame:
-    """(subj, pred, obj, score, span_idx) per SURVEY.md §2.3: subj=doc_id,
-    pred = mentions|depicts by span kind, obj = linked entity."""
+def triples_from_links(links: DataFrame, *keep: str) -> DataFrame:
+    """(subj, pred, obj, score, span_idx, rank) per SURVEY.md §2.3:
+    subj=doc_id, pred = mentions|depicts by span kind, obj = linked
+    entity; then the ``keep`` columns of ``links``."""
     return links.select(
         F.col("doc_id").alias("subj"),
         F.when(F.col("kind") == "text", F.lit("mentions"))
@@ -126,6 +130,7 @@ def triples_from_links(links: DataFrame) -> DataFrame:
         F.col("score"),
         F.col("span_idx"),
         F.col("rank"),
+        *keep,
     )
 
 
@@ -151,109 +156,110 @@ def mention_edges(
     ).select("src", "dst")
 
 
-def _fused_pass(documents: DataFrame, entities_pdf, centroids,
-                cfg: PipelineConfig, nprobe: int,
-                embeddings: bool = False) -> DataFrame:
-    """documents -> encode_and_link rows, after the one explicit
-    pre-embed repartition; media_ref rides along for the skips."""
-    spans = (
-        with_content(explode_spans(documents))
-        .repartition(cfg.embed_partitions)
-        .select("doc_id", "span_idx", "kind", "content", "media_ref")
-    )
-    return encode_and_link(
-        spans, entities_pdf, centroids, cfg, nprobe,
-        keep=("media_ref",), embeddings=embeddings,
-    )
+class KgPlan(NamedTuple):
+    """``plan_kg``'s fused pass and its three splits.  Each split is a
+    projection of ``rows``, so persisting ``rows`` caches all three."""
+
+    rows: DataFrame
+
+    @property
+    def mentions(self) -> DataFrame:
+        """(doc_id, span_idx, kind, embedding, part_id); needs a plan
+        built with ``embeddings=True``."""
+        return self.rows.filter(F.col("embedding").isNotNull()).select(
+            "doc_id", "span_idx", "kind", "embedding", "part_id")
+
+    @property
+    def triples(self) -> DataFrame:
+        """triples_from_links columns, then part_id."""
+        return triples_from_links(
+            self.rows.filter(F.col("entity_id").isNotNull()), "part_id")
+
+    @property
+    def skips(self) -> DataFrame:
+        """(doc_id, span_idx, kind, media_ref, reason, part_id)."""
+        return self.rows.filter(F.col("skip_reason").isNotNull()).select(
+            "doc_id", "span_idx", "kind", "media_ref",
+            F.col("skip_reason").alias("reason"), "part_id")
 
 
-def _split_fused(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(triples, skips) of a fused pass; skips in the skips/ schema."""
-    links = fused.filter(F.col("entity_id").isNotNull())
-    skips = fused.filter(F.col("skip_reason").isNotNull()).select(
-        "doc_id", "span_idx", "kind", "media_ref",
-        F.col("skip_reason").alias("reason"),
-    )
-    return triples_from_links(links), skips
-
-
-def build_triples(
+def plan_kg(
     documents: DataFrame,
     entities_pdf,
     centroids,
     cfg: PipelineConfig = PipelineConfig(),
     nprobe: int = 32,
-) -> tuple[DataFrame, DataFrame]:
-    """documents -> (triples, skips) through the fused pass.
+    n_parts: int | None = None,
+    todo: list[int] | None = None,
+    embeddings: bool = False,
+) -> KgPlan:
+    """documents -> the one fused encode+search pass, as a ``KgPlan``.
 
-    Exact (f64, ties by entity_id) when nprobe >= len(centroids); IVF
-    with the reference's nprobe knob (query-index.py:30) below that."""
-    return _split_fused(
-        _fused_pass(documents, entities_pdf, centroids, cfg, nprobe)
-    )
+    Each span gets ``part_id = pmod(xxhash64(doc_id), n_parts)``
+    (``n_parts`` defaults to ``cfg.embed_partitions``); only the ids in
+    ``todo`` (default: all) are planned.  The spans are placed by their
+    id's slot in ``todo`` (repartitionById), so each task holds whole
+    partitions and a partitioned write leaves one file per partition
+    directory.  Direct placement, because hash partitioning a few small
+    ints collides and leaves tasks empty, and range partitioning samples
+    its input in an extra scan.  Linking is exact (f64, ties by
+    entity_id) when nprobe >= len(centroids), IVF with the reference's
+    nprobe knob (query-index.py:30) below that.  ``embeddings=True``
+    keeps the vectors, for ``mentions``."""
+    n_parts = n_parts or cfg.embed_partitions
+    todo = list(range(n_parts)) if todo is None else list(todo)
+    spans = explode_spans(documents).withColumn(
+        "part_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int"))
+    if len(todo) < n_parts:
+        spans = spans.filter(F.col("part_id").isin(todo))
+        slot = F.array_position(
+            F.array(*map(F.lit, todo)), F.col("part_id")) - 1
+    else:
+        slot = F.col("part_id")
+    spans = with_content(spans).select(
+        "doc_id", "span_idx", "kind", "content", "media_ref", "part_id"
+    ).repartitionById(
+        min(cfg.embed_partitions, len(todo)), slot.cast("int"))
+    return KgPlan(encode_and_link(
+        spans, entities_pdf, centroids, cfg, nprobe,
+        keep=("media_ref", "part_id"), embeddings=embeddings,
+    ))
 
 
-def build_kg(
-    documents: DataFrame,
-    entities_pdf,
-    cfg: PipelineConfig = PipelineConfig(),
-    nlist: int = 100,
-    nprobe: int = 32,
-) -> dict[str, DataFrame]:
-    """Full KG construction (north_star stages 1-5): returns dict of
-    DataFrames: triples (subj=doc_id), canonical (mention_id ->
-    canonical_id), canonical_triples (subj=canonical mention id), skips.
+class Canonical(NamedTuple):
+    """``canonicalize``'s frames; ``cache.unpersist()`` releases the
+    fused pass it persisted."""
 
-    One fused pass keeps the embeddings and is persisted, then split
-    into mentions, links and skips as run_pipeline splits it: the
-    mentions feed the CC edges and the canonical mapping, and
-    recomputing the encode per consumer would multiply the dominant cost.
-    """
-    import numpy as np
+    edges: DataFrame
+    canonical: DataFrame
+    canonical_triples: DataFrame
+    cache: _CacheHandle
 
-    from ..operators.ann import train_centroids
+
+def canonicalize(plan: KgPlan, cfg: PipelineConfig = PipelineConfig()
+                 ) -> Canonical:
+    """Canonical mention ids over a ``plan_kg(..., embeddings=True)``
+    plan (north_star stage 5): LSH-banded near-dup edges between its
+    mentions -> connected components -> canonical_id per mention_id
+    (doc_id#span_idx), and its triples with subj = canonical id.
+
+    Persists ``plan.rows``, since the mentions feed the edges and the
+    mapping and the triples feed the rewrite: recomputing the encode per
+    consumer would multiply the dominant cost.  The caller releases it
+    through ``cache``."""
     from ..operators.ccomp import canonical_mapping, connected_components
 
-    emat = np.stack(entities_pdf["embedding"].to_numpy())
-    centroids = train_centroids(emat, nlist=nlist, seed=cfg.seed)
-    fused = _fused_pass(
-        documents, entities_pdf, centroids, cfg, nprobe, embeddings=True
-    ).persist()
-    mentions = fused.filter(F.col("embedding").isNotNull()).select(
-        "doc_id", "span_idx", "kind", "embedding"
-    )
-    triples, skips = _split_fused(fused)
-
-    # canonicalization: LSH-banded near-dup edges -> CC -> canonical ids
-    edges = mention_edges(mentions, cfg)
-    comps = connected_components(edges)
-    all_mentions = mentions.select(
-        F.concat_ws("#", "doc_id", "span_idx").alias("node")
-    )
-    canonical = canonical_mapping(comps, all_mentions).select(
-        F.col("node").alias("mention_id"), "canonical_id"
-    )
-
+    rows = plan.rows.persist()
+    edges = mention_edges(plan.mentions, cfg)
+    mention_id = F.concat_ws("#", "doc_id", "span_idx").alias("node")
+    canonical = canonical_mapping(
+        connected_components(edges), plan.mentions.select(mention_id)
+    ).select(F.col("node").alias("mention_id"), "canonical_id")
     canonical_triples = (
-        triples.withColumn(
-            "mention_id", F.concat_ws("#", "subj", "span_idx")
-        )
+        plan.triples.withColumn(
+            "mention_id", F.concat_ws("#", "subj", "span_idx"))
         .join(canonical, "mention_id")
-        .select(
-            F.col("canonical_id").alias("subj"),
-            "pred",
-            "obj",
-            "score",
-            "span_idx",
-            "rank",
-        )
+        .select(F.col("canonical_id").alias("subj"),
+                "pred", "obj", "score", "span_idx", "rank")
     )
-    return {
-        "triples": triples,
-        "skips": skips,
-        "edges": edges,
-        "canonical": canonical,
-        "canonical_triples": canonical_triples,
-        "mentions": mentions,
-    }
-
+    return Canonical(edges, canonical, canonical_triples, _CacheHandle(rows))

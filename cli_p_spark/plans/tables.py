@@ -121,6 +121,16 @@ class TableStore:
             .parquet(self._path(table))
         )
 
+    def drop(self, table: str) -> None:
+        """Remove ``table`` and all its rows; a missing table is a no-op."""
+        if self.catalog:
+            self.spark.sql(f"DROP TABLE IF EXISTS {self._ident(table)}")
+            return
+        HPath = self.spark._jvm.org.apache.hadoop.fs.Path
+        path = HPath(self._path(table))
+        path.getFileSystem(self.spark._jsc.hadoopConfiguration()).delete(
+            path, True)
+
     # -- reads ------------------------------------------------------------
 
     # error conditions that mean "table absent", not "table broken":

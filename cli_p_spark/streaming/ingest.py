@@ -9,7 +9,7 @@ offsets for exactly-once source progress, and append-only triple output.
 Three building blocks:
 
 - ``incremental_triples``: file-source document stream -> foreachBatch ->
-  the SAME builder the batch path uses (``plans.pipeline.build_triples``,
+  the SAME plan the batch path uses (``plans.pipeline.plan_kg``,
   one fused encode+IVF-link pass) -> append triples and skips.  One code
   path for batch and streaming (the Kappa shape): a micro-batch is just a
   small corpus.
@@ -60,21 +60,16 @@ def incremental_triples(
     downstream exact-dedup key (subj, span_idx, pred, obj) makes the
     graph idempotent, mirroring the reference's re-ingest semantics,
     build-index.py:42-44)."""
-    from ..plans.pipeline import build_triples
+    from ..plans.pipeline import plan_kg
 
     def process_batch(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
             return
-        triples, skips = build_triples(
-            batch_df, entities_pdf, centroids, cfg, nprobe=nprobe
-        )
-        (
-            triples.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append").parquet(f"{out_dir}/triples")
-        )
-        skips.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(f"{out_dir}/skips")
+        plan = plan_kg(batch_df, entities_pdf, centroids, cfg, nprobe=nprobe)
+        # part_id is the batch layout's write key, not a sink column
+        for df, table in ((plan.triples, "triples"), (plan.skips, "skips")):
+            df.drop("part_id").withColumn("batch_id", F.lit(batch_id)) \
+                .write.mode("append").parquet(f"{out_dir}/{table}")
 
     return (
         docs_stream.writeStream.foreachBatch(process_batch)

@@ -15,8 +15,9 @@ Package and launch:
 Resume after a kill: rerun with the same --output — completed embed
 partitions are detected via the lineage table and skipped.
 
-On a real cluster drop the --master default (local) and let
-spark-submit's --master/--deploy-mode take over; every shuffle/partition
+On a real cluster leave --master unset and let spark-submit's
+--master/--deploy-mode take over (its --conf values, too, win over the
+session defaults of cli_p_spark.session.get_spark); every shuffle/partition
 decision in the pipeline is cluster-size-agnostic (deterministic hashes,
 explicit repartition widths from --parts).
 
@@ -25,8 +26,11 @@ Inputs:
                media_ref,offset>>)  [synthesized if --synth N is given]
   --entities   parquet with (entity_id string, name string,
                embedding array<float>)  [synthesized if --synth-entities N]
-Outputs under --output: mentions/ skips/ triples/ lineage/ (see
-cli_p_spark/plans/lineage.py for the resume protocol).
+Outputs under --output, each partitioned by part_id except lineage:
+mentions/ skips/ triples/ lineage/ (see cli_p_spark/plans/lineage.py for
+the resume protocol).  A resume must use the same --parts, --nlist,
+--nprobe and --tau as the run it continues; otherwise it fails before
+writing anything.
 """
 
 from __future__ import annotations
@@ -54,17 +58,9 @@ def main(argv=None):
                     help="override master (default: spark-submit's)")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from cli_p_spark.session import get_spark
 
-    builder = SparkSession.builder.appName("cli_p_spark-kg")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark(app="cli_p_spark-kg", master=args.master)
 
     from cli_p_spark.config import TAU, PipelineConfig
     from cli_p_spark.fixtures.generate import make_entities

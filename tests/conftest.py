@@ -22,18 +22,19 @@ def corpus_small():
 
 @pytest.fixture(scope="session")
 def exact_triples():
-    """build_triples at nprobe = nlist: the exact (f64) linker."""
+    """plan_kg's (triples, skips) at nprobe = nlist: the exact (f64)
+    linker."""
     import numpy as np
 
     from cli_p_spark.config import PipelineConfig
     from cli_p_spark.operators.ann import train_centroids
-    from cli_p_spark.plans.pipeline import build_triples
+    from cli_p_spark.plans.pipeline import plan_kg
 
     def run(docs, ents_pdf, cfg=PipelineConfig()):
         centroids = train_centroids(
             np.stack(ents_pdf["embedding"].to_numpy()), nlist=16,
             seed=cfg.seed)
-        return build_triples(docs, ents_pdf, centroids, cfg,
-                             nprobe=len(centroids))
+        plan = plan_kg(docs, ents_pdf, centroids, cfg, nprobe=len(centroids))
+        return plan.triples, plan.skips
 
     return run

@@ -7,30 +7,36 @@ import numpy as np
 from cli_p_spark.config import PipelineConfig
 from cli_p_spark.fixtures.generate import documents_to_spark
 from cli_p_spark.oracle.exact import golden_triples, precision_recall
-from cli_p_spark.plans.pipeline import build_kg, build_triples
+from cli_p_spark.plans.lineage import run_pipeline
+from cli_p_spark.plans.pipeline import plan_kg
 
 
-def test_ann_pipeline_pr_geq_095(spark, corpus_small):
+def test_ann_pipeline_pr_geq_095(spark, corpus_small, tmp_path):
+    """The production path: run_pipeline's triples/ at the reference's
+    nlist/nprobe hold the P/R gate."""
     docs_pdf, ents_pdf = corpus_small
     cfg = PipelineConfig()
     docs = documents_to_spark(spark, docs_pdf)
-    triples = build_kg(docs, ents_pdf, cfg, nlist=100, nprobe=32)["triples"]
-    got = triples.toPandas()
+    out = str(tmp_path / "kg")
+    run_pipeline(spark, docs, ents_pdf, out, cfg, nlist=100, nprobe=32)
+    got = spark.read.parquet(f"{out}/triples").toPandas()
     golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
     p, r = precision_recall(got, golden)
     assert p >= 0.95 and r >= 0.95, (p, r)
 
 
 _NLIST = 16
+_PARTS = 16
 _KEY = ["subj", "span_idx", "pred", "obj", "rank"]
 
 
-def _strategies(spark, corpus_small, nprobe):
-    """One logical linker, four physical strategies: the broadcast IVF
-    search, the bucket equi-join (k=1 fast path and k>1 window path) and
-    the fused build_triples pass.  Returns each strategy's links (None
-    for the fused pass), triples keyed by (name, k), and the fused and
-    modular skips."""
+def _strategies(spark, corpus_small, nprobe, out_dir):
+    """One logical linker, five physical strategies: the broadcast IVF
+    search, the bucket equi-join (k=1 fast path and k>1 window path),
+    the fused plan_kg pass and run_pipeline's triples/ (written under
+    ``out_dir``), which plan_kg builds too.  Returns each strategy's links
+    (the join and broadcast operators only), triples keyed by (name, k),
+    and the fused and modular skips."""
     from cli_p_spark.fixtures.generate import entities_to_spark
     from cli_p_spark.operators.ann import (
         link_ann_join,
@@ -62,9 +68,25 @@ def _strategies(spark, corpus_small, nprobe):
             mentions, entities, centroids, k=3, tau=cfg.tau, nprobe=nprobe),
     }
     triples = {name: triples_from_links(df) for name, df in links.items()}
-    fused, fused_skips = build_triples(docs, ents_pdf, centroids, cfg, nprobe)
-    triples[("build_triples", cfg.k)] = fused
-    return links, triples, fused_skips, modular_skips
+    # part_id is the KG plan's write key, not a triple column.  Both KG
+    # entries place spans in the same n_parts partitions: the exhaustive
+    # branch's f64 GEMM rounds a score by the batch its row lands in
+    plan = plan_kg(docs, ents_pdf, centroids, cfg, nprobe, n_parts=_PARTS)
+    triples[("plan_kg", cfg.k)] = plan.triples.drop("part_id")
+    run_pipeline(spark, docs, ents_pdf, out_dir, cfg, n_parts=_PARTS,
+                 nlist=_NLIST, nprobe=nprobe)
+    triples[("run_pipeline", cfg.k)] = spark.read.parquet(
+        f"{out_dir}/triples").drop("part_id")
+    return links, triples, plan.skips.drop("part_id"), modular_skips
+
+
+def _assert_pipeline_equals_plan(triples):
+    """run_pipeline's stored triples are plan_kg's rows, scores bit for
+    bit."""
+    k = PipelineConfig().k
+    rows = [sorted(map(tuple, triples[(name, k)].collect()))
+            for name in ("plan_kg", "run_pipeline")]
+    assert rows[0] == rows[1] and rows[0]
 
 
 def _assert_same_rows(got, ref, name):
@@ -75,48 +97,55 @@ def _assert_same_rows(got, ref, name):
     assert (merged["score_s"] - merged["score_o"]).abs().max() < 1e-9, name
 
 
-def test_nprobe_equals_nlist_is_exact(spark, corpus_small):
+def test_nprobe_equals_nlist_is_exact(spark, corpus_small, tmp_path):
     """Exhaustive probing == exact cosine top-k, the reference's own
     exactness knob (nprobe=nlist => IVF == flat scan): every strategy
     returns the oracle's keys and ranks, scores within 1e-9."""
     docs_pdf, ents_pdf = corpus_small
     cfg = PipelineConfig()
-    _, triples, _, _ = _strategies(spark, corpus_small, nprobe=_NLIST)
+    _, triples, _, _ = _strategies(spark, corpus_small, nprobe=_NLIST,
+                                   out_dir=str(tmp_path / "kg"))
     for (name, k), t in triples.items():
         golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=k)
         _assert_same_rows(t.toPandas(), golden, (name, k))
+    _assert_pipeline_equals_plan(triples)
 
 
-def test_broadcast_and_join_strategies_agree(spark, corpus_small):
+def test_broadcast_and_join_strategies_agree(spark, corpus_small, tmp_path):
     """Below nlist the IVF broadcast search and the bucket equi-join (both
     its k=1 and k>1 paths) produce identical links."""
-    _, triples, _, _ = _strategies(spark, corpus_small, nprobe=4)
+    _, triples, _, _ = _strategies(spark, corpus_small, nprobe=4,
+                                   out_dir=str(tmp_path / "kg"))
     ref = triples[("link_ivf_broadcast", 3)].toPandas()
     for name, k in [("link_ann_join", 1), ("link_ann_join", 3)]:
         got = triples[(name, k)].toPandas()
         _assert_same_rows(got, ref[ref["rank"] <= k], (name, k))
 
 
-def test_fused_path_agrees_with_modular(spark, corpus_small):
+def test_fused_path_agrees_with_modular(spark, corpus_small, tmp_path):
     """The fused encode+search pass emits the same triples as the modular
     encode->link chain, and quarantines the same spans in the same skips
-    schema."""
+    schema; run_pipeline stores exactly the fused pass's triples."""
     _, triples, fused_skips, modular_skips = _strategies(
-        spark, corpus_small, nprobe=4)
+        spark, corpus_small, nprobe=4, out_dir=str(tmp_path / "kg"))
     k = PipelineConfig().k
     ref = triples[("link_ivf_broadcast", 3)].toPandas()
-    _assert_same_rows(triples[("build_triples", k)].toPandas(),
-                      ref[ref["rank"] <= k], ("build_triples", k))
+    for name in ("plan_kg", "run_pipeline"):
+        _assert_same_rows(triples[(name, k)].toPandas(),
+                          ref[ref["rank"] <= k], (name, k))
+    _assert_pipeline_equals_plan(triples)
     assert fused_skips.dtypes == modular_skips.dtypes
     assert sorted(map(tuple, fused_skips.collect())) == sorted(
         map(tuple, modular_skips.collect()))
 
 
-def test_link_strategies_share_column_order(spark, corpus_small):
+def test_link_strategies_share_column_order(spark, corpus_small, tmp_path):
     """Every link operator returns keys + carry + (entity_id, score, rank)
     in that order, whatever k, and every strategy's triples (the fused
-    pass's included) share column order and dtypes."""
-    links, triples, _, _ = _strategies(spark, corpus_small, nprobe=4)
+    pass's and run_pipeline's included) share column order and
+    dtypes."""
+    links, triples, _, _ = _strategies(spark, corpus_small, nprobe=4,
+                                       out_dir=str(tmp_path / "kg"))
     expected = ["doc_id", "span_idx", "kind", "entity_id", "score", "rank"]
     for df in links.values():
         assert df.columns == expected
@@ -132,7 +161,7 @@ def test_broadcast_ivf_pr_geq_095(spark, corpus_small):
     docs = documents_to_spark(spark, docs_pdf)
     centroids = train_centroids(
         np.stack(ents_pdf["embedding"].to_numpy()), nlist=100, seed=cfg.seed)
-    triples, _ = build_triples(docs, ents_pdf, centroids, cfg, nprobe=32)
+    triples = plan_kg(docs, ents_pdf, centroids, cfg, nprobe=32).triples
     golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
     p, r = precision_recall(triples.toPandas(), golden)
     assert p >= 0.95 and r >= 0.95, (p, r)
@@ -155,9 +184,9 @@ def test_triples_identical_across_partitionings(spark, corpus_small):
     key = ["subj", "span_idx", "pred", "obj", "score"]
     results = []
     for parts in (3, 16):
-        t, _ = build_triples(
+        t = plan_kg(
             docs, ents_pdf, centroids, PipelineConfig(embed_partitions=parts)
-        )
+        ).triples
         results.append(sorted(map(tuple, t.select(*key).collect())))
     assert results[0] == results[1]
 
@@ -207,7 +236,7 @@ def test_distributed_centroid_training(spark, corpus_small):
     docs = to_spark(spark, docs_pdf)
     entities_df = entities_to_spark(spark, ents_pdf)
     centroids = train_centroids_distributed(entities_df, nlist=100)
-    triples, _ = build_triples(docs, ents_pdf, centroids, cfg, nprobe=32)
+    triples = plan_kg(docs, ents_pdf, centroids, cfg, nprobe=32).triples
     golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
     p, r = precision_recall(triples.toPandas(), golden)
     assert p >= 0.95 and r >= 0.95, (p, r)
@@ -236,8 +265,8 @@ def test_index_save_load_roundtrip(spark, corpus_small, tmp_path):
     assert np.allclose(centroids, centroids2)
     cfg = PipelineConfig()
     key = ["subj", "span_idx", "pred", "obj"]
-    a, _ = build_triples(docs, ents_pdf, centroids, cfg)
-    b, _ = build_triples(docs, ents2, centroids2, cfg)
+    a = plan_kg(docs, ents_pdf, centroids, cfg).triples
+    b = plan_kg(docs, ents2, centroids2, cfg).triples
     assert sorted(map(tuple, a.select(*key).collect())) == sorted(
         map(tuple, b.select(*key).collect())
     )

@@ -1,19 +1,42 @@
 """M4 gate: canonicalization — duplicate-content mentions collapse to one
 canonical id; canonical triples keep P/R vs oracle on (pred, obj)."""
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from cli_p_spark.config import PipelineConfig
 from cli_p_spark.fixtures.generate import documents_to_spark
-from cli_p_spark.plans.pipeline import build_kg
+from cli_p_spark.operators.ann import train_centroids
+from cli_p_spark.plans.pipeline import canonicalize, plan_kg
 
 
-def test_duplicate_mentions_share_canonical_id(spark, corpus_small):
+def _plan(spark, corpus_small):
     docs_pdf, ents_pdf = corpus_small
-    docs = documents_to_spark(spark, docs_pdf)
-    out = build_kg(docs, ents_pdf, PipelineConfig())
+    centroids = train_centroids(
+        np.stack(ents_pdf["embedding"].to_numpy()), seed=PipelineConfig().seed)
+    return plan_kg(documents_to_spark(spark, docs_pdf), ents_pdf, centroids,
+                   embeddings=True)
+
+
+def _cached_plans(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager() \
+        .numCachedEntries()
+
+
+@pytest.fixture(scope="module")
+def kg(spark, corpus_small):
+    """One plan and its canonicalization for the module, released after."""
+    plan = _plan(spark, corpus_small)
+    canon = canonicalize(plan)
+    yield plan, canon
+    canon.cache.unpersist()
+
+
+def test_duplicate_mentions_share_canonical_id(kg):
+    _, out = kg
     canon = {
-        r["mention_id"]: r["canonical_id"] for r in out["canonical"].collect()
+        r["mention_id"]: r["canonical_id"] for r in out.canonical.collect()
     }
     # docEDGE_DUP repeats doc00000000's spans verbatim -> identical
     # embeddings (cos=1.0 >= tau_cc) -> same canonical id per span position
@@ -26,25 +49,34 @@ def test_duplicate_mentions_share_canonical_id(spark, corpus_small):
             assert canon[m] == canon[twin], (m, canon[m], canon[twin])
 
 
-def test_canonical_covers_every_mention(spark, corpus_small):
-    docs_pdf, ents_pdf = corpus_small
-    docs = documents_to_spark(spark, docs_pdf)
-    out = build_kg(docs, ents_pdf, PipelineConfig())
-    n_mentions = out["mentions"].count()
-    assert out["canonical"].count() == n_mentions
+def test_canonical_covers_every_mention(kg):
+    plan, out = kg
+    n_mentions = plan.mentions.count()
+    assert out.canonical.count() == n_mentions
     assert (
-        out["canonical"].filter(F.col("canonical_id").isNull()).count() == 0
+        out.canonical.filter(F.col("canonical_id").isNull()).count() == 0
     )
 
 
-def test_canonical_triples_preserve_links(spark, corpus_small):
+def test_canonical_triples_preserve_links(kg):
     """Canonical rewrite changes subj only — (pred, obj, span linkage)
     survives, and every original triple has a canonical twin."""
-    docs_pdf, ents_pdf = corpus_small
-    docs = documents_to_spark(spark, docs_pdf)
-    out = build_kg(docs, ents_pdf, PipelineConfig())
-    assert out["canonical_triples"].count() == out["triples"].count()
+    plan, out = kg
+    assert out.canonical_triples.count() == plan.triples.count()
     objs = lambda df: sorted(  # noqa: E731
         (r["pred"], r["obj"]) for r in df.select("pred", "obj").collect()
     )
-    assert objs(out["canonical_triples"]) == objs(out["triples"])
+    assert objs(out.canonical_triples) == objs(plan.triples)
+
+
+def test_canonicalize_releases_its_cache(spark, corpus_small):
+    """canonicalize caches the fused pass for its consumers and hands the
+    release to the caller: after cache.unpersist() the session holds as
+    many cached plans as before the call."""
+    before = _cached_plans(spark)
+    plan = _plan(spark, corpus_small)
+    out = canonicalize(plan)
+    out.canonical_triples.count()
+    assert _cached_plans(spark) == before + 1
+    out.cache.unpersist()
+    assert _cached_plans(spark) == before

@@ -2,7 +2,7 @@
 
 Scale correctness is a plan property: filters must reach the parquet scan,
 small dims must broadcast, and the fused KG path must contain exactly one
-exchange (the explicit pre-embed repartition)."""
+exchange (the placement by part_id before the embed pass)."""
 
 from pyspark.sql import functions as F
 
@@ -40,18 +40,19 @@ def test_fused_pipeline_single_exchange(spark, corpus_small):
     from cli_p_spark.config import PipelineConfig
     from cli_p_spark.fixtures.generate import documents_to_spark
     from cli_p_spark.operators.ann import train_centroids
-    from cli_p_spark.plans.pipeline import build_triples
+    from cli_p_spark.plans.pipeline import plan_kg
 
     docs_pdf, ents_pdf = corpus_small
     docs = documents_to_spark(spark, docs_pdf)
     emat = np.stack(ents_pdf["embedding"].to_numpy())
     centroids = train_centroids(emat, nlist=100)
-    triples, _ = build_triples(docs, ents_pdf, centroids, PipelineConfig())
+    triples = plan_kg(docs, ents_pdf, centroids, PipelineConfig()).triples
     plan = _plan(triples)
-    # exactly one Exchange: the explicit repartition before encode;
+    # exactly one Exchange: the placement by part_id before encode;
     # linking against the broadcast index adds none
     assert plan.count("Exchange") == 1, plan
-    assert "RoundRobinPartitioning" in plan
+    assert "shufflepartitionidpassthrough(direct_shuffle_partition_id(" \
+        "part_id" in plan, plan
 
 
 def test_q1_whole_stage_codegen(spark):

@@ -92,7 +92,10 @@ def test_lineage_metrics_present(spark, corpus_small, tmp_path):
     assert embed.count() == 16
     assert embed.filter("n_rows <= 0").count() == 0
     assert embed.filter("wall_s <= 0").count() == 0
-    assert lin.filter("stage='link' and n_rows > 0").count() == 1
+    # links are counted per partition: no separate link row any more
+    assert lin.count() == 16
+    assert embed.filter("n_links < 0").count() == 0
+    assert embed.agg(F.sum("n_links")).first()[0] > 0
     # the corrupt span was quarantined and counted in exactly one partition
     assert embed.agg(F.sum("n_skips")).first()[0] == 1
 
@@ -165,13 +168,14 @@ def _part_ids(spark, doc_ids):
     }
 
 
-# fresh-run Spark jobs on corpus_small, measured with the fused embed
-# stage (explode once, encode and link in one cached pass, counts from that
-# cache, Arrow lineage rows, triples counted by an Observation); the
-# separate link pass over mentions/ and the triples read-back it replaced
-# put the same run at 13 jobs, the earlier scan pre-pass and read-backs
-# at 20
-FRESH_RUN_MAX_JOBS = 9
+# fresh-run Spark jobs on corpus_small, measured with plan_kg's cached
+# pass feeding the mentions write, one counts job (rows, skips, links per
+# partition), the skips write and the per-partition triples write, and
+# one Arrow lineage commit (8 jobs); the unpartitioned triples write
+# counted by an Observation and a separate link-row commit put the same
+# run at 9, the separate link pass over mentions/ at 13, the earlier scan
+# pre-pass and read-backs at 20
+FRESH_RUN_MAX_JOBS = 8
 
 
 @pytest.fixture(scope="module")
@@ -228,23 +232,27 @@ def test_fresh_run_job_count_guard(fresh_run):
     work to the fresh run; this pins the job count and the commit path."""
     _, jobs, lineage_rdds = fresh_run
     assert 0 < len(jobs) <= FRESH_RUN_MAX_JOBS, len(jobs)
-    assert len(lineage_rdds) == 2  # embed rows, then the link row
+    assert len(lineage_rdds) == 1  # one commit: a row per partition
     for rdd in lineage_rdds:
         assert "PythonRDD" not in rdd, rdd
 
 
 def test_one_file_per_partition_and_exact_link_count(spark, fresh_run):
-    """The embed pass is range-partitioned by part_id, so each partition
-    directory is written by one task: one file, not one per encode task.
-    The link lineage row counts exactly the triples written."""
+    """The embed pass is placed by part_id, so each partition directory
+    is written by one task: one file, not one per encode task.  Each
+    partition's lineage n_links counts exactly the triples written under
+    it."""
     out, _, _ = fresh_run
-    for table in ("mentions", "skips"):
+    for table in ("mentions", "skips", "triples"):
         dirs = glob.glob(os.path.join(out, table, "part_id=*"))
         assert dirs, table
         for d in dirs:
             assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
-    (link,) = read_lineage(spark, out).filter("stage = 'link'").collect()
-    assert link["n_rows"] == spark.read.parquet(f"{out}/triples").count()
+    n_links = {r["part_id"]: r["n_links"]
+               for r in read_lineage(spark, out).collect()}
+    written = {r["part_id"]: r["count"] for r in spark.read.parquet(
+        f"{out}/triples").groupBy("part_id").count().collect()}
+    assert n_links == written
 
 
 def _all_triples(df):
@@ -255,9 +263,11 @@ def _all_triples(df):
 
 
 def test_fused_and_disk_links_agree_at_k3(spark, corpus_small, tmp_path):
-    """Both link sources of run_pipeline give the same triples, scores and
-    ranks: the fused pass (this run's partitions) and link_ivf_broadcast
-    over mentions/ (partitions finished by an earlier run)."""
+    """The triples a run stores are the links of the mentions it stores:
+    link_ivf_broadcast over mentions/ gives the same triples, scores and
+    ranks.  A kill after 5 partitions resumes to those triples and the
+    same n_triples, relinking nothing: the killed run's partitions keep
+    the triples it wrote."""
     import numpy as np
 
     from cli_p_spark.operators.ann import link_ivf_broadcast, train_centroids
@@ -285,9 +295,21 @@ def test_fused_and_disk_links_agree_at_k3(spark, corpus_small, tmp_path):
     r1 = run_pipeline(spark, docs, ents_pdf, crash, cfg, run_id="run1",
                       fail_after_parts=5)
     assert r1["status"] == "killed"
+    killed = {r["part_id"] for r in read_lineage(spark, crash).collect()}
+    stored = {
+        d: sorted(glob.glob(os.path.join(crash, "triples", f"part_id={d}",
+                                         "*.parquet")))
+        for d in killed
+    }
     r2 = run_pipeline(spark, docs, ents_pdf, crash, cfg, run_id="run2")
     assert r2["n_triples"] == len(fresh)
     assert _all_triples(spark.read.parquet(f"{crash}/triples")) == fresh
+    # the resume left the killed run's triples files as they were
+    assert stored == {
+        d: sorted(glob.glob(os.path.join(crash, "triples", f"part_id={d}",
+                                         "*.parquet")))
+        for d in killed
+    }
     # the resumed run also wrote one file per partition it ran
     for d in glob.glob(os.path.join(crash, "mentions", "part_id=*")):
         assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
@@ -332,3 +354,54 @@ def test_resume_with_empty_partition_ids(spark, corpus_small, tmp_path):
     assert r2["status"] == "done"
     assert sorted(embed_ids(crash, "run2")) == present[2:]
     assert _triples_set(spark, crash) == _triples_set(spark, full)
+
+
+def _listing(root):
+    """Every file under ``root`` with its size and mtime."""
+    return sorted(
+        (p, os.path.getsize(p), os.path.getmtime(p))
+        for p in glob.glob(os.path.join(root, "**", "*"), recursive=True)
+        if os.path.isfile(p)
+    )
+
+
+def test_resume_under_changed_config_raises(spark, corpus_small, tmp_path):
+    """A run killed at 16 parts and resumed at 8 parts, or with k=3,
+    would mix two link sets in triples/: the resume raises before it
+    writes anything.  The same config then resumes."""
+    docs_pdf, ents_pdf = corpus_small
+    docs = documents_to_spark(spark, docs_pdf)
+    crash = str(tmp_path / "crash")
+    r1 = run_pipeline(spark, docs, ents_pdf, crash, run_id="run1",
+                      fail_after_parts=5)
+    assert r1["status"] == "killed"
+    before = _listing(crash)
+    for change in ({"n_parts": 8}, {"cfg": PipelineConfig(k=3)}):
+        with pytest.raises(ValueError, match="config"):
+            run_pipeline(spark, docs, ents_pdf, crash, run_id="run2",
+                         **change)
+        assert _listing(crash) == before, change
+    r2 = run_pipeline(spark, docs, ents_pdf, crash, run_id="run2")
+    assert r2["status"] == "done"
+
+
+def test_uncommitted_rows_do_not_survive_another_n_parts(spark, corpus_small,
+                                                         tmp_path):
+    """A run killed inside the commit window stores no config, so a rerun
+    may use another n_parts.  The killed run's rows under part ids the
+    rerun never writes must not stay in mentions/ or triples/."""
+    docs_pdf, ents_pdf = corpus_small
+    docs = documents_to_spark(spark, docs_pdf)
+    full = str(tmp_path / "full")
+    run_pipeline(spark, docs, ents_pdf, full, n_parts=8, run_id="full")
+    crash = str(tmp_path / "crash")
+    r1 = run_pipeline(spark, docs, ents_pdf, crash, run_id="run1",
+                      fail_after_parts=16, fail_mode="after_data")
+    assert r1["status"] == "killed"
+    assert glob.glob(os.path.join(crash, "triples", "part_id=15"))
+    r2 = run_pipeline(spark, docs, ents_pdf, crash, n_parts=8, run_id="run2")
+    assert r2["status"] == "done"
+    men = spark.read.parquet(f"{crash}/mentions")
+    assert men.count() == spark.read.parquet(f"{full}/mentions").count()
+    assert _all_triples(spark.read.parquet(f"{crash}/triples")) == \
+        _all_triples(spark.read.parquet(f"{full}/triples"))

@@ -7,7 +7,7 @@ from cli_p_spark.config import PipelineConfig
 from cli_p_spark.fixtures.generate import corpus, documents_to_spark
 from cli_p_spark.oracle.exact import golden_triples, precision_recall
 from cli_p_spark.operators.ann import train_centroids
-from cli_p_spark.plans.pipeline import build_triples
+from cli_p_spark.plans.pipeline import plan_kg
 
 
 def test_dim512_reference_dimensionality(spark, exact_triples):
@@ -32,7 +32,7 @@ def test_large_entity_index_ann(spark):
     centroids = train_centroids(
         np.stack(ents_pdf["embedding"].to_numpy()), nlist=100, seed=cfg.seed
     )
-    triples, _ = build_triples(docs, ents_pdf, centroids, cfg, nprobe=32)
+    triples = plan_kg(docs, ents_pdf, centroids, cfg, nprobe=32).triples
     golden = golden_triples(docs_pdf, ents_pdf, tau=cfg.tau, k=cfg.k)
     p, r = precision_recall(triples.toPandas(), golden)
     assert p >= 0.95 and r >= 0.95, (p, r)

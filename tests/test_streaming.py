@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from cli_p_spark.config import PipelineConfig
 from cli_p_spark.fixtures.generate import documents_to_spark
 from cli_p_spark.operators.ann import train_centroids
-from cli_p_spark.plans.pipeline import build_triples
+from cli_p_spark.plans.pipeline import plan_kg
 from cli_p_spark.streaming.ingest import (
     incremental_triples,
     stream_documents,
@@ -53,9 +53,9 @@ def test_incremental_equals_batch(spark, corpus_small, tmp_path):
             .collect(),
         )
     )
-    batch_t, _ = build_triples(
+    batch_t = plan_kg(
         documents_to_spark(spark, docs_pdf), ents_pdf, centroids, cfg
-    )
+    ).triples
     batch = sorted(
         map(tuple, batch_t.select("subj", "span_idx", "pred", "obj").collect())
     )

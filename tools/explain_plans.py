@@ -22,7 +22,7 @@ def main():
     from cli_p_spark.fixtures.generate import corpus, documents_to_spark
     from cli_p_spark.operators.ann import train_centroids
     from cli_p_spark.plans.contract import QUERIES
-    from cli_p_spark.plans.pipeline import build_triples
+    from cli_p_spark.plans.pipeline import plan_kg
     from cli_p_spark.session import get_spark
 
     spark = get_spark(app="explain", master="local[4]", shuffle_partitions=8)
@@ -143,7 +143,7 @@ def main():
     docs = documents_to_spark(spark, docs_pdf)
     emat = np.stack(ents_pdf["embedding"].to_numpy())
     centroids = train_centroids(emat, nlist=20)
-    triples, _ = build_triples(docs, ents_pdf, centroids, PipelineConfig())
+    triples = plan_kg(docs, ents_pdf, centroids, PipelineConfig()).triples
     plan = triples._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -151,8 +151,8 @@ def main():
     )
     out.append(
         "\n## kg_fused_pipeline (documents -> triples)\n\n"
-        "One Exchange total — the explicit pre-embed repartition; the\n"
-        "broadcast-index search adds none.\n\n"
+        "One Exchange total — the placement by part_id before the\n"
+        "embed pass; the broadcast-index search adds none.\n\n"
         f"```\n{plan}\n```\n"
     )
     from cli_p_spark.fixtures.distributed import distributed_mentions

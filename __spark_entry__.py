@@ -7,11 +7,16 @@ oracle_sql()   -> DuckDB twins for EVERY QUERIES entry (key parity is
                   (kg_*, minhash/simhash, media, curate) stage their
                   intermediates to parquet and the SQL re-derives the
                   result from the same bytes.  The external driver
-                  evaluates the FIRST 50 dict entries; the tail ROTATES
-                  through the window every other round (see the QUERIES
-                  comment in plans/contract.py) and holds only entries
-                  driver-green the previous round — ALL entries are
-                  still checked every round by tools/check_contract.py
+                  evaluates the FIRST 50 dict entries; the rest ROTATE
+                  through that window so every entry gets a driver
+                  CORRECTNESS row at least every third round, and an
+                  entry whose code changed since its last row re-enters
+                  at once.  An entry that slips past the window is
+                  documented in the QUERIES comment in plans/contract.py
+                  and in SLIPPED of tools/check_rotation.py, which
+                  checks the policy against the committed
+                  CORRECTNESS_r*.json records.  ALL entries are still
+                  checked every round by tools/check_contract.py
                   (Arrow-off, strict repr floats).
 """
 

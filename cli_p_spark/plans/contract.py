@@ -4062,69 +4062,162 @@ def _kg_rectangles_sql() -> str:
 # entries of this dict each round; the tail is only checked locally
 # (tools/check_contract.py runs ALL entries, Arrow-off, strict floats).
 # ROTATION POLICY (amended round 6): the registry outgrew the window —
-# 104 entries cannot all be driver-audited every other round through a
-# 50-slot window (104/50 ≈ 2.1), so the honest guarantee is now: every
+# 110 entries cannot all be driver-audited every other round through a
+# 50-slot window (110/50 = 2.2), so the honest guarantee is now: every
 # entry gets a driver CORRECTNESS row at least every THIRD round, the
 # never-audited and oldest-audited entries enter first, and any entry
 # whose backing code changed since its last driver row re-enters
-# immediately (function granularity, git diff as evidence).
+# immediately (function granularity, git diff as evidence).  An entry
+# may slip past the window only if its contract function and SQL twin
+# are byte-identical since its last driver row and its category keeps
+# an in-window or last-round-green witness; every slip is listed here
+# and in SLIPPED of tools/check_rotation.py, which re-checks the policy
+# against the committed CORRECTNESS_r*.json records every pytest run.
 #
-# ROUND-6 WINDOW ACCOUNTING (owed: 42 r4-greens demoted in r5 + the 9
-# session-4 entries with no driver row ever = 51, vs 50 slots):
-#   positions 1-9   the nine never-audited session-4 entries (mandatory
-#                   per the r5 verdict);
-#   positions 10-12 the three NEW round-6 entries (kg_ann_recall,
-#                   kg_pagerank_tol, knn_incremental_index — the r5
-#                   verdict's items 5-7; new entries always enter
-#                   in-window);
-#   position 13     kg_betweenness — r5-green, but betweenness_sampled
-#                   was edited this round (empty-fallback schema fix per
-#                   ADVICE), so it re-enters under the touched-code rule;
-#   positions 14-19 the six round-6 session-5 entries (kg_clustering,
-#                   kg_transitive_closure, kg_random_walks,
-#                   er_sorted_neighborhood, kg_resource_allocation,
-#                   kg_rectangles — never audited, so they MUST be
-#                   in-window);
-#   position 20     kg_triangles — r5-green, but triangle_count's
-#                   orientation prelude was refactored into the shared
-#                   _degree_oriented helper this session, so it
-#                   re-enters under the touched-code rule (same rule
-#                   that re-entered kg_betweenness);
-#   positions 21-50 thirty of the 42 owed r4-greens.
-# TWELVE owed entries slip to round 7 (positions 51-62, MANDATORY r7
-# entrants): intersect_nations, scalar_subquery_above_avg,
-# having_big_customers, agg_nations_per_region, window_running_total,
-# string_funcs_part, percentiles_lineitem, doc_token_stats,
-# except_customer_only_nations, sort_limit_top_orders,
-# case_when_conditional_agg, agg_count_distinct.
-# Slip criterion, per entry: driver-green in CORRECTNESS_r04, backing
-# contract function + SQL twin byte-identical since (git diff
-# 929b8b7..HEAD touches none of them), and each one's category keeps an
-# in-window or r5-green witness (set ops: union_dedup r5; scalar
-# subquery: q3/q5 join entries; HAVING + plain agg: rollup/date/case
-# agg entries; running-total window: window_topk + events_lag_gap r5;
-# string funcs: doc_quality_score + doc_pii_scrub r5 + part_name_fuzzy
-# in-window; percentiles: histogram_quantiles_price in-window; token
-# stats: doc_bpe_token_stats r5 + doc_repetition_stats in-window;
-# sort/limit: window_topk r5 + sort inside every ORDER BY entry;
-# CASE-WHEN agg: rollup/date agg r5 witnesses; count-distinct:
-# hll_distinct_orderkeys + union_dedup in-window/r5).
-# The arithmetic is 4 deeper than the r5 verdict's "one slip" plan
-# because that verdict's items 5-7 mandated three new in-window entries
-# and the ADVICE fix touched kg_betweenness; 4 deeper again for the
-# first session-5 batch, and 3 deeper for the second (two new entries +
-# the kg_triangles touched-code re-entry) — documented here rather than
-# silently bumped.
-# kg_pagerank / kg_personalized_pagerank stay demoted despite this
-# round's pagerank_sql refactor: the generated oracle SQL is verified
-# BYTE-IDENTICAL across the refactor (tools/check_rotation.py re-checks
-# the policy mechanically every pytest run) and pagerank_fixed_point is
-# untouched.
-# Positions 63-110: the 48 remaining r5-greens (CORRECTNESS_r05 rows,
-# code untouched since unless noted above; kg_triangles moved up under
-# the touched-code rule) — they rotate back in round 7 behind the
-# twelve slipped entries.
+# ROUND-8 WINDOW ACCOUNTING.  Audit trail: CORRECTNESS_r06 and _r07 hold
+# the same 50 entries (the round-7 window); the r7 rows were taken at
+# aa1601f, the r5 rows at 929b8b7.  Owed this round: the 12 r4-greens
+# with no row in r5-r7 and the 48 entries whose last row is r5 — 60
+# entries for 50 slots, so a slip is forced.
+#   positions 1-12   the twelve r4-greens (sort_limit_top_orders ..
+#                    window_running_total): outside the last three
+#                    records, so they MUST be in-window;
+#   positions 13-18  r7-greens whose code changed since aa1601f:
+#                    kg_canonical_triples (build_kg -> plan_kg +
+#                    canonicalize), kg_triples_ann, kg_ann_recall,
+#                    knn_ivf_exhaustive, knn_incremental_index (all
+#                    through _IvfIndex; kg_ann_recall also through
+#                    encode_mentions, knn_incremental_index also through
+#                    TableStore), kg_skips_quarantine (encode_mentions
+#                    -> with_content);
+#   positions 19-30  r5-greens whose code changed since 929b8b7:
+#                    kg_triples_exact (link_exact_broadcast -> the
+#                    exhaustive IVF search), kg_pagerank +
+#                    kg_personalized_pagerank (pagerank_fixed_point,
+#                    pagerank_sql), kg_khop_reach (khop_reachability),
+#                    kg_components + doc_semantic_dedup
+#                    (connected_components), embedding_neardup_cosine
+#                    (hyperplane_lsh_pairs), doc_incremental_neardup
+#                    (minhash_signatures), knn_bruteforce_cosine,
+#                    knn_rrf_fusion, q3_top_unshipped_revenue,
+#                    q5_region_revenue (the contract functions: _fan,
+#                    _maybe_broadcast);
+#   positions 31-48  the untouched r5-greens, least-audited first: the
+#                    twelve whose only driver row is r5, then
+#                    cms_join_size_orders (r4, r5), the three with r3 +
+#                    r5, the two with r2 + r3 + r5;
+#   positions 49-50  events_json_extract and date_funcs_orders_monthly:
+#                    driver-green r1-r3 and r5 like the slipped entries
+#                    below, but get_json_object and year()/month() are
+#                    used by no other entry, so no witness can stand in.
+#   positions 51-94  the 44 other r7-greens, code untouched since aa1601f;
+#   positions 95-110 SIXTEEN r5-greens slip (MANDATORY round-9 entrants;
+#                    check_rotation refuses a round-9 order without
+#                    them).  Their rows will be four rounds apart (r5 ->
+#                    r9), one past the every-third-round bound: the
+#                    60-for-50 arithmetic above forces it, and the
+#                    slipped ones are the most-audited untouched entries
+#                    (driver-green r1, r2, r3 and r5).
+# Graph entries that reach changed code only through _kg_edges ->
+# kg_triples_exact count as untouched: fourteen r7-greens
+# (kg_condensation, kg_shortest_paths, kg_hyperball, kg_kcore,
+# kg_comention, kg_negative_samples, kg_pagerank_tol, kg_betweenness,
+# kg_clustering, kg_transitive_closure, kg_random_walks,
+# kg_resource_allocation, kg_rectangles, kg_triangles) and five
+# r5-greens (kg_communities, kg_closeness, kg_harmonic, kg_scc,
+# kg_link_prediction).  Both engines read that output from the same
+# staged kg_graph_edges, it is verified identical (all 1,646
+# kg_triples_exact rows of the scale-independent KG corpus are equal at
+# 929b8b7, aa1601f and this tree), and their own operators and SQL twins
+# are byte-identical since their last row — the round-6 kg_pagerank
+# rule: a verified byte-identical input keeps an entry out.
+# kg_span_roundtrip is untouched at function granularity (explode_spans
+# and reassemble_spans are byte-identical since aa1601f).
+# Slip criterion, per entry: contract function and SQL twin
+# byte-identical since 929b8b7 (so is every function they call), and a
+# witness of the same operator in-window or r7-green:
+#   filter_project_pushdown          q3 (filtered, projected lineitem scan)
+#   doc_ngram_jaccard_pairs          doc_contamination_probes (shared word
+#                                    trigrams), doc_winnow_neardup
+#   doc_fingerprint_dedup            doc_exact_dedup r7 (exact-content
+#                                    dedup), doc_pii_scrub (text regexp)
+#   doc_lang_id                      doc_pii_scrub, doc_bpe_token_stats
+#   doc_quality_composite              (functions/text.py builders)
+#   join_broadcast_dims              q5 (nation -> region dim chain,
+#                                    broadcast)
+#   semi_join_customers_with_orders  intersect_nations (Spark plans
+#                                    INTERSECT as a left-semi join), kg_scc
+#   anti_join_customers_without_orders  kg_khop_reach, kg_components
+#                                    (left-anti joins)
+#   window_topk_orders_per_cust      window_running_total (per-customer
+#                                    ordered window), sort_limit_top_orders
+#   union_dedup_nationkeys           intersect_nations,
+#                                    except_customer_only_nations (set ops
+#                                    over the same nation keys)
+#   rollup_lineitem_flags            cube_orders_status_priority r7
+#                                    (grouping sets)
+#   events_user_activity             events_json_extract (groupBy
+#                                    event_type over events),
+#                                    agg_count_distinct
+#   events_lag_gap                   events_sessionization r7 (the same
+#                                    lag() over user_id, ts)
+#   range_join_ship_lag              q3 (lineitem x orders equi-join),
+#                                    orders_overlap_pairs r7 (date-range
+#                                    predicate across rows)
+#   doc_quality_score                doc_pii_scrub (regexp_replace),
+#                                    string_funcs_part (length)
+#   embedding_norm_stats             knn_bruteforce_cosine (cosine_expr)
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    "sort_limit_top_orders": sort_limit_top_orders,
+    "case_when_conditional_agg": case_when_conditional_agg,
+    "agg_count_distinct": agg_count_distinct,
+    "string_funcs_part": string_funcs_part,
+    "percentiles_lineitem": percentiles_lineitem,
+    "doc_token_stats": doc_token_stats,
+    "except_customer_only_nations": except_customer_only_nations,
+    "intersect_nations": intersect_nations,
+    "scalar_subquery_above_avg": scalar_subquery_above_avg,
+    "having_big_customers": having_big_customers,
+    "agg_nations_per_region": agg_nations_per_region,
+    "window_running_total": window_running_total,
+    "kg_canonical_triples": kg_canonical_triples,
+    "kg_triples_ann": kg_triples_ann,
+    "kg_ann_recall": kg_ann_recall,
+    "knn_ivf_exhaustive": knn_ivf_exhaustive,
+    "knn_incremental_index": knn_incremental_index,
+    "kg_skips_quarantine": kg_skips_quarantine,
+    "kg_triples_exact": kg_triples_exact,
+    "kg_pagerank": kg_pagerank,
+    "kg_personalized_pagerank": kg_personalized_pagerank,
+    "kg_khop_reach": kg_khop_reach,
+    "kg_components": kg_components,
+    "doc_semantic_dedup": doc_semantic_dedup,
+    "embedding_neardup_cosine": embedding_neardup_cosine,
+    "doc_incremental_neardup": doc_incremental_neardup,
+    "knn_bruteforce_cosine": knn_bruteforce_cosine,
+    "knn_rrf_fusion": knn_rrf_fusion,
+    "q3_top_unshipped_revenue": q3_top_unshipped_revenue,
+    "q5_region_revenue": q5_region_revenue,
+    "kg_communities": kg_communities,
+    "kg_closeness": kg_closeness,
+    "kg_harmonic": kg_harmonic,
+    "kg_scc": kg_scc,
+    "kg_link_prediction": kg_link_prediction,
+    "doc_setsim_pairs": doc_setsim_pairs,
+    "corpus_chunk_windows": corpus_chunk_windows,
+    "events_funnel": events_funnel,
+    "events_retention": events_retention,
+    "docs_weighted_sample": docs_weighted_sample,
+    "hll_small_range_users": hll_small_range_users,
+    "doc_pmi_collocations": doc_pmi_collocations,
+    "cms_join_size_orders": cms_join_size_orders,
+    "doc_pii_scrub": doc_pii_scrub,
+    "doc_contamination_probes": doc_contamination_probes,
+    "doc_tfidf_keywords": doc_tfidf_keywords,
+    "doc_winnow_neardup": doc_winnow_neardup,
+    "doc_bpe_token_stats": doc_bpe_token_stats,
+    "events_json_extract": events_json_extract,
+    "date_funcs_orders_monthly": date_funcs_orders_monthly,
     "kg_condensation": kg_condensation,
     "kg_shortest_paths": kg_shortest_paths,
     "kg_hyperball": kg_hyperball,
@@ -4134,9 +4227,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "orders_overlap_pairs": orders_overlap_pairs,
     "orders_interval_islands": orders_interval_islands,
     "bitemporal_orders_snapshot": bitemporal_orders_snapshot,
-    "kg_ann_recall": kg_ann_recall,
     "kg_pagerank_tol": kg_pagerank_tol,
-    "knn_incremental_index": knn_incremental_index,
     "kg_betweenness": kg_betweenness,
     "kg_clustering": kg_clustering,
     "kg_transitive_closure": kg_transitive_closure,
@@ -4149,14 +4240,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "minhash_dedup_pairs": minhash_dedup_pairs,
     "simhash_dedup_pairs": simhash_dedup_pairs,
     "q1_pricing_summary": q1_pricing_summary,
-    "kg_triples_ann": kg_triples_ann,
-    "kg_canonical_triples": kg_canonical_triples,
-    "kg_skips_quarantine": kg_skips_quarantine,
     "kg_span_roundtrip": kg_span_roundtrip,
     "curate_training_corpus": curate_training_corpus,
     "media_decode_stats": media_decode_stats,
     "events_sessionization": events_sessionization,
-    "knn_ivf_exhaustive": knn_ivf_exhaustive,
     "events_asof_join": events_asof_join,
     "media_frame_plan": media_frame_plan,
     "hll_distinct_orderkeys": hll_distinct_orderkeys,
@@ -4175,65 +4262,21 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "left_outer_nation_customers": left_outer_nation_customers,
     "pivot_returnflag_by_status": pivot_returnflag_by_status,
     "cube_orders_status_priority": cube_orders_status_priority,
-    "sort_limit_top_orders": sort_limit_top_orders,
-    "case_when_conditional_agg": case_when_conditional_agg,
-    "agg_count_distinct": agg_count_distinct,
-    "string_funcs_part": string_funcs_part,
-    "percentiles_lineitem": percentiles_lineitem,
-    "doc_token_stats": doc_token_stats,
-    "except_customer_only_nations": except_customer_only_nations,
-    "intersect_nations": intersect_nations,
-    "scalar_subquery_above_avg": scalar_subquery_above_avg,
-    "having_big_customers": having_big_customers,
-    "agg_nations_per_region": agg_nations_per_region,
-    "window_running_total": window_running_total,
-    "kg_triples_exact": kg_triples_exact,
-    "kg_pagerank": kg_pagerank,
-    "kg_khop_reach": kg_khop_reach,
-    "kg_personalized_pagerank": kg_personalized_pagerank,
-    "kg_components": kg_components,
-    "kg_communities": kg_communities,
-    "kg_closeness": kg_closeness,
-    "kg_harmonic": kg_harmonic,
-    "kg_scc": kg_scc,
-    "kg_link_prediction": kg_link_prediction,
-    "doc_semantic_dedup": doc_semantic_dedup,
-    "doc_setsim_pairs": doc_setsim_pairs,
-    "corpus_chunk_windows": corpus_chunk_windows,
-    "events_funnel": events_funnel,
-    "events_retention": events_retention,
-    "docs_weighted_sample": docs_weighted_sample,
-    "hll_small_range_users": hll_small_range_users,
-    "knn_rrf_fusion": knn_rrf_fusion,
-    "doc_pmi_collocations": doc_pmi_collocations,
-    "cms_join_size_orders": cms_join_size_orders,
-    "doc_incremental_neardup": doc_incremental_neardup,
-    "embedding_neardup_cosine": embedding_neardup_cosine,
     "filter_project_pushdown": filter_project_pushdown,
-    "q3_top_unshipped_revenue": q3_top_unshipped_revenue,
-    "q5_region_revenue": q5_region_revenue,
-    "knn_bruteforce_cosine": knn_bruteforce_cosine,
     "doc_ngram_jaccard_pairs": doc_ngram_jaccard_pairs,
     "doc_fingerprint_dedup": doc_fingerprint_dedup,
     "doc_lang_id": doc_lang_id,
     "doc_quality_composite": doc_quality_composite,
-    "doc_pii_scrub": doc_pii_scrub,
-    "doc_contamination_probes": doc_contamination_probes,
-    "doc_winnow_neardup": doc_winnow_neardup,
-    "doc_tfidf_keywords": doc_tfidf_keywords,
     "join_broadcast_dims": join_broadcast_dims,
     "semi_join_customers_with_orders": semi_join_customers_with_orders,
     "anti_join_customers_without_orders": anti_join_customers_without_orders,
     "window_topk_orders_per_cust": window_topk_orders_per_cust,
     "union_dedup_nationkeys": union_dedup_nationkeys,
     "rollup_lineitem_flags": rollup_lineitem_flags,
-    "date_funcs_orders_monthly": date_funcs_orders_monthly,
     "events_user_activity": events_user_activity,
     "events_lag_gap": events_lag_gap,
-    "events_json_extract": events_json_extract,
     "range_join_ship_lag": range_join_ship_lag,
     "doc_quality_score": doc_quality_score,
-    "doc_bpe_token_stats": doc_bpe_token_stats,
     "embedding_norm_stats": embedding_norm_stats,
 }
 

@@ -102,7 +102,7 @@ def distributed_mentions(
     Structure: ids [0, hub_copies) are EXACT copies of ONE hub vector
     (the 10^9-copy boilerplate regime: identical vectors collide in
     every band, the bucket blows past max_bucket, and the LSH star cap
-    + salted CC min-agg must keep the component linear).  Remaining
+    + the CC map-side partial min must keep the component linear).  Remaining
     ids form
     ``cluster_w``-sized clusters; a ``dup_frac`` fraction of clusters
     are true near-dup cliques (members = base + jitter), the rest get

@@ -181,7 +181,6 @@ def link_ivf_broadcast(
     tau: float = 0.0,
     nprobe: int = 32,
     embedding_col: str = "embedding",
-    index_dtype: str = "f32",
 ) -> DataFrame:
     """IVF search against a broadcast bucketed index — the scale workhorse.
 
@@ -199,7 +198,7 @@ def link_ivf_broadcast(
     """
     spark = mentions.sparkSession
     bc = spark.sparkContext.broadcast(
-        build_ivf_broadcast_value(entities_pdf, centroids, dtype=index_dtype)
+        build_ivf_broadcast_value(entities_pdf, centroids)
     )
 
     keep_fields = [f for f in mentions.schema.fields if f.name != embedding_col]
@@ -234,7 +233,9 @@ class _IvfIndex:
 
     search(): when nprobe >= nlist (exhaustive) it is f64-EXACT — one
     dense f64 GEMM, top-kc selected on those f64 scores with the
-    boundary-tie repair; this is the exact linker.  When nprobe < nlist,
+    boundary-tie repair; this is the exact linker.  Both branches score
+    their kc candidates with the same per-row f64 rescore, so a score
+    does not depend on the block a row lands in.  When nprobe < nlist,
     ONE sgemm per probed cell against that cell's slice only, merged into
     a per-row running top-kc — peak intermediate is [block, max_cell +
     kc], NOT [block, E]; nprobe actually prunes compute (the reference's
@@ -256,7 +257,7 @@ class _IvfIndex:
 
     def __init__(self, eids, gmat, perm, inv_perm, cell_ptr, CT):
         self.eids = eids
-        self.gmat32 = gmat.astype(np.float32, copy=False)
+        self.gmat32 = gmat
         self.perm = perm          # grouped position -> original entity idx
         self.inv_perm = inv_perm  # original entity idx -> grouped position
         self.cell_ptr = cell_ptr  # [nlist+1] offsets into gmat
@@ -269,8 +270,8 @@ class _IvfIndex:
     @classmethod
     def from_broadcast(cls, value):
         """Broadcast values are deserialized once per executor process and
-        memoized by Spark; cache the wrapper too so a possible f16->f32
-        upcast happens once per process, not once per task.  Single-slot,
+        memoized by Spark; cache the wrapper too so its lazily built f64
+        matrix is built once per process, not once per task.  Single-slot,
         released BEFORE the replacement is built: a long-lived worker
         switching between two multi-GB indexes holds at most one wrapper
         (plus whatever Spark's own broadcast cache pins)."""
@@ -359,11 +360,13 @@ class _IvfIndex:
         if pp >= n_cells:
             # exhaustive probing: one dense f64 GEMM (no cell is
             # excluded), top-kc selected on the f64 scores themselves, so
-            # no f32 rounding can drop an exact top-k member
+            # no f32 rounding can drop an exact top-k member.  The GEMM's
+            # last bit depends on the block it runs in, so the scores
+            # returned are the per-row rescore below, not the GEMM's.
             if self.gmat64 is None:
                 self.gmat64 = self.gmat32.astype(np.float64)
             self._track(E)
-            return self._topk_grouped(Q64 @ self.gmat64.T, kc)
+            sel, best_sc = self._topk_grouped(Q64 @ self.gmat64.T, kc)
         else:
             # cell-pruned search: rows grouped by probed cell, one GEMM
             # per (cell x probing rows), running top-kc merge under the
@@ -565,18 +568,15 @@ def index_append(
 
 
 def build_ivf_broadcast_value(entities_pdf: pd.DataFrame,
-                              centroids: np.ndarray,
-                              dtype: str = "f32"):
+                              centroids: np.ndarray):
     """The broadcast payload for _IvfIndex (shared by linking operators):
     cell-grouped CSR entity matrix + permutations + cell offsets.
 
-    dtype='f32' (default) stores the entity matrix single-precision —
-    lossless for array<float> embeddings (everything this engine encodes
-    or reads from parquet) and HALF the round-1 f64 wire size (10^7 x 512
-    = 20 GB f64 -> 10 GB).  dtype='f16' halves it again for the
-    broadcast-budget cliff; search upcasts once per executor, candidate
-    rescoring then sees f16-rounded entity values (~1e-3 relative score
-    shift; P/R gated in tests — exact score-parity paths use f32)."""
+    The entity matrix is stored single-precision — lossless for
+    array<float> embeddings (everything this engine encodes or reads
+    from parquet) and HALF the f64 wire size (10^7 x 512 = 20 GB f64 ->
+    10 GB).  Past the broadcast budget, PQ codes (operators/pq.py) or
+    the shuffle-based ``link_ann_join`` take over."""
     eids, emat = _entity_arrays(entities_pdf)
     n_cells = len(centroids)
     assign = np.argmax(emat @ centroids.T, axis=1).astype(np.int32)
@@ -585,8 +585,7 @@ def build_ivf_broadcast_value(entities_pdf: pd.DataFrame,
     counts = np.bincount(assign, minlength=n_cells)
     cell_ptr = np.zeros(n_cells + 1, dtype=np.int64)
     np.cumsum(counts, out=cell_ptr[1:])
-    store = np.float16 if dtype == "f16" else np.float32
-    gmat = np.ascontiguousarray(emat[perm].astype(store))
+    gmat = np.ascontiguousarray(emat[perm].astype(np.float32))
     return (
         eids,
         gmat,

@@ -23,14 +23,9 @@ Hub skew (north_rule): a hub entity's mentions form one giant component.
 The min-neighbor aggregation itself is hub-proof WITHOUT salting: min()
 partial-aggregates map-side (verified in the physical plan: partial_min
 below the exchange), so the reducer for a hub key receives one partial
-row per map partition, never the hub's full neighbor list.
-``salt_buckets`` > 1 keeps the explicit two-phase variant available —
-groupBy(node, pmod(hash(other), S)) partial-min, then groupBy(node)
-final-min — for engines/aggregates without map-side combine, at the
-cost of one extra exchange per aggregation (round 7: the default is now
-1, which removed two exchanges per CC round with identical results; the
-join in each star phase remains the skew-sensitive operator and is
-AQE-skew-splittable).
+row per map partition, never the hub's full neighbor list.  The join in
+each star phase remains the skew-sensitive operator and is
+AQE-skew-splittable.
 """
 
 from __future__ import annotations
@@ -53,32 +48,27 @@ def _checkpointer(df: DataFrame, mode: str):
     return df.localCheckpoint()
 
 
-def _min_neighbor(edges: DataFrame, salt_buckets: int) -> DataFrame:
-    """min(dst) per src; two-phase with salt when salt_buckets > 1.
+def _min_neighbor(edges: DataFrame) -> DataFrame:
+    """min(dst) per src.
 
-    The unsalted path groups on a RENAMED copy of src: grouping on the
-    join-visible `src` attribute trips a PruneFilters optimizer bug in
-    Spark 4.1 (NoSuchElementException: key not found, constraint lookup
-    through the aggregate alias) when the edge plan carries rich
-    constraints — the fresh attribute isolates the aggregate from the
-    downstream filter constraints and is semantically identical."""
-    if salt_buckets <= 1:
-        return (
-            edges.select(F.col("src").alias("_mn"), "dst")
-            .groupBy("_mn").agg(F.min("dst").alias("min_dst"))
-            .select(F.col("_mn").alias("src"), "min_dst")
-        )
-    partial = edges.groupBy(
-        "src", F.pmod(F.xxhash64("dst"), F.lit(salt_buckets)).alias("_salt")
-    ).agg(F.min("dst").alias("_pmin"))
-    return partial.groupBy("src").agg(F.min("_pmin").alias("min_dst"))
+    Groups on a RENAMED copy of src: grouping on the join-visible `src`
+    attribute trips a PruneFilters optimizer bug in Spark 4.1
+    (NoSuchElementException: key not found, constraint lookup through
+    the aggregate alias) when the edge plan carries rich constraints —
+    the fresh attribute isolates the aggregate from the downstream
+    filter constraints and is semantically identical."""
+    return (
+        edges.select(F.col("src").alias("_mn"), "dst")
+        .groupBy("_mn").agg(F.min("dst").alias("min_dst"))
+        .select(F.col("_mn").alias("src"), "min_dst")
+    )
 
 
-def _large_star(edges: DataFrame, salt_buckets: int) -> DataFrame:
+def _large_star(edges: DataFrame) -> DataFrame:
     sym = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    m = _min_neighbor(sym, salt_buckets).withColumn(
+    m = _min_neighbor(sym).withColumn(
         "m", F.least("min_dst", "src")
     ).select("src", "m")
     # no distinct here (round 7): the only consumer is _small_star,
@@ -92,11 +82,11 @@ def _large_star(edges: DataFrame, salt_buckets: int) -> DataFrame:
     )
 
 
-def _small_star(edges: DataFrame, salt_buckets: int) -> DataFrame:
+def _small_star(edges: DataFrame) -> DataFrame:
     directed = edges.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     )
-    m = _min_neighbor(directed, salt_buckets).withColumn(
+    m = _min_neighbor(directed).withColumn(
         "m", F.least("min_dst", "src")
     ).select("src", "m")
     joined = directed.join(m, "src")
@@ -112,7 +102,6 @@ def _small_star(edges: DataFrame, salt_buckets: int) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
-    salt_buckets: int = 1,
     src: str = "src",
     dst: str = "dst",
     checkpoint: str = "auto",
@@ -137,10 +126,7 @@ def connected_components(
     n_e = e.count()
     converged = False
     for rounds in range(1, max_iter + 1):
-        e2 = _checkpointer(
-            _small_star(_large_star(e, salt_buckets), salt_buckets),
-            checkpoint,
-        )
+        e2 = _checkpointer(_small_star(_large_star(e)), checkpoint)
         # fixed point: edge sets equal.  Both sides are distinct() sets,
         # so e2 == e  iff  |e2| == |e| and e2 \ e is empty — one cheap
         # count over the checkpointed partitions decides almost every

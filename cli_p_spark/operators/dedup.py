@@ -739,14 +739,12 @@ def embedding_neardup_pairs(
     if strategy == "auto":
         strategy = "lsh" if tau >= 0.8 else "ivf"
     if strategy == "lsh":
-        from .lsh import hyperplane_lsh_pairs, lsh_params_for_tau
+        from .lsh import hyperplane_lsh_pairs
 
-        bits, bands = lsh_params_for_tau(tau)
         dim = len(df.select(embedding_col).first()[0])
         unit = _unit_vectors(df, embedding_col, id_col)
         return hyperplane_lsh_pairs(
             unit, "_emb", "_nid", tau=tau, dim=dim, seed=seed,
-            bits_per_band=bits, bands=bands,
         )
 
     from .ann import add_bucket, add_probes, train_centroids_distributed
@@ -993,7 +991,7 @@ def semantic_dedup(
     embeddings, connect within-cluster pairs above cosine ``tau``, keep
     one representative (min id) per duplicate group.  keep=false rows
     are the semantic duplicates a curation pass drops.  Composition of
-    semantic_cluster_assign + semantic_dedup_pairs + the existing salted
+    semantic_cluster_assign + semantic_dedup_pairs + the existing
     connected-components resolution (ccomp.py)."""
     from .ccomp import canonical_mapping, connected_components
 

@@ -41,8 +41,8 @@ from ..config import PipelineConfig
 from ..functions.encoder import encode_batch
 from .ann import _IvfIndex, _emit_topk_cand, build_ivf_broadcast_value
 
-# output schema: the span keys, then the ``keep`` columns and (optional)
-# embedding, then the link/skip columns
+# output schema: the span keys, then the carried span columns and
+# (optional) embedding, then the link/skip columns
 _KEY_SCHEMA = "doc_id string, span_idx int, kind string"
 _LINK_SCHEMA = "entity_id string, score double, rank int, skip_reason string"
 
@@ -53,23 +53,24 @@ def encode_and_link(
     centroids: np.ndarray,
     cfg: PipelineConfig = PipelineConfig(),
     nprobe: int = 32,
-    keep: tuple[str, ...] = (),
     embeddings: bool = False,
 ) -> DataFrame:
-    """spans(doc_id, span_idx, kind, content, *keep) -> fused rows.
+    """spans(doc_id, span_idx, kind, content, *rest) -> fused rows.
 
-    ``keep`` names extra span columns every output row carries (e.g. the
-    partition id it is written under).  ``embeddings=True`` adds an
-    ``embedding`` column and one mention row per encoded span."""
+    Every output row carries the span's other columns (``rest``, e.g.
+    the partition id it is written under) after the span keys.
+    ``embeddings=True`` adds an ``embedding`` column and one mention row
+    per encoded span."""
     spark = spans.sparkSession
     bc = spark.sparkContext.broadcast(
         build_ivf_broadcast_value(entities_pdf, centroids)
     )
     dim, seed, k, tau = cfg.dim, cfg.seed, cfg.k, cfg.tau
-    keys = ["doc_id", "span_idx", "kind", *keep]
-    types = {f.name: f.dataType.simpleString() for f in spans.schema.fields}
+    rest = [f for f in spans.schema.fields
+            if f.name not in ("doc_id", "span_idx", "kind", "content")]
+    keys = ["doc_id", "span_idx", "kind", *(f.name for f in rest)]
     schema = ", ".join(
-        [_KEY_SCHEMA, *(f"{c} {types[c]}" for c in keep)]
+        [_KEY_SCHEMA, *(f"{f.name} {f.dataType.simpleString()}" for f in rest)]
         + (["embedding array<float>"] if embeddings else [])
         + [_LINK_SCHEMA]
     )

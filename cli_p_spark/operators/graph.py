@@ -306,7 +306,7 @@ def degree_stats(
 ) -> DataFrame:
     """Degree distribution of the triple graph: (degree, n_nodes) over
     total degree (in+out) — the hub/skew diagnostic that sizes the
-    salted-CC and AQE-skew knobs."""
+    LSH bucket cap and AQE skew thresholds."""
     deg = (
         edges.select(F.col(src_col).alias("node"))
         .unionByName(edges.select(F.col(dst_col).alias("node")))

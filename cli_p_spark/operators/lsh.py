@@ -102,30 +102,28 @@ def hyperplane_lsh_pairs(
     id_col: str,
     tau: float,
     dim: int,
-    bits_per_band: int = 16,
-    bands: int = 16,
+    bits_per_band: int | None = None,
+    bands: int | None = None,
     seed: int = SEED,
     max_bucket: int = 2000,
     group_col: str | None = None,
-    oversize: str = "star",
 ) -> DataFrame:
     """(src, dst, cosine) pairs with cosine >= tau, src < dst.
 
+    ``bits_per_band``/``bands`` default to ``lsh_params_for_tau(tau)``
+    (0.99 recall at tau).
+
     ``max_bucket`` guards degenerate buckets (mass-duplicate content):
-    quadratic pairing is capped there.  ``oversize`` picks what happens
-    above the cap:
-    - 'star' (default): each oversized bucket emits only (bucket-min,
-      member) candidates — LINEAR in bucket size.  Star candidates still
-      pass through the cosine verify, so downstream connected components
-      collapse the bucket into one cluster only for members that score
-      >= tau against the bucket-min member (the common degenerate case —
-      mass COPIES — verifies at cosine ~1.0 and stays fully connected;
-      a mixed oversized bucket keeps only its true near-dup star edges,
-      by design).  This is the SCALE.md "sample-representative for
-      degenerate components" device: a 10^9-copy boilerplate page costs
-      10^9 edges, not 10^18.
-    - 'drop': oversized buckets generate nothing (route such content
-      through exact dedup first).
+    quadratic pairing is capped there, and each oversized bucket emits
+    only (bucket-min, member) candidates — LINEAR in bucket size.  Star
+    candidates still pass through the cosine verify, so downstream
+    connected components collapse the bucket into one cluster only for
+    members that score >= tau against the bucket-min member (the common
+    degenerate case — mass COPIES — verifies at cosine ~1.0 and stays
+    fully connected; a mixed oversized bucket keeps only its true
+    near-dup star edges, by design).  This is the SCALE.md
+    "sample-representative for degenerate components" device: a
+    10^9-copy boilerplate page costs 10^9 edges, not 10^18.
 
     ``group_col``: restrict pairing to rows sharing this column (the
     SCALE.md stage-3 sharding — e.g. canonicalize per linked entity
@@ -135,11 +133,13 @@ def hyperplane_lsh_pairs(
     Rows whose id, embedding or group is NULL (or a NaN float) are
     dropped before banding: they make no pairs.
     """
+    auto_bits, auto_bands = lsh_params_for_tau(tau)
+    bits_per_band = bits_per_band or auto_bits
+    bands = bands or auto_bands
     n_planes = bits_per_band * bands
     rng = np.random.default_rng(seed ^ 0x15A9)
     H32 = rng.standard_normal((dim, n_planes)).astype(np.float32)
     bpb = bits_per_band
-    star = oversize == "star"
 
     # banding over ids only — embeddings attach AFTER pair dedup, so the
     # candidate shuffle carries ids and band keys, never vectors
@@ -187,7 +187,7 @@ def hyperplane_lsh_pairs(
         .repartition(*join_keys)
         .sortWithinPartitions(*join_keys, "_id")
         .mapInPandas(
-            lambda it: _sorted_run_pairs(it, join_keys, max_bucket, star),
+            lambda it: _sorted_run_pairs(it, join_keys, max_bucket),
             pair_schema,
         )
         .dropDuplicates(["src", "dst"])
@@ -215,7 +215,7 @@ def _run_starts(pdf: pd.DataFrame, keys: list[str]) -> np.ndarray:
     return np.flatnonzero(new)
 
 
-def _run_pairs(ids, starts, lens, sizes, max_bucket, star):
+def _run_pairs(ids, starts, lens, sizes, max_bucket):
     """Candidate (src, dst) id pairs of the runs at ``starts``.
 
     ``lens`` counts a run's rows in ``ids``; ``sizes`` its whole bucket
@@ -229,21 +229,20 @@ def _run_pairs(ids, starts, lens, sizes, max_bucket, star):
         s = starts[small & (lens == n)][:, None]
         src.append((s + i).ravel())
         dst.append((s + j).ravel())
-    if star:
-        big = sizes > max_bucket
-        rest = lens[big] - 1
-        first = np.repeat(starts[big], rest)
-        # row offsets 1..rest past each run's first row
-        step = np.arange(rest.sum()) - np.repeat(np.cumsum(rest) - rest, rest)
-        src.append(first)
-        dst.append(first + step + 1)
+    big = sizes > max_bucket
+    rest = lens[big] - 1
+    first = np.repeat(starts[big], rest)
+    # row offsets 1..rest past each run's first row
+    step = np.arange(rest.sum()) - np.repeat(np.cumsum(rest) - rest, rest)
+    src.append(first)
+    dst.append(first + step + 1)
     a = ids[np.concatenate(src)]
     b = ids[np.concatenate(dst)]
     keep = a != b  # a repeated id is not a pair
     return pd.DataFrame({"src": a[keep], "dst": b[keep]})
 
 
-def _sorted_run_pairs(batches, keys, max_bucket, star):
+def _sorted_run_pairs(batches, keys, max_bucket):
     """Pair kernel over one partition sorted by (keys, _id).
 
     Each run of equal ``keys`` is one bucket; ids are sorted inside it,
@@ -268,7 +267,7 @@ def _sorted_run_pairs(batches, keys, max_bucket, star):
         emit = np.ones(len(starts), dtype=bool)
         emit[-1] = sizes[-1] > max_bucket
         out = _run_pairs(
-            ids, starts[emit], lens[emit], sizes[emit], max_bucket, star
+            ids, starts[emit], lens[emit], sizes[emit], max_bucket
         )
         if len(out):
             yield out
@@ -280,7 +279,7 @@ def _sorted_run_pairs(batches, keys, max_bucket, star):
     if carry is not None and not done:
         n = np.array([len(carry)])
         out = _run_pairs(
-            carry["_id"].to_numpy(), np.array([0]), n, n, max_bucket, star
+            carry["_id"].to_numpy(), np.array([0]), n, n, max_bucket
         )
         if len(out):
             yield out

@@ -145,7 +145,9 @@ def mention_edges(
     Candidate generation is banded sign-LSH (operators/lsh.py), not the
     IVF search: all-pairs-above-tau over 10^12 mentions needs the
     sub-quadratic candidate space LSH banding gives at high tau_cc; the
-    IVF probe structure only cuts the quadratic space by ~nlist/nprobe."""
+    IVF probe structure only cuts the quadratic space by ~nlist/nprobe.
+    The bands are sized by ``lsh_params_for_tau(tau_cc)`` (0.99 recall
+    at tau_cc)."""
     from ..operators.lsh import hyperplane_lsh_pairs
 
     mid = F.concat_ws("#", "doc_id", "span_idx")
@@ -221,8 +223,7 @@ def plan_kg(
     ).repartitionById(
         min(cfg.embed_partitions, len(todo)), slot.cast("int"))
     return KgPlan(encode_and_link(
-        spans, entities_pdf, centroids, cfg, nprobe,
-        keep=("media_ref", "part_id"), embeddings=embeddings,
+        spans, entities_pdf, centroids, cfg, nprobe, embeddings=embeddings,
     ))
 
 

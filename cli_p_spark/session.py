@@ -40,12 +40,9 @@ def get_spark(
     """The engine's session.  ``master`` is set only when given, so
     spark-submit's ``--master`` otherwise wins, and a value the launcher
     set with ``--conf`` is kept over these defaults and ``extra``."""
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
-    )
     conf = {
         "spark.app.name": app,
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or 32),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -54,11 +51,10 @@ def get_spark(
         # per-partition sorts of sort-merge — a win wherever one side of
         # an equi-join is moderately small per partition (candidate
         # verify joins, dim joins past the broadcast cap).  AQE still
-        # guards the build side; SPARK_GRAFT_PREFER_SMJ=1 restores the
-        # sort-merge default for memory-tight deployments.
-        "spark.sql.join.preferSortMergeJoin":
-            "true" if os.environ.get("SPARK_GRAFT_PREFER_SMJ", "0") == "1"
-            else "false",
+        # guards the build side; a memory-tight deployment restores the
+        # sort-merge default with --conf (or ``extra``)
+        # spark.sql.join.preferSortMergeJoin=true.
+        "spark.sql.join.preferSortMergeJoin": "false",
         # bounded Arrow batches ~ reference's split_table chunking
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),

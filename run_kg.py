@@ -19,7 +19,9 @@ On a real cluster leave --master unset and let spark-submit's
 --master/--deploy-mode take over (its --conf values, too, win over the
 session defaults of cli_p_spark.session.get_spark); every shuffle/partition
 decision in the pipeline is cluster-size-agnostic (deterministic hashes,
-explicit repartition widths from --parts).
+explicit repartition widths from --parts).  The session prefers
+shuffled-hash joins; a memory-tight deployment restores sort-merge with
+--conf spark.sql.join.preferSortMergeJoin=true.
 
 Inputs:
   --documents  parquet with (doc_id string, spans array<struct<kind,text,

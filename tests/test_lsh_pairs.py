@@ -117,8 +117,7 @@ def test_oversized_bucket_star_keeps_connectivity(spark):
     df = spark.createDataFrame(rows, "id string, embedding array<float>")
 
     pairs = hyperplane_lsh_pairs(
-        df, "embedding", "id", tau=0.99, dim=16,
-        max_bucket=10, oversize="star",
+        df, "embedding", "id", tau=0.99, dim=16, max_bucket=10,
     )
     got = [(r["src"], r["dst"]) for r in pairs.collect()]
     # linear, not quadratic: the 40-dup group contributes 39 star pairs,
@@ -128,12 +127,6 @@ def test_oversized_bucket_star_keeps_connectivity(spark):
     comp_of = {r["node"]: r["component"] for r in comps.collect()}
     assert len({comp_of[f"dup{i:03d}"] for i in range(40)}) == 1
     assert len({comp_of[f"solo{i:03d}"] for i in range(3)}) == 1
-
-    dropped = hyperplane_lsh_pairs(
-        df, "embedding", "id", tau=0.99, dim=16,
-        max_bucket=10, oversize="drop",
-    )
-    assert dropped.filter("src LIKE 'dup%'").count() == 0
 
 
 def test_sharded_canonicalization_end_to_end(spark):
@@ -224,11 +217,10 @@ def test_lsh_null_rows_make_no_pairs(spark):
 
 @pytest.mark.parametrize("id_type", ["long", "string"])
 @pytest.mark.parametrize("grp_type", ["int", "string"])
-@pytest.mark.parametrize("oversize", ["star", "drop"])
-def test_bucket_cap_across_arrow_batches(spark, id_type, grp_type, oversize):
+def test_bucket_cap_across_arrow_batches(spark, id_type, grp_type):
     """Buckets of max_bucket and max_bucket + 1 exact copies, read in
     3-row Arrow batches so every bucket spans batches: the first pairs
-    completely, the second emits exactly the star (or nothing).  A hot
+    completely, the second emits exactly the star.  A hot
     bucket of 4 * max_bucket copies keeps streaming after it passed the
     cap and must stay a star too."""
     cap = 5
@@ -258,15 +250,12 @@ def test_bucket_cap_across_arrow_batches(spark, id_type, grp_type, oversize):
     old = spark.conf.get(key)
     spark.conf.set(key, "3")
     try:
-        got = set(_pairs(
-            df, tau=0.99, group_col="grp", max_bucket=cap, oversize=oversize,
-        ))
+        got = set(_pairs(df, tau=0.99, group_col="grp", max_bucket=cap))
     finally:
         spark.conf.set(key, old)
     want = {(a, b) for ids in (full, other) for a in ids for b in ids
             if a < b}
-    if oversize == "star":
-        want |= {(ids[0], b) for ids in (over, hot) for b in ids[1:]}
+    want |= {(ids[0], b) for ids in (over, hot) for b in ids[1:]}
     assert got == want
 
 
@@ -297,9 +286,8 @@ def test_lsh_plan_one_candidate_exchange_no_cache(spark):
         assert "_key#" in by_col[0], by_col
 
 
-@pytest.mark.parametrize("star", [True, False])
 @pytest.mark.parametrize("seed", [0, 1, 2])
-def test_sorted_run_kernel_matches_loop(star, seed):
+def test_sorted_run_kernel_matches_loop(seed):
     """The vectorised pair kernel against a plain loop over buckets, on
     sorted rows with repeated ids, cut into random batch sizes."""
     import pandas as pd
@@ -316,7 +304,7 @@ def test_sorted_run_kernel_matches_loop(star, seed):
     cuts = np.unique(rng.integers(0, n, 60))
     batches = [pdf.iloc[a:b] for a, b in zip([0, *cuts], [*cuts, n])]
     got = set()
-    for out in _sorted_run_pairs(iter(batches), ["_key"], cap, star):
+    for out in _sorted_run_pairs(iter(batches), ["_key"], cap):
         got |= set(zip(out["src"], out["dst"]))
 
     want = set()
@@ -325,7 +313,7 @@ def test_sorted_run_kernel_matches_loop(star, seed):
         if len(ids) <= cap:
             want |= {(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]
                      if a < b}
-        elif star:
+        else:
             want |= {(ids[0], b) for b in ids[1:] if b != ids[0]}
     sizes = pdf.groupby("_key").size()
     assert (sizes > cap).any() and (sizes.between(2, cap)).any()

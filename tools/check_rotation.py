@@ -28,9 +28,12 @@ WINDOW = 50
 # entries documented as slipping past the window for ONE round (see the
 # QUERIES rotation comment for the per-entry criterion); they MUST enter
 # the window next round — this list must shrink to empty or turn over.
-# Round 8: sixteen r5-greens that the 60-owed-for-50-slots arithmetic
-# pushes out; each is driver-green r1, r2, r3 and r5, byte-identical
-# since r5 and witnessed in-window or by an r7-green entry.
+# Round 8: eighteen r5-greens that the 62-owed-for-50-slots arithmetic
+# pushes out (60 owed by the records, plus q1_pricing_summary and
+# curate_training_corpus, whose code changed in the tail); sixteen are
+# driver-green r1, r2, r3 and r5, the last two r2, r3 and r5.  Each is
+# byte-identical since r5 and witnessed in-window or by an r7-green
+# entry.
 SLIPPED: set[str] = {
     "filter_project_pushdown",
     "doc_ngram_jaccard_pairs",
@@ -48,6 +51,8 @@ SLIPPED: set[str] = {
     "range_join_ship_lag",
     "doc_quality_score",
     "embedding_norm_stats",
+    "doc_winnow_neardup",
+    "doc_bpe_token_stats",
 }
 
 

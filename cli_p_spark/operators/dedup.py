@@ -15,19 +15,23 @@ Families:
                          exact-Jaccard verification
 - simhash_pairs          64-bit SimHash, banded Hamming candidates,
                          exact Hamming verification (bit ops, JVM-side)
-- embedding_neardup_pairs  cosine near-dup via the IVF self-join
+- embedding_neardup_pairs  cosine near-dup pairs: banded sign-LSH
+                           (operators/lsh.py) at tau >= 0.8 under the
+                           default strategy='auto', the IVF self-join
                            (operators/ann.py — same machinery as entity
-                           linking, tau near 1.0)
+                           linking) below it
 
 Determinism: every hash is seeded (xxhash64 with fixed salt columns or
 NumPy hashes derived from config.SEED); candidate generation and
 verification are pure functions of content.
 
-Scale notes: the only shuffles are the band-bucket groupBys and the final
-CC; band buckets are high-cardinality (hash of signature slice) so AQE
-coalescing handles them; hot buckets (boilerplate text) are the skew case
-— the verify step bounds per-bucket work to |bucket|^2, so near-duplicate
-explosions should be capped with a bucket-size guard (max_bucket)."""
+Scale notes: MinHash buckets become candidate pairs through the shared
+bucket-pair kernel (operators/lsh.py ``bucket_pairs``): one hash
+exchange on the bucket key, then one pass over each sorted bucket run.
+Band buckets are high-cardinality (hash of signature slice); hot buckets
+(boilerplate text) are the skew case, so a bucket larger than
+``max_bucket`` emits only its linear star (bucket-min id, each other
+member) instead of |bucket|^2 pairs."""
 
 from __future__ import annotations
 
@@ -35,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import SEED
+from .lsh import _CacheHandle, bucket_pairs, hyperplane_lsh_pairs
 
 
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
@@ -75,7 +80,6 @@ def minhash_signatures(
     n_hashes: int = 64,
     shingle_w: int = 3,
     seed: int = SEED,
-    parts: int | None = None,
 ) -> DataFrame:
     """(_id, _sig array<long>) MinHash signatures — ZERO Python in the
     path (input_hint: no per-row Python on hot paths; 10^12 docs pass
@@ -90,14 +94,14 @@ def minhash_signatures(
     aggregation is one shuffle with partial (map-side) min combine.
     Token-less docs get the all-zeros signature.
 
-    ``parts``: pre-explode repartition width (default: the cluster's
-    defaultParallelism) — same rationale as repetition_stats: the
+    The input is first repartitioned to the cluster's
+    defaultParallelism — same rationale as repetition_stats: the
     shingle explode + n_hashes-way partial min is the dominant cost,
     but a single-row-group parquet scans as ONE task, serializing the
     whole hash pass (guide §2.5 input skew: unsplittable input —
     repartition right after the read; measured 5.1 s -> 1.5 s at
     sf0.1 on local[32])."""
-    parts = parts or df.sparkSession.sparkContext.defaultParallelism
+    parts = df.sparkSession.sparkContext.defaultParallelism
     grams = df.repartition(parts).select(
         F.col(id_col).alias("_id"),
         F.explode(_shingle_array(content_col, shingle_w)).alias("_g"),
@@ -137,8 +141,8 @@ def minhash_lsh_pairs(
     Jaccard swap in a shingle-set join — estimator keeps verification a
     fixed-width column compare, scale-friendly)."""
     # persist: the shingle-explode + 64-way min agg is the dominant cost
-    # and lsh_pairs_from_signatures consumes sig in FOUR plan branches
-    # (banding, bucket sizes, and the two verification re-attach joins).
+    # and lsh_pairs_from_signatures consumes sig in THREE plan branches
+    # (banding and the two verification re-attach joins).
     # The persisted table rides on the returned frame as
     # `.signature_cache`: callers MUST unpersist it once the pair plan
     # has been materialized (curate() does), or the signature blocks pin
@@ -165,49 +169,35 @@ def lsh_pairs_from_signatures(
     once and banded many times (and so the DuckDB oracle can check the
     banding+verify logic over the exact same staged signatures).
 
-    Scale shape: the band shuffle and the bucket self-join carry IDS
+    Scale shape: the band exchange and the pair kernel carry IDS
     ONLY — signatures (n_hashes x 8 B) are re-attached to the surviving
     candidate pairs by two narrow joins afterwards.  Carrying _sig
     through the banded explode would multiply the shuffle volume by
     bands x sig-width (petabytes at 10^12 docs)."""
     # the band index is already folded into the bucket hash (the F.lit(b)
     # seed inside _band_bucket_explode), so the bucket value alone is the
-    # join key: a single long instead of (band, bucket) halves the key
-    # width through the explode shuffle, the size groupBy and the
-    # self-join.  A cross-band 64-bit hash collision could only ADD a
-    # candidate pair, which the exact signature-agreement verify below
-    # then filters.
-    banded = _band_bucket_explode(sig, n_hashes, bands)
-    # bucket-size guard: degenerate buckets (boilerplate) cap quadratic
-    # pairing at max_bucket; above it, a linear bucket-min STAR keeps the
-    # bucket connected for downstream CC (groupBy sizes, not a window —
-    # a window partition over a degenerate bucket IS the skew hazard)
-    star = None
-    if max_bucket < (1 << 30):
-        keys = ["_bucket"]
-        sizes = banded.groupBy(*keys).agg(F.count(F.lit(1)).alias("_bn"))
-        tagged = banded.join(sizes, keys)
-        big = tagged.filter(F.col("_bn") > max_bucket)
-        mins = big.groupBy(*keys).agg(F.min("_id").alias("_min"))
-        star = (
-            big.join(mins, keys)
-            .filter(F.col("_id") != F.col("_min"))
-            .select(F.col("_min").alias("src"), F.col("_id").alias("dst"))
-        )
-        banded = tagged.filter(F.col("_bn") <= max_bucket).drop("_bn")
-
-    a = banded.select(F.col("_id").alias("src"), "_bucket")
-    b = banded.select(F.col("_id").alias("dst"), "_bucket")
-    cand = (
-        a.join(b, ["_bucket"])
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
+    # bucket key: a single long instead of (band, bucket) halves the key
+    # width through the candidate exchange.  A cross-band 64-bit hash
+    # collision could only ADD a candidate pair, which the exact
+    # signature-agreement verify below then filters.  Degenerate buckets
+    # (boilerplate) above max_bucket emit only their linear bucket-min
+    # star, which keeps the bucket connected for downstream CC.
+    cand = bucket_pairs(
+        _band_bucket_explode(sig, n_hashes, bands), ["_bucket"], max_bucket
     )
-    if star is not None:
-        cand = cand.unionByName(star)
-    cand = cand.dropDuplicates(["src", "dst"])
-    sig_a = sig.select(F.col("_id").alias("src"), F.col("_sig").alias("_sig_a"))
-    sig_b = sig.select(F.col("_id").alias("dst"), F.col("_sig").alias("_sig_b"))
+    return _jaccard_verify(cand, sig, sig, n_hashes, jaccard_threshold)
+
+
+def _jaccard_verify(cand, sig_src, sig_dst, n_hashes, jaccard_threshold):
+    """(src, dst, jaccard) of the candidate pairs whose signatures agree
+    on >= jaccard_threshold of their n_hashes components; src's
+    signature comes from ``sig_src``, dst's from ``sig_dst``."""
+    sig_a = sig_src.select(
+        F.col("_id").alias("src"), F.col("_sig").alias("_sig_a")
+    )
+    sig_b = sig_dst.select(
+        F.col("_id").alias("dst"), F.col("_sig").alias("_sig_b")
+    )
     agree = F.aggregate(
         F.zip_with("_sig_a", "_sig_b",
                    lambda x, y: (x == y).cast("int")),
@@ -277,8 +267,6 @@ def incremental_lsh_pairs(
     rows) — append them to the stored index so the NEXT increment sees
     this one, and ``.signature_cache`` to unpersist after
     materialization."""
-    from .lsh import _CacheHandle
-
     band_new = _band_bucket_explode(new_sig, n_hashes, bands).persist()
     if corpus_bands is None:
         corpus_bands = _band_bucket_explode(corpus_sig, n_hashes, bands)
@@ -320,74 +308,18 @@ def incremental_lsh_pairs(
     )
     if star is not None:
         cross = cross.unionByName(star)
-    cand = cross.dropDuplicates(["src", "dst"])
-
-    agree = F.aggregate(
-        F.zip_with("_sig_a", "_sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    sig_a = new_sig.select(
-        F.col("_id").alias("src"), F.col("_sig").alias("_sig_a")
-    )
-    sig_b = corpus_sig.select(
-        F.col("_id").alias("dst"), F.col("_sig").alias("_sig_b")
-    )
-    out = (
-        cand.join(sig_a, "src").join(sig_b, "dst")
-        .withColumn("jaccard", agree / F.lit(n_hashes))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("src", "dst", "jaccard")
+    out = _jaccard_verify(
+        cross.dropDuplicates(["src", "dst"]), new_sig, corpus_sig,
+        n_hashes, jaccard_threshold,
     )
     if include_new_pairs:
-        # the new-batch self-join needs the SAME degenerate-bucket guard
-        # as the corpus side: a micro-batch full of boilerplate landing
-        # in one bucket would otherwise pair quadratically — exactly the
-        # blowup max_bucket exists to cap (batch path parity:
-        # lsh_pairs_from_signatures)
-        nn_bands = band_new
-        nn_star = None
-        if max_bucket < (1 << 30):
-            nn_sizes = nn_bands.groupBy("_bucket").agg(
-                F.count(F.lit(1)).alias("_bn")
-            )
-            nn_tagged = nn_bands.join(nn_sizes, ["_bucket"])
-            nn_big = nn_tagged.filter(F.col("_bn") > max_bucket)
-            nn_mins = nn_big.groupBy("_bucket").agg(
-                F.min("_id").alias("_min")
-            )
-            nn_star = (
-                nn_big.join(nn_mins, ["_bucket"])
-                .filter(F.col("_id") != F.col("_min"))
-                .select(
-                    F.col("_min").alias("src"), F.col("_id").alias("dst")
-                )
-            )
-            nn_bands = nn_tagged.filter(
-                F.col("_bn") <= max_bucket
-            ).drop("_bn")
-        nn_cand = (
-            nn_bands.select(F.col("_id").alias("src"), "_bucket")
-            .join(
-                nn_bands.select(F.col("_id").alias("dst"), "_bucket"),
-                ["_bucket"],
-            )
-            .filter(F.col("src") < F.col("dst"))
-            .select("src", "dst")
-        )
-        if nn_star is not None:
-            nn_cand = nn_cand.unionByName(nn_star)
-        nn_cand = nn_cand.dropDuplicates(["src", "dst"])
-        sig_b_new = new_sig.select(
-            F.col("_id").alias("dst"), F.col("_sig").alias("_sig_b")
-        )
-        nn = (
-            nn_cand.join(sig_a, "src").join(sig_b_new, "dst")
-            .withColumn("jaccard", agree / F.lit(n_hashes))
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            .select("src", "dst", "jaccard")
-        )
-        out = out.unionByName(nn)
+        # the new batch pairs with itself through the batch path's
+        # kernel, with the same max_bucket star: a micro-batch full of
+        # boilerplate in one bucket pairs linearly, not quadratically
+        nn = bucket_pairs(band_new, ["_bucket"], max_bucket)
+        out = out.unionByName(_jaccard_verify(
+            nn, new_sig, new_sig, n_hashes, jaccard_threshold,
+        ))
     out.band_rows = band_new
     out.signature_cache = _CacheHandle(band_new)
     return out
@@ -398,7 +330,6 @@ def simhash_fingerprints(
     content_col: str,
     id_col: str,
     seed: int = SEED,
-    parts: int | None = None,
 ) -> DataFrame:
     """(_id, _fp long) 64-bit SimHash — sign of the token-hash-vector sum,
     computed ENTIRELY JVM-side (no per-token Python; input_hint).
@@ -411,11 +342,11 @@ def simhash_fingerprints(
     partial-aggregated bit-count sums.  Duplicate tokens weigh per
     occurrence.  Token-less docs fingerprint to 0.
 
-    ``parts``: pre-explode repartition width (default: the cluster's
-    defaultParallelism) — the token explode + 64 getbit sums run on
-    the scan's partitioning otherwise, and a single-row-group parquet
-    scans as ONE task (guide §2.5 input skew; see minhash_signatures)."""
-    parts = parts or df.sparkSession.sparkContext.defaultParallelism
+    The input is first repartitioned to the cluster's
+    defaultParallelism — the token explode + 64 getbit sums run on the
+    scan's partitioning otherwise, and a single-row-group parquet scans
+    as ONE task (guide §2.5 input skew; see minhash_signatures)."""
+    parts = df.sparkSession.sparkContext.defaultParallelism
     toked = df.repartition(parts).select(
         F.col(id_col).alias("_id"),
         F.explode(_tokens(content_col)).alias("_t"),
@@ -739,8 +670,6 @@ def embedding_neardup_pairs(
     if strategy == "auto":
         strategy = "lsh" if tau >= 0.8 else "ivf"
     if strategy == "lsh":
-        from .lsh import hyperplane_lsh_pairs
-
         dim = len(df.select(embedding_col).first()[0])
         unit = _unit_vectors(df, embedding_col, id_col)
         return hyperplane_lsh_pairs(

@@ -19,16 +19,20 @@ built-in `levenshtein` call per candidate (integer, bit-identical on
 any engine).
 
 Scale shape: variants explode JVM-side (nested transform/flatten — zero
-Python), the join carries (name, variant) only, and degenerate variant
-buckets (very short names collapsing to "" etc.) are capped by the same
-bucket-size guard + linear star the LSH paths use.  Shuffle volume =
-variants x name-length bytes, proportional to the DISTINCT-name table —
-tiny next to the corpus that mentions them."""
+Python), and the variant buckets become candidate pairs through the
+bucket-pair kernel the LSH paths use (operators/lsh.py ``bucket_pairs``:
+one exchange of (name, variant) rows on the variant, then one pass over
+each sorted bucket), so degenerate variant buckets (very short names
+collapsing to "" etc.) emit only the linear star above ``max_bucket``.
+Shuffle volume = variants x name-length bytes, proportional to the
+DISTINCT-name table — tiny next to the corpus that mentions them."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .lsh import bucket_pairs
 
 
 def _delete_one(col):
@@ -88,8 +92,8 @@ def fuzzy_name_pairs(
 ) -> DataFrame:
     """(src, dst, dist): every pair of distinct names within Levenshtein
     ``max_dist`` (src < dst) — complete recall by the symmetric-delete
-    guarantee, candidates from the variant equi-join, verified with the
-    built-in levenshtein.  Oversized variant buckets (degenerate short
+    guarantee, candidates are the names sharing a variant, verified with
+    the built-in levenshtein.  Oversized variant buckets (degenerate short
     strings) emit linear star CANDIDATES to the bucket-min name instead
     of the quadratic fan-in; star candidates pass through the SAME
     dist <= max_dist verify as everything else, so for the
@@ -98,36 +102,11 @@ def fuzzy_name_pairs(
     (up to 2*max_dist apart through the shared variant) can drop star
     edges beyond the bound — capping trades completeness of WITHIN-
     bucket pair enumeration for linear cost, never emits a wrong pair."""
-    v = variant_rows
-    if v is None:
-        v = name_variant_rows(df, name_col, max_dist)
-
-    star = None
-    if max_bucket < (1 << 30):
-        sizes = v.groupBy("_variant").agg(F.count(F.lit(1)).alias("_bn"))
-        tagged = v.join(sizes, ["_variant"])
-        big = tagged.filter(F.col("_bn") > max_bucket)
-        mins = big.groupBy("_variant").agg(F.min("name").alias("_min"))
-        star = (
-            big.join(mins, ["_variant"])
-            .filter(F.col("name") != F.col("_min"))
-            .select(
-                F.col("_min").alias("src"), F.col("name").alias("dst")
-            )
-        )
-        v = tagged.filter(F.col("_bn") <= max_bucket).drop("_bn")
-
-    a = v.select(F.col("name").alias("src"), "_variant")
-    b = v.select(F.col("name").alias("dst"), "_variant")
-    cand = (
-        a.join(b, ["_variant"])
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-    )
-    if star is not None:
-        cand = cand.unionByName(star)
+    if variant_rows is None:
+        variant_rows = name_variant_rows(df, name_col, max_dist)
+    rows = variant_rows.select(F.col("name").alias("_id"), "_variant")
     return (
-        cand.dropDuplicates(["src", "dst"])
+        bucket_pairs(rows, ["_variant"], max_bucket)
         .withColumn("dist", F.levenshtein("src", "dst"))
         .filter(F.col("dist") <= max_dist)
     )

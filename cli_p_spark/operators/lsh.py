@@ -25,6 +25,12 @@ Pipeline shape:
 Nothing is cached: each stage is evaluated once, and a bucket's size is
 its run length, so no size aggregate or join exists to feed.
 
+The place -> pair -> dedup steps are ``bucket_pairs``, the engine's one
+bucket -> candidate-pairs kernel.  Its callers: ``hyperplane_lsh_pairs``
+here, MinHash LSH (``dedup.lsh_pairs_from_signatures`` and the new×new
+half of ``dedup.incremental_lsh_pairs``) and deletion-variant name
+blocking (``fuzzy.fuzzy_name_pairs``).
+
 Determinism: hyperplanes from the config seed; candidate set is a pure
 function of the embeddings.  Recall at tau: 1-(1-p_band)^bands with
 p_band = (1 - theta/pi)^bits — tune bands upward for lower tau (at
@@ -33,6 +39,8 @@ tau<0.8 prefer the IVF search path; LSH recall decays fast below that).
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -168,29 +176,15 @@ def hyperplane_lsh_pairs(
             out["_key"] = (keys + offsets).ravel()
             yield pd.DataFrame(out)
 
-    schema = nodes.schema
-    banded = StructType(
-        [schema["_id"], *(schema[g] for g in gcols),
-         StructField("_key", LongType(), False)]
-    )
-    pair_schema = StructType([
-        StructField("src", schema["_id"].dataType),
-        StructField("dst", schema["_id"].dataType),
+    # dropna above leaves no NULL id or group: declaring them non-NULL
+    # lets the optimizer fold away bucket_pairs' NULL filter
+    banded = StructType([
+        *(StructField(c, nodes.schema[c].dataType, False)
+          for c in ["_id", *gcols]),
+        StructField("_key", LongType(), False),
     ])
-    # ONE candidate exchange: hash-place the banded rows by bucket key
-    # and sort each partition by (bucket, id).  A REPARTITION_BY_COL
-    # partition is never split by AQE, so every bucket is one contiguous
-    # run in one task; the pair kernel then sizes buckets from run
-    # lengths and pairs them without a size aggregate, join or cache.
-    cand = (
-        nodes.mapInPandas(band, banded)
-        .repartition(*join_keys)
-        .sortWithinPartitions(*join_keys, "_id")
-        .mapInPandas(
-            lambda it: _sorted_run_pairs(it, join_keys, max_bucket),
-            pair_schema,
-        )
-        .dropDuplicates(["src", "dst"])
+    cand = bucket_pairs(
+        nodes.mapInPandas(band, banded), join_keys, max_bucket
     )
     ea = nodes.select(F.col("_id").alias("src"), F.col("_emb").alias("_ea"))
     eb = nodes.select(F.col("_id").alias("dst"), F.col("_emb").alias("_eb"))
@@ -203,6 +197,41 @@ def hyperplane_lsh_pairs(
     # nothing is cached; the empty handle keeps callers' unpersist() valid
     out.signature_cache = _CacheHandle()
     return out
+
+
+def bucket_pairs(
+    rows: DataFrame, keys: list[str], max_bucket: int
+) -> DataFrame:
+    """Distinct (src, dst) id pairs, src < dst, of rows sharing ``keys``.
+
+    ``rows`` holds ``_id`` and the ``keys`` columns; rows with a NULL
+    id or key are dropped.  A bucket of 2..``max_bucket`` rows pairs
+    all its members; a larger one emits only its star, (the bucket's
+    minimum id, each other member), so a hot bucket costs linear, not
+    quadratic, candidates.
+
+    ONE candidate exchange: hash-place the rows by bucket key and sort
+    each partition by (keys, id).  A REPARTITION_BY_COL partition is
+    never split by AQE, so every bucket is one contiguous run in one
+    task; the pair kernel then sizes buckets from run lengths and pairs
+    them without a size aggregate, join or cache."""
+    cols = ["_id", *keys]
+    rows = rows.select(*cols).where(
+        reduce(operator.and_, [F.col(c).isNotNull() for c in cols])
+    )
+    id_type = rows.schema["_id"].dataType
+    pair_schema = StructType([
+        StructField("src", id_type), StructField("dst", id_type),
+    ])
+    return (
+        rows.repartition(*keys)
+        .sortWithinPartitions(*keys, "_id")
+        .mapInPandas(
+            lambda it: _sorted_run_pairs(it, keys, max_bucket),
+            pair_schema,
+        )
+        .dropDuplicates(["src", "dst"])
+    )
 
 
 def _run_starts(pdf: pd.DataFrame, keys: list[str]) -> np.ndarray:

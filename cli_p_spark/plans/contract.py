@@ -4024,7 +4024,16 @@ def _kg_rectangles_sql() -> str:
 # plan-flipping environment variables went: q1_pricing_summary (_fan)
 # and curate_training_corpus (connected_components) changed code in the
 # tail, so they entered at 19-20 and the two most-audited witnessed
-# entries at 47-48 slipped.
+# entries at 47-48 slipped.  Amended again when MinHash LSH and fuzzy
+# name blocking moved onto the shared bucket-pair kernel
+# (lsh.bucket_pairs): minhash_dedup_pairs (lsh_pairs_from_signatures,
+# minhash_signatures), simhash_dedup_pairs (simhash_fingerprints) and
+# part_name_fuzzy_pairs (fuzzy_name_pairs) changed code in the tail, so
+# they entered at 21-23 and the three most-audited witnessed untouched
+# entries that no other slip leans on as its only witness slipped.
+# kg_canonical_triples, curate_training_corpus, embedding_neardup_cosine
+# and doc_incremental_neardup reach the changed code too; they are
+# in-window already.
 #   positions 1-12   the twelve r4-greens (sort_limit_top_orders ..
 #                    window_running_total): outside the last three
 #                    records, so they MUST be in-window;
@@ -4037,7 +4046,10 @@ def _kg_rectangles_sql() -> str:
 #                    TableStore), kg_skips_quarantine (encode_mentions
 #                    -> with_content), q1_pricing_summary (_fan),
 #                    curate_training_corpus (connected_components);
-#   positions 21-32  r5-greens whose code changed since 929b8b7:
+#   positions 21-23  r7-greens whose code changed in the tail since
+#                    aa1601f: minhash_dedup_pairs, simhash_dedup_pairs,
+#                    part_name_fuzzy_pairs;
+#   positions 24-35  r5-greens whose code changed since 929b8b7:
 #                    kg_triples_exact (link_exact_broadcast -> the
 #                    exhaustive IVF search), kg_pagerank +
 #                    kg_personalized_pagerank (pagerank_fixed_point,
@@ -4049,23 +4061,28 @@ def _kg_rectangles_sql() -> str:
 #                    knn_rrf_fusion, q3_top_unshipped_revenue,
 #                    q5_region_revenue (the contract functions: _fan,
 #                    _maybe_broadcast);
-#   positions 33-48  the untouched r5-greens, least-audited first: the
-#                    twelve whose only driver row is r5, then
-#                    cms_join_size_orders (r4, r5), the three with r3 +
-#                    r5;
+#   positions 36-48  the untouched r5-greens, least-audited first: the
+#                    eleven whose only driver row is r5, then
+#                    doc_pii_scrub and doc_contamination_probes (r3, r5),
+#                    kept in-window as the only witnesses of slipped
+#                    entries below;
 #   positions 49-50  events_json_extract and date_funcs_orders_monthly:
 #                    driver-green r1-r3 and r5 like the slipped entries
 #                    below, but get_json_object and year()/month() are
 #                    used by no other entry, so no witness can stand in.
-#   positions 51-92  the 42 other r7-greens, code untouched since aa1601f;
-#   positions 93-110 EIGHTEEN r5-greens slip (MANDATORY round-9 entrants;
-#                    check_rotation refuses a round-9 order without
-#                    them).  Their rows will be four rounds apart (r5 ->
-#                    r9), one past the every-third-round bound: the
-#                    62-for-50 arithmetic above forces it, and the
+#   positions 51-89  the 39 other r7-greens, code untouched since aa1601f;
+#   positions 90-110 TWENTY-ONE r5-greens slip (MANDATORY round-9
+#                    entrants; check_rotation refuses a round-9 order
+#                    without them).  Their rows will be four rounds apart
+#                    (r5 -> r9), one past the every-third-round bound:
+#                    the 65-for-50 arithmetic above forces it, and the
 #                    slipped ones are the most-audited untouched entries
 #                    (driver-green r1, r2, r3 and r5, then the two with
-#                    r2, r3 and r5).
+#                    r2, r3 and r5, then doc_tfidf_keywords (r3, r5),
+#                    cms_join_size_orders (r4, r5) and
+#                    hll_small_range_users (r5), which has the one
+#                    r7-green witness of its operator among the r5-only
+#                    entries).
 # Graph entries that reach changed code only through _kg_edges ->
 # kg_triples_exact count as untouched: fourteen r7-greens
 # (kg_condensation, kg_shortest_paths, kg_hyperball, kg_kcore,
@@ -4123,6 +4140,17 @@ def _kg_rectangles_sql() -> str:
 #   doc_bpe_token_stats              doc_token_stats (per-language token
 #                                    averages over documents),
 #                                    doc_pii_scrub (text regexps)
+#   doc_tfidf_keywords               cms_heavy_tokens r7 (the same
+#                                    split(lower(text), ' ') term explode
+#                                    over documents, counted per term),
+#                                    doc_token_stats (whitespace tokens)
+#   cms_join_size_orders             cms_heavy_tokens r7 (cms_positions,
+#                                    the Count-Min position rows both
+#                                    stage)
+#   hll_small_range_users            hll_distinct_orderkeys r7 (HLL
+#                                    registers from staged xxhash64
+#                                    hashes: pmod bucket, lowest-set-bit
+#                                    rank, max per register)
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "sort_limit_top_orders": sort_limit_top_orders,
     "case_when_conditional_agg": case_when_conditional_agg,
@@ -4144,6 +4172,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_skips_quarantine": kg_skips_quarantine,
     "q1_pricing_summary": q1_pricing_summary,
     "curate_training_corpus": curate_training_corpus,
+    "minhash_dedup_pairs": minhash_dedup_pairs,
+    "simhash_dedup_pairs": simhash_dedup_pairs,
+    "part_name_fuzzy_pairs": part_name_fuzzy_pairs,
     "kg_triples_exact": kg_triples_exact,
     "kg_pagerank": kg_pagerank,
     "kg_personalized_pagerank": kg_personalized_pagerank,
@@ -4166,12 +4197,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "events_funnel": events_funnel,
     "events_retention": events_retention,
     "docs_weighted_sample": docs_weighted_sample,
-    "hll_small_range_users": hll_small_range_users,
     "doc_pmi_collocations": doc_pmi_collocations,
-    "cms_join_size_orders": cms_join_size_orders,
     "doc_pii_scrub": doc_pii_scrub,
     "doc_contamination_probes": doc_contamination_probes,
-    "doc_tfidf_keywords": doc_tfidf_keywords,
     "events_json_extract": events_json_extract,
     "date_funcs_orders_monthly": date_funcs_orders_monthly,
     "kg_condensation": kg_condensation,
@@ -4193,8 +4221,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_rectangles": kg_rectangles,
     "kg_triangles": kg_triangles,
     "doc_exact_dedup": doc_exact_dedup,
-    "minhash_dedup_pairs": minhash_dedup_pairs,
-    "simhash_dedup_pairs": simhash_dedup_pairs,
     "kg_span_roundtrip": kg_span_roundtrip,
     "media_decode_stats": media_decode_stats,
     "events_sessionization": events_sessionization,
@@ -4212,10 +4238,12 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "corpus_mix_stats": corpus_mix_stats,
     "corpus_sample_per_source": corpus_sample_per_source,
     "knn_pq_rescore": knn_pq_rescore,
-    "part_name_fuzzy_pairs": part_name_fuzzy_pairs,
     "left_outer_nation_customers": left_outer_nation_customers,
     "pivot_returnflag_by_status": pivot_returnflag_by_status,
     "cube_orders_status_priority": cube_orders_status_priority,
+    "hll_small_range_users": hll_small_range_users,
+    "cms_join_size_orders": cms_join_size_orders,
+    "doc_tfidf_keywords": doc_tfidf_keywords,
     "filter_project_pushdown": filter_project_pushdown,
     "doc_ngram_jaccard_pairs": doc_ngram_jaccard_pairs,
     "doc_fingerprint_dedup": doc_fingerprint_dedup,

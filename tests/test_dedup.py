@@ -84,6 +84,44 @@ def test_minhash_recall_and_precision(spark, neardup_df):
         assert _jaccard(texts[a], texts[b]) >= 0.38, (a, b)
 
 
+def test_minhash_hot_bucket_emits_star(spark, neardup_df):
+    """N exact copies above max_bucket share every band bucket: their
+    edges are exactly (min id, each other copy), N - 1 and not
+    N(N-1)/2.  A NULL-id row with the copies' signature makes no pair
+    and does not fail the job."""
+    from cli_p_spark.operators.dedup import (
+        lsh_pairs_from_signatures,
+        minhash_signatures,
+    )
+
+    rows, _ = neardup_df
+    n, cap = 12, 5
+    copies = [f"hot{i:02d}" for i in range(n)]
+    text = "alpha beta gamma delta epsilon zeta eta theta"
+    df = spark.createDataFrame(
+        rows + [(c, text) for c in copies], "id string, text string"
+    )
+    sig = minhash_signatures(df, "text", "id")
+    null_row = sig.filter(F.col("_id") == copies[0]).select(
+        F.lit(None).cast("string").alias("_id"), "_sig"
+    )
+    sig = sig.unionByName(null_row).persist()
+
+    def copy_edges(max_bucket):
+        pairs = lsh_pairs_from_signatures(
+            sig, jaccard_threshold=0.5, max_bucket=max_bucket
+        ).collect()
+        assert all(r["src"] is not None and r["dst"] is not None
+                   for r in pairs)
+        return {(r["src"], r["dst"]) for r in pairs
+                if r["src"] in copies or r["dst"] in copies}
+
+    assert copy_edges(cap) == {(copies[0], c) for c in copies[1:]}
+    # under the cap the same bucket pairs completely
+    assert len(copy_edges(n)) == n * (n - 1) // 2
+    sig.unpersist()
+
+
 def test_simhash_finds_exact_and_near(spark, neardup_df):
     rows, df = neardup_df
     pairs = {

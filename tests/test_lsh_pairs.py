@@ -264,6 +264,18 @@ def test_bucket_cap_across_arrow_batches(spark, id_type, grp_type):
 LSH_CANDIDATE_EXCHANGES = 1
 
 
+def _final_plan_exchanges(pairs):
+    """(AQE-final plan text, its REPARTITION_BY_COL lines) of a pair
+    frame, after running it."""
+    assert pairs.collect()  # an empty result prunes the plan
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    by_col = [
+        line for line in final.splitlines() if "REPARTITION_BY_COL" in line
+    ]
+    return final, by_col
+
+
 def test_lsh_plan_one_candidate_exchange_no_cache(spark):
     rows = _mk_vectors(n_base=40)
     df = spark.createDataFrame(
@@ -271,19 +283,55 @@ def test_lsh_plan_one_candidate_exchange_no_cache(spark):
         "id string, embedding array<float>, grp int",
     )
     for kw in ({}, {"group_col": "grp"}):
-        pairs = hyperplane_lsh_pairs(
+        final, by_col = _final_plan_exchanges(hyperplane_lsh_pairs(
             df, "embedding", "id", tau=0.9, dim=64, **kw
-        )
-        assert pairs.collect()  # an empty result prunes the plan
-        plan = pairs._jdf.queryExecution().executedPlan().toString()
-        final = plan.split("== Initial Plan ==")[0]
+        ))
         assert "InMemoryRelation" not in final, final
-        by_col = [
-            line for line in final.splitlines()
-            if "REPARTITION_BY_COL" in line
-        ]
         assert len(by_col) == LSH_CANDIDATE_EXCHANGES, final
         assert "_key#" in by_col[0], by_col
+
+
+@pytest.mark.parametrize("caller", ["minhash", "incremental", "fuzzy"])
+def test_bucket_pair_callers_one_exchange_no_size_aggregate(spark, caller):
+    """MinHash LSH, the new x new half of incremental MinHash and fuzzy
+    name blocking pair their buckets with the same kernel: one
+    hash-by-bucket exchange and no bucket-size count aggregate."""
+    from cli_p_spark.operators.dedup import (
+        incremental_lsh_pairs,
+        lsh_pairs_from_signatures,
+        minhash_signatures,
+    )
+    from cli_p_spark.operators.fuzzy import fuzzy_name_pairs
+
+    if caller == "fuzzy":
+        names = ["jon smith", "john smith", "jane smyth", "jane smith"]
+        df = spark.createDataFrame([(n,) for n in names], "name string")
+        pairs, key = fuzzy_name_pairs(df, "name", max_bucket=3), "_variant#"
+    else:
+        text = "alpha beta gamma delta epsilon zeta eta theta"
+        docs = spark.createDataFrame(
+            [("a", text), ("b", text), ("c", text + " iota"),
+             ("d", "one two three four five six")],
+            "id string, text string",
+        )
+        sig = minhash_signatures(docs, "text", "id")
+        key = "_bucket#"
+        if caller == "minhash":
+            pairs = lsh_pairs_from_signatures(
+                sig, jaccard_threshold=0.5, max_bucket=2
+            )
+        else:
+            # against an empty corpus the optimizer prunes the new x
+            # corpus side, so the plan is the new x new pairs alone
+            empty = spark.createDataFrame([], sig.schema)
+            pairs = incremental_lsh_pairs(
+                sig, empty, jaccard_threshold=0.5, max_bucket=2
+            )
+    final, by_col = _final_plan_exchanges(pairs)
+    assert len(by_col) == 1 and key in by_col[0], final
+    assert "count(1)" not in final, final
+    if caller == "incremental":
+        pairs.signature_cache.unpersist()
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])

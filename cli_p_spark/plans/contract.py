@@ -2875,8 +2875,9 @@ def _kg_communities_sql() -> str:
 def kg_components(spark, sf_dir):
     """Weakly-connected-component census of the entity graph — the most
     basic KG health metric (one blob or many islands, and how big):
-    alternating-star connected components (operators/ccomp.py)
-    over the shared staged (subj -> obj) edges, undirected, aggregated
+    connected components (operators/ccomp.py: per-partition union-find,
+    then a single-task finish) over the shared staged (subj -> obj)
+    edges, undirected, aggregated
     to the (component_size, n_components) histogram.  Integer outputs
     only — bit-exact by construction.  The DuckDB twin replays a
     recursive-CTE min-label reachability over the SAME staged relation

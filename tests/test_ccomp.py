@@ -131,3 +131,77 @@ def test_cc_reliable_checkpoint_mode(spark, tmp_path):
     for root, _dirs, files in os.walk(chk):
         found.extend(files)
     assert found, "reliable mode must materialize checkpoint files"
+
+
+@pytest.mark.parametrize("finish", ["union_find", "star"])
+def test_cc_property_matches_oracle(spark, monkeypatch, finish):
+    """Randomized: 10 seeded graphs x 1/3/8 partitions x long/string ids
+    against the union-find oracle, once through the single-task finish
+    and once with the star rounds forced (a cap of 0 forest rows).  The
+    seeds' graphs sit on disjoint node ranges of one edge frame, so one
+    call checks all ten."""
+    from cli_p_spark.operators import ccomp
+
+    if finish == "star":
+        monkeypatch.setattr(ccomp, "UNION_FIND_MAX_ROWS", 0)
+    edges = []
+    for seed in range(10):
+        rnd = random.Random(seed)
+        n_nodes = rnd.randrange(20, 120)
+        edges += [
+            (seed * 1000 + rnd.randrange(n_nodes),
+             seed * 1000 + rnd.randrange(n_nodes))
+            for _ in range(rnd.randrange(10, 150))
+        ]
+    random.Random(99).shuffle(edges)
+    for ids in ("long", "string"):
+        typed = edges if ids == "long" else [
+            (f"v{a:05d}", f"v{b:05d}") for a, b in edges]
+        links = [e for e in typed if e[0] != e[1]]
+        touched = {a for e in links for a in e}
+        oracle = union_find_oracle(links, sorted(touched))
+        df = spark.createDataFrame(typed, f"src {ids}, dst {ids}")
+        for parts in (1, 3, 8):
+            stats = {}
+            got = {
+                r["node"]: r["component"]
+                for r in connected_components(
+                    df.repartition(parts), stats=stats).collect()
+            }
+            assert got == oracle, (ids, parts)
+            assert (stats["rounds"] == 0) == (finish == "union_find")
+            # a partition's forest has at most one row per non-root
+            # node, and never more rows than its edges
+            assert stats["forest_rows"] <= len(links)
+            if parts == 1:
+                assert stats["forest_rows"] < len(touched)
+
+
+@pytest.mark.parametrize("ids", ["long", "string"])
+def test_cc_edge_inputs_return_empty(spark, ids):
+    """No rows, only self-loops, or only NULL endpoints: an empty
+    (node, component) frame with the input's id type."""
+    one, two = (1, 2) if ids == "long" else ("a", "b")
+    cases = {
+        "empty": [],
+        "self_loops": [(one, one), (two, two)],
+        "null_endpoints": [(one, None), (None, two), (None, None)],
+    }
+    for name, rows in cases.items():
+        e = spark.createDataFrame(rows, f"src {ids}, dst {ids}")
+        out = connected_components(e.repartition(3))
+        assert out.collect() == [], name
+        assert [f.name for f in out.schema] == ["node", "component"]
+        assert all(f.dataType == e.schema["src"].dataType
+                   for f in out.schema), (name, out.schema)
+
+
+def test_cc_partitions_without_batches(spark):
+    """Most of 8 input partitions hold no edge, so their contraction task
+    sees no Arrow batch; NULL endpoints beside real edges are dropped."""
+    e = spark.createDataFrame(
+        [("a", "b"), ("c", None), ("b", "d")], "src string, dst string"
+    ).repartition(8)
+    got = {r["node"]: r["component"]
+           for r in connected_components(e).collect()}
+    assert got == {"a": "a", "b": "a", "d": "a"}

@@ -5,6 +5,14 @@ import pytest
 
 from cli_p_spark.operators.lsh import hyperplane_lsh_pairs
 
+# Spark jobs of one connected_components call plus one collect of its
+# component sizes on the sharded-canonicalization fixture, measured with
+# the union-find finish: the forest's checkpoint and count inside the call
+# (3) and the single-task finish under the collect (1).  The star rounds
+# on the same forest took 26 (2 rounds: a checkpoint, a count and an
+# anti-join probe each, plus the root/distinct exchanges).
+CC_MAX_JOBS = 4
+
 
 def _mk_vectors(n_base=120, dim=64, seed=9):
     rng = np.random.default_rng(seed)
@@ -132,9 +140,9 @@ def test_oversized_bucket_star_keeps_connectivity(spark):
 def test_sharded_canonicalization_end_to_end(spark):
     """Bench-shape gate at test scale: distributed mention corpus
     (planted 4-cliques + an exact-copy hub) -> per-shard banded LSH ->
-    salted CC.  The hub must collapse to ONE component via star edges
-    (linear, not quadratic), planted cliques must canonicalize, and CC
-    must converge in the expected few rounds."""
+    CC.  The hub must collapse to ONE component via star edges (linear,
+    not quadratic), planted cliques must canonicalize, and CC must finish
+    in the expected few rounds and Spark jobs."""
     from cli_p_spark.fixtures.distributed import distributed_mentions
     from cli_p_spark.operators.ccomp import connected_components
     from cli_p_spark.operators.lsh import (
@@ -155,13 +163,24 @@ def test_sharded_canonicalization_end_to_end(spark):
     # LINEAR in hub size (quadratic would be ~180k for the hub alone)
     assert n_edges < hub * 3 + n * 2, n_edges
     stats = {}
-    comps = connected_components(pairs.select("src", "dst"), stats=stats)
-    sizes = {
-        r["component"]: r["count"]
-        for r in comps.groupBy("component").count().collect()
-    }
+    sc = spark.sparkContext
+    sc.setJobGroup("sharded_cc", "connected_components on the sharded pairs")
+    try:
+        comps = connected_components(pairs.select("src", "dst"), stats=stats)
+        sizes = {
+            r["component"]: r["count"]
+            for r in comps.groupBy("component").count().collect()
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store fills from an asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("sharded_cc")
+    assert 0 < len(jobs) <= CC_MAX_JOBS, len(jobs)
     assert sizes.get("m000000000") == hub  # hub: one component, all copies
     assert stats["rounds"] <= 6
+    assert 0 < stats["forest_rows"] <= n_edges
     # planted cliques: cluster of ids [c*4, c*4+4) is a component iff its
     # seeded coin said dup; spot-check determinism of a few clusters
     import numpy as np

@@ -5,24 +5,17 @@ adds canonicalization: mentions whose embeddings are near-duplicates
 (cosine >= tau_cc, the self-join semantics of query-index.py:86-99 'i ID'
 query-by-example) collapse to one canonical id.
 
-Algorithm: contract, then finish in one task when the rest fits.
+Algorithm: checkpoint and count the self-loop-free edges once, then
 
-  local contraction: a vectorized union-find (``_union_find``, NumPy)
-              runs over each input edge partition in a ``mapInArrow``,
-              with no exchange, and emits (node -> partition-local
-              component min) for every non-root node.  The union of these
-              stars has the same connectivity, at most one row per node
-              and partition and never more rows than edges (the
-              "forest"); it is checkpointed and counted once.
-  finish:     at most UNION_FIND_MAX_ROWS forest rows -> ``coalesce(1)``
-              and the same union-find emit (node, component) for every
-              node, roots included.  Spark runs the contraction's
-              checkpoint and count; the finish runs when the caller
-              consumes the result.
-  fallback:   above the cap, alternating large-star / small-star rounds
-              (Kiveris et al., "Connected Components in MapReduce and
-              Beyond", SoCC'14) run on the forest — O(log^2 n) rounds,
-              pure DataFrame ops, no GraphFrames dependency:
+  finish:     at most UNION_FIND_MAX_ROWS edges -> ``coalesce(1)`` and a
+              vectorized union-find (``_union_find``, NumPy) emit (node,
+              component) for every node, roots included.  Spark runs the
+              checkpoint and count inside the call; the finish runs when
+              the caller consumes the result.
+  fallback:   above the cap, the distinct edges go through alternating
+              large-star / small-star rounds (Kiveris et al., "Connected
+              Components in MapReduce and Beyond", SoCC'14) — O(log^2 n)
+              rounds, pure DataFrame ops, no GraphFrames dependency:
 
     large-star: for each node u, attach every strictly-larger neighbor to
                 m(u) = min(N(u) + {u})
@@ -44,15 +37,13 @@ ever move to smaller codes, so each component ends on its minimum id,
 independent of partitioning.
 
 Hub skew (north_rule): a hub entity's mentions form one giant component.
-In the contraction the hub's edges are spread over the input partitions
-and each task holds O(its rows) of state; in the finish the hub is one
-component in one task with O(nodes) state — the forest has at most one
-row per node and partition, never the hub's edge list.  In the star
-fallback the min-neighbor aggregation is hub-proof without salting:
-min() partial-aggregates map-side (partial_min below the exchange), so
-the reducer for a hub key receives one partial row per map partition;
-the join in each star phase remains the skew-sensitive operator and is
-AQE-skew-splittable.
+In the finish the hub is one component in one task whose state is
+O(edges) — at most UNION_FIND_MAX_ROWS, the size the cap was measured
+at.  In the star fallback the min-neighbor aggregation is hub-proof
+without salting: min() partial-aggregates map-side (partial_min below the
+exchange), so the reducer for a hub key receives one partial row per map
+partition; the join in each star phase remains the skew-sensitive
+operator and is AQE-skew-splittable.
 """
 
 from __future__ import annotations
@@ -67,12 +58,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-# forest rows the single-task finish takes; above it the star rounds run.
+# edges the single-task finish takes; above it the star rounds run.
 # Sized from the finish's peak Python-worker RSS (daemon + worker),
-# measured on a 4-core local[4] host over random forests: 10-char string
-# ids 0.26 GB at 250k rows, 0.46 GB at 1M, 0.70 GB at 2M, 1.24 GB at 4M;
-# long ids 0.28 GB at 1M, 0.59 GB at 4M.  2M rows keeps the one task
-# under ~0.75 GB with string ids.
+# measured on a 4-core local[4] host over random edge sets with 10-char
+# string ids: 1M edges 0.46 GB (uniform pairs over 1M nodes) to 0.50 GB
+# (a matching: 2M distinct ids); 2M edges 0.75 to 0.82 GB.  Long ids, a
+# matching: 0.32 GB at 1M edges, 0.54 GB at 2M.  2M edges keep the one
+# task under ~0.85 GB.
 UNION_FIND_MAX_ROWS = 2_000_000
 
 
@@ -163,34 +155,15 @@ def _union_find(src: np.ndarray, dst: np.ndarray):
             root = up
 
 
-def _partition_union_find(batches: Iterator[pa.RecordBatch]):
-    """``_union_find`` over a partition's (src, dst) batches, plus the id
-    type; None when the partition holds no rows (it may yield no batch
-    at all)."""
-    batches = [b for b in batches if b.num_rows]
-    if not batches:
-        return None
-    t = pa.Table.from_batches(batches)
-    ids, root = _union_find(t.column(0).to_numpy(), t.column(1).to_numpy())
-    return ids, root, t.schema.field(0).type
-
-
-def _contract(batches: Iterator[pa.RecordBatch]):
-    """(src = node, dst = partition-local component min) per non-root."""
-    found = _partition_union_find(batches)
-    if found is not None:
-        ids, root, typ = found
-        moved = root != np.arange(len(ids))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ids[moved], typ), pa.array(ids[root[moved]], typ)],
-            names=["src", "dst"])
-
-
 def _finish(batches: Iterator[pa.RecordBatch]):
-    """(node, component) for every node of the forest, roots included."""
-    found = _partition_union_find(batches)
-    if found is not None:
-        ids, root, typ = found
+    """(node, component) for every node of the (src, dst) edge batches,
+    roots included; nothing when the task holds no rows (it may get no
+    batch at all)."""
+    batches = [b for b in batches if b.num_rows]
+    if batches:
+        t = pa.Table.from_batches(batches)
+        ids, root = _union_find(t.column(0).to_numpy(), t.column(1).to_numpy())
+        typ = t.schema.field(0).type
         yield pa.RecordBatch.from_arrays(
             [pa.array(ids, typ), pa.array(ids[root], typ)],
             names=["node", "component"])
@@ -207,45 +180,48 @@ def connected_components(
     """Returns (node, component) where component = min node id reachable.
 
     ``edges`` is undirected (each pair once or twice, either orientation);
-    self-loops and edges with a NULL endpoint are dropped.  Deterministic:
+    self-loops and edges with a NULL endpoint are dropped.  ``src`` and
+    ``dst`` must have the same type (TypeError otherwise).  Deterministic:
     component ids are min string/numeric ids, independent of
     partitioning.  ``checkpoint``: 'auto' (reliable iff
     sc.setCheckpointDir was called — the cluster deployment), 'reliable',
-    or 'local'; it applies to the contracted forest and to every star
-    round.  ``max_iter`` bounds the star rounds of the fallback.
-    ``stats``: optional dict that receives {'forest_rows': n, 'rounds':
-    r} — r is 0 when the single-task union-find finished the forest,
-    else the star rounds it took to converge.
+    or 'local'; it applies to the counted edges and to every star round.
+    ``max_iter`` bounds the star rounds of the fallback.  ``stats``:
+    optional dict that receives {'edge_rows': n, 'rounds': r} — n is the
+    count of self-loop-free edges that chose the finish, r is 0 when the
+    single-task union-find finished, else the star rounds it took to
+    converge.
     """
     typ = edges.schema[src].dataType
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).cast(typ).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-    )
-    forest = _checkpointer(
-        e.mapInArrow(_contract, StructType(
-            [StructField("src", typ, False), StructField("dst", typ, False)])),
+    if edges.schema[dst].dataType != typ:
+        raise TypeError(
+            f"connected_components: {src} is {typ.simpleString()} but {dst} "
+            f"is {edges.schema[dst].dataType.simpleString()}"
+        )
+    e = _checkpointer(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .filter(F.col("src") != F.col("dst")),
         checkpoint,
     )
-    n_e = forest.count()
+    n_e = e.count()
     if stats is not None:
-        stats["forest_rows"] = n_e
+        stats["edge_rows"] = n_e
         stats["rounds"] = 0
     if n_e <= UNION_FIND_MAX_ROWS:
-        return forest.coalesce(1).mapInArrow(_finish, StructType(
+        return e.coalesce(1).mapInArrow(_finish, StructType(
             [StructField("node", typ, False),
              StructField("component", typ, False)]))
-    e = forest
+    e = _checkpointer(e.distinct(), checkpoint)
+    n_e = e.count()
     converged = False
     for rounds in range(1, max_iter + 1):
         e2 = _checkpointer(_small_star(_large_star(e)), checkpoint)
-        # fixed point: edge sets equal.  e2 is a distinct() set, so
-        # e2 == e  iff  |e2| == |e| and e2 \ e is empty (a forest with
-        # duplicate rows cannot pass: |e2| <= |distinct(e)| < |e|) — one
-        # cheap count over the checkpointed partitions decides almost
-        # every round, and only a count-equal round pays the single
-        # anti-join containment probe.  (Round 7: replaces two exceptAll
-        # jobs — four exchanges — per round.)
+        # fixed point: edge sets equal.  Both sides are distinct() sets,
+        # so e2 == e  iff  |e2| == |e| and e2 \ e is empty — one cheap
+        # count over the checkpointed partitions decides almost every
+        # round, and only a count-equal round pays the single anti-join
+        # containment probe.  (Round 7: replaces two exceptAll jobs —
+        # four exchanges — per round.)
         n_e2 = e2.count()
         changed = 1
         if n_e2 == n_e:

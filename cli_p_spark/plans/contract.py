@@ -2875,8 +2875,8 @@ def _kg_communities_sql() -> str:
 def kg_components(spark, sf_dir):
     """Weakly-connected-component census of the entity graph — the most
     basic KG health metric (one blob or many islands, and how big):
-    connected components (operators/ccomp.py: per-partition union-find,
-    then a single-task finish) over the shared staged (subj -> obj)
+    connected components (operators/ccomp.py: a single-task union-find,
+    star rounds above its cap) over the shared staged (subj -> obj)
     edges, undirected, aggregated
     to the (component_size, n_components) histogram.  Integer outputs
     only — bit-exact by construction.  The DuckDB twin replays a

@@ -137,7 +137,7 @@ def test_cc_reliable_checkpoint_mode(spark, tmp_path):
 def test_cc_property_matches_oracle(spark, monkeypatch, finish):
     """Randomized: 10 seeded graphs x 1/3/8 partitions x long/string ids
     against the union-find oracle, once through the single-task finish
-    and once with the star rounds forced (a cap of 0 forest rows).  The
+    and once with the star rounds forced (a cap of 0 edges).  The
     seeds' graphs sit on disjoint node ranges of one edge frame, so one
     call checks all ten."""
     from cli_p_spark.operators import ccomp
@@ -170,11 +170,7 @@ def test_cc_property_matches_oracle(spark, monkeypatch, finish):
             }
             assert got == oracle, (ids, parts)
             assert (stats["rounds"] == 0) == (finish == "union_find")
-            # a partition's forest has at most one row per non-root
-            # node, and never more rows than its edges
-            assert stats["forest_rows"] <= len(links)
-            if parts == 1:
-                assert stats["forest_rows"] < len(touched)
+            assert stats["edge_rows"] == len(links)
 
 
 @pytest.mark.parametrize("ids", ["long", "string"])
@@ -197,11 +193,18 @@ def test_cc_edge_inputs_return_empty(spark, ids):
 
 
 def test_cc_partitions_without_batches(spark):
-    """Most of 8 input partitions hold no edge, so their contraction task
-    sees no Arrow batch; NULL endpoints beside real edges are dropped."""
+    """Most of 8 input partitions hold no edge; NULL endpoints beside real
+    edges are dropped."""
     e = spark.createDataFrame(
         [("a", "b"), ("c", None), ("b", "d")], "src string, dst string"
     ).repartition(8)
     got = {r["node"]: r["component"]
            for r in connected_components(e).collect()}
     assert got == {"a": "a", "b": "a", "d": "a"}
+
+
+def test_cc_rejects_mixed_id_types(spark):
+    """src and dst of different types fail loudly instead of being cast."""
+    e = spark.createDataFrame([(1, 2)], "src int, dst long")
+    with pytest.raises(TypeError, match="src is int but dst is bigint"):
+        connected_components(e)

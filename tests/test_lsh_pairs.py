@@ -7,10 +7,10 @@ from cli_p_spark.operators.lsh import hyperplane_lsh_pairs
 
 # Spark jobs of one connected_components call plus one collect of its
 # component sizes on the sharded-canonicalization fixture, measured with
-# the union-find finish: the forest's checkpoint and count inside the call
+# the union-find finish: the edges' checkpoint and count inside the call
 # (3) and the single-task finish under the collect (1).  The star rounds
-# on the same forest took 26 (2 rounds: a checkpoint, a count and an
-# anti-join probe each, plus the root/distinct exchanges).
+# on the same edges took 30 (2 rounds, each with its own checkpoint and
+# count).
 CC_MAX_JOBS = 4
 
 
@@ -180,7 +180,7 @@ def test_sharded_canonicalization_end_to_end(spark):
     assert 0 < len(jobs) <= CC_MAX_JOBS, len(jobs)
     assert sizes.get("m000000000") == hub  # hub: one component, all copies
     assert stats["rounds"] <= 6
-    assert 0 < stats["forest_rows"] <= n_edges
+    assert stats["edge_rows"] == n_edges
     # planted cliques: cluster of ids [c*4, c*4+4) is a component iff its
     # seeded coin said dup; spot-check determinism of a few clusters
     import numpy as np

@@ -161,53 +161,3 @@ def distributed_mentions(
     return rng_df.mapInPandas(
         gen, schema="mention_id string, grp int, embedding array<float>"
     )
-
-
-def distributed_entities(
-    spark,
-    n_entities: int,
-    dim: int = 64,
-    hot_frac: float = 0.05,
-    hot_jitter: float = 0.01,
-    seed: int = SEED,
-    partitions: int | None = None,
-):
-    """entities(entity_id string, embedding array<float>) for the
-    link-join benchmark — deterministic in (seed, id), any partitioning.
-
-    Ids [0, hot_frac*n) are tightly clustered around ONE direction, so
-    under ANY centroid set they share a single argmax IVF cell — the
-    planted hot cell that makes the bucket equi-join skewed (the
-    hub-entity regime of the north_rule; AQE's skew split is the
-    mitigation under test).  The rest are independent random unit
-    vectors spread ~uniformly over cells."""
-    n_hot = int(n_entities * hot_frac)
-    bc = spark.sparkContext.broadcast((dim, n_hot, hot_jitter, seed))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        d_, nh_, jit_, seed_ = bc.value
-        hot_base = np.random.default_rng(
-            (seed_ << 32) ^ 0x40E7
-        ).standard_normal(d_)
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            vecs = np.empty((len(ids), d_), dtype=np.float64)
-            for j, m in enumerate(ids):
-                m = int(m)
-                mrng = np.random.default_rng((seed_ << 32) ^ (m * 4 + 3))
-                v = (
-                    hot_base + jit_ * mrng.standard_normal(d_)
-                    if m < nh_
-                    else mrng.standard_normal(d_)
-                )
-                vecs[j] = v / np.linalg.norm(v)
-            yield pd.DataFrame({
-                "entity_id": [f"e{int(m):09d}" for m in ids],
-                "embedding": list(vecs.astype(np.float32)),
-            })
-
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    rng_df = spark.range(0, n_entities, numPartitions=parts)
-    return rng_df.mapInPandas(
-        gen, schema="entity_id string, embedding array<float>"
-    )

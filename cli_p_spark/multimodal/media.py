@@ -22,8 +22,7 @@ MEDIA_SCHEMA:
 
 Audio reuses the header slots (documented, not overloaded silently):
 width = sample_rate, height = 1, n_frames = n_samples — the decode pass
-is modality-agnostic; `audio_chunk_plan` is the waveform twin of
-`frame_sample_plan`.
+is modality-agnostic.
 """
 
 from __future__ import annotations
@@ -153,32 +152,6 @@ def decode_media(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, schema=DECODED_SCHEMA)
 
 
-RESIZED_SCHEMA = (
-    "media_id string, out_width int, out_height int, scale double"
-)
-
-
-def resize_plan(decoded: DataFrame, max_side: int = 224) -> DataFrame:
-    """Aspect-preserving resize *plan* (the reference's display resize,
-    query-index.py:63-77, Lanczos cap to max_res).  Pure Catalyst: the
-    actual pixel resample is the stubbed codec's job; the geometry math —
-    what the pipeline schedules — is real and exact."""
-    scale = F.least(
-        F.lit(1.0),
-        F.lit(max_side) / F.greatest("width", "height").cast("double"),
-    )
-    ok = decoded.filter(
-        F.col("skip_reason").isNull()
-        & F.col("kind").isin("image", "video")
-    )
-    return ok.select(
-        "media_id",
-        F.floor(F.col("width") * scale).cast("int").alias("out_width"),
-        F.floor(F.col("height") * scale).cast("int").alias("out_height"),
-        F.round(scale, 6).alias("scale"),
-    )
-
-
 def frame_sample_plan(decoded: DataFrame, every_n: int = 24) -> DataFrame:
     """Video frame sampling plan: one row per sampled frame index —
     posexplode of a sequence, no Python.  Feeds the same encode UDF the
@@ -192,50 +165,4 @@ def frame_sample_plan(decoded: DataFrame, every_n: int = 24) -> DataFrame:
         F.explode(
             F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
         ).alias("frame_idx"),
-    )
-
-
-AUDIO_CHUNK_SCHEMA = (
-    "media_id string, chunk_idx int, start_sample long, end_sample long, "
-    "duration_s double"
-)
-
-
-def audio_chunk_plan(decoded: DataFrame, chunk_samples: int = 16_000
-                     ) -> DataFrame:
-    """Waveform chunking plan: one row per fixed-size sample window —
-    the audio twin of frame_sample_plan (audio meta: width=sample_rate,
-    n_frames=n_samples).  Pure Catalyst; chunks feed the same encode UDF
-    via a deterministic content ref (one shared vector space)."""
-    aud = decoded.filter(
-        (F.col("kind") == "audio") & F.col("skip_reason").isNull()
-        & (F.col("n_frames") >= 1)  # empty waveform -> zero chunks,
-                                     # not a sequence(0,-1) runtime error
-    )
-    starts = F.sequence(
-        F.lit(0).cast("long"),
-        (F.col("n_frames") - 1).cast("long"),
-        F.lit(chunk_samples).cast("long"),
-    )
-    return aud.select(
-        "media_id",
-        F.posexplode(starts).alias("chunk_idx", "start_sample"),
-        "n_frames",
-        "width",
-    ).select(
-        "media_id",
-        "chunk_idx",
-        "start_sample",
-        F.least(
-            F.col("start_sample") + chunk_samples - 1, F.col("n_frames") - 1
-        ).cast("long").alias("end_sample"),
-        F.round(
-            (
-                F.least(
-                    F.col("start_sample") + chunk_samples,
-                    F.col("n_frames").cast("long"),
-                ) - F.col("start_sample")
-            ) / F.col("width"),
-            6,
-        ).alias("duration_s"),
     )

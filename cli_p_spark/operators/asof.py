@@ -15,12 +15,9 @@ to Python.  The scalable spelling is the union-window trick:
 ONE shuffle (the window partitionBy), zero Python, state = one row of
 carried payload per key — linear in |L|+|R|.  Window partitions are
 per-key event histories (bounded); skewed hot keys are a watermark-range
-problem, not a cross-product one.  For a PATHOLOGICAL key (a null/default
-user id owning 10^8 events, which would serialize one window partition
-into a single task) use ``asof_join_salted``: it partitions by
-(key, time-bucket) — per-bucket windows run in parallel and a tiny
-per-(key, bucket) summary window carries the boundary state across
-buckets, so the hot key's history splits across ~n_buckets tasks.
+problem, not a cross-product one.  A PATHOLOGICAL key (a null/default
+user id owning 10^8 events) serializes its window partition into a
+single linear task: it completes, but at parallelism 1 for that key.
 
 Tie semantics: a right row AT the left row's exact timestamp matches
 (<=, tag 0 sorts before tag 1).  The right side must be unique per
@@ -88,85 +85,4 @@ def asof_join(
         u.select("*", *carried)
         .filter(F.col("_tag") == 1)
         .drop("_tag", "_r")
-    )
-
-
-def asof_join_salted(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    payload_cols: list[str],
-    bucket_of,
-    suffix: str = "_asof",
-) -> DataFrame:
-    """``asof_join`` with time-bucket salting for hot-key skew.
-
-    ``bucket_of(ts_column) -> Column`` maps a timestamp to a bucket id
-    that is MONOTONE NON-DECREASING in ts (e.g. ``lambda t:
-    F.floor(F.unix_timestamp(t) / 3600)`` or ``F.year``); orderable
-    bucket ids (long/date) are required.  Three stages, all linear:
-
-      1. per-(key, bucket) window — the plain union-window trick, but
-         partitioned by (key, bucket): a hot key's history splits into
-         ~n_buckets parallel tasks instead of one;
-      2. per-(key, bucket) boundary summary (max_by over rights — ONE
-         row per key x bucket) + a running carry window over buckets:
-         the matched row entering each bucket from the past.  This
-         window is per-key but its partition holds |buckets| rows, not
-         |events| rows;
-      3. coalesce(within-bucket carry, cross-bucket carry-in).
-
-    Identical output to ``asof_join`` (gate: tests/test_asof.py).  Costs
-    one extra shuffle (the spine join) — use it when a key can own a
-    partition-sized share of events, the plain spelling otherwise."""
-    bexp = bucket_of(F.col(ts_col))
-    tagged_r = right.select(
-        *key_cols,
-        F.col(ts_col).alias(ts_col),
-        F.struct(*[F.col(c) for c in payload_cols]).alias("_r"),
-    ).withColumn("_tag", F.lit(0))
-    tagged_l = left.withColumn("_tag", F.lit(1))
-    u = tagged_l.unionByName(tagged_r, allowMissingColumns=True).withColumn(
-        "_b", bexp
-    )
-
-    # stage 2: last right struct per (key, bucket), then carry-in from
-    # strictly-earlier buckets over the per-key bucket spine
-    rlast = (
-        u.filter(F.col("_tag") == 0)
-        .groupBy(*key_cols, "_b")
-        .agg(F.max_by("_r", F.col(ts_col)).alias("_rlast"))
-    )
-    spine = u.select(*key_cols, "_b").distinct()
-    wc = (
-        Window.partitionBy(*key_cols)
-        .orderBy(F.col("_b").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = (
-        spine.join(rlast, [*key_cols, "_b"], "left")
-        .withColumn(
-            "_carry_in", F.last(F.col("_rlast"), ignorenulls=True).over(wc)
-        )
-        .drop("_rlast")
-    )
-
-    # stage 1 + 3: within-bucket window, seeded by the carry-in
-    w = (
-        Window.partitionBy(*key_cols, "_b")
-        .orderBy(F.col(ts_col).asc(), F.col("_tag").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    seeded = u.join(carry, [*key_cols, "_b"])
-    matched = F.coalesce(
-        F.last(F.col("_r"), ignorenulls=True).over(w), F.col("_carry_in")
-    )
-    carried = [
-        matched.getField(c).alias(f"{c}{suffix}") for c in payload_cols
-    ]
-    return (
-        seeded.select("*", *carried)
-        .filter(F.col("_tag") == 1)
-        .drop("_tag", "_r", "_b", "_carry_in")
     )

@@ -94,36 +94,6 @@ def bloom_contains(
     )
 
 
-def bloom_prune(
-    probe: DataFrame,
-    key_col: str,
-    bits: DataFrame,
-    n_bits: int,
-    n_hashes: int = 5,
-) -> DataFrame:
-    """Probe rows whose key is possibly in the filter — the pre-shuffle
-    reduction.  Row-preserving (all columns pass through); keys the
-    filter rejects are guaranteed non-members.
-
-    Physical shape: ``n_hashes`` chained BROADCAST semi joins, one per
-    hash — each is map-side (bits broadcast once, Spark reuses the
-    exchange), so the probe table itself never shuffles and never
-    aggregates; a row survives iff every one of its k positions is in
-    the bit set.  This is the shape that matters at 10^12 probe rows."""
-    out = probe
-    for j in range(n_hashes):
-        out = (
-            out.withColumn("_bloom_pj", _pos(key_col, j, n_bits))
-            .join(
-                F.broadcast(bits.select(F.col("_pos").alias("_bloom_pj"))),
-                "_bloom_pj",
-                "semi",
-            )
-            .drop("_bloom_pj")
-        )
-    return out
-
-
 def bloom_contains_sql(
     bits_rel: str, probe_pos_rel: str, key: str, n_hashes: int
 ) -> str:

@@ -10,11 +10,16 @@ here are DataFrame-native with the same shape:
       -> keep min-id representative per duplicate cluster
 
 Families:
-- exact_dedup            md5(content) groupBy — one shuffle, no UDF
 - minhash_lsh_pairs      word-shingle MinHash, banded LSH self-join,
                          exact-Jaccard verification
-- simhash_pairs          64-bit SimHash, banded Hamming candidates,
-                         exact Hamming verification (bit ops, JVM-side)
+- simhash_fingerprints + simhash_pairs_from_fingerprints
+                         64-bit SimHash, equal-16-bit-band candidates
+                         (pigeonhole: max_hamming=3 over 4 bands is
+                         exact-complete), exact Hamming verification
+                         (bit_count of the xor, JVM-side)
+- winnow_fingerprints + winnow_pairs_from_fingerprints
+                         docs sharing >= min_shared winnowed k-gram mins
+                         (Schleimer et al., SIGMOD'03)
 - embedding_neardup_pairs  cosine near-dup pairs: banded sign-LSH
                            (operators/lsh.py) at tau >= 0.8 under the
                            default strategy='auto', the IVF self-join
@@ -40,14 +45,6 @@ from pyspark.sql import functions as F
 
 from ..config import SEED
 from .lsh import _CacheHandle, bucket_pairs, hyperplane_lsh_pairs
-
-
-def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
-    """(content_hash, keep_id, n_copies): keep = min id per hash group."""
-    return df.groupBy(F.md5(F.col(content_col)).alias("content_hash")).agg(
-        F.min(id_col).alias("keep_id"),
-        F.count(F.lit(1)).alias("n_copies"),
-    )
 
 
 def _tokens(content_col: str):
@@ -371,24 +368,6 @@ def simhash_fingerprints(
     )
 
 
-def simhash_pairs(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    bands: int = 4,
-    seed: int = SEED,
-) -> DataFrame:
-    """Near-dup pairs (src, dst, hamming) with hamming <= max_hamming.
-
-    Candidates: equal 16-bit band of the 64-bit fingerprint (pigeonhole:
-    hamming <= bands-1 guarantees >=1 identical band; max_hamming=3 with
-    4 bands is exact-complete).  Verification: JVM-side popcount via
-    bit_count(xor) — no Python anywhere in the path."""
-    fp = simhash_fingerprints(df, content_col, id_col, seed)
-    return simhash_pairs_from_fingerprints(fp, max_hamming, bands)
-
-
 def simhash_pairs_from_fingerprints(
     fp: DataFrame,
     max_hamming: int = 3,
@@ -570,24 +549,6 @@ def winnow_fingerprints(
         )
     )
     return mins.select("_id", F.col("_wmin").alias("_fp")).distinct()
-
-
-def winnow_neardup_pairs(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    min_shared: int = 4,
-    w: int = 8,
-    k: int = 4,
-    seed: int = SEED,
-) -> DataFrame:
-    """Near-dup pairs via winnowing fingerprints (Schleimer et al.,
-    SIGMOD'03): docs sharing >= min_shared selected k-gram mins.  Same
-    inverted-index join shape as ngram_jaccard_pairs but over the
-    winnowed subset — candidate volume scales with fingerprint density
-    (~2/(w+1) of grams), not full gram sets."""
-    fps = winnow_fingerprints(df, content_col, id_col, w=w, k=k, seed=seed)
-    return winnow_pairs_from_fingerprints(fps, min_shared=min_shared)
 
 
 def winnow_pairs_from_fingerprints(
@@ -905,57 +866,4 @@ def semantic_dedup_pairs(
         .withColumn("cosine", cosine_expr("_ea", "_eb"))
         .filter(F.col("cosine") >= tau)
         .select("src", "dst", "cosine")
-    )
-
-
-def semantic_dedup(
-    df: DataFrame,
-    embedding_col: str,
-    id_col: str,
-    tau: float = 0.8,
-    nlist: int = 100,
-    seed: int = SEED,
-) -> DataFrame:
-    """SemDeDup end-to-end: (doc_id, bucket, keep) — k-means cluster the
-    embeddings, connect within-cluster pairs above cosine ``tau``, keep
-    one representative (min id) per duplicate group.  keep=false rows
-    are the semantic duplicates a curation pass drops.  Composition of
-    semantic_cluster_assign + semantic_dedup_pairs + the existing
-    connected-components resolution (ccomp.py)."""
-    from .ccomp import canonical_mapping, connected_components
-
-    assigned = semantic_cluster_assign(
-        df, embedding_col, id_col, nlist=nlist, seed=seed
-    )
-    pairs = semantic_dedup_pairs(assigned, tau)
-    comps = connected_components(pairs.select("src", "dst"))
-    mapping = canonical_mapping(
-        comps, assigned.select(F.col("_nid").alias("node"))
-    )
-    return (
-        assigned.select(F.col("_nid").alias("doc_id"), "bucket")
-        .join(mapping, F.col("doc_id") == F.col("node"))
-        .select(
-            "doc_id", "bucket",
-            (F.col("doc_id") == F.col("canonical_id")).alias("keep"),
-        )
-    )
-
-
-def dedup_keep_representatives(
-    df: DataFrame, pairs: DataFrame, id_col: str
-) -> DataFrame:
-    """Resolve near-dup pairs to one kept row per duplicate cluster
-    (connected components, min-id representative)."""
-    from .ccomp import canonical_mapping, connected_components
-
-    comps = connected_components(pairs.select("src", "dst"))
-    mapping = canonical_mapping(
-        comps, df.select(F.col(id_col).cast("string").alias("node"))
-    )
-    keep = mapping.filter(F.col("node") == F.col("canonical_id")).select(
-        F.col("node").alias("_keep")
-    )
-    return df.join(
-        keep, df[id_col].cast("string") == F.col("_keep"), "left_semi"
     )

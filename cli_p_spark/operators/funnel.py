@@ -122,66 +122,6 @@ def state_to_counts(state: DataFrame, steps: list[str]) -> DataFrame:
     )
 
 
-def fold_funnel_state(
-    events: DataFrame,
-    state: DataFrame | None,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    window_us: int | None = None,
-) -> DataFrame:
-    """(_u, _acc) — fold a batch of events into stored per-user funnel
-    state (``state``: (_u, _acc) or None for the first batch).  Because
-    the chained-min recurrence is a LEFT FOLD over the time-ordered
-    event sequence, folding batch-by-batch (time-ordered drops) equals
-    one batch fold over the union — the streamed==batch theorem the
-    streaming wrapper's test asserts.
-
-    Replay idempotence (at-least-once safety): re-applying a batch is a
-    no-op.  Proof sketch: an event x advances the state only at slot
-    x._s = reached with x._t > acc[x._s - 1]; after the first
-    application, either x advanced then (slot now filled, reached >
-    x._s forever — acc entries never change once set), or the slot
-    x._s - 1 was filled by an event y AT OR AFTER x in the sorted scan
-    (y._t >= x._t), so x._t > acc[x._s - 1] = y._t is false on replay.
-    Gated by test_funnel's double-apply test."""
-    k = len(steps)
-    if k == 0:
-        raise ValueError("steps must be non-empty")
-    batch = _select_step_events(events, steps, user_col, ts_col, type_col)
-    per_user = batch.groupBy("_u").agg(
-        F.expr("array_sort(collect_list(struct(_t, _s)))").alias("_ev")
-    )
-    if state is None:
-        # first-batch empty state takes the BATCH's _u type: a hardcoded
-        # bigint would make the full_outer join coerce string user ids
-        # (silently null-casting non-numeric ids in future Spark versions)
-        from pyspark.sql.types import (
-            ArrayType, LongType, StructField, StructType,
-        )
-
-        state = per_user.sparkSession.createDataFrame(
-            [],
-            StructType([
-                StructField("_u", per_user.schema["_u"].dataType, True),
-                StructField("_acc", ArrayType(LongType()), True),
-            ]),
-        )
-    merged = per_user.join(
-        state.select("_u", F.col("_acc").alias("_old")), "_u", "full_outer"
-    )
-    empty_acc = f"array_repeat(CAST(NULL AS BIGINT), {k})"
-    fold = _fold_sql("_ev", f"coalesce(_old, {empty_acc})", window_us)
-    return merged.select(
-        "_u",
-        F.expr(
-            f"CASE WHEN _ev IS NULL THEN coalesce(_old, {empty_acc}) "
-            f"ELSE {fold} END"
-        ).alias("_acc"),
-    )
-
-
 def funnel_counts(
     events: DataFrame,
     steps: list[str],

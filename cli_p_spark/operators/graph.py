@@ -301,21 +301,6 @@ FROM steps s JOIN chosen c ON s.it = c.it"""
     )
 
 
-def degree_stats(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
-    """Degree distribution of the triple graph: (degree, n_nodes) over
-    total degree (in+out) — the hub/skew diagnostic that sizes the
-    LSH bucket cap and AQE skew thresholds."""
-    deg = (
-        edges.select(F.col(src_col).alias("node"))
-        .unionByName(edges.select(F.col(dst_col).alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_nodes"))
-
-
 def khop_reachability(
     edges: DataFrame,
     seeds: DataFrame,

@@ -44,23 +44,6 @@ def _alpha(m: int) -> float:
     return 0.7213 / (1.0 + 1.079 / m)
 
 
-def hll_distinct(
-    df: DataFrame,
-    key_col: str,
-    group_cols: list[str] | None = None,
-    log2m: int = 10,
-) -> DataFrame:
-    """(group_cols..., hll_estimate) — deterministic HLL cardinality of
-    ``key_col`` per group; standard error ~ 1.04/sqrt(2^log2m) (3.3% at
-    log2m=10).  The estimate is a pure function of the xxhash64 values
-    (no RNG, no engine-private state)."""
-    gcols = list(group_cols or [])
-    return hll_from_hashes(
-        df.select(*gcols, F.xxhash64(F.col(key_col)).alias("_h")),
-        "_h", gcols, log2m,
-    )
-
-
 def hll_from_hashes(
     df: DataFrame,
     hash_col: str,
@@ -417,24 +400,6 @@ LEFT JOIN (
 # .0005 boundary, which a transcendental of a small-integer rational
 # never hits.  Everything else stays integer-exact (same register
 # pipeline as hll_from_hashes above, untouched).
-
-
-def hll_distinct_corrected(
-    df: DataFrame,
-    key_col: str,
-    group_cols: list[str] | None = None,
-    log2m: int = 10,
-) -> DataFrame:
-    """(group_cols..., method, hll_estimate): HLL with the small-range
-    linear-counting branch.  method ('linear' | 'raw') makes the branch
-    selection observable/hash-checkable."""
-    gcols = list(group_cols or [])
-    return hll_corrected_from_hashes(
-        df.select(*gcols, F.xxhash64(F.col(key_col)).alias("_h")),
-        "_h",
-        gcols,
-        log2m,
-    )
 
 
 def hll_corrected_from_hashes(

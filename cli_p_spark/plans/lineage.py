@@ -129,7 +129,8 @@ def run_pipeline(
     Returns ``status`` ('done' or 'killed') and ``out_dir``; a finished
     run also returns ``n_triples``, the links of every done partition.
     A resume under a config other than the one ``out_dir`` was started
-    with raises ValueError before anything is written.
+    with, or an ``n_parts``, ``nlist`` or ``nprobe`` below 1, raises
+    ValueError before anything is written.
 
     ``fail_after_parts`` simulates a mid-run kill for the resume tests:
     only that many partitions are processed before returning.
@@ -147,6 +148,12 @@ def run_pipeline(
     from ..operators.ann import train_centroids
     from .tables import TableStore
 
+    # checked before the stale-table drop below: under 1, n_parts and
+    # nprobe plan no work yet report "done", and nlist fails mid-run
+    for name, value in (("n_parts", n_parts), ("nlist", nlist),
+                        ("nprobe", nprobe)):
+        if value < 1:
+            raise ValueError(f"{name} must be >= 1, got {value}")
     store = TableStore(spark, out_dir)
     config = json.dumps({
         "n_parts": n_parts, "dim": cfg.dim, "seed": cfg.seed, "k": cfg.k,

@@ -85,91 +85,3 @@ def test_asof_null_payload_stays_null(spark):
     # left@20 matches right@12 whose value is NULL -> NULL, not 2.0
     assert got[1] == (101, None)
     assert got[2] == (100, 2.0)
-
-
-def test_asof_salted_equals_plain(spark):
-    """Time-bucket-salted spelling is output-identical to the plain
-    union-window spelling, including cross-bucket carry (left rows in
-    buckets with no right rows) and NULL payloads."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from cli_p_spark.operators.asof import asof_join_salted
-
-    rng = random.Random(3)
-    keys = ["u1", "u2", "u3"]
-    left = [
-        (i, rng.choice(keys), rng.randrange(0, 1000)) for i in range(400)
-    ]
-    right = sorted(
-        {(rng.choice(keys), rng.randrange(0, 1000)) for _ in range(60)}
-    )
-    right = [
-        (k, t, 1000 + i, None if i % 7 == 0 else float(i))
-        for i, (k, t) in enumerate(right)
-    ]
-    l = spark.createDataFrame(left, "event_id long, user_id string, ts long")
-    r = spark.createDataFrame(
-        right, "user_id string, ts long, event_id long, value double"
-    )
-    args = (l, r, ["user_id"], "ts", ["event_id", "value"])
-    plain = {
-        row["event_id"]: (row["event_id_asof"], row["value_asof"])
-        for row in asof_join(*args).collect()
-    }
-    salted = {
-        row["event_id"]: (row["event_id_asof"], row["value_asof"])
-        for row in asof_join_salted(
-            *args, bucket_of=lambda t: F.floor(t / 100)
-        ).collect()
-    }
-    assert salted == plain
-
-
-def test_asof_salted_hot_key_bounded(spark):
-    """The north-rule skew case: ONE key owning 10^6 left rows.  The
-    plain spelling serializes that history into a single window task;
-    the salted spelling must split it across time buckets and finish in
-    bounded wall time with exact results (spot-checked against the
-    closed-form: ts t matches the latest right at 1000*floor(t/1000))."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from cli_p_spark.operators.asof import asof_join_salted
-
-    n = 1_000_000
-    l = (
-        spark.range(n)
-        .select(
-            F.col("id").alias("event_id"),
-            F.lit("hot").alias("user_id"),
-            F.col("id").alias("ts"),
-        )
-    )
-    # one right row every 1000 ticks: ts=0,1000,...  value = ts/1000
-    r = (
-        spark.range(n // 1000)
-        .select(
-            F.lit("hot").alias("user_id"),
-            (F.col("id") * 1000).alias("ts"),
-            (F.col("id") + 10_000_000).alias("event_id"),
-            F.col("id").cast("double").alias("value"),
-        )
-    )
-    t0 = time.monotonic()
-    out = asof_join_salted(
-        l, r, ["user_id"], "ts", ["event_id", "value"],
-        bucket_of=lambda t: F.floor(t / 16384),
-    )
-    agg = out.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            (F.col("value_asof") == F.floor(F.col("ts") / 1000)
-             .cast("double")).cast("long")
-        ).alias("n_exact"),
-    ).collect()[0]
-    elapsed = time.monotonic() - t0
-    assert agg["n"] == n and agg["n_exact"] == n
-    assert elapsed < 90

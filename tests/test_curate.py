@@ -52,7 +52,10 @@ def test_embedding_neardup_lsh_strategy(spark):
 
 
 def test_winnow_neardup_pairs(spark):
-    from cli_p_spark.operators.dedup import winnow_neardup_pairs
+    from cli_p_spark.operators.dedup import (
+        winnow_fingerprints,
+        winnow_pairs_from_fingerprints,
+    )
 
     base = " ".join(f"tok{i}" for i in range(80))
     edited = base.replace("tok40", "tokXX")
@@ -62,7 +65,8 @@ def test_winnow_neardup_pairs(spark):
     )
     got = {
         (r["src"], r["dst"]): r["n_shared"]
-        for r in winnow_neardup_pairs(df, "text", "id").collect()
+        for r in winnow_pairs_from_fingerprints(
+            winnow_fingerprints(df, "text", "id")).collect()
     }
     assert ("a", "b") in got and got[("a", "b")] >= 4
     assert not any("c" in k for k in got)

@@ -7,13 +7,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from cli_p_spark.operators.ccomp import canonical_mapping, connected_components
 from cli_p_spark.operators.dedup import (
-    dedup_keep_representatives,
     embedding_neardup_pairs,
-    exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    simhash_pairs,
+    simhash_fingerprints,
+    simhash_pairs_from_fingerprints,
 )
 
 
@@ -47,17 +47,6 @@ def _jaccard(a, b, w=3):
 def neardup_df(spark):
     rows = _neardup_corpus()
     return rows, spark.createDataFrame(rows, "id string, text string")
-
-
-def test_exact_dedup(spark, neardup_df):
-    rows, df = neardup_df
-    out = {
-        r["content_hash"]: (r["keep_id"], r["n_copies"])
-        for r in exact_dedup(df, "text", "id").collect()
-    }
-    dup_group = [v for v in out.values() if v[1] == 3]
-    assert dup_group == [("d000a", 3)]  # d000a + dupX1 + dupX2
-    assert sum(v[1] for v in out.values()) == len(rows)
 
 
 def test_minhash_recall_and_precision(spark, neardup_df):
@@ -124,9 +113,11 @@ def test_minhash_hot_bucket_emits_star(spark, neardup_df):
 
 def test_simhash_finds_exact_and_near(spark, neardup_df):
     rows, df = neardup_df
+    fp = simhash_fingerprints(df, "text", "id")
     pairs = {
         (r["src"], r["dst"]): r["hamming"]
-        for r in simhash_pairs(df, "text", "id", max_hamming=3).collect()
+        for r in simhash_pairs_from_fingerprints(
+            fp, max_hamming=3).collect()
     }
     assert pairs[("d000a", "dupX1")] == 0  # exact copies: distance 0
     assert pairs[("d000a", "dupX2")] == 0
@@ -179,10 +170,20 @@ def test_embedding_neardup(spark):
 
 
 def test_keep_representatives(spark, neardup_df):
+    """Near-dup pairs -> connected components -> canonical ids: the docs
+    that are their own canonical id are the min id of each duplicate
+    cluster plus every unpaired doc."""
     rows, df = neardup_df
     pairs = ngram_jaccard_pairs(df, "text", "id", n=3, threshold=0.6)
-    kept = dedup_keep_representatives(df, pairs, "id")
-    kept_ids = {r["id"] for r in kept.select("id").collect()}
+    mapping = canonical_mapping(
+        connected_components(pairs.select("src", "dst")),
+        df.select(F.col("id").alias("node")),
+    )
+    kept_ids = {
+        r["node"]
+        for r in mapping.filter(F.col("node") == F.col("canonical_id"))
+        .collect()
+    }
     # cluster {d000a-ish near-dups}: only the min id survives
     assert "d000a" in kept_ids
     texts = dict(rows)
@@ -389,7 +390,7 @@ def test_incremental_lsh_star_replay_no_self_pair(spark):
 def test_semantic_dedup_pairs_exact_within_cluster(spark):
     """SemDeDup: the clustering is the approximation — WITHIN a cluster
     the pair set must be exactly the brute-force all-pairs-above-tau
-    result, and the keep decision must be min-id-per-duplicate-group."""
+    result."""
     import collections
     import itertools
 
@@ -397,7 +398,6 @@ def test_semantic_dedup_pairs_exact_within_cluster(spark):
 
     from cli_p_spark.operators.dedup import (
         semantic_cluster_assign,
-        semantic_dedup,
         semantic_dedup_pairs,
     )
 
@@ -432,25 +432,6 @@ def test_semantic_dedup_pairs_exact_within_cluster(spark):
     for k in want:
         assert abs(got[k] - want[k]) < 1e-9
 
-    # keep decision: min id of each connected pair-group; singletons kept
-    parent = {i: i for i, _ in ((r[0], 0) for r in rows)}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in want:
-        parent[find(a)] = find(b)
-    groups = collections.defaultdict(set)
-    for i, _ in rows:
-        groups[find(i)].add(i)
-    want_keep = {min(g) for g in groups.values()}
-    out = semantic_dedup(df, "embedding", "id", tau=tau, nlist=6)
-    got_keep = {r["doc_id"] for r in out.collect() if r["keep"]}
-    assert got_keep == want_keep
-    assert out.count() == len(rows)
     asg.unpersist()
 
 

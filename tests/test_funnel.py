@@ -134,34 +134,3 @@ def test_funnel_plan_single_shuffle(spark):
     # the event-volume exchange appears exactly once: hashpartitioning
     # on the user key; remaining exchanges operate on <= k rows
     assert plan.count("hashpartitioning(_u") == 1
-
-
-def test_fold_state_replay_idempotent_and_splits(spark):
-    """fold(fold(s, B), B) == fold(s, B) (at-least-once replay safety)
-    and fold(fold(s, B1), B2) == fold(s, B1 ∪ B2) for time-split
-    batches (the streamed==batch theorem's inductive step)."""
-    from cli_p_spark.operators.funnel import fold_funnel_state
-
-    rows = [
-        (1, 0, "view"), (1, 10, "click"), (1, 20, "purchase"),
-        (2, 0, "view"), (2, 5, "purchase"), (2, 10, "click"),
-        (3, 0, "view"), (3, 0, "click"), (3, 30, "click"),
-        (4, 2, "click"),
-    ]
-    b1 = _ev(spark, [r for r in rows if r[1] <= 5])
-    b2 = _ev(spark, [r for r in rows if r[1] > 5])
-    full = _ev(spark, rows)
-
-    def acc_map(state):
-        return {r["_u"]: tuple(r["_acc"]) for r in state.collect()}
-
-    once = fold_funnel_state(full, None, STEPS)
-    twice = fold_funnel_state(full, once, STEPS)
-    assert acc_map(once) == acc_map(twice)
-
-    split = fold_funnel_state(b2, fold_funnel_state(b1, None, STEPS), STEPS)
-    assert acc_map(split) == acc_map(once)
-
-    # replay of just the second batch over the final state: still fixed
-    replay = fold_funnel_state(b2, split, STEPS)
-    assert acc_map(replay) == acc_map(once)

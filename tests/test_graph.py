@@ -9,7 +9,6 @@ from collections import defaultdict
 from cli_p_spark.operators.graph import (
     DAMPING_PPM,
     UNIT,
-    degree_stats,
     pagerank_fixed_point,
 )
 
@@ -95,14 +94,6 @@ def test_pagerank_deep_iterations_bounded_plan(spark):
     # (round-6 session-5: 138 s with values AND plan-size green)
     assert elapsed < 300
     deep.pagerank_cache.unpersist()
-
-
-def test_degree_stats(spark):
-    edges = [("a", "b"), ("a", "c"), ("b", "c")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["degree"]: r["n_nodes"] for r in degree_stats(df).collect()}
-    # degrees: a=2 (out), b=2 (1 in + 1 out), c=2 (in) -> all degree 2
-    assert got == {2: 3}
 
 
 def test_khop_matches_python_bfs(spark):

@@ -385,6 +385,25 @@ def test_resume_under_changed_config_raises(spark, corpus_small, tmp_path):
     assert r2["status"] == "done"
 
 
+@pytest.mark.parametrize("bad", [{"n_parts": 0}, {"nlist": 0},
+                                 {"nprobe": 0}])
+def test_out_of_range_sizes_raise_before_writing(spark, corpus_small,
+                                                 tmp_path, bad):
+    """n_parts, nlist or nprobe below 1 plans no work; the run raises
+    before it drops a killed run's uncommitted rows or writes any."""
+    docs_pdf, ents_pdf = corpus_small
+    docs = documents_to_spark(spark, docs_pdf.iloc[:20])
+    out = tmp_path / "out"
+    leftover = out / "triples" / "part_id=0" / "part-0.parquet"
+    leftover.parent.mkdir(parents=True)
+    leftover.write_bytes(b"uncommitted")
+    before = _listing(str(out))
+    name, = bad
+    with pytest.raises(ValueError, match=name):
+        run_pipeline(spark, docs, ents_pdf, str(out), run_id="bad", **bad)
+    assert _listing(str(out)) == before
+
+
 def test_uncommitted_rows_do_not_survive_another_n_parts(spark, corpus_small,
                                                          tmp_path):
     """A run killed inside the commit window stores no config, so a rerun

@@ -9,9 +9,15 @@ from pyspark.sql import functions as F
 from cli_p_spark.operators.sketch import (
     RANK_CAP,
     _alpha,
-    hll_distinct,
+    hll_corrected_from_hashes,
     hll_from_hashes,
 )
+
+
+def _hashed(df, key_col, *group_cols):
+    """group_cols plus the xxhash64 of key_col as ``h``: the hashes the
+    HLL register pipelines take."""
+    return df.select(*group_cols, F.xxhash64(key_col).alias("h"))
 
 
 def _py_hll(hashes, log2m=10):
@@ -89,7 +95,8 @@ def test_hll_accuracy_and_grouping(spark):
     df = spark.createDataFrame(rows, "grp string, user_id long")
     got = {
         r["grp"]: r["hll_estimate"]
-        for r in hll_distinct(df, "user_id", ["grp"]).collect()
+        for r in hll_from_hashes(
+            _hashed(df, "user_id", "grp"), "h", ["grp"]).collect()
     }
     assert abs(got["a"] - 20000) / 20000 < 0.13
     assert abs(got["b"] - 4000) / 4000 < 0.13
@@ -98,7 +105,8 @@ def test_hll_accuracy_and_grouping(spark):
     dup = spark.createDataFrame(rows + rows, "grp string, user_id long")
     got_dup = {
         r["grp"]: r["hll_estimate"]
-        for r in hll_distinct(dup, "user_id", ["grp"]).collect()
+        for r in hll_from_hashes(
+            _hashed(dup, "user_id", "grp"), "h", ["grp"]).collect()
     }
     assert got_dup == got
 
@@ -235,28 +243,22 @@ def test_cms_join_size_bounds_and_python(spark):
 
 
 def test_hll_corrected_small_range_beats_raw(spark):
-    from cli_p_spark.operators.sketch import (
-        hll_distinct,
-        hll_distinct_corrected,
-    )
-
     # 120 distinct keys at m=1024: deep inside the small-range regime
-    df = spark.createDataFrame(
+    df = _hashed(spark.createDataFrame(
         [(i % 120,) for i in range(5000)], "k bigint"
-    )
-    corr = hll_distinct_corrected(df, "k", log2m=10).collect()[0]
+    ), "k")
+    corr = hll_corrected_from_hashes(df, "h", log2m=10).collect()[0]
     assert corr["method"] == "linear"
     assert abs(corr["hll_estimate"] - 120) / 120 < 0.05
-    raw = hll_distinct(df, "k", log2m=10).collect()[0]["hll_estimate"]
+    raw = hll_from_hashes(df, "h", log2m=10).collect()[0]["hll_estimate"]
     assert abs(corr["hll_estimate"] - 120) <= abs(raw - 120)
 
 
 def test_hll_corrected_large_range_uses_raw(spark):
-    from cli_p_spark.operators.sketch import hll_distinct_corrected
-
     # 50k distinct at m=64 (2.5m = 160): raw branch
-    df = spark.createDataFrame([(i,) for i in range(50000)], "k bigint")
-    r = hll_distinct_corrected(df, "k", log2m=6).collect()[0]
+    df = _hashed(
+        spark.createDataFrame([(i,) for i in range(50000)], "k bigint"), "k")
+    r = hll_corrected_from_hashes(df, "h", log2m=6).collect()[0]
     assert r["method"] == "raw"
     assert abs(r["hll_estimate"] - 50000) / 50000 < 0.35
 

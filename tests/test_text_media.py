@@ -14,7 +14,6 @@ from cli_p_spark.multimodal.media import (
     decode_media,
     frame_sample_plan,
     make_media_df,
-    resize_plan,
 )
 
 
@@ -110,21 +109,6 @@ def test_media_decode_and_quarantine(spark):
             assert (r["width"], r["height"], r["n_frames"]) == meta[mid]
 
 
-def test_resize_plan_geometry(spark):
-    media = make_media_df(spark, n_media=30)
-    dec = decode_media(media)
-    plan = {r["media_id"]: r for r in resize_plan(dec, max_side=224).collect()}
-    src = {r["media_id"]: r for r in dec.collect()
-           if r["skip_reason"] is None and r["kind"] in ("image", "video")}
-    assert set(plan) == set(src)
-    for mid, r in plan.items():
-        s = src[mid]
-        assert max(r["out_width"], r["out_height"]) <= 224
-        expected = min(1.0, 224 / max(s["width"], s["height"]))
-        assert abs(r["scale"] - expected) < 1e-4
-        assert r["out_width"] == int(np.floor(s["width"] * expected))
-
-
 def test_frames_flow_into_linker(spark):
     """Cohesion: sampled video frames feed the SAME fused encode+link
     operator the text/image spans use (one shared vector space —
@@ -175,29 +159,3 @@ def test_frame_sample_plan(spark):
     assert set(by_vid) == set(vids)
     for mid, idxs in by_vid.items():
         assert idxs == list(range(0, vids[mid], 24))
-
-
-def test_audio_chunk_plan(spark):
-    """Audio media chunk into fixed sample windows; last chunk clipped to
-    n_samples; duration = samples / sample_rate."""
-    from cli_p_spark.multimodal.media import audio_chunk_plan
-
-    media = make_media_df(spark, n_media=30)
-    dec = decode_media(media).cache()
-    auds = {r["media_id"]: r for r in dec.collect() if r["kind"] == "audio"}
-    assert auds, "fixture must contain audio items"
-    chunks = audio_chunk_plan(dec, chunk_samples=16_000).collect()
-    by_media = {}
-    for r in chunks:
-        by_media.setdefault(r["media_id"], []).append(r)
-    assert set(by_media) == set(auds)
-    for mid, rows in by_media.items():
-        n = auds[mid]["n_frames"]
-        sr = auds[mid]["width"]
-        rows.sort(key=lambda r: r["chunk_idx"])
-        assert len(rows) == (n + 16_000 - 1) // 16_000
-        assert rows[0]["start_sample"] == 0
-        assert rows[-1]["end_sample"] == n - 1
-        total = sum(r["end_sample"] - r["start_sample"] + 1 for r in rows)
-        assert total == n
-        assert abs(rows[0]["duration_s"] - min(16_000, n) / sr) < 1e-6

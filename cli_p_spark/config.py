@@ -1,10 +1,10 @@
 """Engine-wide constants.
 
 Mirrors the reference's in-code constants (dim=512 at
-/root/reference/build-index.py:77,81; nlist=100 / nprobe=32 at
-build-index.py:81, query-index.py:30; k=50 at query-index.py:35) but makes
-them configurable.  Tests use DIM=64 to match the driver-provided
-``embeddings`` table; the real-encoder deployment flips DIM to 512.
+build-index.py:77,81; nlist=100 / nprobe=32 at build-index.py:81,
+query-index.py:30) but makes them configurable.  Tests use DIM=64 to
+match the driver-provided ``embeddings`` table; the real-encoder
+deployment flips DIM to 512.
 """
 
 from __future__ import annotations
@@ -24,9 +24,6 @@ NORM_EPS = 1e-9
 # the KG pipeline thresholds rank-1 links so junk spans produce no edge.
 TAU = 0.40
 
-# Default top-k, reference REPL default c=50 (query-index.py:35).
-DEFAULT_K = 50
-
 # Canonicalization: mention-mention similarity cutoff for CC edges.
 TAU_CC = 0.90
 
@@ -44,6 +41,6 @@ class PipelineConfig:
     seed: int = SEED
     tau: float = TAU
     tau_cc: float = TAU_CC
-    k: int = 1  # rank-1 linking for triples; DEFAULT_K for search API
+    k: int = 1  # rank-1 linking for triples
     # explicit repartition width before the embedding stage (north_rule)
     embed_partitions: int = 32

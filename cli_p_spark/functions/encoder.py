@@ -14,9 +14,11 @@ oracle all call this one module, "which entity is rank-1 for this span" is
 a well-defined ground truth, exactly like the reference's nprobe=nlist
 exhaustive search (query-index.py:30,111).
 
-A real CLIP encoder drops in behind the same two pandas-UDF entry points
-(`encode_text_udf`, `encode_media_udf`) without touching the pipeline:
-swap `_encode_batch` for a torch model held in a per-executor lazy global.
+Both modalities go through one batch entry point, `encode_batch`, which
+the fused encode+search pass (operators/fused.py) and the `make_encode_udf`
+pandas UDF call.  A real CLIP encoder drops in behind it without touching
+the pipeline: replace its body with a torch model held in a per-executor
+lazy global, keeping the (matrix, ok mask) return.
 
 All batch entry points are NumPy-vectorized over Arrow record batches —
 no per-row Python in the Spark hot path (input_hint).

@@ -54,14 +54,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..config import NORM_EPS, SEED
+from ..config import NLIST, NORM_EPS, NPROBE, SEED
 from .link import _entity_arrays, cosine_expr
 from .topk import topk_per_group
 
 
+# rows k-means trains on; a larger index trains on a seeded sample
+MAX_TRAIN = 100_000
+
+
 def train_centroids(
-    embeddings: np.ndarray, nlist: int = 100, iters: int = 15,
-    seed: int = SEED, max_train: int = 100_000,
+    embeddings: np.ndarray, nlist: int = NLIST, iters: int = 15,
+    seed: int = SEED, max_train: int = MAX_TRAIN,
 ) -> np.ndarray:
     """Spherical k-means (max-inner-product assignment, mean re-norm).
 
@@ -93,20 +97,19 @@ def train_centroids(
 
 
 def train_centroids_distributed(
-    entities: "DataFrame", nlist: int = 100, iters: int = 15,
-    seed: int = SEED, max_train: int = 100_000,
+    entities: "DataFrame", nlist: int = NLIST, seed: int = SEED,
     embedding_col: str = "embedding",
 ) -> np.ndarray:
     """Train centroids from an entity DataFrame WITHOUT collecting the
     index to the driver: a seeded executor-side sample (at most
-    ~max_train rows) is all that crosses the wire — the 10^7-entity
+    MAX_TRAIN rows) is all that crosses the wire — the 10^7-entity
     driver-collect cliff from SCALE.md closed.  Deterministic for a fixed
-    input + seed: the sample is the global top-max_train rows by a
+    input + seed: the sample is the global top-MAX_TRAIN rows by a
     seeded content hash (layout-independent), and k-means itself is the
     seeded NumPy trainer."""
     from pyspark.sql import functions as F
 
-    # deterministic layout-independent sample: global top-max_train by a
+    # deterministic layout-independent sample: global top-MAX_TRAIN by a
     # content hash (TakeOrdered: per-partition partial top-N, no full
     # shuffle).  sample().limit() would keep whichever rows arrived
     # first — partition-layout-dependent, breaking cross-cluster resume.
@@ -117,14 +120,13 @@ def train_centroids_distributed(
             "_r", F.xxhash64(F.lit(seed), F.col("_e").cast("array<string>"))
         )
         .orderBy("_r")
-        .limit(max_train)
+        .limit(MAX_TRAIN)
         .toPandas()
     )
     if sample.empty:
         raise ValueError("train_centroids_distributed: no embeddings")
     X = np.stack(sample["_e"].to_numpy())
-    return train_centroids(X, nlist=nlist, iters=iters, seed=seed,
-                           max_train=max_train)
+    return train_centroids(X, nlist=nlist, seed=seed)
 
 
 def _bc_centroids(spark, centroids: np.ndarray):
@@ -151,10 +153,11 @@ def add_bucket(
 
 def add_probes(
     df: DataFrame, centroids: np.ndarray, nprobe: int,
-    embedding_col: str = "embedding", probes_col: str = "probes",
+    embedding_col: str = "embedding",
 ) -> DataFrame:
-    """Query side: top-nprobe cells by centroid inner product — the
-    reference's nprobe knob (query-index.py:30,48-54)."""
+    """Query side: a ``probes`` column of the top-nprobe cells by
+    centroid inner product — the reference's nprobe knob
+    (query-index.py:30,48-54)."""
     bc = _bc_centroids(df.sparkSession, centroids)
 
     @pandas_udf("array<int>")
@@ -170,7 +173,7 @@ def add_probes(
                 part = np.tile(np.arange(sc.shape[1]), (len(s), 1))
             yield pd.Series(list(part.astype("int32")), index=s.index)
 
-    return df.withColumn(probes_col, probes_udf(embedding_col))
+    return df.withColumn("probes", probes_udf(embedding_col))
 
 
 def link_ivf_broadcast(
@@ -179,10 +182,10 @@ def link_ivf_broadcast(
     centroids: np.ndarray,
     k: int = 1,
     tau: float = 0.0,
-    nprobe: int = 32,
-    embedding_col: str = "embedding",
+    nprobe: int = NPROBE,
 ) -> DataFrame:
-    """IVF search against a broadcast bucketed index — the scale workhorse.
+    """IVF search of the ``embedding`` column against a broadcast
+    bucketed index — the scale workhorse.
 
     This is faiss IndexIVFFlat.search (query-index.py:111) re-expressed
     for Spark's execution model: the bucketed entity index (cell ->
@@ -201,7 +204,7 @@ def link_ivf_broadcast(
         build_ivf_broadcast_value(entities_pdf, centroids)
     )
 
-    keep_fields = [f for f in mentions.schema.fields if f.name != embedding_col]
+    keep_fields = [f for f in mentions.schema.fields if f.name != "embedding"]
     out_schema = (
         ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in keep_fields)
         + ", entity_id string, score double, rank int"
@@ -212,10 +215,10 @@ def link_ivf_broadcast(
     def search(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idx = _IvfIndex.from_broadcast(bc.value)
         for pdf in batches:
-            pdf = pdf[pdf[embedding_col].notna()]
+            pdf = pdf[pdf["embedding"].notna()]
             if pdf.empty:
                 continue
-            Q = np.stack(pdf[embedding_col].to_numpy())
+            Q = np.stack(pdf["embedding"].to_numpy())
             cand, sc64 = idx.search(Q, kk, p)
             yield from _emit_topk_cand(
                 pdf, keep_names, cand, sc64, idx.eids, kk, tau
@@ -625,18 +628,16 @@ def link_ann_join(
     centroids: np.ndarray,
     k: int = 1,
     tau: float = 0.0,
-    nprobe: int = 32,
-    mention_keys: tuple[str, ...] = ("doc_id", "span_idx"),
-    carry_cols: tuple[str, ...] = ("kind",),
+    nprobe: int = NPROBE,
 ) -> DataFrame:
     """Bucketed ANN top-k join (replaces index.search, query-index.py:111).
 
-    mentions: mention_keys + carry_cols + embedding (non-null).
+    mentions: doc_id, span_idx, kind, embedding (non-null).
     entities: entity_id + embedding.
-    Returns mention_keys + carry_cols + (entity_id, score, rank), score>=tau.
+    Returns (doc_id, span_idx, kind, entity_id, score, rank), score>=tau.
     """
-    keys = list(mention_keys)
-    carry = list(carry_cols)
+    keys = ["doc_id", "span_idx"]
+    carry = ["kind"]
     ment = mentions.filter(F.col("embedding").isNotNull())
 
     # index side: one bucket per entity (IVF cell membership)
@@ -697,8 +698,7 @@ def link_ann_join(
     candidates = probes.join(ent_ids, "bucket").select(*keys, "entity_id")
 
     # attach embeddings once per candidate (not once per probe)
-    m_emb = ment.select(*keys, *carry_cols,
-                        F.col("embedding").alias("m_emb"))
+    m_emb = ment.select(*keys, *carry, F.col("embedding").alias("m_emb"))
     e_emb = entities.select("entity_id", F.col("embedding").alias("e_emb"))
     scored = (
         candidates.join(m_emb, keys)

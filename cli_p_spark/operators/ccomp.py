@@ -67,6 +67,10 @@ from pyspark.sql.types import StructField, StructType
 # task under ~0.85 GB.
 UNION_FIND_MAX_ROWS = 2_000_000
 
+# star rounds the fallback may take; alternating stars converge in
+# O(log^2 n) rounds, so reaching this means the edge set is malformed
+STAR_MAX_ROUNDS = 50
+
 
 def _checkpointer(df: DataFrame, mode: str):
     """Lineage break per CC round.  mode='reliable' uses the cluster
@@ -170,38 +174,30 @@ def _finish(batches: Iterator[pa.RecordBatch]):
 
 
 def connected_components(
-    edges: DataFrame,
-    max_iter: int = 50,
-    src: str = "src",
-    dst: str = "dst",
-    checkpoint: str = "auto",
-    stats: dict | None = None,
+    edges: DataFrame, stats: dict | None = None
 ) -> DataFrame:
     """Returns (node, component) where component = min node id reachable.
 
-    ``edges`` is undirected (each pair once or twice, either orientation);
-    self-loops and edges with a NULL endpoint are dropped.  ``src`` and
-    ``dst`` must have the same type (TypeError otherwise).  Deterministic:
-    component ids are min string/numeric ids, independent of
-    partitioning.  ``checkpoint``: 'auto' (reliable iff
-    sc.setCheckpointDir was called — the cluster deployment), 'reliable',
-    or 'local'; it applies to the counted edges and to every star round.
-    ``max_iter`` bounds the star rounds of the fallback.  ``stats``:
-    optional dict that receives {'edge_rows': n, 'rounds': r} — n is the
-    count of self-loop-free edges that chose the finish, r is 0 when the
-    single-task union-find finished, else the star rounds it took to
-    converge.
+    ``edges`` holds undirected (src, dst) pairs of one type (TypeError
+    otherwise), each once or twice, either orientation; self-loops and
+    edges with a NULL endpoint are dropped.  Deterministic: component
+    ids are min string/numeric ids, independent of partitioning.  The
+    counted edges and every star round checkpoint reliably when the
+    session has a checkpoint dir (the cluster deployment), else locally.
+    ``stats``: optional dict that receives {'edge_rows': n, 'rounds': r}
+    — n is the count of self-loop-free edges that chose the finish, r is
+    0 when the single-task union-find finished, else the star rounds it
+    took to converge.
     """
-    typ = edges.schema[src].dataType
-    if edges.schema[dst].dataType != typ:
+    typ = edges.schema["src"].dataType
+    if edges.schema["dst"].dataType != typ:
         raise TypeError(
-            f"connected_components: {src} is {typ.simpleString()} but {dst} "
-            f"is {edges.schema[dst].dataType.simpleString()}"
+            f"connected_components: src is {typ.simpleString()} but dst "
+            f"is {edges.schema['dst'].dataType.simpleString()}"
         )
     e = _checkpointer(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst")),
-        checkpoint,
+        edges.select("src", "dst").filter(F.col("src") != F.col("dst")),
+        "auto",
     )
     n_e = e.count()
     if stats is not None:
@@ -211,11 +207,11 @@ def connected_components(
         return e.coalesce(1).mapInArrow(_finish, StructType(
             [StructField("node", typ, False),
              StructField("component", typ, False)]))
-    e = _checkpointer(e.distinct(), checkpoint)
+    e = _checkpointer(e.distinct(), "auto")
     n_e = e.count()
     converged = False
-    for rounds in range(1, max_iter + 1):
-        e2 = _checkpointer(_small_star(_large_star(e)), checkpoint)
+    for rounds in range(1, STAR_MAX_ROUNDS + 1):
+        e2 = _checkpointer(_small_star(_large_star(e)), "auto")
         # fixed point: edge sets equal.  Both sides are distinct() sets,
         # so e2 == e  iff  |e2| == |e| and e2 \ e is empty — one cheap
         # count over the checkpointed partitions decides almost every
@@ -237,10 +233,10 @@ def connected_components(
     if not converged:
         # a non-star edge set would silently emit MULTIPLE component ids
         # per node (corrupt dedup/canonicalization downstream) — fail
-        # loudly instead; alternating stars converge in O(log^2 n)
-        # rounds, so hitting 50 means something is genuinely wrong
+        # loudly instead
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
+            "connected_components did not converge in "
+            f"{STAR_MAX_ROUNDS} rounds"
         )
     # e is now (node -> component-min) star edges; add singleton roots
     comp = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
@@ -252,12 +248,12 @@ def connected_components(
 
 
 def canonical_mapping(
-    components: DataFrame, all_nodes: DataFrame, node_col: str = "node"
+    components: DataFrame, all_nodes: DataFrame
 ) -> DataFrame:
-    """(node, canonical_id) for every node — nodes in no edge map to
-    themselves."""
+    """(node, canonical_id) for every ``node`` of ``all_nodes`` — nodes
+    in no edge map to themselves."""
     return (
-        all_nodes.select(F.col(node_col).alias("node"))
+        all_nodes.select("node")
         .distinct()
         .join(components, "node", "left")
         .withColumn("canonical_id", F.coalesce("component", "node"))

@@ -21,10 +21,9 @@ Families:
                          docs sharing >= min_shared winnowed k-gram mins
                          (Schleimer et al., SIGMOD'03)
 - embedding_neardup_pairs  cosine near-dup pairs: banded sign-LSH
-                           (operators/lsh.py) at tau >= 0.8 under the
-                           default strategy='auto', the IVF self-join
-                           (operators/ann.py — same machinery as entity
-                           linking) below it
+                           (operators/lsh.py) at tau >= 0.8, the IVF
+                           self-join (operators/ann.py — same machinery
+                           as entity linking) below it
 
 Determinism: every hash is seeded (xxhash64 with fixed salt columns or
 NumPy hashes derived from config.SEED); candidate generation and
@@ -43,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import SEED
+from ..config import NLIST, NPROBE, SEED
 from .lsh import _CacheHandle, bucket_pairs, hyperplane_lsh_pairs
 
 
@@ -123,17 +122,15 @@ def minhash_lsh_pairs(
     df: DataFrame,
     content_col: str,
     id_col: str,
-    n_hashes: int = 64,
-    bands: int = 16,
-    shingle_w: int = 3,
     jaccard_threshold: float = 0.7,
     seed: int = SEED,
-    max_bucket: int = 1000,
 ) -> DataFrame:
     """Near-duplicate pairs (src, dst, jaccard) with jaccard >= threshold.
 
-    Candidates: rows colliding in >=1 of `bands` bands (rows/band =
-    n_hashes/bands).  Verification: exact estimated Jaccard = fraction of
+    ``minhash_signatures`` (64 hashes of word 3-shingles) banded by
+    ``lsh_pairs_from_signatures`` at its defaults.  Candidates: rows
+    colliding in >=1 of 16 bands (4 rows/band), buckets above 1000 rows
+    starred.  Verification: exact estimated Jaccard = fraction of
     agreeing MinHash components (unbiased estimator; for exact set
     Jaccard swap in a shingle-set join — estimator keeps verification a
     fixed-width column compare, scale-friendly)."""
@@ -144,12 +141,8 @@ def minhash_lsh_pairs(
     # `.signature_cache`: callers MUST unpersist it once the pair plan
     # has been materialized (curate() does), or the signature blocks pin
     # executor storage for the session lifetime.
-    sig = minhash_signatures(df, content_col, id_col, n_hashes, shingle_w,
-                             seed).persist()
-    out = lsh_pairs_from_signatures(
-        sig, n_hashes=n_hashes, bands=bands,
-        jaccard_threshold=jaccard_threshold, max_bucket=max_bucket,
-    )
+    sig = minhash_signatures(df, content_col, id_col, seed=seed).persist()
+    out = lsh_pairs_from_signatures(sig, jaccard_threshold=jaccard_threshold)
     out.signature_cache = sig
     return out
 
@@ -228,12 +221,10 @@ def _band_bucket_explode(sig: DataFrame, n_hashes: int, bands: int):
 def incremental_lsh_pairs(
     new_sig: DataFrame,
     corpus_sig: DataFrame,
-    corpus_bands: DataFrame | None = None,
     n_hashes: int = 64,
     bands: int = 16,
     jaccard_threshold: float = 0.7,
     max_bucket: int = 1000,
-    include_new_pairs: bool = True,
 ) -> DataFrame:
     """Near-dup pairs of an INCREMENT against an already-signed corpus —
     the daily-batch workflow at 10^12 docs, where re-banding the whole
@@ -242,31 +233,29 @@ def incremental_lsh_pairs(
 
     Inputs are signature tables (_id, _sig array<long>) with DISJOINT
     ids: ``corpus_sig`` is the stored table the pipeline maintains
-    (written once per doc, ever); ``corpus_bands`` is the stored banded
-    index (_id, _bucket) if the pipeline materializes it — pass None to
-    derive it here (one corpus pass; a real deployment stages it).
+    (written once per doc, ever); its band rows (_id, _bucket) are
+    derived here, one corpus pass.
 
     Output: (src, dst, jaccard) with src from the new batch; dst from
-    the corpus (cross pairs), plus new×new pairs (src < dst) when
-    ``include_new_pairs``.  Join volume is |new_bands ⋈ index|, i.e.
-    proportional to the BATCH, not the corpus.  The bucket-size guard
-    caps degenerate (boilerplate) buckets on BOTH sides: a new doc
-    landing in an oversized index bucket pairs ONLY with that bucket's
-    min corpus id, and an oversized new-batch bucket stars to its min
-    new id (linear, not quadratic).  Star candidates still pass the
-    jaccard >= threshold verify, so for the near-identical boilerplate
-    that triggers the cap the cluster stays connected for downstream
-    CC; bucket members that merely band-collide can drop below the
-    threshold and lose their star edge — the cap trades within-bucket
-    pair completeness for linear cost, never emits a wrong pair.
+    the corpus (cross pairs), plus the new×new pairs (src < dst).  Join
+    volume is |new_bands ⋈ index|, i.e. proportional to the BATCH, not
+    the corpus.  The bucket-size guard caps degenerate (boilerplate)
+    buckets on BOTH sides: a new doc landing in an oversized index
+    bucket pairs ONLY with that bucket's min corpus id, and an oversized
+    new-batch bucket stars to its min new id (linear, not quadratic).
+    Star candidates still pass the jaccard >= threshold verify, so for
+    the near-identical boilerplate that triggers the cap the cluster
+    stays connected for downstream CC; bucket members that merely
+    band-collide can drop below the threshold and lose their star edge
+    — the cap trades within-bucket pair completeness for linear cost,
+    never emits a wrong pair.
 
     The returned frame carries ``.band_rows`` (the new batch's band
     rows) — append them to the stored index so the NEXT increment sees
     this one, and ``.signature_cache`` to unpersist after
     materialization."""
     band_new = _band_bucket_explode(new_sig, n_hashes, bands).persist()
-    if corpus_bands is None:
-        corpus_bands = _band_bucket_explode(corpus_sig, n_hashes, bands)
+    corpus_bands = _band_bucket_explode(corpus_sig, n_hashes, bands)
 
     star = None
     if max_bucket < (1 << 30):
@@ -309,14 +298,13 @@ def incremental_lsh_pairs(
         cross.dropDuplicates(["src", "dst"]), new_sig, corpus_sig,
         n_hashes, jaccard_threshold,
     )
-    if include_new_pairs:
-        # the new batch pairs with itself through the batch path's
-        # kernel, with the same max_bucket star: a micro-batch full of
-        # boilerplate in one bucket pairs linearly, not quadratically
-        nn = bucket_pairs(band_new, ["_bucket"], max_bucket)
-        out = out.unionByName(_jaccard_verify(
-            nn, new_sig, new_sig, n_hashes, jaccard_threshold,
-        ))
+    # the new batch pairs with itself through the batch path's kernel,
+    # with the same max_bucket star: a micro-batch full of boilerplate
+    # in one bucket pairs linearly, not quadratically
+    nn = bucket_pairs(band_new, ["_bucket"], max_bucket)
+    out = out.unionByName(_jaccard_verify(
+        nn, new_sig, new_sig, n_hashes, jaccard_threshold,
+    ))
     out.band_rows = band_new
     out.signature_cache = _CacheHandle(band_new)
     return out
@@ -373,9 +361,12 @@ def simhash_pairs_from_fingerprints(
     max_hamming: int = 3,
     bands: int = 4,
 ) -> DataFrame:
-    """Banded Hamming pairs over a precomputed fingerprint table
-    (_id, _fp long) — persist-once / oracle-checkable twin of
-    simhash_pairs."""
+    """(src, dst, hamming) pairs, src < dst, of a fingerprint table
+    (_id, _fp long) whose fingerprints differ in <= max_hamming bits:
+    candidates share one of ``bands`` equal-width bands (exact-complete
+    when max_hamming < bands, by pigeonhole), verified by the Hamming
+    distance.  Takes the table ``simhash_fingerprints`` returns, so
+    fingerprints are computed and persisted once."""
     width = 64 // bands
     mask = (1 << width) - 1
     # band index packed into the key's high bits: one long join key
@@ -601,38 +592,32 @@ def embedding_neardup_pairs(
     embedding_col: str,
     id_col: str,
     tau: float = 0.95,
-    nlist: int = 100,
-    nprobe: int = 32,
+    nlist: int = NLIST,
+    nprobe: int = NPROBE,
     seed: int = SEED,
-    strategy: str = "auto",
 ) -> DataFrame:
     """ALL cosine near-duplicate pairs (src, dst, cosine) with
     cosine >= tau (no top-k cap: a vector with many near-dups reports
     every one — the round-1 k cap silently missed pairs beyond the k-th
     neighbor, a latent contract failure vs the all-pairs oracle).
 
-    strategy='auto' (default): route by tau.  At tau >= 0.8 the banded
-    sign-LSH path is sub-quadratic (candidates ~ n^2 * 2^-bits per band
-    for unrelated pairs) with bands sized by lsh_params_for_tau for
-    >= 0.99 per-pair recall — the right default for a 10^12-doc near-dup
-    dedup.  Below 0.8 sign-LSH recall per band decays too fast, and an
-    all-pairs-above-tau result is inherently candidate-heavy, so the
-    exact IVF path keeps its completeness guarantee.
-    strategy='ivf': fully distributed IVF bucket self-join — executor-
-    side sampled centroid training, probe-cell explode, ids-only
-    candidate join, exact cosine verify.  No driver collect anywhere
-    (the round-1 toPandas() of the whole vector set is gone); candidate
-    volume is the probe overlap (~nprobe/nlist of all pairs — quadratic
-    ORDER, exhaustive/oracle tool), AQE skew join splits hot cells.
+    Routed by tau.  At tau >= 0.8, banded sign-LSH (operators/lsh.py):
+    sub-quadratic (candidates ~ n^2 * 2^-bits per band for unrelated
+    pairs) with bands sized by lsh_params_for_tau for >= 0.99 per-pair
+    recall — the path for a 10^12-doc near-dup dedup; ``nlist`` and
+    ``nprobe`` are unused there.  Below 0.8 sign-LSH recall per band
+    decays too fast, and an all-pairs-above-tau result is inherently
+    candidate-heavy, so the IVF path keeps its completeness guarantee:
+    a fully distributed IVF bucket self-join — executor-side sampled
+    centroid training, probe-cell explode, ids-only candidate join,
+    exact cosine verify.  No driver collect anywhere; candidate volume
+    is the probe overlap (~nprobe/nlist of all pairs — quadratic ORDER,
+    exhaustive/oracle tool), AQE skew join splits hot cells.
     nprobe=nlist degenerates to the exact all-pairs result.
-    strategy='lsh': banded sign-LSH (operators/lsh.py) — the
-    sub-quadratic path for tau near 1 at corpus scale.
     """
-    if strategy == "auto":
-        strategy = "lsh" if tau >= 0.8 else "ivf"
-    if strategy == "lsh":
+    unit = _unit_vectors(df, embedding_col, id_col)
+    if tau >= 0.8:
         dim = len(df.select(embedding_col).first()[0])
-        unit = _unit_vectors(df, embedding_col, id_col)
         return hyperplane_lsh_pairs(
             unit, "_emb", "_nid", tau=tau, dim=dim, seed=seed,
         )
@@ -640,7 +625,6 @@ def embedding_neardup_pairs(
     from .ann import add_bucket, add_probes, train_centroids_distributed
     from .link import cosine_expr
 
-    unit = _unit_vectors(df, embedding_col, id_col)
     centroids = train_centroids_distributed(
         unit, nlist=nlist, seed=seed, embedding_col="_emb"
     )
@@ -819,7 +803,7 @@ def semantic_cluster_assign(
     df: DataFrame,
     embedding_col: str,
     id_col: str,
-    nlist: int = 100,
+    nlist: int = NLIST,
     seed: int = SEED,
 ) -> DataFrame:
     """(_nid, _emb, bucket): unit-normalized embeddings with their

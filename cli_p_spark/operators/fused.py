@@ -37,7 +37,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from ..config import PipelineConfig
+from ..config import NPROBE, PipelineConfig
 from ..functions.encoder import encode_batch
 from .ann import _IvfIndex, _emit_topk_cand, build_ivf_broadcast_value
 
@@ -52,7 +52,7 @@ def encode_and_link(
     entities_pdf: pd.DataFrame,
     centroids: np.ndarray,
     cfg: PipelineConfig = PipelineConfig(),
-    nprobe: int = 32,
+    nprobe: int = NPROBE,
     embeddings: bool = False,
 ) -> DataFrame:
     """spans(doc_id, span_idx, kind, content, *rest) -> fused rows.

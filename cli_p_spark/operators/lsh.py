@@ -65,10 +65,12 @@ class _CacheHandle:
             d.unpersist(blocking)
 
 
+# band-count ceiling for lsh_params_for_tau
+MAX_BANDS = 64
+
+
 def lsh_params_for_tau(
-    tau: float,
-    target_recall: float = 0.99,
-    max_bands: int = 64,
+    tau: float, target_recall: float = 0.99
 ) -> tuple[int, int]:
     """(bits_per_band, bands) sized for a recall target at ``tau``.
 
@@ -77,15 +79,15 @@ def lsh_params_for_tau(
     p1^b and recall over k bands is 1-(1-p1^b)^k.  Longer bands mean
     fewer random candidates (2^-bits per band for cos~0 pairs) but need
     more bands for the same recall — so pick the LONGEST band width whose
-    band count stays under ``max_bands``:
+    band count stays under MAX_BANDS:
 
         tau=0.95 -> (16, 23)   tau=0.90 -> (16, 53)
         tau=0.85 -> (12, 46)   tau=0.80 -> (10, 44)
 
     Below tau~0.75 no width fits and the widest-feasible fallback keeps
     recall at the cost of candidate volume — at that point an IVF-style
-    search (operators/ann.py) is the better tool; callers like
-    embedding_neardup_pairs(strategy='auto') route there instead."""
+    search (operators/ann.py) is the better tool; embedding_neardup_pairs
+    routes there below tau 0.8."""
     import math
 
     p1 = 1.0 - math.acos(max(-1.0, min(1.0, tau))) / math.pi
@@ -98,8 +100,8 @@ def lsh_params_for_tau(
             math.log(1.0 - target_recall) / math.log(1.0 - p_band)
         )
         if best is None:
-            best = (bits, min(bands, max_bands))  # widest as fallback
-        if bands <= max_bands:
+            best = (bits, min(bands, MAX_BANDS))  # widest as fallback
+        if bands <= MAX_BANDS:
             return bits, bands
     return best
 

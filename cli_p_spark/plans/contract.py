@@ -1751,11 +1751,19 @@ def _kg_corpus(spark):
 
 
 def _kg_mentions(spark, cfg):
-    from .pipeline import encode_mentions, explode_spans, split_skips
+    """(mentions, skips, ents_pdf, docs): the mentions and skips of the
+    fused pass ``run_pipeline`` writes (``plan_kg``), without part_id."""
+    import numpy as np
+
+    from ..operators.ann import train_centroids
+    from .pipeline import plan_kg
 
     docs, _, ents_pdf = _kg_corpus(spark)
-    ok, skips = split_skips(encode_mentions(explode_spans(docs), cfg))
-    return ok.select("doc_id", "span_idx", "kind", "embedding"), skips, \
+    centroids = train_centroids(
+        np.stack(ents_pdf["embedding"].to_numpy()), seed=cfg.seed
+    )
+    plan = plan_kg(docs, ents_pdf, centroids, cfg, embeddings=True)
+    return plan.mentions.drop("part_id"), plan.skips.drop("part_id"), \
         ents_pdf, docs
 
 

@@ -3,9 +3,13 @@
 Generalizes the reference's resumability devices — the fn_db/skip_db
 presence checks that make build-index.py idempotent (build-index.py:36-44,
 59-61) and the per-query timing print (query-index.py:110-113) — to
-partition granularity, per the north_rule: "every stage writes
+partition granularity.  The north_rule asks that "every stage writes
 per-partition lineage + metrics and commits checkpoints so a killed run
-resumes at partition granularity".
+resumes at partition granularity"; here a resume skips the partitions
+an earlier FINISHED run committed.  A run commits its lineage rows once,
+after all of its writes, so a run killed before that commit keeps none
+of its partitions (the reference keeps every file it embedded,
+build-index.py:42-44).
 
 Layout under ``out_dir``:
 
@@ -69,7 +73,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import PipelineConfig
+from ..config import NLIST, NPROBE, PipelineConfig
 # encode_mentions and explode_spans are not called here since plan_kg
 # replaced them, but perfbench's traced kg pass still looks them up on
 # this module
@@ -119,8 +123,8 @@ def run_pipeline(
     cfg: PipelineConfig = PipelineConfig(),
     run_id: str = "run0",
     n_parts: int = 16,
-    nlist: int = 100,
-    nprobe: int = 32,
+    nlist: int = NLIST,
+    nprobe: int = NPROBE,
     fail_after_parts: int | None = None,
     fail_mode: str = "after_lineage",
 ) -> dict:

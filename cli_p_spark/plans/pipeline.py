@@ -26,7 +26,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import PipelineConfig
+from ..config import NPROBE, PipelineConfig
 from ..functions.encoder import make_encode_udf
 from ..operators.fused import encode_and_link
 from ..operators.lsh import _CacheHandle
@@ -190,7 +190,7 @@ def plan_kg(
     entities_pdf,
     centroids,
     cfg: PipelineConfig = PipelineConfig(),
-    nprobe: int = 32,
+    nprobe: int = NPROBE,
     n_parts: int | None = None,
     todo: list[int] | None = None,
     embeddings: bool = False,

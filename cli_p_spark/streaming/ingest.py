@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import PipelineConfig
+from ..config import NPROBE, PipelineConfig
 from ..fixtures.generate import SPANS_SCHEMA
 
 
@@ -41,7 +41,7 @@ def incremental_triples(
     out_dir: str,
     checkpoint_dir: str,
     cfg: PipelineConfig = PipelineConfig(),
-    nprobe: int = 32,
+    nprobe: int = NPROBE,
 ):
     """Start the incremental KG ingest; returns the StreamingQuery.
 

@@ -12,8 +12,11 @@ Package and launch:
         --run-id    run_$(date +%s) \\
         [--nlist 100] [--nprobe 32] [--parts 256]
 
-Resume after a kill: rerun with the same --output — completed embed
-partitions are detected via the lineage table and skipped.
+Resume: rerun with the same --output.  The embed partitions an earlier
+finished run committed to the lineage table are skipped.  A run commits
+its lineage once, after all of its writes, so a run killed before that
+commit keeps none of its partitions, and with no earlier lineage the
+rerun starts over.
 
 On a real cluster leave --master unset and let spark-submit's
 --master/--deploy-mode take over (its --conf values, too, win over the
@@ -44,13 +47,15 @@ import time
 
 
 def main(argv=None):
+    from cli_p_spark.config import NLIST, NPROBE
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--documents")
     ap.add_argument("--entities")
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-id", default=f"run{int(time.time())}")
-    ap.add_argument("--nlist", type=int, default=100)
-    ap.add_argument("--nprobe", type=int, default=32)
+    ap.add_argument("--nlist", type=int, default=NLIST)
+    ap.add_argument("--nprobe", type=int, default=NPROBE)
     ap.add_argument("--parts", type=int, default=32)
     ap.add_argument("--tau", type=float, default=None)
     ap.add_argument("--synth", type=int, default=0,

@@ -94,43 +94,38 @@ def test_canonical_mapping_covers_singletons(spark):
 
 
 def test_cc_reliable_checkpoint_mode(spark, tmp_path):
-    """checkpoint='reliable' (executor-loss-safe lineage break) returns
-    the same components as the local mode, and actually writes RDD
-    checkpoint files under the configured dir."""
+    """With a session checkpoint dir set (the cluster deployment), CC
+    checkpoints reliably: the same components as without one, and RDD
+    checkpoint files under that dir."""
     import os
-
-    from cli_p_spark.operators.ccomp import connected_components
 
     chk = str(tmp_path / "chk")
     sc = spark.sparkContext
     before = sc.getCheckpointDir()
-    sc.setCheckpointDir(chk)
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r")],
         "src string, dst string",
     )
+
+    def components():
+        return {(r["node"], r["component"])
+                for r in connected_components(edges).collect()}
+
+    sc.setCheckpointDir(chk)
     try:
-        rel = {
-            (r["node"], r["component"])
-            for r in connected_components(
-                edges, checkpoint="reliable").collect()
-        }
+        rel = components()
     finally:
-        # restore the dir: the session is shared, and 'auto' CC and
-        # graph calls in later tests would checkpoint under this one
+        # clear the dir again: the session is shared, and CC and graph
+        # calls in later tests would checkpoint under this one
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(
             sc._jvm.scala.Option.apply(before))
     assert sc.getCheckpointDir() == before
-    loc = {
-        (r["node"], r["component"])
-        for r in connected_components(edges, checkpoint="local").collect()
-    }
-    assert rel == loc
+    assert rel == components()
     assert {c for _, c in rel} == {"a", "x", "p"}
     found = []
     for root, _dirs, files in os.walk(chk):
         found.extend(files)
-    assert found, "reliable mode must materialize checkpoint files"
+    assert found, "a checkpoint dir must receive checkpoint files"
 
 
 @pytest.mark.parametrize("finish", ["union_find", "star"])

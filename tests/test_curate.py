@@ -27,6 +27,8 @@ def test_curate_pipeline(spark):
 
 
 def test_embedding_neardup_lsh_strategy(spark):
+    """tau 0.98 routes to the banded sign-LSH path, which finds every
+    jittered copy."""
     import numpy as np
 
     from cli_p_spark.operators.dedup import embedding_neardup_pairs
@@ -44,7 +46,7 @@ def test_embedding_neardup_lsh_strategy(spark):
     got = {
         (r["src"], r["dst"])
         for r in embedding_neardup_pairs(
-            df, "embedding", "vid", tau=0.98, strategy="lsh"
+            df, "embedding", "vid", tau=0.98
         ).collect()
     }
     expected = {(str(i * 2), str(i * 2 + 1)) for i in range(30)}

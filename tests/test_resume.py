@@ -1,8 +1,12 @@
 """M5 gate: kill/resume at partition granularity (SURVEY.md §5.5).
 
-Kill after p embed partitions; resume; assert (a) the resumed run only
-computed the missing partitions (lineage run_id proves it), (b) final
-triples equal a fresh uninterrupted run."""
+A resume skips the partitions an earlier finished run committed; a run
+commits its lineage once, after all of its writes, so a real kill before
+that commit leaves nothing to resume from.  The partially committed
+state these tests resume from comes from ``fail_after_parts``: a run
+that processes and commits only its first p embed partitions.  Resume;
+assert (a) the resumed run only computed the missing partitions (lineage
+run_id proves it), (b) final triples equal a fresh uninterrupted run."""
 
 import glob
 import os

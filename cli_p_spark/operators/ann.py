@@ -61,28 +61,29 @@ from .topk import topk_per_group
 
 # rows k-means trains on; a larger index trains on a seeded sample
 MAX_TRAIN = 100_000
+# k-means iterations: a fixed count keeps training deterministic
+TRAIN_ITERS = 15
 
 
 def train_centroids(
-    embeddings: np.ndarray, nlist: int = NLIST, iters: int = 15,
-    seed: int = SEED, max_train: int = MAX_TRAIN,
+    embeddings: np.ndarray, nlist: int = NLIST, seed: int = SEED,
 ) -> np.ndarray:
     """Spherical k-means (max-inner-product assignment, mean re-norm).
 
     Mirrors faiss IVF training (build-index.py:96) but deterministic:
-    seeded init, fixed iteration count.  Indexes larger than ``max_train``
-    train on a seeded sample — the reference's own train-once device
-    (build-index.py:94-97 trains on the first 20k chunk only); centroid
-    quality needs a sample, not the population.
+    seeded init, ``TRAIN_ITERS`` iterations.  Indexes larger than
+    ``MAX_TRAIN`` train on a seeded sample — the reference's own
+    train-once device (build-index.py:94-97 trains on the first 20k chunk
+    only); centroid quality needs a sample, not the population.
     """
     X = np.asarray(embeddings, dtype=np.float64)
     rng = np.random.default_rng(seed)
-    if len(X) > max_train:
-        X = X[rng.choice(len(X), max_train, replace=False)]
+    if len(X) > MAX_TRAIN:
+        X = X[rng.choice(len(X), MAX_TRAIN, replace=False)]
     n = len(X)
     k = min(nlist, n)
     C = X[rng.choice(n, k, replace=False)].copy()
-    for _ in range(iters):
+    for _ in range(TRAIN_ITERS):
         assign = np.argmax(X @ C.T, axis=1)
         for j in range(k):
             members = X[assign == j]

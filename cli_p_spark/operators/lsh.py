@@ -144,8 +144,8 @@ def hyperplane_lsh_pairs(
     dropped before banding: they make no pairs.
     """
     auto_bits, auto_bands = lsh_params_for_tau(tau)
-    bits_per_band = bits_per_band or auto_bits
-    bands = bands or auto_bands
+    bits_per_band = auto_bits if bits_per_band is None else bits_per_band
+    bands = auto_bands if bands is None else bands
     n_planes = bits_per_band * bands
     rng = np.random.default_rng(seed ^ 0x15A9)
     H32 = rng.standard_normal((dim, n_planes)).astype(np.float32)

@@ -29,16 +29,17 @@ dynamic-partition-OVERWRITES their mentions/, skips/ and triples/
 directories: all three commit before lineage, so a kill between the two
 leaves partitions unmarked — the resume re-runs them and the overwrite
 replaces (never duplicates) their rows.  Idempotent per-partition
-commit, no write-ordering race (gated by test_resume's after_data kill).
-With no lineage at all nothing is committed, so a run first drops the
-three tables: rows a killed run left under another n_parts could sit in
-a partition this run never rewrites.
+commit, no write-ordering race.  With no lineage at all nothing is
+committed, so a run first drops the three tables: rows a killed run
+left under another n_parts could sit in a partition this run never
+rewrites.
 A finished partition already holds its triples, so a resume relinks
 nothing; ``n_triples`` is the sum of ``n_links`` over every done
 partition.  The links of partitions written under another n_parts, dim,
-seed, k, tau, nlist or nprobe would not mix with this run's, so every
-lineage row stores that config and a resume under a different one
-raises ValueError before it writes anything.
+seed, k, tau, nlist, nprobe or entity table would not mix with this
+run's, so every lineage row stores that config (the entity table as an
+order-independent digest of its ids and float32 vectors) and a resume
+under a different one raises ValueError before it writes anything.
 
 One Python pass per span: ``plan_kg`` (plans/pipeline.py), a single
 mapInPandas (operators/fused.py) that encodes each span and searches
@@ -68,8 +69,10 @@ skips the right work.
 from __future__ import annotations
 
 import datetime
+import hashlib
 import time
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -115,6 +118,15 @@ def _append_lineage(spark: SparkSession, out_dir: str, rows: list[tuple]):
     )
 
 
+def _entities_digest(entity_ids, emat: np.ndarray) -> str:
+    """Digest of the (entity_id, float32 vector) rows, whatever their
+    order: the sorted row hashes, hashed."""
+    rows = sorted(
+        hashlib.blake2b(f"{e}\0".encode() + v.tobytes(), digest_size=16)
+        .digest() for e, v in zip(entity_ids, emat.astype(np.float32)))
+    return hashlib.blake2b(b"".join(rows), digest_size=16).hexdigest()
+
+
 def run_pipeline(
     spark: SparkSession,
     documents: DataFrame,
@@ -125,43 +137,35 @@ def run_pipeline(
     n_parts: int = 16,
     nlist: int = NLIST,
     nprobe: int = NPROBE,
-    fail_after_parts: int | None = None,
-    fail_mode: str = "after_lineage",
 ) -> dict:
     """Execute (or resume) the KG pipeline into ``out_dir``.
 
-    Returns ``status`` ('done' or 'killed') and ``out_dir``; a finished
-    run also returns ``n_triples``, the links of every done partition.
-    A resume under a config other than the one ``out_dir`` was started
-    with, or an ``n_parts``, ``nlist`` or ``nprobe`` below 1, raises
-    ValueError before anything is written.
-
-    ``fail_after_parts`` simulates a mid-run kill for the resume tests:
-    only that many partitions are processed before returning.
-    ``fail_mode='after_data'`` kills INSIDE the crash window — after the
-    partition data commits but before its lineage rows do.  Resume stays
-    correct either way because partition writes are dynamic-partition
-    OVERWRITES: a partition whose lineage row is missing is simply
-    re-run, and the re-run replaces its directory instead of appending
-    duplicates (idempotent per-partition commit).
+    Returns ``status`` ('done'), ``out_dir`` and ``n_triples``, the links
+    of every done partition.  A resume under a config other than the one
+    ``out_dir`` was started with, an ``n_parts``, ``nlist`` or ``nprobe``
+    below 1, or an empty entity table raises ValueError before anything
+    is written.
     """
     import json
-
-    import numpy as np
 
     from ..operators.ann import train_centroids
     from .tables import TableStore
 
     # checked before the stale-table drop below: under 1, n_parts and
-    # nprobe plan no work yet report "done", and nlist fails mid-run
+    # nprobe plan no work yet report "done", and nlist or an empty entity
+    # table fails mid-run
     for name, value in (("n_parts", n_parts), ("nlist", nlist),
                         ("nprobe", nprobe)):
         if value < 1:
             raise ValueError(f"{name} must be >= 1, got {value}")
+    if not len(entities_pdf):
+        raise ValueError("the entity table is empty")
+    emat = np.stack(entities_pdf["embedding"].to_numpy())
     store = TableStore(spark, out_dir)
     config = json.dumps({
         "n_parts": n_parts, "dim": cfg.dim, "seed": cfg.seed, "k": cfg.k,
         "tau": cfg.tau, "nlist": nlist, "nprobe": nprobe,
+        "entities": _entities_digest(entities_pdf["entity_id"], emat),
     }, sort_keys=True)
 
     lineage = read_lineage(spark, out_dir)
@@ -175,7 +179,8 @@ def run_pipeline(
             raise ValueError(
                 f"{out_dir} was started with config {sorted(stored)}; "
                 f"this run's is {config}: resume with the same n_parts, "
-                "dim, seed, k, tau, nlist and nprobe, or use a new output")
+                "dim, seed, k, tau, nlist, nprobe and entity table, or use "
+                "a new output")
         links = {r["part_id"]: r["n_links"] for r in done}
     else:
         # nothing is committed, so any rows here were left by a run killed
@@ -187,14 +192,9 @@ def run_pipeline(
     # document hashes to yields no rows and no lineage row, so it stays
     # in todo and costs a later run nothing but the filtered scan
     todo = [p for p in range(n_parts) if p not in links]
-    if fail_after_parts is not None:
-        todo = todo[:fail_after_parts]
     if todo:
         t0 = time.time()
-        centroids = train_centroids(
-            np.stack(entities_pdf["embedding"].to_numpy()), nlist=nlist,
-            seed=cfg.seed,
-        )
+        centroids = train_centroids(emat, nlist=nlist, seed=cfg.seed)
         # cached: the mentions write, the per-partition counts, the skips
         # write and the triples write all consume it, none reads a table
         # back
@@ -214,10 +214,6 @@ def run_pipeline(
             if any(r[n] for r in counts):
                 store.overwrite_partitions(df, table, partition_by=("part_id",))
         rows.unpersist()
-        if fail_mode == "after_data" and fail_after_parts is not None:
-            # simulated kill inside the crash window: data committed,
-            # lineage not — these partitions must re-run idempotently
-            return {"out_dir": out_dir, "status": "killed"}
         wall, now = time.time() - t0, _utcnow()
         if counts:
             _append_lineage(spark, out_dir, [
@@ -226,7 +222,5 @@ def run_pipeline(
                 for r in counts
             ])
         links.update((r["part_id"], r["n_links"]) for r in counts)
-    if fail_after_parts is not None:
-        return {"out_dir": out_dir, "status": "killed"}
     return {"out_dir": out_dir, "status": "done",
             "n_triples": sum(links.values())}

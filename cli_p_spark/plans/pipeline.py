@@ -198,17 +198,20 @@ def plan_kg(
     """documents -> the one fused encode+search pass, as a ``KgPlan``.
 
     Each span gets ``part_id = pmod(xxhash64(doc_id), n_parts)``
-    (``n_parts`` defaults to ``cfg.embed_partitions``); only the ids in
-    ``todo`` (default: all) are planned.  The spans are placed by their
-    id's slot in ``todo`` (repartitionById), so each task holds whole
-    partitions and a partitioned write leaves one file per partition
-    directory.  Direct placement, because hash partitioning a few small
-    ints collides and leaves tasks empty, and range partitioning samples
-    its input in an extra scan.  Linking is exact (f64, ties by
-    entity_id) when nprobe >= len(centroids), IVF with the reference's
-    nprobe knob (query-index.py:30) below that.  ``embeddings=True``
-    keeps the vectors, for ``mentions``."""
-    n_parts = n_parts or cfg.embed_partitions
+    (``n_parts`` defaults to ``cfg.embed_partitions``; below 1 raises
+    ValueError); only the ids in ``todo`` (default: all) are planned.
+    The spans are placed by their id's slot in ``todo``
+    (repartitionById), so each task holds whole partitions and a
+    partitioned write leaves one file per partition directory.  Direct
+    placement, because hash partitioning a few small ints collides and
+    leaves tasks empty, and range partitioning samples its input in an
+    extra scan.  Linking is exact (f64, ties by entity_id) when nprobe >=
+    len(centroids), IVF with the reference's nprobe knob
+    (query-index.py:30) below that.  ``embeddings=True`` keeps the
+    vectors, for ``mentions``."""
+    n_parts = cfg.embed_partitions if n_parts is None else n_parts
+    if n_parts < 1:
+        raise ValueError(f"n_parts must be >= 1, got {n_parts}")
     todo = list(range(n_parts)) if todo is None else list(todo)
     spans = explode_spans(documents).withColumn(
         "part_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int"))

@@ -153,6 +153,3 @@ class TableStore:
             if any(m in str(e) for m in self._ABSENT_MARKERS):
                 return None
             raise
-
-    def exists(self, table: str) -> bool:
-        return self.read(table) is not None

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import NPROBE, PipelineConfig
+from ..config import PipelineConfig
 from ..fixtures.generate import SPANS_SCHEMA
 
 
@@ -41,7 +41,6 @@ def incremental_triples(
     out_dir: str,
     checkpoint_dir: str,
     cfg: PipelineConfig = PipelineConfig(),
-    nprobe: int = NPROBE,
 ):
     """Start the incremental KG ingest; returns the StreamingQuery.
 
@@ -59,7 +58,7 @@ def incremental_triples(
     def process_batch(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
             return
-        plan = plan_kg(batch_df, entities_pdf, centroids, cfg, nprobe=nprobe)
+        plan = plan_kg(batch_df, entities_pdf, centroids, cfg)
         # both sinks project the fused pass: cached, it runs once a batch
         rows = plan.rows.persist()
         try:

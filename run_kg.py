@@ -34,8 +34,8 @@ Inputs:
 Outputs under --output, each partitioned by part_id except lineage:
 mentions/ skips/ triples/ lineage/ (see cli_p_spark/plans/lineage.py for
 the resume protocol).  A resume must use the same --parts, --nlist,
---nprobe and --tau as the run it continues; otherwise it fails before
-writing anything.
+--nprobe, --tau and entity table as the run it continues; otherwise it
+fails before writing anything.
 """
 
 from __future__ import annotations

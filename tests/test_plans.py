@@ -66,3 +66,22 @@ def test_q1_whole_stage_codegen(spark):
     assert "*(1)" in plan
     # partial+final aggregation (map-side combine) is in place
     assert "partial_sum" in plan
+
+
+def test_plan_kg_n_parts_below_one_raises(spark, corpus_small):
+    """n_parts=0 plans no partition: it raises, as run_pipeline does,
+    instead of standing for cfg.embed_partitions."""
+    import numpy as np
+    import pytest
+
+    from cli_p_spark.fixtures.generate import documents_to_spark
+    from cli_p_spark.operators.ann import train_centroids
+    from cli_p_spark.plans.pipeline import plan_kg
+
+    docs_pdf, ents_pdf = corpus_small
+    docs = documents_to_spark(spark, docs_pdf)
+    centroids = train_centroids(
+        np.stack(ents_pdf["embedding"].to_numpy()), nlist=16)
+    for n_parts in (0, -1):
+        with pytest.raises(ValueError, match="n_parts"):
+            plan_kg(docs, ents_pdf, centroids, n_parts=n_parts)

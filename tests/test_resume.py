@@ -2,11 +2,17 @@
 
 A resume skips the partitions an earlier finished run committed; a run
 commits its lineage once, after all of its writes, so a real kill before
-that commit leaves nothing to resume from.  The partially committed
-state these tests resume from comes from ``fail_after_parts``: a run
-that processes and commits only its first p embed partitions.  Resume;
-assert (a) the resumed run only computed the missing partitions (lineage
-run_id proves it), (b) final triples equal a fresh uninterrupted run."""
+that commit leaves nothing to resume from.  The tests start only from
+states a run can leave:
+
+- a partly committed output: a finished run over only the documents of
+  some part ids (``_subset``);
+- a kill inside the commit window: ``_append_lineage`` raises, so the
+  run's data lands and its lineage does not (``_no_lineage_commit``).
+
+Resume; assert (a) the resumed run only computed the missing partitions
+(lineage run_id proves it), (b) final triples equal a fresh
+uninterrupted run."""
 
 import glob
 import os
@@ -16,7 +22,28 @@ from pyspark.sql import functions as F
 
 from cli_p_spark.config import PipelineConfig
 from cli_p_spark.fixtures.generate import documents_to_spark
+from cli_p_spark.plans import lineage
 from cli_p_spark.plans.lineage import read_lineage, run_pipeline
+
+
+def _subset(docs, parts, n_parts=16):
+    """The documents whose part id is in ``parts``: a finished run over
+    them leaves the partly committed output a resume starts from."""
+    return docs.filter(
+        F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).isin(list(parts)))
+
+
+class _Killed(Exception):
+    pass
+
+
+def _no_lineage_commit(monkeypatch):
+    """A kill inside the commit window: the run's partition data lands,
+    then its lineage commit fails."""
+    def killed(*args, **kwargs):
+        raise _Killed("killed before the lineage commit")
+
+    monkeypatch.setattr(lineage, "_append_lineage", killed)
 
 
 def _triples_set(spark, out_dir):
@@ -40,18 +67,18 @@ def test_kill_resume_partition_granularity(spark, corpus_small, tmp_path):
     r = run_pipeline(spark, docs, ents_pdf, full_dir, cfg, run_id="full")
     assert r["status"] == "done"
 
-    # killed run: only 5 of 16 partitions complete
+    # partly committed output: a finished run over 5 of 16 partitions
     resume_dir = str(tmp_path / "resume")
     r1 = run_pipeline(
-        spark, docs, ents_pdf, resume_dir, cfg,
-        run_id="run1", fail_after_parts=5,
+        spark, _subset(docs, range(5)), ents_pdf, resume_dir, cfg,
+        run_id="run1",
     )
-    assert r1["status"] == "killed"
+    assert r1["status"] == "done"
     lin1 = read_lineage(spark, resume_dir)
     done1 = {
         r["part_id"] for r in lin1.filter("stage='embed'").collect()
     }
-    assert len(done1) == 5
+    assert done1 == set(range(5))
 
     # resume: must finish, recomputing nothing from run1
     r2 = run_pipeline(
@@ -105,12 +132,12 @@ def test_lineage_metrics_present(spark, corpus_small, tmp_path):
 
 
 def test_kill_inside_commit_window_no_duplicates(spark, corpus_small,
-                                                 tmp_path):
-    """The crash-atomicity gate: kill AFTER partition data commits but
-    BEFORE its lineage rows do (fail_mode='after_data').  The resume
-    re-runs those partitions; dynamic-partition overwrite must replace,
-    not duplicate, their mention rows — final result identical to a
-    fresh uninterrupted run."""
+                                                 tmp_path, monkeypatch):
+    """The crash-atomicity gate: a resume is killed AFTER its partition
+    data commits but BEFORE its lineage rows do.  The next resume re-runs
+    those partitions; dynamic-partition overwrite must replace, not
+    duplicate, their mention rows — final result identical to a fresh
+    uninterrupted run."""
     docs_pdf, ents_pdf = corpus_small
     docs = documents_to_spark(spark, docs_pdf)
     cfg = PipelineConfig()
@@ -119,21 +146,26 @@ def test_kill_inside_commit_window_no_duplicates(spark, corpus_small,
     run_pipeline(spark, docs, ents_pdf, full_dir, cfg, run_id="full")
 
     crash_dir = str(tmp_path / "crash")
-    r1 = run_pipeline(
-        spark, docs, ents_pdf, crash_dir, cfg,
-        run_id="run1", fail_after_parts=5, fail_mode="after_data",
-    )
-    assert r1["status"] == "killed"
+    run_pipeline(spark, _subset(docs, range(5)), ents_pdf, crash_dir, cfg,
+                 run_id="run1")
+    n_committed = spark.read.parquet(f"{crash_dir}/mentions").count()
+    _no_lineage_commit(monkeypatch)
+    with pytest.raises(_Killed):
+        run_pipeline(spark, docs, ents_pdf, crash_dir, cfg, run_id="run2")
+    monkeypatch.undo()
     # data landed, lineage did not: the exact corruption window
-    assert read_lineage(spark, crash_dir) is None
-    n_orphan = spark.read.parquet(f"{crash_dir}/mentions").count()
-    assert n_orphan > 0
-
-    r2 = run_pipeline(spark, docs, ents_pdf, crash_dir, cfg, run_id="run2")
-    assert r2["status"] == "done"
-    # every partition re-ran (none was marked done)...
     lin = read_lineage(spark, crash_dir).filter("stage='embed'")
-    assert lin.filter("run_id='run2'").count() == 16
+    assert {r["run_id"] for r in lin.collect()} == {"run1"}
+    n_orphan = spark.read.parquet(f"{crash_dir}/mentions").count()
+    assert n_orphan > n_committed
+
+    r3 = run_pipeline(spark, docs, ents_pdf, crash_dir, cfg, run_id="run3")
+    assert r3["status"] == "done"
+    # every uncommitted partition re-ran, no committed one did...
+    lin = read_lineage(spark, crash_dir).filter("stage='embed'")
+    assert {r["part_id"] for r in lin.filter("run_id='run3'").collect()} \
+        == set(range(5, 16))
+    assert lin.count() == 16
     # ...and the overwritten partitions hold NO duplicate mentions
     men = spark.read.parquet(f"{crash_dir}/mentions")
     assert men.count() == men.select("doc_id", "span_idx").distinct().count()
@@ -269,9 +301,9 @@ def _all_triples(df):
 def test_fused_and_disk_links_agree_at_k3(spark, corpus_small, tmp_path):
     """The triples a run stores are the links of the mentions it stores:
     link_ivf_broadcast over mentions/ gives the same triples, scores and
-    ranks.  A kill after 5 partitions resumes to those triples and the
-    same n_triples, relinking nothing: the killed run's partitions keep
-    the triples it wrote."""
+    ranks.  A partly committed output of 5 partitions resumes to those
+    triples and the same n_triples, relinking nothing: the first run's
+    partitions keep the triples it wrote."""
     import numpy as np
 
     from cli_p_spark.operators.ann import link_ivf_broadcast, train_centroids
@@ -296,23 +328,24 @@ def test_fused_and_disk_links_agree_at_k3(spark, corpus_small, tmp_path):
     assert _all_triples(relinked) == fresh
 
     crash = str(tmp_path / "crash")
-    r1 = run_pipeline(spark, docs, ents_pdf, crash, cfg, run_id="run1",
-                      fail_after_parts=5)
-    assert r1["status"] == "killed"
-    killed = {r["part_id"] for r in read_lineage(spark, crash).collect()}
+    r1 = run_pipeline(spark, _subset(docs, range(5)), ents_pdf, crash, cfg,
+                      run_id="run1")
+    assert r1["status"] == "done"
+    first = {r["part_id"] for r in read_lineage(spark, crash).collect()}
+    assert first == set(range(5))
     stored = {
         d: sorted(glob.glob(os.path.join(crash, "triples", f"part_id={d}",
                                          "*.parquet")))
-        for d in killed
+        for d in first
     }
     r2 = run_pipeline(spark, docs, ents_pdf, crash, cfg, run_id="run2")
     assert r2["n_triples"] == len(fresh)
     assert _all_triples(spark.read.parquet(f"{crash}/triples")) == fresh
-    # the resume left the killed run's triples files as they were
+    # the resume left the first run's triples files as they were
     assert stored == {
         d: sorted(glob.glob(os.path.join(crash, "triples", f"part_id={d}",
                                          "*.parquet")))
-        for d in killed
+        for d in first
     }
     # the resumed run also wrote one file per partition it ran
     for d in glob.glob(os.path.join(crash, "mentions", "part_id=*")):
@@ -321,8 +354,9 @@ def test_fused_and_disk_links_agree_at_k3(spark, corpus_small, tmp_path):
 
 def test_resume_with_empty_partition_ids(spark, corpus_small, tmp_path):
     """Fewer documents than partitions: ids no document hashes to get no
-    lineage, a rerun re-embeds nothing, and a kill whose partitions
-    include empty ids resumes to the fresh run's triples."""
+    lineage, a rerun re-embeds nothing, and a partly committed output
+    whose part ids include empty ones resumes to the fresh run's
+    triples."""
     docs_pdf, ents_pdf = corpus_small
     few = docs_pdf.head(6)
     docs = documents_to_spark(spark, few)
@@ -345,14 +379,14 @@ def test_resume_with_empty_partition_ids(spark, corpus_small, tmp_path):
     assert embed_ids(full, "b") == set()
     assert spark.read.parquet(f"{full}/mentions").count() == n_mentions
 
-    # the kill covers ids 0..present[1]: two present ids and the empty
-    # ids before them
-    n_kill = present[1] + 1
-    assert n_kill > 2
+    # the first run covers ids 0..present[1]: two present ids and the
+    # empty ids before them
+    n_first = present[1] + 1
+    assert n_first > 2
     crash = str(tmp_path / "crash")
-    r1 = run_pipeline(spark, docs, ents_pdf, crash, run_id="run1",
-                      fail_after_parts=n_kill)
-    assert r1["status"] == "killed"
+    r1 = run_pipeline(spark, _subset(docs, range(n_first)), ents_pdf, crash,
+                      run_id="run1")
+    assert r1["status"] == "done"
     assert embed_ids(crash, "run1") == set(present[:2])
     r2 = run_pipeline(spark, docs, ents_pdf, crash, run_id="run2")
     assert r2["status"] == "done"
@@ -370,15 +404,15 @@ def _listing(root):
 
 
 def test_resume_under_changed_config_raises(spark, corpus_small, tmp_path):
-    """A run killed at 16 parts and resumed at 8 parts, or with k=3,
-    would mix two link sets in triples/: the resume raises before it
+    """A partly committed output at 16 parts resumed at 8 parts, or with
+    k=3, would mix two link sets in triples/: the resume raises before it
     writes anything.  The same config then resumes."""
     docs_pdf, ents_pdf = corpus_small
     docs = documents_to_spark(spark, docs_pdf)
     crash = str(tmp_path / "crash")
-    r1 = run_pipeline(spark, docs, ents_pdf, crash, run_id="run1",
-                      fail_after_parts=5)
-    assert r1["status"] == "killed"
+    r1 = run_pipeline(spark, _subset(docs, range(5)), ents_pdf, crash,
+                      run_id="run1")
+    assert r1["status"] == "done"
     before = _listing(crash)
     for change in ({"n_parts": 8}, {"cfg": PipelineConfig(k=3)}):
         with pytest.raises(ValueError, match="config"):
@@ -387,6 +421,49 @@ def test_resume_under_changed_config_raises(spark, corpus_small, tmp_path):
         assert _listing(crash) == before, change
     r2 = run_pipeline(spark, docs, ents_pdf, crash, run_id="run2")
     assert r2["status"] == "done"
+
+
+def test_resume_under_another_entity_table_raises(spark, corpus_small,
+                                                  tmp_path):
+    """The same vectors under other entity ids would link the resumed
+    partitions to ids the committed ones never use: the resume raises
+    before it writes anything, and the first table then resumes."""
+    docs_pdf, ents_pdf = corpus_small
+    docs = documents_to_spark(spark, docs_pdf)
+    renamed = ents_pdf.assign(entity_id="B_" + ents_pdf["entity_id"])
+    out = str(tmp_path / "out")
+    run_pipeline(spark, _subset(docs, range(5)), ents_pdf, out, run_id="a")
+    before = _listing(out)
+    with pytest.raises(ValueError, match="entity table"):
+        run_pipeline(spark, docs, renamed, out, run_id="b")
+    assert _listing(out) == before
+    r = run_pipeline(spark, docs, ents_pdf, out, run_id="b")
+    assert r["status"] == "done"
+    objs = {row["obj"] for row in
+            spark.read.parquet(f"{out}/triples").select("obj").collect()}
+    assert objs and not any(o.startswith("B_") for o in objs)
+
+
+def _leftover(out):
+    """An uncommitted triples file under ``out``, as a killed run leaves
+    it; returns the listing of ``out``."""
+    leftover = out / "triples" / "part_id=0" / "part-0.parquet"
+    leftover.parent.mkdir(parents=True)
+    leftover.write_bytes(b"uncommitted")
+    return _listing(str(out))
+
+
+def test_empty_entity_table_raises_before_writing(spark, corpus_small,
+                                                  tmp_path):
+    """An empty entity table has nothing to link to; the run raises
+    before it drops a killed run's uncommitted rows."""
+    docs_pdf, ents_pdf = corpus_small
+    docs = documents_to_spark(spark, docs_pdf.iloc[:20])
+    out = tmp_path / "out"
+    before = _leftover(out)
+    with pytest.raises(ValueError, match="entity table"):
+        run_pipeline(spark, docs, ents_pdf.iloc[:0], str(out), run_id="e")
+    assert _listing(str(out)) == before
 
 
 @pytest.mark.parametrize("bad", [{"n_parts": 0}, {"nlist": 0},
@@ -398,18 +475,15 @@ def test_out_of_range_sizes_raise_before_writing(spark, corpus_small,
     docs_pdf, ents_pdf = corpus_small
     docs = documents_to_spark(spark, docs_pdf.iloc[:20])
     out = tmp_path / "out"
-    leftover = out / "triples" / "part_id=0" / "part-0.parquet"
-    leftover.parent.mkdir(parents=True)
-    leftover.write_bytes(b"uncommitted")
-    before = _listing(str(out))
+    before = _leftover(out)
     name, = bad
     with pytest.raises(ValueError, match=name):
         run_pipeline(spark, docs, ents_pdf, str(out), run_id="bad", **bad)
     assert _listing(str(out)) == before
 
 
-def test_uncommitted_rows_do_not_survive_another_n_parts(spark, corpus_small,
-                                                         tmp_path):
+def test_uncommitted_rows_do_not_survive_another_n_parts(
+        spark, corpus_small, tmp_path, monkeypatch):
     """A run killed inside the commit window stores no config, so a rerun
     may use another n_parts.  The killed run's rows under part ids the
     rerun never writes must not stay in mentions/ or triples/."""
@@ -418,9 +492,11 @@ def test_uncommitted_rows_do_not_survive_another_n_parts(spark, corpus_small,
     full = str(tmp_path / "full")
     run_pipeline(spark, docs, ents_pdf, full, n_parts=8, run_id="full")
     crash = str(tmp_path / "crash")
-    r1 = run_pipeline(spark, docs, ents_pdf, crash, run_id="run1",
-                      fail_after_parts=16, fail_mode="after_data")
-    assert r1["status"] == "killed"
+    _no_lineage_commit(monkeypatch)
+    with pytest.raises(_Killed):
+        run_pipeline(spark, docs, ents_pdf, crash, run_id="run1")
+    monkeypatch.undo()
+    assert read_lineage(spark, crash) is None
     assert glob.glob(os.path.join(crash, "triples", "part_id=15"))
     r2 = run_pipeline(spark, docs, ents_pdf, crash, n_parts=8, run_id="run2")
     assert r2["status"] == "done"

@@ -20,6 +20,7 @@ import numpy as np
 import pandas as pd
 
 from ..config import SEED
+from ..worker import drop_zip_finders
 from .generate import SPANS_SCHEMA, vocabulary
 
 
@@ -37,6 +38,7 @@ def distributed_documents(
     bc = spark.sparkContext.broadcast((vocab, ent_names, n_hubs))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         vocab_b, names_b, n_hubs_b = bc.value
         n_ents = len(names_b)
         for pdf in batches:
@@ -113,6 +115,7 @@ def distributed_mentions(
                                        hub_copies, jitter, seed))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         d_, ng_, cw_, df_, hub_, jit_, seed_ = bc.value
         hub_base = np.random.default_rng(
             (seed_ << 32) ^ 0x4B1D

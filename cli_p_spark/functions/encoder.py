@@ -34,6 +34,7 @@ import numpy as np
 import pandas as pd
 
 from ..config import DIM, NORM_EPS, SEED
+from ..worker import drop_zip_finders
 
 _TOKEN_RE = re.compile(r"[a-z0-9]+")
 
@@ -222,6 +223,7 @@ def make_encode_udf(dim: int = DIM, seed: int = SEED):
 
     @pandas_udf("array<float>")
     def encode_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_zip_finders()
         for s in batches:
             mat, ok = encode_batch(s, dim=dim, seed=seed)
             # Series of ndarrays, not lists: Arrow converts a float32

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import SEED
+from ..worker import drop_zip_finders
 
 MEDIA_SCHEMA = (
     "media_id string, kind string, content binary, "
@@ -123,6 +124,7 @@ def decode_media(media: DataFrame) -> DataFrame:
     blobs yield skip_reason rows (run continues — build-index.py:53-61)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..config import NLIST, NORM_EPS, NPROBE, SEED
+from ..worker import drop_zip_finders
 from .link import _entity_arrays, cosine_expr
 from .topk import topk_per_group
 
@@ -143,6 +144,7 @@ def add_bucket(
 
     @pandas_udf("int")
     def bucket_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_zip_finders()
         CT = bc.value
         for s in batches:
             m = np.stack(s.to_numpy()).astype(np.float64)
@@ -163,6 +165,7 @@ def add_probes(
 
     @pandas_udf("array<int>")
     def probes_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_zip_finders()
         CT = bc.value
         p = min(nprobe, CT.shape[1])
         for s in batches:
@@ -214,6 +217,7 @@ def link_ivf_broadcast(
     kk, p = k, nprobe
 
     def search(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         idx = _IvfIndex.from_broadcast(bc.value)
         for pdf in batches:
             pdf = pdf[pdf["embedding"].notna()]

@@ -58,6 +58,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from ..worker import drop_zip_finders
+
 # edges the single-task finish takes; above it the star rounds run.
 # Sized from the finish's peak Python-worker RSS (daemon + worker),
 # measured on a 4-core local[4] host over random edge sets with 10-char
@@ -163,6 +165,7 @@ def _finish(batches: Iterator[pa.RecordBatch]):
     """(node, component) for every node of the (src, dst) edge batches,
     roots included; nothing when the task holds no rows (it may get no
     batch at all)."""
+    drop_zip_finders()
     batches = [b for b in batches if b.num_rows]
     if batches:
         t = pa.Table.from_batches(batches)

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 
 from ..config import NPROBE, PipelineConfig
 from ..functions.encoder import encode_batch
+from ..worker import drop_zip_finders
 from .ann import _IvfIndex, _emit_topk_cand, build_ivf_broadcast_value
 
 # output schema: the span keys, then the carried span columns and
@@ -89,6 +90,7 @@ def encode_and_link(
         return frame[cols]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         idx = _IvfIndex.from_broadcast(bc.value)
         for pdf in batches:
             if len(pdf) == 0:

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..config import SEED
+from ..worker import drop_zip_finders
 from .link import cosine_expr
 
 
@@ -161,6 +162,7 @@ def hyperplane_lsh_pairs(
     join_keys = gcols + ["_key"]
 
     def band(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         weights = (1 << np.arange(bpb, dtype=np.int64))
         # pack the band index into the key's high bits: one long bucket
         # key instead of (band int, key long)
@@ -281,6 +283,7 @@ def _sorted_run_pairs(batches, keys, max_bucket):
     continue in the next one and is carried over.  Once a carried run
     passes ``max_bucket`` it is starred as it streams and only its first
     row is kept, so memory stays O(batch + max_bucket), not O(bucket)."""
+    drop_zip_finders()
     carry, done = None, 0  # open run's kept rows; its rows starred already
     for pdf in batches:
         if not len(pdf):

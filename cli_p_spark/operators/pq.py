@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import SEED
+from ..worker import drop_zip_finders
 from .link import _entity_arrays, cosine_expr
 from .topk import topk_per_group
 
@@ -401,6 +402,7 @@ def link_pq(
     np_ = nprobe
 
     def preselect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         idx = _PqIndex.from_broadcast(bc.value)
         for pdf in batches:
             if pdf.empty:

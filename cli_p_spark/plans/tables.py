@@ -35,6 +35,11 @@ class TableStore:
     def _ident(self, table: str) -> str:
         return f"{self.catalog}.{table}"
 
+    def _fs_path(self, table: str):
+        """(Hadoop FileSystem, Path) of ``table``'s directory."""
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(self._path(table))
+        return path.getFileSystem(self.spark._jsc.hadoopConfiguration()), path
+
     # -- writes -----------------------------------------------------------
     def append(self, df: DataFrame, table: str,
                partition_by: tuple[str, ...] = ()) -> None:
@@ -126,10 +131,8 @@ class TableStore:
         if self.catalog:
             self.spark.sql(f"DROP TABLE IF EXISTS {self._ident(table)}")
             return
-        HPath = self.spark._jvm.org.apache.hadoop.fs.Path
-        path = HPath(self._path(table))
-        path.getFileSystem(self.spark._jsc.hadoopConfiguration()).delete(
-            path, True)
+        fs, path = self._fs_path(table)
+        fs.delete(path, True)
 
     # -- reads ------------------------------------------------------------
 
@@ -148,6 +151,11 @@ class TableStore:
         try:
             if self.catalog:
                 return self.spark.read.table(self._ident(table))
+            # a missing directory (every fresh run) costs one FS call,
+            # not an AnalysisException round trip
+            fs, path = self._fs_path(table)
+            if not fs.exists(path):
+                return None
             return self.spark.read.parquet(self._path(table))
         except AnalysisException as e:
             if any(m in str(e) for m in self._ABSENT_MARKERS):

@@ -113,3 +113,14 @@ def test_catalog_branch_executes_v2_writes(spark, tmp_path):
             spark.range(5).selectExpr("id", "CAST(99 AS BIGINT) AS p"),
             "t_cat", ("p",),
         )
+
+
+def test_read_absent_table_returns_none(spark, tmp_path):
+    """A missing table and an empty table directory both read as absent;
+    a written one reads back."""
+    store = TableStore(spark, str(tmp_path / "db"))
+    assert store.read("missing") is None
+    (tmp_path / "db" / "empty").mkdir(parents=True)
+    assert store.read("empty") is None
+    store.append(spark.range(3), "present")
+    assert store.read("present").count() == 3

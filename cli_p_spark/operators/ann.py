@@ -36,8 +36,9 @@ Scale notes (100 TB mentions, big entity side):
   the reference defaults -> P/R ~0.99 vs the exact oracle while scoring
   ~32% of the index; nprobe=nlist degenerates to exact search, mirroring
   query-index.py:30's exhaustive setting.
-- the broadcast search is CELL-PRUNED (round 2): per-probed-cell GEMM
-  slices with a running top-k merge — peak per-block intermediates are
+- the broadcast search (``_IvfIndex``; its one UDF is
+  ``fused.encode_and_link``) is CELL-PRUNED (round 2): per-probed-cell
+  GEMM slices with a running top-k merge — peak per-block intermediates are
   [BLOCK, max_cell + k], never [BLOCK, E], so nprobe cuts compute by
   ~nprobe/nlist and a 10^7-entity index costs MBs per task, not 40 GB
   (gated by tests/test_ivf_pruning.py on a 10^6-entity synthetic index).
@@ -54,7 +55,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..config import NLIST, NORM_EPS, NPROBE, SEED
+from ..config import NLIST, NORM_EPS, NPROBE, SEED, PipelineConfig
 from ..worker import drop_zip_finders
 from .link import _entity_arrays, cosine_expr
 from .topk import topk_per_group
@@ -180,56 +181,17 @@ def add_probes(
     return df.withColumn("probes", probes_udf(embedding_col))
 
 
-def link_ivf_broadcast(
-    mentions: DataFrame,
-    entities_pdf: pd.DataFrame,
-    centroids: np.ndarray,
-    k: int = 1,
-    tau: float = 0.0,
-    nprobe: int = NPROBE,
-) -> DataFrame:
-    """IVF search of the ``embedding`` column against a broadcast
-    bucketed index — the scale workhorse.
+def link_ivf_broadcast(mentions: DataFrame, entities_pdf: pd.DataFrame,
+                       centroids: np.ndarray, k: int = 1, tau: float = 0.0,
+                       nprobe: int = NPROBE) -> DataFrame:
+    """``fused.encode_and_link`` on an ``embedding`` column, under this
+    name and these keywords.  Kept only for perfbench's kernel timing
+    (``KgIngest.extras``) and its keyword guard in tests/test_imports.py;
+    it goes once perfbench times ``encode_and_link`` itself."""
+    from .fused import encode_and_link
 
-    This is faiss IndexIVFFlat.search (query-index.py:111) re-expressed
-    for Spark's execution model: the bucketed entity index (cell ->
-    [entity ids, entity matrix]) is a broadcast variable; a mapInPandas
-    pass over mentions computes, per Arrow batch, the top-nprobe cells
-    (Q @ C.T) and one GEMM per probed cell, merging running top-k.
-    ZERO shuffle: 100 TB of mentions stream through executors while only
-    the small index moves — the same asymmetry the reference exploits by
-    loading the whole faiss index per process (query-index.py:29).
-
-    nprobe >= nlist degenerates to exact search (reference parity).
-    Deterministic: scores float64, ties broken by entity_id ascending.
-    """
-    spark = mentions.sparkSession
-    bc = spark.sparkContext.broadcast(
-        build_ivf_broadcast_value(entities_pdf, centroids)
-    )
-
-    keep_fields = [f for f in mentions.schema.fields if f.name != "embedding"]
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in keep_fields)
-        + ", entity_id string, score double, rank int"
-    )
-    keep_names = [f.name for f in keep_fields]
-    kk, p = k, nprobe
-
-    def search(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        idx = _IvfIndex.from_broadcast(bc.value)
-        for pdf in batches:
-            pdf = pdf[pdf["embedding"].notna()]
-            if pdf.empty:
-                continue
-            Q = np.stack(pdf["embedding"].to_numpy())
-            cand, sc64 = idx.search(Q, kk, p)
-            yield from _emit_topk_cand(
-                pdf, keep_names, cand, sc64, idx.eids, kk, tau
-            )
-
-    return mentions.mapInPandas(search, schema=out_schema)
+    return encode_and_link(mentions, entities_pdf, centroids,
+                           PipelineConfig(k=k, tau=tau), nprobe)
 
 
 class _IvfIndex:
@@ -577,7 +539,7 @@ def index_append(
 
 def build_ivf_broadcast_value(entities_pdf: pd.DataFrame,
                               centroids: np.ndarray):
-    """The broadcast payload for _IvfIndex (shared by linking operators):
+    """The broadcast payload for _IvfIndex (fused.encode_and_link's):
     cell-grouped CSR entity matrix + permutations + cell offsets.
 
     The entity matrix is stored single-precision — lossless for

@@ -614,10 +614,18 @@ def embedding_neardup_pairs(
     is the probe overlap (~nprobe/nlist of all pairs — quadratic ORDER,
     exhaustive/oracle tool), AQE skew join splits hot cells.
     nprobe=nlist degenerates to the exact all-pairs result.
+
+    Rows whose embedding is NULL are dropped before routing: they make
+    no pairs, and an input with no other row gives an empty frame.
     """
+    df = df.filter(F.col(embedding_col).isNotNull())
+    first = df.select(embedding_col).first()
+    if first is None:
+        return df.sparkSession.createDataFrame(
+            [], "src string, dst string, cosine double")
     unit = _unit_vectors(df, embedding_col, id_col)
     if tau >= 0.8:
-        dim = len(df.select(embedding_col).first()[0])
+        dim = len(first[0])
         return hyperplane_lsh_pairs(
             unit, "_emb", "_nid", tau=tau, dim=dim, seed=seed,
         )

@@ -1,4 +1,5 @@
-"""Fused encode+search: one Arrow pass from spans to links.
+"""Fused encode+search: one Arrow pass from spans to links, and the
+engine's only IVF search UDF.
 
 The reference encodes a query and searches the index in the same process,
 back to back (query-index.py:107-111) — there is no serialization boundary
@@ -26,6 +27,9 @@ entity_id NULL).  A span that encodes fine but whose best candidate
 scores below tau yields no link row — thresholded linking semantics;
 reconcile span counts against links+skips+sub-tau upstream if an audit
 needs all three buckets.
+
+Without a ``content`` column the pass searches a stored ``embedding``
+column, as the reference's 'i ID' query (query-index.py:86-99) does.
 """
 
 from __future__ import annotations
@@ -42,11 +46,6 @@ from ..functions.encoder import encode_batch
 from ..worker import drop_zip_finders
 from .ann import _IvfIndex, _emit_topk_cand, build_ivf_broadcast_value
 
-# output schema: the span keys, then the carried span columns and
-# (optional) embedding, then the link/skip columns
-_KEY_SCHEMA = "doc_id string, span_idx int, kind string"
-_LINK_SCHEMA = "entity_id string, score double, rank int, skip_reason string"
-
 
 def encode_and_link(
     spans: DataFrame,
@@ -56,24 +55,31 @@ def encode_and_link(
     nprobe: int = NPROBE,
     embeddings: bool = False,
 ) -> DataFrame:
-    """spans(doc_id, span_idx, kind, content, *rest) -> fused rows.
+    """spans -> link rows, in one mapInPandas pass; the input schema
+    picks what is searched.
 
-    Every output row carries the span's other columns (``rest``, e.g.
-    the partition id it is written under) after the span keys.
-    ``embeddings=True`` adds an ``embedding`` column and one mention row
-    per encoded span."""
+    A ``content`` column is encoded, then searched: a span that fails to
+    decode yields a skip row, and ``embeddings=True`` adds an
+    ``embedding`` column and one mention row per encoded span.  Without
+    one, the ``embedding`` column is searched as it is (the reference's
+    'i ID' query, query-index.py:86-99): a row whose embedding is NULL
+    is dropped, and there are no skip or mention rows and no
+    ``skip_reason`` column.  Every other input column passes through,
+    with its own type, ahead of ``entity_id, score, rank``."""
+    encode = "content" in spans.columns
+    vec = "content" if encode else "embedding"
     spark = spans.sparkSession
     bc = spark.sparkContext.broadcast(
         build_ivf_broadcast_value(entities_pdf, centroids)
     )
     dim, seed, k, tau = cfg.dim, cfg.seed, cfg.k, cfg.tau
-    rest = [f for f in spans.schema.fields
-            if f.name not in ("doc_id", "span_idx", "kind", "content")]
-    keys = ["doc_id", "span_idx", "kind", *(f.name for f in rest)]
+    keep = [f for f in spans.schema.fields if f.name != vec]
+    keys = [f.name for f in keep]
     schema = ", ".join(
-        [_KEY_SCHEMA, *(f"{f.name} {f.dataType.simpleString()}" for f in rest)]
+        [f"{f.name} {f.dataType.simpleString()}" for f in keep]
         + (["embedding array<float>"] if embeddings else [])
-        + [_LINK_SCHEMA]
+        + ["entity_id string, score double, rank int"]
+        + (["skip_reason string"] if encode else [])
     )
     cols = [f.split()[0] for f in schema.split(", ")]
 
@@ -93,26 +99,28 @@ def encode_and_link(
         drop_zip_finders()
         idx = _IvfIndex.from_broadcast(bc.value)
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat, ok = encode_batch(pdf["content"], dim=dim, seed=seed)
             base = pdf[keys].reset_index(drop=True)
-            # quarantined spans: explicit skip rows (-> skips table)
-            if not ok.all():
-                yield rows(base[~ok].copy(), skip_reason="decode_error")
-            if ok.any():
-                okb = base[ok].reset_index(drop=True)
-                Q = mat[ok]
-                if embeddings:
-                    # Series of ndarrays: Arrow converts a float32 row
-                    # ~10x cheaper than a list of boxed Python floats
-                    yield rows(okb.copy(),
-                               embedding=pd.Series(list(Q), dtype=object))
-                cand, sc64 = idx.search(Q, k, nprobe)
-                for out in _emit_topk_cand(
-                    okb, keys, cand, sc64, idx.eids, k, tau,
-                ):
-                    yield rows(out)
+            if encode:
+                mat, ok = encode_batch(pdf["content"], dim=dim, seed=seed)
+                # quarantined spans: explicit skip rows (-> skips table)
+                if not ok.all():
+                    yield rows(base[~ok].copy(), skip_reason="decode_error")
+            else:
+                ok = pdf["embedding"].notna().to_numpy()
+            if not ok.any():
+                continue
+            okb = base[ok].reset_index(drop=True)
+            Q = (mat[ok] if encode else
+                 np.stack(pdf["embedding"].to_numpy()[ok]))
+            if embeddings:
+                # Series of ndarrays: Arrow converts a float32 row
+                # ~10x cheaper than a list of boxed Python floats
+                yield rows(okb.copy(),
+                           embedding=pd.Series(list(Q), dtype=object))
+            cand, sc64 = idx.search(Q, k, nprobe)
+            for out in _emit_topk_cand(
+                okb, keys, cand, sc64, idx.eids, k, tau,
+            ):
+                yield rows(out)
 
     return spans.mapInPandas(run, schema=schema)
-

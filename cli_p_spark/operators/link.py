@@ -1,9 +1,11 @@
 """Shared pieces of entity linking: the entity matrix and the cosine column.
 
 The reference has one search call, faiss ``index.search``
-(query-index.py:111), exact when nprobe = nlist.  So does this engine:
-every documents -> triples path searches with ``_IvfIndex``
-(operators/ann.py), which is f64-exact when nprobe >= nlist.  The bucket
+(query-index.py:111), exact when nprobe = nlist, whether the query
+vector was just encoded or read back from storage.  So does this engine:
+one Python UDF, ``encode_and_link`` (operators/fused.py), searches
+``_IvfIndex`` (operators/ann.py), f64-exact when nprobe >= nlist, on
+span text it encodes or on a stored ``embedding`` column.  The bucket
 equi-join ``link_ann_join`` (operators/ann.py) is the operator for entity
 tables too big to broadcast.  This module keeps what they share:
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1495,7 +1496,8 @@ def knn_ivf_exhaustive(spark, sf_dir):
     Spark strategies, one answer."""
     import numpy as np
 
-    from ..operators.ann import link_ivf_broadcast, train_centroids
+    from ..operators.ann import train_centroids
+    from ..operators.fused import encode_and_link
 
     e = _t(spark, sf_dir, "embeddings")
     cand_pdf = e.filter(F.col("vec_id") >= 8).select(
@@ -1526,8 +1528,8 @@ def knn_ivf_exhaustive(spark, sf_dir):
             .cast("float"),
         ).alias("embedding"),
     )
-    links = link_ivf_broadcast(
-        probes, cand_pdf, centroids, k=5, tau=-1.0, nprobe=16
+    links = encode_and_link(
+        probes, cand_pdf, centroids, PipelineConfig(k=5, tau=-1.0), nprobe=16
     )
     return links.select(
         "probe_id",
@@ -1835,7 +1837,8 @@ def kg_triples_exact(spark, sf_dir):
     import numpy as np
 
     from ..fixtures.generate import entities_to_spark
-    from ..operators.ann import link_ivf_broadcast, train_centroids
+    from ..operators.ann import train_centroids
+    from ..operators.fused import encode_and_link
     from .pipeline import triples_from_links
 
     cfg = PipelineConfig()
@@ -1848,8 +1851,8 @@ def kg_triples_exact(spark, sf_dir):
     centroids = train_centroids(
         np.stack(ents_pdf["embedding"].to_numpy()), seed=cfg.seed
     )
-    links = link_ivf_broadcast(
-        staged_m, ents_pdf, centroids, k=cfg.k, tau=-1.0,
+    links = encode_and_link(
+        staged_m, ents_pdf, centroids, replace(cfg, tau=-1.0),
         nprobe=len(centroids),
     )
     rescored = _seqdot_rescore(links, staged_m, staged_e, cfg.tau)
@@ -1999,14 +2002,14 @@ def kg_triples_ann(spark, sf_dir):
     cells and entity cell assignments are staged, and the oracle replays
     the probe-masked exact top-1 in SQL — checking that nprobe pruning
     changes results exactly the way the IVF contract says it should."""
-    from ..operators.ann import link_ivf_broadcast
+    from ..operators.fused import encode_and_link
     from .pipeline import triples_from_links
 
     cfg = PipelineConfig()
     staged_m, staged_e, ents_pdf, centroids = _kg_ann_staged(spark, cfg)
-    links = link_ivf_broadcast(
+    links = encode_and_link(
         staged_m.drop("probes"), ents_pdf, centroids,
-        k=cfg.k, tau=-1.0, nprobe=32,
+        replace(cfg, tau=-1.0), nprobe=32,
     )
     rescored = _seqdot_rescore(
         links, staged_m.drop("probes"), staged_e, cfg.tau
@@ -2046,15 +2049,15 @@ def kg_ann_recall(spark, sf_dir):
     Integer outputs only: p/r_times_1e6 = (10^6 * correct) div emitted —
     bit-exact, no float hash risk.  Scores for the tau threshold use the
     sequential-fold dot (_seqdot_rescore) both engines agree on."""
-    from ..operators.ann import link_ivf_broadcast
+    from ..operators.fused import encode_and_link
 
     cfg = PipelineConfig()
     staged_m, staged_e, ents_pdf, centroids = _kg_ann_staged(spark, cfg)
     m = staged_m.drop("probes")
 
     def top1(nprobe):
-        links = link_ivf_broadcast(
-            m, ents_pdf, centroids, k=1, tau=-1.0, nprobe=nprobe
+        links = encode_and_link(
+            m, ents_pdf, centroids, PipelineConfig(k=1, tau=-1.0), nprobe
         )
         return _seqdot_rescore(links, m, staged_e, tau=-1.0).select(
             "doc_id", "span_idx", "entity_id", "score"
@@ -2184,11 +2187,11 @@ def knn_incremental_index(spark, sf_dir):
     from ..fixtures.generate import make_entities
     from ..operators.ann import (
         index_append,
-        link_ivf_broadcast,
         load_index_df,
         save_index,
         train_centroids,
     )
+    from ..operators.fused import encode_and_link
 
     ents = make_entities(240)
     base_pdf, new_pdf = ents.iloc[:180], ents.iloc[180:]
@@ -2215,9 +2218,8 @@ def knn_incremental_index(spark, sf_dir):
         q.select(F.col("vec_id").alias("probe_id"), "embedding"),
         "knn_inc_queries",
     )
-    links = link_ivf_broadcast(
-        queries, staged_ents.toPandas(), cents, k=5, tau=-1e9, nprobe=16
-    )
+    links = encode_and_link(queries, staged_ents.toPandas(), cents,
+                            PipelineConfig(k=5, tau=-1e9), nprobe=16)
     # sequential-fold rescore (the _seqdot_rescore device): GEMM selects,
     # the engine-agreed dot scores — rank itself is not emitted (the
     # knn_ivf_exhaustive precedent: membership + score are the contract)
@@ -4042,7 +4044,15 @@ def _kg_rectangles_sql() -> str:
 # entries that no other slip leans on as its only witness slipped.
 # kg_canonical_triples, curate_training_corpus, embedding_neardup_cosine
 # and doc_incremental_neardup reach the changed code too; they are
-# in-window already.
+# in-window already.  Amended again when the IVF search got one Python
+# UDF (fused.encode_and_link, which also searches a stored embedding
+# column): the backing code of knn_ivf_exhaustive, kg_triples_exact,
+# kg_triples_ann, kg_ann_recall and knn_incremental_index changed from
+# link_ivf_broadcast to encode_and_link, plan_kg's entries
+# (kg_canonical_triples, kg_skips_quarantine) reach the changed UDF,
+# and embedding_neardup_cosine's operator drops NULL embeddings before
+# routing.  All are in-window already (positions 13-30), so nothing
+# moves.
 #   positions 1-12   the twelve r4-greens (sort_limit_top_orders ..
 #                    window_running_total): outside the last three
 #                    records, so they MUST be in-window;
@@ -4102,9 +4112,9 @@ def _kg_rectangles_sql() -> str:
 # kg_link_prediction).  Both engines read that output from the same
 # staged kg_graph_edges, it is verified identical (all 1,646
 # kg_triples_exact rows of the scale-independent KG corpus are equal at
-# 929b8b7, aa1601f and this tree), and their own operators and SQL twins
-# are byte-identical since their last row — the round-6 kg_pagerank
-# rule: a verified byte-identical input keeps an entry out.
+# 929b8b7, aa1601f, 02e1e41 and this tree), and their own operators and
+# SQL twins are byte-identical since their last row — the round-6
+# kg_pagerank rule: a verified byte-identical input keeps an entry out.
 # kg_span_roundtrip is untouched at function granularity (explode_spans
 # and reassemble_spans are byte-identical since aa1601f).
 # Slip criterion, per entry: contract function and SQL twin

@@ -79,7 +79,8 @@ from pyspark.sql import functions as F
 from ..config import NLIST, NPROBE, PipelineConfig
 # encode_mentions and explode_spans are not called here since plan_kg
 # replaced them, but perfbench's traced kg pass still looks them up on
-# this module
+# this module; the re-export goes, with the ann.link_ivf_broadcast
+# shim, once perfbench names encode_and_link instead
 from .pipeline import encode_mentions, explode_spans, plan_kg  # noqa: F401
 
 LINEAGE_SCHEMA = (
@@ -142,9 +143,9 @@ def run_pipeline(
 
     Returns ``status`` ('done'), ``out_dir`` and ``n_triples``, the links
     of every done partition.  A resume under a config other than the one
-    ``out_dir`` was started with, an ``n_parts``, ``nlist`` or ``nprobe``
-    below 1, or an empty entity table raises ValueError before anything
-    is written.
+    ``out_dir`` was started with, an ``n_parts``, ``nlist``, ``nprobe``,
+    ``cfg.k`` or ``cfg.embed_partitions`` below 1, or an empty entity
+    table raises ValueError before anything is written.
     """
     import json
 
@@ -152,10 +153,12 @@ def run_pipeline(
     from .tables import TableStore
 
     # checked before the stale-table drop below: under 1, n_parts and
-    # nprobe plan no work yet report "done", and nlist or an empty entity
-    # table fails mid-run
+    # nprobe plan no work yet report "done", k commits a "done" run with
+    # no links, and nlist, embed_partitions or an empty entity table
+    # fails mid-run
     for name, value in (("n_parts", n_parts), ("nlist", nlist),
-                        ("nprobe", nprobe)):
+                        ("nprobe", nprobe), ("k", cfg.k),
+                        ("embed_partitions", cfg.embed_partitions)):
         if value < 1:
             raise ValueError(f"{name} must be >= 1, got {value}")
     if not len(entities_pdf):

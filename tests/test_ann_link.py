@@ -2,7 +2,10 @@
 link strategy is exact at nprobe=nlist (reference parity:
 query-index.py:30) and the strategies agree with each other below it."""
 
+from dataclasses import replace
+
 import numpy as np
+import pytest
 
 from cli_p_spark.config import PipelineConfig
 from cli_p_spark.fixtures.generate import documents_to_spark
@@ -32,17 +35,15 @@ _KEY = ["subj", "span_idx", "pred", "obj", "rank"]
 
 def _strategies(spark, corpus_small, nprobe, out_dir):
     """One logical linker, five physical strategies: the broadcast IVF
-    search, the bucket equi-join (k=1 fast path and k>1 window path),
-    the fused plan_kg pass and run_pipeline's triples/ (written under
-    ``out_dir``), which plan_kg builds too.  Returns each strategy's links
+    search (``encode_and_link`` on the ``embedding`` column), the bucket
+    equi-join (k=1 fast path and k>1 window path), the fused plan_kg pass
+    and run_pipeline's triples/ (written under ``out_dir``), which
+    plan_kg builds too.  Returns each strategy's links
     (the join and broadcast operators only), triples keyed by (name, k),
     and the fused and modular skips."""
     from cli_p_spark.fixtures.generate import entities_to_spark
-    from cli_p_spark.operators.ann import (
-        link_ann_join,
-        link_ivf_broadcast,
-        train_centroids,
-    )
+    from cli_p_spark.operators.ann import link_ann_join, train_centroids
+    from cli_p_spark.operators.fused import encode_and_link
     from cli_p_spark.plans.pipeline import (
         encode_mentions,
         explode_spans,
@@ -60,8 +61,8 @@ def _strategies(spark, corpus_small, nprobe, out_dir):
     mentions = ok.select("doc_id", "span_idx", "kind", "embedding")
     entities = entities_to_spark(spark, ents_pdf)
     links = {
-        ("link_ivf_broadcast", 3): link_ivf_broadcast(
-            mentions, ents_pdf, centroids, k=3, tau=cfg.tau, nprobe=nprobe),
+        ("encode_and_link", 3): encode_and_link(
+            mentions, ents_pdf, centroids, replace(cfg, k=3), nprobe),
         ("link_ann_join", 1): link_ann_join(
             mentions, entities, centroids, k=1, tau=cfg.tau, nprobe=nprobe),
         ("link_ann_join", 3): link_ann_join(
@@ -116,7 +117,7 @@ def test_broadcast_and_join_strategies_agree(spark, corpus_small, tmp_path):
     its k=1 and k>1 paths) produce identical links."""
     _, triples, _, _ = _strategies(spark, corpus_small, nprobe=4,
                                    out_dir=str(tmp_path / "kg"))
-    ref = triples[("link_ivf_broadcast", 3)].toPandas()
+    ref = triples[("encode_and_link", 3)].toPandas()
     for name, k in [("link_ann_join", 1), ("link_ann_join", 3)]:
         got = triples[(name, k)].toPandas()
         _assert_same_rows(got, ref[ref["rank"] <= k], (name, k))
@@ -129,7 +130,7 @@ def test_fused_path_agrees_with_modular(spark, corpus_small, tmp_path):
     _, triples, fused_skips, modular_skips = _strategies(
         spark, corpus_small, nprobe=4, out_dir=str(tmp_path / "kg"))
     k = PipelineConfig().k
-    ref = triples[("link_ivf_broadcast", 3)].toPandas()
+    ref = triples[("encode_and_link", 3)].toPandas()
     for name in ("plan_kg", "run_pipeline"):
         _assert_same_rows(triples[(name, k)].toPandas(),
                           ref[ref["rank"] <= k], (name, k))
@@ -151,6 +152,54 @@ def test_link_strategies_share_column_order(spark, corpus_small, tmp_path):
         assert df.columns == expected
     assert len({tuple(df.dtypes) for df in links.values()}) == 1
     assert len({tuple(t.dtypes) for t in triples.values()}) == 1
+
+
+@pytest.mark.parametrize("nprobe", [4, _NLIST])
+def test_embedding_mode_matches_content_mode(spark, corpus_small, nprobe):
+    """``encode_and_link`` over encode_mentions' stored vectors returns
+    the rows it returns when it encodes the same spans' content itself,
+    scores bit for bit, at k=3 both pruned and exhaustive.  A long
+    pass-through column keeps its type, a NULL embedding yields no row,
+    and the embedding mode has no skip_reason column."""
+    from pyspark.sql import functions as F
+
+    from cli_p_spark.operators.ann import train_centroids
+    from cli_p_spark.operators.fused import encode_and_link
+    from cli_p_spark.plans.pipeline import encode_mentions, explode_spans
+
+    docs_pdf, ents_pdf = corpus_small
+    cfg = PipelineConfig(k=3)
+    centroids = train_centroids(
+        np.stack(ents_pdf["embedding"].to_numpy()), nlist=_NLIST,
+        seed=cfg.seed)
+    docs = documents_to_spark(spark, docs_pdf)
+    spans = encode_mentions(explode_spans(docs), cfg).select(
+        F.xxhash64("doc_id", "span_idx").alias("probe_id"),
+        "doc_id", "span_idx", "kind", "content", "embedding",
+    ).persist()
+    try:
+        by_text = encode_and_link(spans.drop("embedding"), ents_pdf,
+                                  centroids, cfg, nprobe)
+        by_vec = encode_and_link(spans.drop("content"), ents_pdf,
+                                 centroids, cfg, nprobe)
+        keys = ["probe_id", "doc_id", "span_idx", "kind"]
+        assert by_vec.columns == [*keys, "entity_id", "score", "rank"]
+        assert by_vec.dtypes[:4] == spans.select(*keys).dtypes
+        assert dict(by_vec.dtypes)["probe_id"] == "bigint"
+
+        links = by_text.filter(F.col("entity_id").isNotNull())
+        want = sorted(map(tuple, links.select(by_vec.columns).collect()))
+        got = sorted(map(tuple, by_vec.collect()))
+        assert got == want and {r[-1] for r in got} == {1, 2, 3}
+
+        null_ids = {r[0] for r in spans.filter(
+            F.col("embedding").isNull()).select("probe_id").collect()}
+        skipped = {r[0] for r in by_text.filter(
+            F.col("skip_reason").isNotNull()).select("probe_id").collect()}
+        assert null_ids and null_ids == skipped
+        assert not null_ids & {r[0] for r in got}
+    finally:
+        spans.unpersist()
 
 
 def test_broadcast_ivf_pr_geq_095(spark, corpus_small):
@@ -294,11 +343,11 @@ def test_index_append_matches_full_rebuild(spark, tmp_path):
     from cli_p_spark.fixtures.generate import make_entities
     from cli_p_spark.operators.ann import (
         index_append,
-        link_ivf_broadcast,
         load_index_df,
         save_index,
         train_centroids,
     )
+    from cli_p_spark.operators.fused import encode_and_link
 
     ents = make_entities(200)
     base_pdf, new_pdf = ents.iloc[:160], ents.iloc[160:]
@@ -327,8 +376,8 @@ def test_index_append_matches_full_rebuild(spark, tmp_path):
 
     def search(store_dir):
         live, c = load_index_df(spark, store_dir)
-        out = link_ivf_broadcast(
-            probes, live.toPandas(), c, k=3, tau=-1.0, nprobe=16
+        out = encode_and_link(
+            probes, live.toPandas(), c, PipelineConfig(k=3, tau=-1.0), 16
         )
         return sorted(map(tuple, out.select(*key).collect()))
 

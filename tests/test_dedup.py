@@ -170,6 +170,39 @@ def test_embedding_neardup(spark):
         assert c >= tau - 1e-6, (a, b, c)
 
 
+@pytest.mark.parametrize("tau", [0.95, 0.5])
+def test_embedding_neardup_null_and_empty(spark, tau):
+    """Both routes (sign-LSH at 0.95, IVF at 0.5): NULL embeddings, the
+    first row's included, make no pair and leave the other rows' pairs
+    as they are; an input with no non-NULL embedding, or no row at all,
+    gives an empty (src, dst, cosine) frame."""
+    rng = np.random.default_rng(17)
+    base = rng.standard_normal((12, 16)).astype(np.float32)
+    base /= np.linalg.norm(base, axis=1, keepdims=True)
+    rows = [(0, None)]
+    for i in range(12):
+        jitter = base[i] + rng.standard_normal(16).astype(np.float32) * 0.02
+        rows += [(2 * i + 1, base[i].tolist()),
+                 (2 * i + 2, (jitter / np.linalg.norm(jitter)).tolist())]
+    rows.append((99, None))
+    df = spark.createDataFrame(rows, "vid long, embedding array<float>")
+
+    def pairs(frame):
+        return embedding_neardup_pairs(frame, "embedding", "vid", tau=tau,
+                                       nlist=4, nprobe=4)
+
+    got = sorted(map(tuple, pairs(df).collect()))
+    clean = sorted(map(tuple, pairs(df.dropna()).collect()))
+    assert got == clean
+    # ids compare as strings: src is the smaller one in that order
+    assert {tuple(sorted((str(2 * i + 1), str(2 * i + 2))))
+            for i in range(12)} <= {(a, b) for a, b, _ in got}
+    for empty in (df.filter(F.col("embedding").isNull()), df.limit(0)):
+        out = pairs(empty)
+        assert out.columns == ["src", "dst", "cosine"]
+        assert out.count() == 0
+
+
 def test_keep_representatives(spark, neardup_df):
     """Near-dup pairs -> connected components -> canonical ids: the docs
     that are their own canonical id are the min id of each duplicate

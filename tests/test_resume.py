@@ -467,17 +467,22 @@ def test_empty_entity_table_raises_before_writing(spark, corpus_small,
 
 
 @pytest.mark.parametrize("bad", [{"n_parts": 0}, {"nlist": 0},
-                                 {"nprobe": 0}])
+                                 {"nprobe": 0}, {"k": 0},
+                                 {"embed_partitions": 0}])
 def test_out_of_range_sizes_raise_before_writing(spark, corpus_small,
                                                  tmp_path, bad):
-    """n_parts, nlist or nprobe below 1 plans no work; the run raises
-    before it drops a killed run's uncommitted rows or writes any."""
+    """n_parts, nlist or nprobe below 1 plans no work, cfg.k below 1
+    would commit a 'done' run with no triples, and cfg.embed_partitions
+    below 1 fails inside the placement; the run raises before it drops a
+    killed run's uncommitted rows or writes any."""
     docs_pdf, ents_pdf = corpus_small
     docs = documents_to_spark(spark, docs_pdf.iloc[:20])
     out = tmp_path / "out"
     before = _leftover(out)
     name, = bad
-    with pytest.raises(ValueError, match=name):
+    if name in ("k", "embed_partitions"):
+        bad = {"cfg": PipelineConfig(**bad)}
+    with pytest.raises(ValueError, match=f"^{name} must be >= 1"):
         run_pipeline(spark, docs, ents_pdf, str(out), run_id="bad", **bad)
     assert _listing(str(out)) == before
 

@@ -37,11 +37,14 @@ Scale notes (100 TB mentions, big entity side):
   ~32% of the index; nprobe=nlist degenerates to exact search, mirroring
   query-index.py:30's exhaustive setting.
 - the broadcast search (``_IvfIndex``; its one UDF is
-  ``fused.encode_and_link``) is CELL-PRUNED (round 2): per-probed-cell
-  GEMM slices with a running top-k merge — peak per-block intermediates are
-  [BLOCK, max_cell + k], never [BLOCK, E], so nprobe cuts compute by
-  ~nprobe/nlist and a 10^7-entity index costs MBs per task, not 40 GB
-  (gated by tests/test_ivf_pruning.py on a 10^6-entity synthetic index).
+  ``fused.encode_and_link``) is CELL-PRUNED (round 2) at every nprobe:
+  per-probed-cell f64 GEMM slices with a running top-k merge — peak
+  per-block intermediates are [BLOCK, max_cell + k], never [BLOCK, E], so
+  nprobe cuts compute by ~nprobe/nlist and a 10^7-entity index costs MBs
+  per task, not 40 GB (gated by tests/test_ivf_pruning.py on a
+  10^6-entity synthetic index, pruned and exhaustive).  It is f64-exact
+  over the probed cells; nprobe >= nlist probes them all through the
+  same loop and is the exact linker.
 """
 
 from __future__ import annotations
@@ -201,18 +204,17 @@ class _IvfIndex:
     ``cell_ptr`` offsets) — the same cell-contiguous layout faiss
     IndexIVFFlat keeps its inverted lists in (build-index.py:80-81).
 
-    search(): when nprobe >= nlist (exhaustive) it is f64-EXACT — one
-    dense f64 GEMM, top-kc selected on those f64 scores with the
-    boundary-tie repair; this is the exact linker.  Both branches score
-    their kc candidates with the same per-row f64 rescore, so a score
-    does not depend on the block a row lands in.  When nprobe < nlist,
-    ONE sgemm per probed cell against that cell's slice only, merged into
-    a per-row running top-kc — peak intermediate is [block, max_cell +
-    kc], NOT [block, E]; nprobe actually prunes compute (the reference's
-    knob, query-index.py:30).  That kc = k+MARGIN f32 preselect is
-    rescored in f64 but is NOT f64-exact on near ties: more than MARGIN
-    entities within f32 rounding of the k-th score can push an f64 top-k
-    member out of the preselect."""
+    search() has one path at every nprobe, as faiss has one search over
+    the probed lists: ONE f64 GEMM per probed cell against that cell's
+    slice only (the f32 slice is upcast per GEMM; no f64 copy of the
+    entity matrix is kept), merged into a per-row running top-kc
+    (kc = k + MARGIN) under the total order (-score, entity idx asc).
+    Peak intermediate is [block, max_cell + kc], NOT [block, E], so
+    nprobe prunes compute (the reference's knob, query-index.py:30), and
+    the selection is f64-exact over the probed cells.  nprobe >= nlist
+    probes every cell through the same loop: that is the exact linker.
+    The kc candidates are scored by a per-row f64 rescore, so a score
+    does not depend on the block a row lands in."""
 
     MARGIN = 3
 
@@ -232,27 +234,7 @@ class _IvfIndex:
         self.inv_perm = inv_perm  # original entity idx -> grouped position
         self.cell_ptr = cell_ptr  # [nlist+1] offsets into gmat
         self.CT = CT              # [dim, nlist] float64
-        self.gmat64 = None        # built by the first exhaustive search
         self.stats = {"max_gemm_cols": 0}
-
-    _cached: "_IvfIndex | None" = None
-
-    @classmethod
-    def from_broadcast(cls, value):
-        """Broadcast values are deserialized once per executor process and
-        memoized by Spark; cache the wrapper too so its lazily built f64
-        matrix is built once per process, not once per task.  Single-slot,
-        released BEFORE the replacement is built: a long-lived worker
-        switching between two multi-GB indexes holds at most one wrapper
-        (plus whatever Spark's own broadcast cache pins)."""
-        inst = cls._cached
-        if inst is not None and inst._payload is value:
-            return inst
-        cls._cached = inst = None  # drop the old wrapper before building
-        inst = cls(*value)
-        inst._payload = value
-        cls._cached = inst
-        return inst
 
     def search(self, Q: np.ndarray, k: int, nprobe: int):
         if len(Q) <= self.BLOCK:
@@ -272,8 +254,8 @@ class _IvfIndex:
 
     @staticmethod
     def _group_probes(probe, n, pp):
-        """Group (row, probed-cell) pairs by cell: (fr, fc, cells,
-        bounds) with rows fr[bounds[ci]:bounds[ci+1]] probing cells[ci]."""
+        """Group (row, probed-cell) pairs by cell: (fr, cells, bounds)
+        with rows fr[bounds[ci]:bounds[ci+1]] probing cells[ci]."""
         flat_rows = np.repeat(np.arange(n), pp)
         flat_cells = probe.ravel()
         order = np.argsort(flat_cells, kind="stable")
@@ -281,37 +263,7 @@ class _IvfIndex:
         fc = flat_cells[order]
         cells, starts = np.unique(fc, return_index=True)
         bounds = np.append(starts, len(fc))
-        return fr, fc, cells, bounds
-
-    def _topk_grouped(self, scores, kc):
-        """top-kc per row of a grouped-order [n, E] score matrix (f32 or
-        f64) under the total order (-score, ORIGINAL entity idx asc);
-        masked entries carry -inf and can only fill trailing slots.
-        Returns (sel original indices, best_sc in the input dtype)."""
-        n, E = scores.shape
-        if kc < E:
-            part = np.argpartition(-scores, kc - 1, axis=1)[:, :kc]
-            # boundary ties: argpartition keeps an ARBITRARY subset of
-            # candidates tied at the kc-th score, which can drop
-            # the min-entity-id member (mass-duplicate corpora) and
-            # break the (-score, entity_id asc) determinism contract.
-            # Repair affected rows only: keep everything above the
-            # boundary, fill remaining slots with the tied candidates
-            # of smallest ORIGINAL entity index.
-            sel_sc = np.take_along_axis(scores, part, axis=1)
-            b = sel_sc.min(axis=1)
-            n_tied_all = (scores == b[:, None]).sum(axis=1)
-            n_tied_sel = (sel_sc == b[:, None]).sum(axis=1)
-            for i in np.where(n_tied_all > n_tied_sel)[0]:
-                above = np.where(scores[i] > b[i])[0]
-                tied = np.where(scores[i] == b[i])[0]
-                tied = tied[np.argsort(self.perm[tied])]
-                part[i] = np.concatenate([above, tied[: kc - len(above)]])
-        else:
-            part = np.tile(np.arange(E), (n, 1))
-        sel = self.perm[part]
-        best_sc = np.take_along_axis(scores, part, axis=1)
-        return sel, best_sc
+        return fr, cells, bounds
 
     def _search_block(self, Q: np.ndarray, k: int, nprobe: int):
         n = len(Q)
@@ -321,52 +273,39 @@ class _IvfIndex:
                 np.zeros((n, 0), dtype=np.int64),
                 np.zeros((n, 0), dtype=np.float64),
             )
-        n_cells = self.CT.shape[1]
-        pp = min(nprobe, n_cells)
+        pp = min(nprobe, self.CT.shape[1])
         kc = min(k + self.MARGIN, E)
         Q64 = Q.astype(np.float64, copy=False)
-        Q32 = Q.astype(np.float32, copy=False)
+        # rows grouped by probed cell, one GEMM per (cell x probing rows),
+        # running top-kc merge under the total order (-score, entity idx
+        # asc); at pp = nlist every cell is probed
+        cs = Q64 @ self.CT  # [n, nlist] f64 — bitwise == add_probes
+        probe = np.argpartition(-cs, pp - 1, axis=1)[:, :pp]
+        fr, cells, bounds = self._group_probes(probe, n, pp)
+        best_sc = np.full((n, kc), -np.inf)
+        sel = np.zeros((n, kc), dtype=np.int64)
+        ptr = self.cell_ptr
+        for ci, c in enumerate(cells):
+            s, e = int(ptr[c]), int(ptr[c + 1])
+            m = e - s
+            if m == 0:
+                continue
+            rows = fr[bounds[ci]:bounds[ci + 1]]
+            S = Q64[rows] @ self.gmat32[s:e].T  # [r, cell_size] f64
+            self._track(kc + m)
+            cat_sc = np.concatenate([best_sc[rows], S], axis=1)
+            cat_ix = np.concatenate(
+                [sel[rows],
+                 np.broadcast_to(self.perm[s:e], (len(rows), m))],
+                axis=1,
+            )
+            keep = np.lexsort((cat_ix, -cat_sc), axis=1)[:, :kc]
+            best_sc[rows] = np.take_along_axis(cat_sc, keep, axis=1)
+            sel[rows] = np.take_along_axis(cat_ix, keep, axis=1)
 
-        if pp >= n_cells:
-            # exhaustive probing: one dense f64 GEMM (no cell is
-            # excluded), top-kc selected on the f64 scores themselves, so
-            # no f32 rounding can drop an exact top-k member.  The GEMM's
-            # last bit depends on the block it runs in, so the scores
-            # returned are the per-row rescore below, not the GEMM's.
-            if self.gmat64 is None:
-                self.gmat64 = self.gmat32.astype(np.float64)
-            self._track(E)
-            sel, best_sc = self._topk_grouped(Q64 @ self.gmat64.T, kc)
-        else:
-            # cell-pruned search: rows grouped by probed cell, one GEMM
-            # per (cell x probing rows), running top-kc merge under the
-            # total order (-f32 score, entity idx asc)
-            cs = Q64 @ self.CT  # [n, nlist] f64 — bitwise == add_probes
-            probe = np.argpartition(-cs, pp - 1, axis=1)[:, :pp]
-            fr, fc, cells, bounds = self._group_probes(probe, n, pp)
-            best_sc = np.full((n, kc), -np.inf, dtype=np.float32)
-            sel = np.zeros((n, kc), dtype=np.int64)
-            ptr = self.cell_ptr
-            for ci, c in enumerate(cells):
-                s, e = int(ptr[c]), int(ptr[c + 1])
-                m = e - s
-                if m == 0:
-                    continue
-                rows = fr[bounds[ci]:bounds[ci + 1]]
-                S = Q32[rows] @ self.gmat32[s:e].T  # [r, cell_size]
-                self._track(kc + m)
-                cat_sc = np.concatenate([best_sc[rows], S], axis=1)
-                cat_ix = np.concatenate(
-                    [sel[rows],
-                     np.broadcast_to(self.perm[s:e], (len(rows), m))],
-                    axis=1,
-                )
-                keep = np.lexsort((cat_ix, -cat_sc), axis=1)[:, :kc]
-                best_sc[rows] = np.take_along_axis(cat_sc, keep, axis=1)
-                sel[rows] = np.take_along_axis(cat_ix, keep, axis=1)
-
-        # f64 rescore of the candidate set only (exact ranking; entity
-        # vectors are float32, so the upcast loses nothing)
+        # per-row f64 rescore of the candidate set: the GEMM's last bit
+        # depends on the rows it runs with, this does not (entity vectors
+        # are float32, so the upcast loses nothing)
         Ecand = self.gmat32[self.inv_perm[sel]].astype(np.float64)
         sc64 = np.einsum("nd,ncd->nc", Q64, Ecand)
         sc64[~np.isfinite(best_sc)] = -np.inf

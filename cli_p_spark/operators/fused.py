@@ -9,11 +9,12 @@ embedding column in between; at 130k mentions that Arrow round trip of
 array<float> costs more than all the math combined (measured ~8s vs ~1s).
 
 This operator runs encode_batch and the IVF search (``_IvfIndex``,
-f64-exact at nprobe >= nlist) inside ONE mapInPandas stage: span text
-goes in, (entity_id, score, rank | skip) comes out, and the vectors live
-only as a NumPy matrix inside the Arrow batch.  ZERO shuffle; the vectors
-cross the boundary at most once, outbound, and only when the caller asks
-for them (``embeddings=True``: resume and canonicalization need the
+f64-exact over its probed cells, so exact at nprobe >= nlist) inside
+ONE mapInPandas stage: span text goes in, (entity_id, score, rank |
+skip) comes out, and the vectors live only as a NumPy matrix inside the
+Arrow batch.  ZERO shuffle; the vectors cross the boundary at most
+once, outbound, and only when the caller asks for them
+(``embeddings=True``: resume and canonicalization need the
 mentions table, so run_pipeline and canonicalize persist them from the
 same pass that links them).  It is the one documents -> triples kernel:
 ``plans.pipeline.plan_kg`` runs it, and every KG caller (run_pipeline,
@@ -97,7 +98,7 @@ def encode_and_link(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         drop_zip_finders()
-        idx = _IvfIndex.from_broadcast(bc.value)
+        idx = _IvfIndex(*bc.value)
         for pdf in batches:
             base = pdf[keys].reset_index(drop=True)
             if encode:

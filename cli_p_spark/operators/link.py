@@ -4,8 +4,9 @@ The reference has one search call, faiss ``index.search``
 (query-index.py:111), exact when nprobe = nlist, whether the query
 vector was just encoded or read back from storage.  So does this engine:
 one Python UDF, ``encode_and_link`` (operators/fused.py), searches
-``_IvfIndex`` (operators/ann.py), f64-exact when nprobe >= nlist, on
-span text it encodes or on a stored ``embedding`` column.  The bucket
+``_IvfIndex`` (operators/ann.py) on span text it encodes or on a stored
+``embedding`` column.  That search is one path at every nprobe, f64-exact
+over the probed cells, so nprobe >= nlist is exact search.  The bucket
 equi-join ``link_ann_join`` (operators/ann.py) is the operator for entity
 tables too big to broadcast.  This module keeps what they share:
 

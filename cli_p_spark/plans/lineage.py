@@ -144,8 +144,9 @@ def run_pipeline(
     Returns ``status`` ('done'), ``out_dir`` and ``n_triples``, the links
     of every done partition.  A resume under a config other than the one
     ``out_dir`` was started with, an ``n_parts``, ``nlist``, ``nprobe``,
-    ``cfg.k`` or ``cfg.embed_partitions`` below 1, or an empty entity
-    table raises ValueError before anything is written.
+    ``cfg.k`` or ``cfg.embed_partitions`` below 1, an empty entity
+    table or entity vectors not ``cfg.dim`` wide raises ValueError before
+    anything is written.
     """
     import json
 
@@ -154,8 +155,8 @@ def run_pipeline(
 
     # checked before the stale-table drop below: under 1, n_parts and
     # nprobe plan no work yet report "done", k commits a "done" run with
-    # no links, and nlist, embed_partitions or an empty entity table
-    # fails mid-run
+    # no links, and nlist, embed_partitions, an empty entity table or
+    # entity vectors other than cfg.dim wide fail mid-run
     for name, value in (("n_parts", n_parts), ("nlist", nlist),
                         ("nprobe", nprobe), ("k", cfg.k),
                         ("embed_partitions", cfg.embed_partitions)):
@@ -164,6 +165,9 @@ def run_pipeline(
     if not len(entities_pdf):
         raise ValueError("the entity table is empty")
     emat = np.stack(entities_pdf["embedding"].to_numpy())
+    if emat.shape[1] != cfg.dim:
+        raise ValueError(f"entity vectors are {emat.shape[1]} wide, "
+                         f"cfg.dim is {cfg.dim}")
     store = TableStore(spark, out_dir)
     config = json.dumps({
         "n_parts": n_parts, "dim": cfg.dim, "seed": cfg.seed, "k": cfg.k,

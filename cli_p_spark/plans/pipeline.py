@@ -14,9 +14,10 @@ triples caller runs it: the resumable ``run_pipeline``
 connected components) and rewrites its triples' subjects.  Every step is
 declarative DataFrame API; the only Python is the one Arrow-batched
 fused pass (operators/fused.py) that encodes each span and searches the
-broadcast ``_IvfIndex``, exact when nprobe >= nlist.  ONE shuffle (the
-placement before encode); the broadcast index adds none.  Its three
-splits all carry part_id, the key run_pipeline writes them under.
+broadcast ``_IvfIndex`` (f64-exact over the probed cells, so exact
+when nprobe >= nlist).  ONE shuffle (the placement before encode); the
+broadcast index adds none.  Its three splits all carry part_id, the key
+run_pipeline writes them under.
 """
 
 from __future__ import annotations

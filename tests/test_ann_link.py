@@ -243,8 +243,8 @@ def test_triples_identical_across_partitionings(spark, corpus_small):
 def test_exact_scores_identical_across_partitionings(spark, corpus_small):
     """At nprobe = nlist (the exact linker) the triples, scores to the
     last bit included, do not depend on the partition count: every score
-    is the per-row f64 rescore, not the dense GEMM's, whose last bit
-    depends on the block a row is multiplied in."""
+    is the per-row f64 rescore, not the per-cell GEMM's, whose last bit
+    depends on the rows it is multiplied with."""
     from cli_p_spark.operators.ann import train_centroids
 
     docs_pdf, ents_pdf = corpus_small

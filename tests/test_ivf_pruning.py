@@ -49,7 +49,7 @@ def _exact_masked_topk(Q, emat64, C, k, nprobe):
 def test_pruned_search_matches_masked_oracle(E, nlist, nprobe):
     dim, k = 32, 5
     pdf, C = _make_index(E, dim, nlist)
-    idx = _IvfIndex.from_broadcast(build_ivf_broadcast_value(pdf, C))
+    idx = _IvfIndex(*build_ivf_broadcast_value(pdf, C))
     rng = np.random.default_rng(11)
     Q = rng.standard_normal((40, dim))
     Q /= np.linalg.norm(Q, axis=1, keepdims=True)
@@ -66,13 +66,15 @@ def test_pruned_search_matches_masked_oracle(E, nlist, nprobe):
                            atol=1e-12)
 
 
-def test_gemm_width_bounded_by_max_cell_not_E():
+@pytest.mark.parametrize("nprobe", [16, 256])  # 256 = nlist: exhaustive
+def test_gemm_width_bounded_by_max_cell_not_E(nprobe):
     """The 100 TB memory gate: at E=10^6 the peak per-block GEMM width
-    must be max probed-cell size + k+margin, NOT E."""
-    E, dim, nlist, nprobe, k = 1_000_000, 16, 256, 16, 10
+    must be max probed-cell size + k+margin, NOT E — also when every
+    cell is probed."""
+    E, dim, nlist, k = 1_000_000, 16, 256, 10
     pdf, C = _make_index(E, dim, nlist)
     payload = build_ivf_broadcast_value(pdf, C)
-    idx = _IvfIndex.from_broadcast(payload)
+    idx = _IvfIndex(*payload)
     cell_ptr = payload[4]
     max_cell = int(np.diff(cell_ptr).max())
     rng = np.random.default_rng(3)
@@ -91,7 +93,7 @@ def test_gemm_width_bounded_by_max_cell_not_E():
 def test_exhaustive_probe_uses_dense_path_and_is_exact():
     E, dim, nlist, k = 3_000, 16, 16, 3
     pdf, C = _make_index(E, dim, nlist)
-    idx = _IvfIndex.from_broadcast(build_ivf_broadcast_value(pdf, C))
+    idx = _IvfIndex(*build_ivf_broadcast_value(pdf, C))
     rng = np.random.default_rng(5)
     Q = rng.standard_normal((10, dim))
     Q /= np.linalg.norm(Q, axis=1, keepdims=True)
@@ -119,7 +121,7 @@ def test_exhaustive_boundary_ties_keep_min_entity_ids():
          "embedding": embs}
     )
     C = np.stack([v.astype(np.float64), w.astype(np.float64)])
-    idx = _IvfIndex.from_broadcast(build_ivf_broadcast_value(pdf, C))
+    idx = _IvfIndex(*build_ivf_broadcast_value(pdf, C))
     Q = np.asarray([v], dtype=np.float64)
     cand, sc64 = idx.search(Q, k, nprobe=2)  # exhaustive (nlist=2)
     order = np.lexsort((cand[0], -sc64[0]))[:k]
@@ -127,12 +129,14 @@ def test_exhaustive_boundary_ties_keep_min_entity_ids():
     assert got == [0, 1, 2], got  # the three smallest-id duplicates
 
 
-def test_exhaustive_near_ties_match_f64_oracle():
-    """nprobe = nlist is EXACT f64 search, also when many entities sit
-    within f32 rounding of each other: 40 unit entities within 2e-4 (L2)
-    of the query score within 2e-8 of it, far below the f32 resolution
-    at 1.0, so an f32 preselect of k+MARGIN candidates loses the f64
-    top-k on most draws.  The exhaustive path selects on f64 scores."""
+@pytest.mark.parametrize("nprobe", [1, 4])  # 4 = nlist: exhaustive
+def test_exhaustive_near_ties_match_f64_oracle(nprobe):
+    """The search is EXACT f64 over its probed cells, at nprobe = nlist
+    and below it, also when many entities sit within f32 rounding of
+    each other: 40 unit entities within 2e-4 (L2) of the query score
+    within 2e-8 of it, far below the f32 resolution at 1.0, so an f32
+    preselect of k+MARGIN candidates loses the f64 top-k on most draws.
+    Every probed cell's candidates are selected on f64 scores."""
     import pandas as pd
 
     dim, n_ents, nlist = 64, 40, 4
@@ -152,13 +156,13 @@ def test_exhaustive_near_ties_match_f64_oracle():
         )
         C = rng.standard_normal((nlist, dim))
         C /= np.linalg.norm(C, axis=1, keepdims=True)
-        idx = _IvfIndex.from_broadcast(build_ivf_broadcast_value(pdf, C))
+        idx = _IvfIndex(*build_ivf_broadcast_value(pdf, C))
         Q = q[None, :]
         for k in (1, 3):
-            cand, sc64 = idx.search(Q, k, nlist)
+            cand, sc64 = idx.search(Q, k, nprobe)
             order = np.lexsort((cand[0], -sc64[0]))[:k]
             golden = _exact_masked_topk(Q, E.astype(np.float64), C, k,
-                                        nlist)[0]
+                                        nprobe)[0]
             same_ids = [int(cand[0][j]) for j in order] == [
                 g[0] for g in golden]
             same_sc = np.allclose(sc64[0][order], [g[1] for g in golden],

@@ -17,6 +17,7 @@ uninterrupted run."""
 import glob
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -463,6 +464,22 @@ def test_empty_entity_table_raises_before_writing(spark, corpus_small,
     before = _leftover(out)
     with pytest.raises(ValueError, match="entity table"):
         run_pipeline(spark, docs, ents_pdf.iloc[:0], str(out), run_id="e")
+    assert _listing(str(out)) == before
+
+
+def test_entity_width_other_than_dim_raises_before_writing(
+        spark, corpus_small, tmp_path):
+    """Entity vectors narrower than cfg.dim cannot be searched with the
+    encoded spans; the run raises before it drops a killed run's
+    uncommitted rows, not in a worker after the drop."""
+    docs_pdf, ents_pdf = corpus_small
+    docs = documents_to_spark(spark, docs_pdf.iloc[:20])
+    narrow = ents_pdf.assign(
+        embedding=[np.asarray(v)[:32] for v in ents_pdf["embedding"]])
+    out = tmp_path / "out"
+    before = _leftover(out)
+    with pytest.raises(ValueError, match="^entity vectors are 32 wide"):
+        run_pipeline(spark, docs, narrow, str(out), run_id="w")
     assert _listing(str(out)) == before
 
 
